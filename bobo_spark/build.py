@@ -1270,8 +1270,9 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> Snapshot:
             del_df = doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
                                     .alias("doc_id")).distinct()
         else:
+            # ``doc_ids`` may be a spent generator: use the ids taken above
             del_df = spark.createDataFrame(
-                [(int(d),) for d in sorted(set(doc_ids))], "doc_id long")
+                [(d,) for d in ids.tolist()], "doc_id long")
         # segment lookup: broadcast the (small) delete set against the
         # forward table — one pushed-down semi-join scan, no forward
         # shuffle

@@ -9,15 +9,23 @@ Execution model (the Spark rendition of SURVEY.md §3.1):
   ``term_id IN (...)`` filter (blocks are sorted by (segment, term_id,
   doc_id) at build time → parquet row-group pruning does the work of
   Lucene's TermsEnum seek).
-* ``groupBy(segment).applyInArrow`` scores each segment locally
-  (stream columns stay on Arrow buffers — no per-block Python bytes) —
-  the exact analogue of the reference's per-segment sub-browse loop
+* One per-segment scorer (``_segment_search_rows``) is the exact
+  analogue of the reference's per-segment sub-browse loop
   (api/MultiBoboBrowser.java:100-127): decode → selection masks →
   intersection/union → BM25 TAAT accumulation in ascending
   lexicographic term order (float64, pinned order = score identity
-  with the oracle) → local top-k + local facet bincounts.
-* Driver merge: global top-k via ``orderBy().limit()`` (Spark's
-  TakeOrderedAndProject ≙ sort/SortCollectorImpl.java:354-368 +
+  with the oracle) → local top-k + local facet bincounts. It runs on
+  one of three paths, chosen from published stats and dictionary df:
+  - ``cache``: an index under ``DRIVER_CACHE_TOKSUM`` is pulled into an
+    in-driver block cache once per reader; page-scale queries score
+    there with zero Spark jobs, decoded streams shared across queries;
+  - ``scan``: page-scale queries (Σdf ≤ ``DRIVER_POSTINGS_THRESHOLD``)
+    on an uncached reader fetch their term-filtered blocks once and
+    score them in-process;
+  - ``distributed``: ``groupBy(segment).applyInPandas`` scores each
+    segment on the executors.
+* Driver merge: global top-k by a (score desc, doc_id asc) sort
+  (≙ sort/SortCollectorImpl.java:354-368 +
   util/ListMerger.java:104-137) and facet count summation
   (≙ facets/CombinedFacetAccessible.java:101-192).
 
@@ -31,6 +39,9 @@ Pruning:
   contributions, then whole blocks whose summed upper bound stays
   below θ are dropped *before* tf decode (block-max WAND flavor;
   every doc in a dropped block provably scores < θ).
+Both apply only where a query decodes its own blocks (``scan`` and
+``distributed`` single queries); shared-decode scoring (``cache`` and
+``search_many``) skips them — same results, different work.
 """
 
 from __future__ import annotations
@@ -45,19 +56,6 @@ from . import bm25
 from .catalog import IndexCatalog, Snapshot, read_table_arrow, read_table_pdf
 from .codecs import vb_decode
 from .tokenizer import tokenize
-
-import os
-
-# Arrow-native UDF ingestion (applyInArrow + Arrow-backed stream
-# columns) is OFF by default for QUERY paths: measured A/B at 2M docs
-# / 80-query search_many (this host, interleaved best-of runs) —
-# applyInPandas 12.4-13.1 s @4c / 5.1-6.2 s @16c vs applyInArrow
-# 15.5-20.2 / 6.4-6.9. Queries slice blocks into MANY small per-term
-# groups, so Arrow's per-slice take/combine overhead outweighs the
-# object-materialization savings that dominate the BUILD's few huge
-# frames (where the same idea, codecs.binary_array, won 2-3x).
-# BOBO_ARROW_UDF=1 re-enables for experiments.
-_ARROW_UDF = os.environ.get("BOBO_ARROW_UDF", "0") == "1"
 
 # serializes search_many's session-conf AQE flip (see its comment)
 import threading as _threading
@@ -130,62 +128,6 @@ def _plan_terms(terms_pd: pd.DataFrame, qtokens: list[str], n_docs: int) -> list
     return plan
 
 
-def _cat_bytes(col: pd.Series):
-    """Concatenated bytes of a binary column — zero-copy from the
-    Arrow buffers on the applyInArrow path, plain join otherwise."""
-    if isinstance(col.dtype, pd.ArrowDtype):
-        from .codecs import binary_parts
-        return binary_parts(col)[0]
-    return b"".join(col)
-
-
-_BYTES_COLS = frozenset(
-    ("doc_bytes", "tf_bytes", "dl_bytes", "lang_bytes", "ts_bytes",
-     "pos_bytes", "sec_bytes"))
-
-
-def _table_to_pdf(tbl) -> pd.DataFrame:
-    """One segment's Arrow record batch → pandas frame with numpy
-    numeric columns and ARROW-BACKED binary columns.
-
-    The applyInPandas default converts every binary cell into a Python
-    ``bytes`` object — at web scale that is hundreds of thousands of
-    heap objects per query task, the same allocator churn the build
-    side eliminated with codecs.binary_array. Keeping the stream
-    columns on their Arrow buffers makes the per-term decode
-    (``_cat_bytes`` → one ``np.frombuffer``) zero-copy."""
-    cols = {}
-    for name in tbl.schema.names:
-        c = tbl.column(name)
-        if name in _BYTES_COLS:
-            cols[name] = pd.arrays.ArrowExtensionArray(c.combine_chunks())
-        else:
-            cols[name] = c.to_numpy(zero_copy_only=False)
-    return pd.DataFrame(cols)
-
-
-_OUT_DTYPES = {"kind": np.int32, "doc_id": np.int64, "score": np.float64,
-               "ordinal": np.int64, "count": np.int64}
-
-
-def _to_arrow_out(pdf: pd.DataFrame):
-    """Segment-scorer output frame → pa.Table with the exact OUT
-    schema (applyInArrow requires the declared types, no coercion)."""
-    import pyarrow as pa
-
-    cols = []
-    names = list(pdf.columns)
-    for name in names:
-        if name == "field":
-            cols.append(pa.array(pdf[name].astype(str), type=pa.string()))
-        elif name == "qid":
-            cols.append(pa.array(pdf[name].to_numpy(np.int32),
-                                 type=pa.int32()))
-        else:
-            cols.append(pa.array(pdf[name].to_numpy(_OUT_DTYPES[name])))
-    return pa.Table.from_arrays(cols, names=names)
-
-
 def _decode_docs(b: pd.DataFrame) -> np.ndarray:
     """Decode ONLY the docID streams of a term's blocks (sorted by
     first_doc): one vectorized pass over the concatenated delta
@@ -196,7 +138,7 @@ def _decode_docs(b: pd.DataFrame) -> np.ndarray:
     firsts = b["first_doc"].to_numpy(np.int64)
     total = int(nds.sum())
     starts = np.cumsum(nds) - nds
-    deltas_all = vb_decode(_cat_bytes(b["doc_bytes"])).astype(np.int64)
+    deltas_all = vb_decode(b"".join(b["doc_bytes"])).astype(np.int64)
     vals = np.zeros(total, dtype=np.int64)
     mask = np.ones(total, dtype=bool)
     mask[starts] = False
@@ -229,10 +171,10 @@ def _decode_term_blocks(b: pd.DataFrame, docs: np.ndarray | None = None):
     """
     if docs is None:
         docs = _decode_docs(b)
-    tf = vb_decode(_cat_bytes(b["tf_bytes"])).astype(np.int32)
-    dl = vb_decode(_cat_bytes(b["dl_bytes"])).astype(np.int32)
-    lang = vb_decode(_cat_bytes(b["lang_bytes"])).astype(np.int32)
-    ts = vb_decode(_cat_bytes(b["ts_bytes"])).astype(np.int32)
+    tf = vb_decode(b"".join(b["tf_bytes"])).astype(np.int32)
+    dl = vb_decode(b"".join(b["dl_bytes"])).astype(np.int32)
+    lang = vb_decode(b"".join(b["lang_bytes"])).astype(np.int32)
+    ts = vb_decode(b"".join(b["ts_bytes"])).astype(np.int32)
     return docs, tf, dl, lang, ts
 
 
@@ -243,7 +185,7 @@ def _decode_positions(b: pd.DataFrame, tf: np.ndarray) -> np.ndarray:
     """Decode a term's positions stream (aligned with the decoded tf
     order): per posting, first position absolute then gaps — recovered
     with one segmented cumsum over the concatenated buffers."""
-    vals = vb_decode(_cat_bytes(b["pos_bytes"])).astype(np.int64)
+    vals = vb_decode(b"".join(b["pos_bytes"])).astype(np.int64)
     total = int(tf.sum(dtype=np.int64))
     if vals.size != total:
         raise ValueError(
@@ -440,11 +382,11 @@ def _batch_group_decode(pdf: pd.DataFrame, need_lang: bool = True,
     nds = b["n_docs"].to_numpy(np.int64)
     docs = _decode_docs(b)  # per-block rebase is term-agnostic
     # int32 streams: same width rationale as _decode_term_blocks
-    tf = vb_decode(_cat_bytes(b["tf_bytes"])).astype(np.int32)
-    dl = vb_decode(_cat_bytes(b["dl_bytes"])).astype(np.int32)
-    lang = (vb_decode(_cat_bytes(b["lang_bytes"])).astype(np.int32)
+    tf = vb_decode(b"".join(b["tf_bytes"])).astype(np.int32)
+    dl = vb_decode(b"".join(b["dl_bytes"])).astype(np.int32)
+    lang = (vb_decode(b"".join(b["lang_bytes"])).astype(np.int32)
             if need_lang else None)
-    ts = (vb_decode(_cat_bytes(b["ts_bytes"])).astype(np.int32)
+    ts = (vb_decode(b"".join(b["ts_bytes"])).astype(np.int32)
           if need_ts else None)
     el = np.concatenate(([0], np.cumsum(nds)))
     shared: dict = {}
@@ -462,7 +404,7 @@ def _batch_group_decode(pdf: pd.DataFrame, need_lang: bool = True,
 class _SegGroups:
     """Lazy per-term block-frame views over one segment's slice of the
     driver block cache (rows pre-sorted by first_doc) — dict-shaped
-    for _segment_search's ``groups_all`` protocol, materializing a
+    for _segment_search_rows's ``groups_all`` protocol, materializing a
     frame only for terms a query actually touches. Term lookup is a
     searchsorted over the segment's tid-sorted run arrays (r6: the
     per-run Python dict build was 0.86 s of the one-time cache build
@@ -485,23 +427,16 @@ class _SegGroups:
         return self._pdf.iloc[int(self._starts[i]):int(self._ends[i])]
 
 
-def _segment_search(pdf: pd.DataFrame, plan: dict,
-                    deleted_bc=None, groups_all: dict | None = None,
-                    shared_decode: dict | None = None,
-                    deleted: np.ndarray | None = None) -> pd.DataFrame:
-    """Score one segment's query-term blocks (pure pandas/numpy) —
-    DataFrame form of ``_segment_search_rows`` (same tuples, one
-    frame). Kept as the applyInPandas/applyInArrow entry point."""
-    rows = _segment_search_rows(pdf, plan, deleted_bc, groups_all,
-                                shared_decode, deleted)
-    if not rows:
-        return _empty_out()
-    return pd.DataFrame(rows, columns=_OUT_COLS)
+def _segment_rows(pdf: pd.DataFrame, plan: dict, deleted_bc) -> list:
+    """One query against one segment's term-filtered block rows,
+    decoding its own blocks (so the pruning shortcuts apply)."""
+    groups = {tid: g.sort_values("first_doc")
+              for tid, g in pdf.groupby("term_id")}
+    return _segment_search_rows(plan, groups,
+                                deleted=_segment_deleted(deleted_bc, pdf))
 
 
-def _segment_search_rows(pdf: pd.DataFrame, plan: dict,
-                         deleted_bc=None, groups_all: dict | None = None,
-                         shared_decode: dict | None = None,
+def _segment_search_rows(plan: dict, groups_all, shared_decode: dict | None = None,
                          deleted: np.ndarray | None = None) -> list:
     """Score one segment's query-term blocks (pure pandas/numpy),
     returning raw output TUPLES (kind, doc_id, score, field, ordinal,
@@ -509,17 +444,15 @@ def _segment_search_rows(pdf: pd.DataFrame, plan: dict,
     build ONE frame per task (per-query frame construction was ~25%
     of the batch scoring loop).
 
-    Batch mode (search_many): the caller passes ``groups_all`` (the
-    task's blocks pre-grouped by term once) and a ``shared_decode``
-    dict so a term's streams are decoded ONCE per task no matter how
-    many of the batch's queries reference it. In that mode the
-    per-query decode-saving shortcuts (conjunctive block skip,
+    ``groups_all`` maps term_id → that term's block rows sorted by
+    first_doc; ``deleted`` is the segment's sorted tombstone ids.
+    With a ``shared_decode`` dict (``_score_segment``) a term's
+    streams are decoded ONCE however many queries reference it, and
+    the per-query decode-saving shortcuts (conjunctive block skip,
     block-max pruning) are disabled — they subset blocks per query,
     which would defeat decode sharing; results are identical either
     way (property-tested), only the work-skipping differs.
     """
-    if deleted is None and groups_all is None:
-        deleted = _segment_deleted(deleted_bc, pdf)
     terms = plan["terms"]
     mode = plan["mode"]
     k = plan["k"] + plan["offset"]
@@ -528,17 +461,11 @@ def _segment_search_rows(pdf: pd.DataFrame, plan: dict,
     sel_ts = np.array(plan["sel_ts"], dtype=np.int64) if plan["sel_ts"] is not None else None
     out_rows = []
 
-    if groups_all is not None:
-        # term_id -1 marks BOTH unknown query terms and the pseudo
-        # forward runs present in an unfiltered block source (the
-        # driver cache) — never let one resolve the other
-        need = {t["term_id"] for t in terms if t["term_id"] >= 0} \
-            | set(plan.get("sel_lang_tids", [])) \
-            | set(plan.get("sel_ts_tids", []))
-        groups = {tid: groups_all[tid] for tid in need if tid in groups_all}
-    else:
-        groups = {tid: g.sort_values("first_doc")
-                  for tid, g in pdf.groupby("term_id")}
+    # term_id -1 marks BOTH unknown query terms and the pseudo forward
+    # runs present in an unfiltered block source (the driver cache) —
+    # _plan_tids never lets one resolve the other
+    groups = {tid: groups_all[tid] for tid in set(_plan_tids(plan))
+              if tid in groups_all}
     present = [t for t in terms if t["term_id"] in groups]
     conj = mode in ("and", "phrase")  # phrase = conjunction + positional check
     if conj and len(present) < len(terms):
@@ -781,6 +708,59 @@ _EMPTY_OUT = pd.DataFrame(
 
 def _empty_out() -> pd.DataFrame:
     return _EMPTY_OUT.copy()
+
+
+def _out_frame(rows: list, qids: list | None = None) -> pd.DataFrame:
+    """Scorer output tuples as one OUT_SCHEMA frame (plus the batch
+    ``qid`` column when ``qids`` is given)."""
+    out = pd.DataFrame(rows, columns=_OUT_COLS) if rows else _empty_out()
+    if qids is not None:
+        out["qid"] = np.asarray(qids, dtype=np.int32)
+    return out
+
+
+def _plan_tids(plan: dict) -> list[int]:
+    """Term ids a plan reads: its known query terms (unknown terms
+    carry term_id -1) plus its postings-mode selection sentinels."""
+    return ([t["term_id"] for t in plan["terms"] if t["term_id"] >= 0]
+            + plan.get("sel_lang_tids", []) + plan.get("sel_ts_tids", []))
+
+
+def _runnable(plan: dict) -> bool:
+    """False when a plan provably matches nothing: no known query term,
+    or an AND/phrase plan with an unknown term."""
+    known = sum(t["term_id"] >= 0 for t in plan["terms"])
+    return known > 0 and (plan["mode"] not in ("and", "phrase")
+                          or known == len(plan["terms"]))
+
+
+def _score_segment(plans: list, groups_all, shared_decode: dict,
+                   deleted: np.ndarray | None, rows: list,
+                   qids: list) -> None:
+    """Score every ``(qid, plan)`` against one segment's blocks with
+    one shared decode cache — the per-segment sub-browse loop
+    (api/MultiBoboBrowser.java:100-127) behind the cache path and both
+    ``search_many`` paths. Output tuples append to ``rows`` and their
+    qids to ``qids``."""
+    for qid, plan in plans:
+        if any(tid in groups_all for tid in _plan_tids(plan)):
+            r = _segment_search_rows(plan, groups_all, shared_decode, deleted)
+            rows.extend(r)
+            qids.extend([qid] * len(r))
+
+
+def _hit_page(out: pd.DataFrame, offset: int, k: int) -> pd.DataFrame:
+    """Hit rows offset..offset+k of a scorer output frame in the
+    (score desc, doc_id asc) total order."""
+    hits = out[out["kind"] == _K_HIT]
+    order = np.lexsort((hits["doc_id"].to_numpy(), -hits["score"].to_numpy()))
+    return hits.iloc[order[offset:offset + k]]
+
+
+def _section_page(out: pd.DataFrame, offset: int, k: int) -> pd.DataFrame:
+    """Section hit rows offset..offset+k in doc_id order."""
+    return (out[out["kind"] == _K_HIT].sort_values("doc_id")
+            .iloc[offset:offset + k])
 
 
 class IndexReader:
@@ -1044,15 +1024,13 @@ class IndexReader:
     # local[32]). Encoded blocks are ~4-8 B/token, so the default pins
     # well under 200 MB of driver memory; web-scale indexes exceed the
     # gate and keep the distributed path unchanged.
-    DRIVER_CACHE_TOKSUM = int(os.environ.get("BOBO_DRIVER_CACHE_TOKSUM",
-                                             "20000000"))
+    DRIVER_CACHE_TOKSUM = 20_000_000
 
     def _driver_fastpath(self, plan: dict) -> bool:
         # sentinel posting lists' df is resolved at plan time
         # (sel_df), so selection queries on the inverted access path
         # are cost-gated exactly like query terms
-        total_df = (sum(t["df"] for t in plan["terms"] if t["term_id"] >= 0)
-                    + plan.get("sel_df", 0))
+        total_df = sum(t["df"] for t in plan["terms"]) + plan.get("sel_df", 0)
         return total_df <= self.DRIVER_POSTINGS_THRESHOLD
 
     def _postings_driver(self):
@@ -1148,46 +1126,45 @@ class IndexReader:
             return pdf.iloc[:0]
         return parts[0] if len(parts) == 1 else pd.concat(parts)
 
-    def _segment_outputs_driver(self, plan: dict) -> pd.DataFrame:
-        """Driver-side twin of _segment_outputs: serve from the
-        in-driver block cache when the index is under the gate (zero
-        Spark jobs, cross-query decode sharing via the SAME
-        groups_all/shared_decode protocol the batch path uses —
-        property-tested result-identical), else one pushed
-        term_id IN scan, then the SAME per-segment scorer
-        in-process."""
-        tids = [t["term_id"] for t in plan["terms"] if t["term_id"] >= 0]
-        if not tids or (plan["mode"] in ("and", "phrase")
-                        and len(tids) < len(plan["terms"])):
-            return _empty_out()
-        tids = tids + plan.get("sel_lang_tids", []) + plan.get("sel_ts_tids", [])
-        if plan["mode"] == "phrase":
+    def _score_cached(self, plans: list, tids: list[int], rows: list,
+                      qids: list) -> None:
+        """``_score_segment`` over every cached segment holding one of
+        ``tids``, with the reader's per-segment decode cache shared
+        across calls."""
+        pdf_all, seg_slices, _tid_span, tid_segs = self._postings_driver()
+        dmap = self._deleted_bc.value if self._deleted_bc is not None else {}
+        for g in sorted({s for t in tids for s in tid_segs.get(t, ())}):
+            _score_segment(plans, _SegGroups(pdf_all, seg_slices[g]),
+                           self._decode_shared.setdefault(g, {}),
+                           dmap.get(g), rows, qids)
+
+    def _blocks(self, tids: list[int], phrase: bool) -> DataFrame:
+        """Term-filtered block rows (pushed term_id IN scan). The
+        positions stream — the largest column, pruned out of the hot
+        cache — is read only for phrase verification."""
+        if phrase:
             self._require_positions()
-        cached = self._postings_driver()
-        if cached is not None:
-            pdf_all, seg_slices, _tid_span, tid_segs = cached
-            segs = sorted({g for t in tids for g in tid_segs.get(t, ())})
-            dmap = (self._deleted_bc.value if self._deleted_bc is not None
-                    else {})
-            rows_all: list = []
-            for g in segs:
-                rows_all.extend(_segment_search_rows(
-                    None, plan,
-                    groups_all=_SegGroups(pdf_all, seg_slices[g]),
-                    shared_decode=self._decode_shared.setdefault(g, {}),
-                    deleted=dmap.get(g)))
-            return (pd.DataFrame(rows_all, columns=_OUT_COLS) if rows_all
-                    else _empty_out())
-        src = (self._postings_full if plan["mode"] == "phrase"
-               else self._postings)
-        pdf = src.where(F.col("term_id").isin(tids)).toPandas()
-        if not len(pdf):
+        src = self._postings_full if phrase else self._postings
+        return src.where(F.col("term_id").isin(tids))
+
+    def _segment_outputs_driver(self, plan: dict) -> pd.DataFrame:
+        """Score a page-scale query on the driver: from the in-driver
+        block cache when the index is under the gate (``cache``: zero
+        Spark jobs, decode shared across queries), else from one
+        pushed term_id IN scan (``scan``) — the SAME per-segment
+        scorer either way."""
+        if not _runnable(plan):
             return _empty_out()
-        rows_all = []
+        rows: list = []
+        if self._postings_driver() is not None:
+            if plan["mode"] == "phrase":
+                self._require_positions()
+            self._score_cached([(0, plan)], _plan_tids(plan), rows, [])
+            return _out_frame(rows)
+        pdf = self._blocks(_plan_tids(plan), plan["mode"] == "phrase").toPandas()
         for _, g in pdf.groupby("segment"):
-            rows_all.extend(_segment_search_rows(g, plan, self._deleted_bc))
-        return (pd.DataFrame(rows_all, columns=_OUT_COLS) if rows_all
-                else _empty_out())
+            rows.extend(_segment_rows(g, plan, self._deleted_bc))
+        return _out_frame(rows)
 
     def _require_positions(self) -> None:
         """Plan-time guard: a phrase/section query against an index
@@ -1200,29 +1177,12 @@ class IndexReader:
                 "phrase queries (no positions stream)")
 
     def _segment_outputs(self, plan: dict) -> DataFrame:
-        tids = [t["term_id"] for t in plan["terms"] if t["term_id"] >= 0]
-        if not tids or (plan["mode"] in ("and", "phrase")
-                        and len(tids) < len(plan["terms"])):
+        if not _runnable(plan):
             return self.spark.createDataFrame([], OUT_SCHEMA)
-        tids = tids + plan.get("sel_lang_tids", []) + plan.get("sel_ts_tids", [])
-        # positions stream only for phrase verification (largest column;
-        # pruned out of the hot cache entirely)
-        if plan["mode"] == "phrase":
-            self._require_positions()
-        src = self._postings_full if plan["mode"] == "phrase" else self._postings
-        blocks = src.where(F.col("term_id").isin(tids))
+        blocks = self._blocks(_plan_tids(plan), plan["mode"] == "phrase")
         deleted_bc = self._deleted_bc
-        # applyInArrow, not applyInPandas: the stream columns stay on
-        # their Arrow buffers instead of becoming one Python bytes
-        # object per block (hundreds of thousands per task at scale)
-        if _ARROW_UDF:
-            return blocks.groupBy("segment").applyInArrow(
-                lambda tbl: _to_arrow_out(
-                    _segment_search(_table_to_pdf(tbl), plan, deleted_bc)),
-                schema=OUT_SCHEMA,
-            )
         return blocks.groupBy("segment").applyInPandas(
-            lambda pdf: _segment_search(pdf, plan, deleted_bc),
+            lambda pdf: _out_frame(_segment_rows(pdf, plan, deleted_bc)),
             schema=OUT_SCHEMA,
         )
 
@@ -1328,7 +1288,8 @@ class IndexReader:
                             num_hits=int(num_hits), facets=facets)
 
     def search(self, req: SearchRequest) -> SearchResult:
-        """One Spark job: per-segment top-k/facet/stat rows are tiny
+        """At most one Spark job (none on the ``cache`` path):
+        per-segment top-k/facet/stat rows are tiny
         (≤ P·(k + #facet values) rows), so the cross-segment merge runs
         driver-side in pandas — the literal analogue of the reference's
         ListMerger + CombinedFacetAccessible (util/ListMerger.java:104-137,
@@ -1338,9 +1299,7 @@ class IndexReader:
         plan = self.plan(req)
         out = (self._segment_outputs_driver(plan) if self._driver_fastpath(plan)
                else self._segment_outputs(plan).toPandas())
-        hits_pd = out[out["kind"] == _K_HIT]
-        order = np.lexsort((hits_pd["doc_id"].to_numpy(), -hits_pd["score"].to_numpy()))
-        page = hits_pd.iloc[order[req.offset:req.offset + req.k]]
+        page = _hit_page(out, req.offset, req.k)
         hits = page[["doc_id", "score"]].reset_index(drop=True)
         num_hits = int(out[out["kind"] == _K_STATS]["count"].sum())
         explanations = None
@@ -1410,15 +1369,8 @@ class IndexReader:
                 # positional index — they are dropped by the term-name
                 # filter below, so just skip their decode
                 # emptiness probe must not concatenate the payload:
-                # zero-copy offset check on Arrow columns, short-
-                # circuiting any() on object columns
-                col = g["pos_bytes"]
-                if not has_pos:
-                    g_pos = False
-                elif isinstance(col.dtype, pd.ArrowDtype):
-                    g_pos = len(_cat_bytes(col)) > 0  # buffer view, no copy
-                else:
-                    g_pos = any(len(x) for x in col)
+                # short-circuiting any()
+                g_pos = has_pos and any(len(x) for x in g["pos_bytes"])
                 pos = _decode_positions(g, tf) if g_pos else None
                 starts = np.cumsum(tf, dtype=np.int64) - tf
                 sel = np.flatnonzero(np.isin(docs, ids_arr))
@@ -1496,7 +1448,7 @@ class IndexReader:
         tids = [t for t in plan["word_tid"].values() if t >= 0]
         if not tids:
             return self.spark.createDataFrame([], OUT_SCHEMA)
-        blocks = self._postings_full.where(F.col("term_id").isin(tids))
+        blocks = self._blocks(tids, True)
         deleted_bc = self._deleted_bc
         if plan["sections"][0] == "regex":
             # per-doc boundary arrays ride along via cogroup on segment
@@ -1526,8 +1478,7 @@ class IndexReader:
                 return _empty_out()
             pdf = self._blocks_for_tids(tids)
             if pdf is None:
-                pdf = self._postings_full.where(
-                    F.col("term_id").isin(tids)).toPandas()
+                pdf = self._blocks(tids, True).toPandas()
             outs = [segment_section_search(g, plan, None, self._deleted_bc)
                     for _, g in pdf.groupby("segment")]
             return (pd.concat(outs, ignore_index=True) if outs
@@ -1540,8 +1491,7 @@ class IndexReader:
         matching sections in SearchResult.hits['n_sections'])."""
         plan = self._section_plan(tree, k, offset, boost)
         out = self._section_outputs_pd(plan)
-        hits_pd = out[out["kind"] == _K_HIT].sort_values("doc_id")
-        page = hits_pd.iloc[offset:offset + k]
+        page = _section_page(out, offset, k)
         hits = page[["doc_id", "score"]].copy()
         hits["n_sections"] = page["count"].to_numpy()
         num_hits = int(out[out["kind"] == _K_STATS]["count"].sum())
@@ -1560,9 +1510,7 @@ class IndexReader:
                 and self._postings_driver() is not None):
             # zero-Spark-job page (same rows: doc_id is a unique total
             # order, so sort+slice ≡ the distributed orderBy+limit+rank)
-            out_pd = self._section_outputs_pd(plan)
-            hp = (out_pd[out_pd["kind"] == _K_HIT]
-                  .sort_values("doc_id").iloc[offset:offset + k])
+            hp = _section_page(self._section_outputs_pd(plan), offset, k)
             return self.spark.createDataFrame(
                 hp[["doc_id", "count"]].rename(columns={"count": "n_sections"})
                 .astype({"doc_id": "int64", "n_sections": "int64"}),
@@ -1580,7 +1528,8 @@ class IndexReader:
         return top.select("doc_id", F.col("count").alias("n_sections"))
 
     def search_many(self, reqs: list[SearchRequest]) -> list[SearchResult]:
-        """Batch execution: the whole query set runs as ONE Spark job.
+        """Batch execution: the whole query set runs as ONE Spark job
+        (none when the in-driver block cache serves it).
 
         Per-segment tasks score every query against their segment
         (results identical to search() — same code path per query);
@@ -1593,172 +1542,107 @@ class IndexReader:
         individually — they never touch the postings job."""
         matchall = {i for i, r in enumerate(reqs) if r.query is None}
         if matchall:
-            out: list[SearchResult | None] = [None] * len(reqs)
             rest = [r for i, r in enumerate(reqs) if i not in matchall]
             rest_results = iter(self.search_many(rest) if rest else [])
-            for i, r in enumerate(reqs):
-                out[i] = (self._matchall_search(r) if i in matchall
-                          else next(rest_results))
-            return out
+            return [self._matchall_search(r) if i in matchall
+                    else next(rest_results) for i, r in enumerate(reqs)]
         # batch mode trades per-query block-max pruning / conjunctive
         # block skip for CROSS-QUERY decode sharing (each term decodes
-        # once per task no matter how many queries reference it) —
+        # once per segment no matter how many queries reference it) —
         # results are identical either way since pruning is exact
         # (property-tested); only the work-skipping strategy differs
         plans = [self.plan(r) for r in reqs]
-        all_tids = sorted(
-            {t["term_id"] for p in plans for t in p["terms"] if t["term_id"] >= 0}
-            | {tid for p in plans
-               for tid in p.get("sel_lang_tids", []) + p.get("sel_ts_tids", [])}
-        )
-        runnable = [
-            i for i, p in enumerate(plans)
-            if [t for t in p["terms"] if t["term_id"] >= 0]
-            and not (p["mode"] in ("and", "phrase")
-                     and any(t["term_id"] < 0 for t in p["terms"]))
-        ]
-        out_schema = OUT_SCHEMA + ", qid int"
-        if all_tids and runnable:
-            runnable_plans = [(i, plans[i]) for i in runnable]
-            if any(p["mode"] == "phrase" for _, p in runnable_plans):
-                self._require_positions()
-            cached = self._postings_driver()
-            if cached is not None:
-                # r6: whole-batch driver path from the in-driver block
-                # cache — zero Spark jobs; same per-segment
-                # _segment_search_rows protocol (groups_all + shared
-                # decode) the distributed tasks run, same vectorized
-                # merge below, so results are identical
-                # (property-tested both ways). Web-scale indexes exceed
-                # the cache gate and keep the distributed batch.
-                pdf_all, seg_slices, _tid_span, tid_segs = cached
-                dmap = (self._deleted_bc.value
-                        if self._deleted_bc is not None else {})
-                segs = sorted({g for t in all_tids
-                               for g in tid_segs.get(t, ())})
-                rows_all: list = []
-                qids: list = []
-                for g in segs:
-                    groups_all = _SegGroups(pdf_all, seg_slices[g])
-                    shared = self._decode_shared.setdefault(g, {})
-                    seg_deleted = dmap.get(g)
-                    for qid, plan in runnable_plans:
-                        tids = [t["term_id"] for t in plan["terms"]
-                                if t["term_id"] >= 0]
-                        tids += (plan.get("sel_lang_tids", [])
-                                 + plan.get("sel_ts_tids", []))
-                        if any(tid in groups_all for tid in tids):
-                            rows = _segment_search_rows(
-                                None, plan, groups_all=groups_all,
-                                shared_decode=shared, deleted=seg_deleted)
-                            if rows:
-                                rows_all.extend(rows)
-                                qids.extend([qid] * len(rows))
-                out = pd.DataFrame(rows_all, columns=_OUT_COLS)
-                out["qid"] = (np.asarray(qids, dtype=np.int32) if qids
-                              else pd.Series([], dtype="int32"))
-                return self._merge_batch_results(reqs, plans, out)
-            deleted_bc = self._deleted_bc
-            # exact per-batch stream needs: skip an ordinal stream's
-            # decode (1/5 of the memory-bound bytes) when NO plan in
-            # the batch reads it — lang feeds the lang facet and
-            # ords-mode lang selections; ts additionally feeds recency
-            need_lang = any(
-                "lang" in p["facets"]
-                or (p["sel_lang"] is not None
-                    and p.get("sel_lang_mode") != "postings")
-                for _, p in runnable_plans)
-            need_ts = any(
-                "ts_bucket" in p["facets"] or p.get("recency")
-                or (p["sel_ts"] is not None
-                    and p.get("sel_ts_mode") != "postings")
-                for _, p in runnable_plans)
-
-            def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-                # batch execution shares per-task state across ALL
-                # queries: blocks are grouped by term once, each term's
-                # streams decode once (shared_decode) however many
-                # queries reference it — the measured per-task profile
-                # was ~40% repeated decode + ~30% per-query regrouping
-                rows_all: list = []
-                qids: list = []
-                # one sort + one bulk decode per task: every query
-                # then scores against cache hits only; output tuples
-                # accumulate across queries into ONE frame per task
-                # (per-query frame construction was ~25% of the loop)
-                shared, groups_all = _batch_group_decode(
-                    pdf, need_lang=need_lang, need_ts=need_ts)
-                seg_deleted = _segment_deleted(deleted_bc, pdf)
-                for qid, plan in runnable_plans:
-                    tids = [t["term_id"] for t in plan["terms"] if t["term_id"] >= 0]
-                    tids += plan.get("sel_lang_tids", []) + plan.get("sel_ts_tids", [])
-                    if any(tid in groups_all for tid in tids):
-                        rows = _segment_search_rows(None, plan,
-                                                    groups_all=groups_all,
-                                                    shared_decode=shared,
-                                                    deleted=seg_deleted)
-                        if rows:
-                            rows_all.extend(rows)
-                            qids.extend([qid] * len(rows))
-                if not rows_all:
-                    e = _empty_out()
-                    e["qid"] = pd.Series([], dtype="int32")
-                    return e
-                out = pd.DataFrame(rows_all, columns=_OUT_COLS)
-                out["qid"] = np.asarray(qids, dtype=np.int32)
-                return out
-
-            if any(p["mode"] == "phrase" for _, p in runnable_plans):
-                self._require_positions()
-            src = (self._postings_full
-                   if any(p["mode"] == "phrase" for _, p in runnable_plans)
-                   else self._postings)
-            blocks = src.where(F.col("term_id").isin(all_tids))
-            # pin the exchange width: left to AQE, the small term-
-            # filtered shuffle coalesces to a handful of fat partitions
-            # (measured 15 partitions for 64 segments at 16 cores —
-            # idle cores + ragged last wave in the Python stage). A
-            # user repartition on the grouping key is reused by the
-            # groupBy (no second exchange) and is never coalesced.
-            n_seg = self.snap.stats.get("n_segments") or 0
-            npart = max(2 * self.spark.sparkContext.defaultParallelism,
-                        int(self.spark.conf.get(
-                            "spark.sql.shuffle.partitions", "32")))
-            if n_seg:
-                npart = min(npart, n_seg)
-            blocks = blocks.repartition(npart, "segment")
-            if _ARROW_UDF:
-                grouped = blocks.groupBy("segment").applyInArrow(
-                    lambda tbl: _to_arrow_out(run_segment(_table_to_pdf(tbl))),
-                    schema=out_schema)
-            else:
-                grouped = blocks.groupBy("segment").applyInPandas(
-                    run_segment, schema=out_schema)
-            # AQE's shuffle materialization splits this into two jobs
-            # with a barrier between scan and Python stage — a fixed
-            # ~0.6 s that caps batch scaling (it is a larger fraction
-            # of the fast leg). The exchange width is already pinned
-            # by the explicit repartition, so adaptivity buys nothing
-            # here: run the batch action non-adaptive, restore after.
-            # The flip is session-level conf, so it is serialized
-            # under a module lock: without it, two concurrent
-            # search_many calls could each capture the other's
-            # in-flight "false" and leave AQE permanently disabled.
-            # (Unrelated queries planned by OTHER threads during the
-            # window still see AQE off — inherent to session conf;
-            # batch retrieval is a single-driver bulk pattern.)
-            conf = self.spark.conf
-            with _AQE_LOCK:
-                prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-                try:
-                    conf.set("spark.sql.adaptive.enabled", "false")
-                    out = grouped.toPandas()
-                finally:
-                    conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        runnable = [(i, p) for i, p in enumerate(plans) if _runnable(p)]
+        tids = sorted({t for _, p in runnable for t in _plan_tids(p)})
+        phrase = any(p["mode"] == "phrase" for _, p in runnable)
+        if phrase:
+            self._require_positions()
+        if not runnable:
+            out = _out_frame([], [])
+        elif self._postings_driver() is None:
+            out = self._search_many_distributed(runnable, tids, phrase)
         else:
-            out = pd.DataFrame(columns=["kind", "doc_id", "score", "field",
-                                        "ordinal", "count", "qid"])
+            # whole batch from the in-driver block cache: zero Spark
+            # jobs, same _score_segment loop the distributed tasks run.
+            # Web-scale indexes exceed the cache gate and keep the
+            # distributed batch.
+            rows: list = []
+            qids: list = []
+            self._score_cached(runnable, tids, rows, qids)
+            out = _out_frame(rows, qids)
         return self._merge_batch_results(reqs, plans, out)
+
+    def _search_many_distributed(self, runnable: list, tids: list[int],
+                                 phrase: bool) -> pd.DataFrame:
+        """The batch as ONE Spark job: each segment task runs
+        ``_score_segment`` over every runnable plan."""
+        deleted_bc = self._deleted_bc
+        # exact per-batch stream needs: skip an ordinal stream's
+        # decode (1/5 of the memory-bound bytes) when NO plan in
+        # the batch reads it — lang feeds the lang facet and
+        # ords-mode lang selections; ts additionally feeds recency
+        need_lang = any(
+            "lang" in p["facets"]
+            or (p["sel_lang"] is not None
+                and p.get("sel_lang_mode") != "postings")
+            for _, p in runnable)
+        need_ts = any(
+            "ts_bucket" in p["facets"] or p.get("recency")
+            or (p["sel_ts"] is not None
+                and p.get("sel_ts_mode") != "postings")
+            for _, p in runnable)
+
+        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+            # one sort + one bulk decode per task (the measured
+            # per-task profile was ~40% repeated decode + ~30%
+            # per-query regrouping); output tuples accumulate across
+            # queries into ONE frame per task (per-query frame
+            # construction was ~25% of the loop)
+            shared, groups_all = _batch_group_decode(
+                pdf, need_lang=need_lang, need_ts=need_ts)
+            rows: list = []
+            qids: list = []
+            _score_segment(runnable, groups_all, shared,
+                           _segment_deleted(deleted_bc, pdf), rows, qids)
+            return _out_frame(rows, qids)
+
+        blocks = self._blocks(tids, phrase)
+        # pin the exchange width: left to AQE, the small term-
+        # filtered shuffle coalesces to a handful of fat partitions
+        # (measured 15 partitions for 64 segments at 16 cores —
+        # idle cores + ragged last wave in the Python stage). A
+        # user repartition on the grouping key is reused by the
+        # groupBy (no second exchange) and is never coalesced.
+        n_seg = self.snap.stats.get("n_segments") or 0
+        npart = max(2 * self.spark.sparkContext.defaultParallelism,
+                    int(self.spark.conf.get(
+                        "spark.sql.shuffle.partitions", "32")))
+        if n_seg:
+            npart = min(npart, n_seg)
+        grouped = blocks.repartition(npart, "segment").groupBy(
+            "segment").applyInPandas(run_segment,
+                                     schema=OUT_SCHEMA + ", qid int")
+        # AQE's shuffle materialization splits this into two jobs
+        # with a barrier between scan and Python stage — a fixed
+        # ~0.6 s that caps batch scaling (it is a larger fraction
+        # of the fast leg). The exchange width is already pinned
+        # by the explicit repartition, so adaptivity buys nothing
+        # here: run the batch action non-adaptive, restore after.
+        # The flip is session-level conf, so it is serialized
+        # under a module lock: without it, two concurrent
+        # search_many calls could each capture the other's
+        # in-flight "false" and leave AQE permanently disabled.
+        # (Unrelated queries planned by OTHER threads during the
+        # window still see AQE off — inherent to session conf;
+        # batch retrieval is a single-driver bulk pattern.)
+        conf = self.spark.conf
+        with _AQE_LOCK:
+            prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
+            try:
+                conf.set("spark.sql.adaptive.enabled", "false")
+                return grouped.toPandas()
+            finally:
+                conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     def _merge_batch_results(self, reqs: list[SearchRequest], plans: list,
                              out: pd.DataFrame) -> list:
@@ -1809,7 +1693,12 @@ class IndexReader:
                 part = part.sort_values(["qid", "count", "value"],
                                         ascending=[True, False, True])
                 fc_by_field[f] = {int(q): g for q, g in part.groupby("qid")}
-        empty_facet = pd.DataFrame({"value": [], "count": []})
+        # an absent facet has search()'s shape: dictionary value dtype,
+        # int64 counts
+        empty_facet = {f: pd.DataFrame({
+            "value": self.dicts[FACET_FIELDS[f]]["value"].iloc[:0],
+            "count": pd.Series([], dtype="int64")}).reset_index(drop=True)
+            for f in want_fields}
         # explanations: restrict to page docs with ONE (qid, doc_id)
         # merge instead of per-query isin scans
         ex_by_qid: dict[int, pd.DataFrame] = {}
@@ -1827,7 +1716,7 @@ class IndexReader:
             for f in plan["facets"]:
                 part = fc_by_field.get(f, {}).get(i)
                 facets[f] = (part[["value", "count"]].reset_index(drop=True)
-                             if part is not None else empty_facet.copy())
+                             if part is not None else empty_facet[f].copy())
             explanations = None
             if req.explain:
                 # same contract as search(): an empty result still
@@ -1867,11 +1756,8 @@ class IndexReader:
                 # zero-Spark-job page from the in-driver block cache —
                 # identical rows: same scorer, same (score desc,
                 # doc_id asc) total order as the distributed limit
-                out_pd = self._segment_outputs_driver(plan)
-                hp = out_pd[out_pd["kind"] == _K_HIT]
-                order = np.lexsort((hp["doc_id"].to_numpy(),
-                                    -hp["score"].to_numpy()))
-                page = hp.iloc[order[req.offset:req.offset + req.k]]
+                page = _hit_page(self._segment_outputs_driver(plan),
+                                 req.offset, req.k)
                 hits = self.spark.createDataFrame(
                     page[["doc_id", "score"]].astype(
                         {"doc_id": "int64", "score": "float64"}),

@@ -1,5 +1,8 @@
 """Property test: block-max pruned disjunctive top-k must be EXACTLY
-the exhaustive top-k (docIDs and float64 scores)."""
+the exhaustive top-k (docIDs and float64 scores). Pruning runs only on
+the paths where a query decodes its own blocks ("scan" and
+"distributed"; the cache path shares decode and never prunes), so the
+tests run there, and a spy shows the driver-side scan path pruned."""
 
 from __future__ import annotations
 
@@ -7,47 +10,53 @@ import pytest
 
 from bobo_spark.build import BuildConfig, build_snapshot
 from bobo_spark.oracle import reference_queryset
-from bobo_spark.query import IndexReader, SearchRequest
+from bobo_spark.query import SearchRequest
 from bobo_spark.webgen import make_vocab, webpages
+from conftest import path_readers
+
+PRUNE_PATHS = ("scan", "distributed")
 
 
 @pytest.fixture(scope="module")
-def reader(spark, tmp_path_factory):
+def readers(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_prune"))
     build_snapshot(spark, webpages(spark, 1500, 6), d,
                    BuildConfig(docs_per_segment=250, block_size=32))
-    return IndexReader(spark, d)
+    return path_readers(spark, d, PRUNE_PATHS)
 
 
-def test_pruned_equals_exhaustive(reader):
+def test_pruned_equals_exhaustive(readers, prune_spy):
     vocab = make_vocab()
     qs = reference_queryset(vocab, n_conj=0, n_disj=12, n_lang=0, n_ts=0)
     qs.append({"query": ["ba", "be", "bi"], "mode": "or"})  # head-heavy
     qs.append({"query": ["ba", vocab[4000]], "mode": "or"})  # head+tail
-    pruned_nonempty = 0
-    for q in qs:
-        a = reader.search(SearchRequest(query=q["query"], mode="or", k=10, prune=True))
-        b = reader.search(SearchRequest(query=q["query"], mode="or", k=10, prune=False))
-        assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist(), q
-        assert a.hits["score"].tolist() == b.hits["score"].tolist(), q
-        assert a.num_hits == b.num_hits, q  # exact count survives pruning
-        pruned_nonempty += len(a.hits) > 0
-    assert pruned_nonempty > 5
+    for path in PRUNE_PATHS:
+        reader = readers[path]
+        pruned_nonempty = 0
+        for q in qs:
+            a = reader.search(SearchRequest(query=q["query"], mode="or", k=10, prune=True))
+            b = reader.search(SearchRequest(query=q["query"], mode="or", k=10, prune=False))
+            assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist(), (path, q)
+            assert a.hits["score"].tolist() == b.hits["score"].tolist(), (path, q)
+            assert a.num_hits == b.num_hits, (path, q)  # exact count survives pruning
+            pruned_nonempty += len(a.hits) > 0
+        assert pruned_nonempty > 5
+        if path == "scan":
+            assert prune_spy, "block-max pruning never ran on the scan path"
 
 
-def test_pruned_recency_equals_exhaustive(reader):
+def test_pruned_recency_equals_exhaustive(readers, prune_spy):
     """Recency-aware pruning (θ from exact boosted contribs, block
     bounds scaled by the factor's global max) must stay exact."""
     import pandas as pd
 
     # "now" just past the corpus so the decay window bites real docs
-    d = reader.dicts["ts_bucket"]
+    d = readers["scan"].dicts["ts_bucket"]
     now_ms = int(pd.to_datetime(d["value"], utc=True).astype("int64").max()
                  // 1_000_000) + 86400000
     vocab = make_vocab()
     qs = reference_queryset(vocab, n_conj=0, n_disj=8, n_lang=0, n_ts=0)
     qs.append({"query": ["ba", "be", "bi"], "mode": "or"})
-    nonempty = 0
     # sweep: cutoff bites some docs (30/90d), no docs (now far past the
     # corpus — every x > cutoff, factor 1 everywhere), and max_factor=0
     # (decay parabola collapses to a constant 1 boost)
@@ -58,14 +67,19 @@ def test_pruned_recency_equals_exhaustive(reader):
          "max_factor": 2.0},
         {"now_ms": now_ms, "cutoff_ms": 60 * 86400000, "max_factor": 0.0},
     ]
-    for rec in configs:
-        for q in qs:
-            a = reader.search(SearchRequest(query=q["query"], mode="or",
-                                            k=10, prune=True, recency=rec))
-            b = reader.search(SearchRequest(query=q["query"], mode="or",
-                                            k=10, prune=False, recency=rec))
-            assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist(), q
-            assert a.hits["score"].tolist() == b.hits["score"].tolist(), q
-            assert a.num_hits == b.num_hits, q
-            nonempty += len(a.hits) > 0
-    assert nonempty > 10
+    for path in PRUNE_PATHS:
+        reader = readers[path]
+        nonempty = 0
+        for rec in configs:
+            for q in qs:
+                a = reader.search(SearchRequest(query=q["query"], mode="or",
+                                                k=10, prune=True, recency=rec))
+                b = reader.search(SearchRequest(query=q["query"], mode="or",
+                                                k=10, prune=False, recency=rec))
+                assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist(), (path, q)
+                assert a.hits["score"].tolist() == b.hits["score"].tolist(), (path, q)
+                assert a.num_hits == b.num_hits, (path, q)
+                nonempty += len(a.hits) > 0
+        assert nonempty > 10
+        if path == "scan":
+            assert prune_spy, "block-max pruning never ran on the scan path"

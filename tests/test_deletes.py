@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
 from bobo_spark.query import IndexReader, SearchRequest
 from bobo_spark.webgen import webpages
+from conftest import BATCH_PATHS, assert_same_result, path_readers
 
 
 @pytest.fixture(scope="module")
@@ -89,11 +90,12 @@ def test_delete_is_snapshot_scoped(env):
     assert after.snap.stats["n_deleted"] == len(victims)
 
 
-def test_pruned_or_exact_with_deletes(spark, tmp_path_factory):
+def test_pruned_or_exact_with_deletes(spark, tmp_path_factory, prune_spy):
     """Block-max pruning with tombstones: θ must come from LIVE
     contributions only. Victims = the top hits of the pruned query
     itself, so a θ computed over deleted docs would be inflated and
-    would wrongly prune blocks holding live top-k docs."""
+    would wrongly prune blocks holding live top-k docs. Runs on the
+    paths that prune ("scan", "distributed")."""
     d = str(tmp_path_factory.mktemp("idx_del_prune"))
     docs = webpages(spark, 800, 4)
     build_snapshot(spark, docs, d, BuildConfig(docs_per_segment=200,
@@ -103,17 +105,19 @@ def test_pruned_or_exact_with_deletes(spark, tmp_path_factory):
     pre = r0.search(req_all)
     victims = [int(x) for x in pre.hits["doc_id"][:5]]
     delete_docs(spark, d, victims)
-    r1 = IndexReader(spark, d)
-    a = r1.search(SearchRequest(query="ba be", mode="or", k=10, prune=True))
-    b = r1.search(SearchRequest(query="ba be", mode="or", k=10, prune=False))
-    assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist()
-    assert a.hits["score"].tolist() == b.hits["score"].tolist()
-    assert a.num_hits == b.num_hits == pre.num_hits - len(victims)
     # exact oracle: pre-delete ranking minus victims (scores unchanged
     # until merge — Lucene stats semantics)
     exp = pre.hits[~pre.hits["doc_id"].isin(victims)].head(10)
-    assert a.hits["doc_id"].tolist() == exp["doc_id"].tolist()
-    assert a.hits["score"].tolist() == exp["score"].tolist()
+    for path, r1 in path_readers(spark, d, ("scan", "distributed")).items():
+        a = r1.search(SearchRequest(query="ba be", mode="or", k=10, prune=True))
+        b = r1.search(SearchRequest(query="ba be", mode="or", k=10, prune=False))
+        assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist(), path
+        assert a.hits["score"].tolist() == b.hits["score"].tolist(), path
+        assert a.num_hits == b.num_hits == pre.num_hits - len(victims), path
+        assert a.hits["doc_id"].tolist() == exp["doc_id"].tolist(), path
+        assert a.hits["score"].tolist() == exp["score"].tolist(), path
+        if path == "scan":
+            assert prune_spy, "block-max pruning never ran on the scan path"
 
 
 def test_append_after_delete_keeps_tombstones(spark, tmp_path_factory):
@@ -153,19 +157,22 @@ def test_append_after_delete_keeps_tombstones(spark, tmp_path_factory):
 
 def test_search_many_excludes_deleted(env):
     """Batch mode shares per-task decode state across queries — its
-    tombstone handling (deleted passed once per task) must match the
-    single-query path exactly."""
+    tombstone handling (deleted passed once per segment) must match
+    the single-query path exactly, on every path."""
     spark, d, docs, before, after, victims = env
     reqs = [SearchRequest(query="ba", mode="or", k=20),
             SearchRequest(query="ba be", mode="and", k=10),
             SearchRequest(query="ba be", mode="or", k=10, facets=("lang",))]
-    batch = after.search_many(reqs)
-    for b, r in zip(batch, reqs):
-        s = after.search(r)
-        assert b.hits["doc_id"].tolist() == s.hits["doc_id"].tolist()
-        assert b.hits["score"].tolist() == s.hits["score"].tolist()
-        assert b.num_hits == s.num_hits
-        assert not set(victims) & set(b.hits["doc_id"])
+    want = [after.search(r) for r in reqs]
+    for path, reader in path_readers(spark, d).items():
+        for r, s in zip(reqs, want):
+            assert_same_result(reader.search(r), s, (path, r))
+        if path not in BATCH_PATHS:
+            continue
+        batch = reader.search_many(reqs)
+        for b, r, s in zip(batch, reqs, want):
+            assert_same_result(b, s, (path, "batch", r))
+            assert not set(victims) & set(b.hits["doc_id"])
 
 
 def test_mixed_format_delete_tables(spark, tmp_path_factory):
@@ -245,3 +252,24 @@ def test_driver_delete_path_matches_distributed(spark, tmp_path_factory):
     ra = IndexReader(spark, tmp_path_factory.getbasetemp().as_posix()
                      + "/idx_delpar_list0")
     assert set(ra.deleted) == {3, 8, 77, 205, 206}
+
+
+def test_delete_docs_generator_input_without_driver_gate(
+        spark, tmp_path_factory, monkeypatch):
+    """A generator of ids is consumed once: when the driver-direct
+    path declines (forward over the small-table gate), the distributed
+    fallback must still publish every id, not an empty set."""
+    from bobo_spark import build
+
+    d = str(tmp_path_factory.mktemp("idx_del_gen"))
+    build_snapshot(spark, webpages(spark, 300, 3), d,
+                   BuildConfig(docs_per_segment=100))
+    monkeypatch.setattr(build, "_small_table_pdf", lambda *a, **kw: None)
+    victims = [4, 150, 299]
+    snap = delete_docs(spark, d, (v for v in victims))
+    assert snap.stats["n_deleted"] == len(victims)
+    r = IndexReader(spark, d)
+    assert set(r.deleted) == set(victims)
+    res = r.search(SearchRequest(query=None, k=10**6))
+    assert res.num_hits == 300 - len(victims)
+    assert not set(victims) & set(res.hits["doc_id"])

@@ -1,7 +1,8 @@
 """Driver fast path: queries whose total posting count (known exactly
-from the dictionary df) is page-scale score on the driver — no
-groupBy exchange, no Python-worker round trip. Results must be
-IDENTICAL to the distributed path (same _segment_search per segment)."""
+from the dictionary df) is page-scale score on the driver — from the
+in-driver block cache ("cache") or one term-filtered scan ("scan") —
+with no groupBy exchange and no Python-worker round trip. Results must
+be IDENTICAL to the distributed path (same per-segment scorer)."""
 
 from __future__ import annotations
 
@@ -9,8 +10,9 @@ import pandas as pd
 import pytest
 
 from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
-from bobo_spark.query import IndexReader, SearchRequest
+from bobo_spark.query import SearchRequest
 from bobo_spark.webgen import webpages
+from conftest import assert_same_result, path_readers
 
 
 @pytest.fixture(scope="module")
@@ -19,7 +21,7 @@ def env(spark, tmp_path_factory):
     build_snapshot(spark, webpages(spark, 900, 5), d,
                    BuildConfig(docs_per_segment=200, block_size=32))
     delete_docs(spark, d, [3, 7])
-    return IndexReader(spark, d)
+    return path_readers(spark, d)
 
 
 REQS = [
@@ -33,29 +35,18 @@ REQS = [
 
 
 def test_fastpath_equals_distributed(env):
-    reader = env
+    assert env["scan"]._postings_driver() is None
+    assert not env["distributed"]._driver_fastpath(
+        env["distributed"].plan(REQS[0]))
     for req in REQS:
-        plan = reader.plan(req)
-        assert reader._driver_fastpath(plan), req  # small corpus: fast
-        fast = reader.search(req)
-        reader.DRIVER_POSTINGS_THRESHOLD = -1  # force distributed
-        try:
-            dist = reader.search(req)
-        finally:
-            del reader.DRIVER_POSTINGS_THRESHOLD  # back to class attr
-        assert fast.hits["doc_id"].tolist() == dist.hits["doc_id"].tolist()
-        assert fast.hits["score"].tolist() == dist.hits["score"].tolist()
-        assert fast.num_hits == dist.num_hits
-        assert set(fast.facets) == set(dist.facets)
-        for f in fast.facets:
-            pd.testing.assert_frame_equal(fast.facets[f], dist.facets[f])
-        if req.explain:
-            pd.testing.assert_frame_equal(fast.explanations,
-                                          dist.explanations)
+        assert env["cache"]._driver_fastpath(env["cache"].plan(req)), req
+        want = env["cache"].search(req)
+        for path in ("scan", "distributed"):
+            assert_same_result(env[path].search(req), want, (path, req))
 
 
 def test_fastpath_costs_postings_selections(env):
-    reader = env
+    reader = env["cache"]
     # r6: postings-mode selections resolve their sentinel Σdf at plan
     # time (plan["sel_df"]), so the fast path is cost-gated on the
     # COMBINED posting volume — in-gate selections are served on the
@@ -71,20 +62,17 @@ def test_section_fastpath_equals_distributed(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_fast_sec"))
     build_snapshot(spark, webpages(spark, 600, 4), d,
                    BuildConfig(docs_per_segment=150, sections=("window", 8)))
-    reader = IndexReader(spark, d)
+    readers = path_readers(spark, d)
     trees = [("and", ("term", "ba"), ("term", "be")),
              ("phrase", "ba be"),
              ("or", ("term", "ka"), ("and", ("term", "ba"),
                                      ("not", ("term", "vu"))))]
     for tree in trees:
-        fast = reader.section_search(tree, k=30)
-        reader.DRIVER_POSTINGS_THRESHOLD = -1
-        try:
-            dist = reader.section_search(tree, k=30)
-        finally:
-            del reader.DRIVER_POSTINGS_THRESHOLD
-        assert fast.num_hits == dist.num_hits, tree
-        pd.testing.assert_frame_equal(fast.hits, dist.hits)
+        want = readers["cache"].section_search(tree, k=30)
+        for path in ("scan", "distributed"):
+            got = readers[path].section_search(tree, k=30)
+            assert got.num_hits == want.num_hits, (path, tree)
+            pd.testing.assert_frame_equal(got.hits, want.hits)
 
 
 def test_cached_fastpath_unknown_term_with_selection(env):
@@ -93,19 +81,9 @@ def test_cached_fastpath_unknown_term_with_selection(env):
     not resolve to them (it would turn the candidate set into every
     doc). OR-mode query with one unknown term + a postings-mode
     selection must match the distributed path exactly."""
-    reader = env
     req = SearchRequest(query=["ba", "zzznothing"], mode="or", k=10,
                         facets=("lang",), selections={"lang": ["fr"]})
-    assert reader._postings_driver() is not None
-    fast = reader.search(req)
-    reader.DRIVER_POSTINGS_THRESHOLD = -1
-    try:
-        dist = reader.search(req)
-    finally:
-        del reader.DRIVER_POSTINGS_THRESHOLD
-    assert fast.num_hits == dist.num_hits
-    assert fast.hits["doc_id"].tolist() == dist.hits["doc_id"].tolist()
-    assert fast.hits["score"].tolist() == dist.hits["score"].tolist()
-    a = dict(zip(fast.facets["lang"]["value"], fast.facets["lang"]["count"]))
-    b = dict(zip(dist.facets["lang"]["value"], dist.facets["lang"]["count"]))
-    assert a == b
+    assert env["cache"]._postings_driver() is not None
+    want = env["cache"].search(req)
+    for path in ("scan", "distributed"):
+        assert_same_result(env[path].search(req), want, path)

@@ -2,34 +2,41 @@
 offset+1..offset+k — the same page ``search()`` returns — via the
 rank-window-above-the-limit pattern (never window-then-limit, which
 would sort the full hit set; never limit-without-skip, which returns
-the wrong page)."""
+the wrong page) — on every keyword-search path."""
 
 from __future__ import annotations
 
 import pytest
 
 from bobo_spark.build import BuildConfig, build_snapshot
-from bobo_spark.query import IndexReader, SearchRequest
+from bobo_spark.query import SearchRequest
 from bobo_spark.webgen import webpages
+from conftest import QUERY_PATHS, path_readers
 
 
 @pytest.fixture(scope="module")
-def reader(spark, tmp_path_factory):
+def readers(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_page"))
     build_snapshot(spark, webpages(spark, 600, 4), d,
                    BuildConfig(docs_per_segment=150))
-    return IndexReader(spark, d)
+    return path_readers(spark, d)
+
+
+@pytest.fixture(scope="module")
+def reader(readers):
+    return readers["cache"]
 
 
 @pytest.mark.parametrize("offset", [0, 3, 17])
-def test_search_df_matches_search_page(reader, offset):
+def test_search_df_matches_search_page(readers, offset):
     req = SearchRequest(query="ba be", mode="or", k=5, offset=offset)
-    want = reader.search(req).hits
-    got = (reader.search_df(req).toPandas()
-           .sort_values(["score", "doc_id"], ascending=[False, True])
-           .reset_index(drop=True))
-    assert got["doc_id"].tolist() == want["doc_id"].tolist()
-    assert got["score"].tolist() == want["score"].tolist()
+    want = readers["cache"].search(req).hits
+    for path in QUERY_PATHS:
+        got = (readers[path].search_df(req).toPandas()
+               .sort_values(["score", "doc_id"], ascending=[False, True])
+               .reset_index(drop=True))
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), path
+        assert got["score"].tolist() == want["score"].tolist(), path
 
 
 @pytest.mark.parametrize("offset", [0, 4])
