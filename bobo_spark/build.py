@@ -950,11 +950,15 @@ def build_snapshot(
                     full.write.mode("overwrite").parquet(terms_path)
             mark("terms")
 
-    except BaseException:
+    except BaseException as exc:
         if docs_fut is not None:
-            import contextlib
-            with contextlib.suppress(Exception):
+            try:
                 docs_fut.result()
+            except Exception as docs_exc:
+                # the stage failure is what propagates; the overlapped
+                # doc-table write's own error rides along on it
+                exc.add_note(f"the overlapped doc-table write also failed: "
+                             f"{docs_exc!r}")
             docs_pool.shutdown()
         raise
 
@@ -1001,6 +1005,14 @@ def build_snapshot(
                 # search planner reads this to pick window arithmetic
                 # vs the per-doc boundary table
                 "sections": list(cfg.sections) if cfg.sections else None,
+                # segment = doc_id // docs_per_segment; None once an
+                # append used a different value (see merge's forward
+                # stage, which relies on one uniform value)
+                "docs_per_segment": (
+                    cfg.docs_per_segment
+                    if parent is None or parent.stats.get(
+                        "docs_per_segment") == cfg.docs_per_segment
+                    else None),
             }
         )
         mark("stats")

@@ -49,7 +49,7 @@ from .codecs import binary_array, binary_parts, vb_decode, vb_encode_segmented
 # shared with the query engine on purpose: a codec change that reaches
 # query-side decode but not the merge (or vice versa) would silently
 # corrupt merged indexes
-from .query import _decode_docs, _sorted_member
+from .query import _rebase_docs, _sorted_member
 
 _SENTINEL_FIELDS = {"lang": "dict_lang", "ts": "dict_ts_bucket"}
 
@@ -59,8 +59,10 @@ _SENTINEL_FIELDS = {"lang": "dict_lang", "ts": "dict_ts_bucket"}
 
 def _decode_block_docs(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """(decoded docIDs, n_docs per block) for a batch of block rows —
-    the docID rebase is query._decode_docs (the engine's own decode)."""
-    return _decode_docs(pdf), pdf["n_docs"].to_numpy(np.int64)
+    the docID rebase is query._rebase_docs (the engine's own decode)."""
+    nds = pdf["n_docs"].to_numpy(np.int64)
+    deltas = vb_decode(b"".join(pdf["doc_bytes"])).astype(np.int64)
+    return _rebase_docs(deltas, nds, pdf["first_doc"].to_numpy(np.int64)), nds
 
 
 def _keep_mask(pdf: pd.DataFrame, docs: np.ndarray, nds: np.ndarray,
@@ -383,6 +385,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             "store_positions": bool(parent.stats.get("store_positions",
                                                      False)),
             "sections": parent.stats.get("sections"),
+            "docs_per_segment": parent.stats.get("docs_per_segment"),
         })
         cat.update_snapshot(snap)
         mark("stats")
@@ -461,16 +464,20 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
         dmin = snap.stats.get("doc_min")
         dmax = snap.stats.get("doc_max")
         span = (dmax - dmin + 1) if dmin is not None else None
-        if span and span <= 2 * max(1, snap.stats.get("n_docs", 0)):
+        if (span and span <= 2 * max(1, snap.stats.get("n_docs", 0))
+                and parent.stats.get("docs_per_segment") is not None):
             # dense survivor ids: arithmetic range partitioning via
             # identity keys — repartitionByRange would evaluate the
             # anti-join + remap joins a SECOND time just to sample
             # boundaries (the same fix the build's forward stage uses —
             # the sampling pass cost ~half the 2M forward rewrite).
-            # segment is monotone
-            # in doc_id (assigned as doc_id // docs_per_segment at
-            # build, appends only grow both), so doc-range partitioning
-            # preserves the (segment, doc_id) range layout.
+            # segment is monotone in doc_id while every batch used the
+            # same docs_per_segment (segment = doc_id // docs_per_segment,
+            # appends only grow both), so doc-range partitioning
+            # preserves the (segment, doc_id) range layout. Batches
+            # with different values record None, and snapshots that
+            # predate the stat carry none: both take the sampled
+            # ranges below.
             from .build import _identity_partition_keys
             keys = _identity_partition_keys(spark, nfp)
             part = F.floor((F.col("doc_id") - F.lit(dmin)) * F.lit(nfp)
@@ -479,7 +486,8 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             rows = (rows.withColumn("_pk", pk)
                     .repartition(nfp, "_pk").drop("_pk"))
         else:
-            # sparse survivors (heavy tombstoning): sampled ranges
+            # sparse survivors (heavy tombstoning) or mixed
+            # docs_per_segment: sampled ranges
             rows = rows.repartitionByRange(nfp, "segment", "doc_id")
         (rows.sortWithinPartitions("segment", "doc_id")
          .write.mode("overwrite").parquet(forward_path))

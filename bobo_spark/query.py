@@ -2,34 +2,50 @@
 
 Execution model (the Spark rendition of SURVEY.md §3.1):
 
-* Driver resolves query terms against the term dictionary (tiny
-  filtered read), facet/selection values against the facet dicts, and
-  broadcasts a query plan.
+* Planning is O(query), never O(dictionary): each reader builds, once
+  at open, a term → (term_id, df) lookup (facet sentinels included),
+  per-facet value → ordinal maps and value-rank arrays, and the
+  recency ``ord_ms`` table. Readers over a web-scale dictionary (past
+  the 2M-term gate) resolve terms with a filtered Spark read instead.
 * Posting blocks for the query terms are read with a pushed-down
   ``term_id IN (...)`` filter (blocks are sorted by (segment, term_id,
   doc_id) at build time → parquet row-group pruning does the work of
   Lucene's TermsEnum seek).
-* One per-segment scorer (``_segment_search_rows``) is the exact
-  analogue of the reference's per-segment sub-browse loop
-  (api/MultiBoboBrowser.java:100-127): decode → selection masks →
+* Blocks are scored from a ``_BlockStore``, laid out like the
+  reference's FacetDataCache columns (SURVEY §1.1): numpy metadata
+  arrays (segment, term_id, first_doc, last_doc, n_docs, max_tf,
+  min_dl) sorted by (segment, term_id, first_doc), and one
+  concatenated byte buffer plus an int64 block-offset array per
+  stream. Streams decode lazily, per BLOCK, into one flat array per
+  stream; a (segment, term) run of decoded blocks is a zero-copy view.
+* One per-segment scorer (``_score_plan``) is the exact analogue of
+  the reference's per-segment sub-browse loop
+  (api/MultiBoboBrowser.java:100-127): selection masks →
   intersection/union → BM25 TAAT accumulation in ascending
   lexicographic term order (float64, pinned order = score identity
-  with the oracle) → local top-k + local facet bincounts. It runs on
-  one of three paths, chosen from published stats and dictionary df:
-  - ``cache``: an index under ``DRIVER_CACHE_TOKSUM`` is pulled into an
-    in-driver block cache once per reader; page-scale queries score
-    there with zero Spark jobs, decoded streams shared across queries;
+  with the oracle) → a typed ``_SegOut`` (local top-k doc_id/score
+  arrays, one bincount vector per facet, the hit count, explanation
+  arrays). It runs on one of three paths, chosen from published stats
+  and dictionary df:
+  - ``cache``: an index under ``DRIVER_CACHE_TOKSUM`` is read into an
+    in-driver ``_BlockStore`` once per reader; page-scale queries
+    score there with zero Spark jobs, decoded blocks shared across
+    queries;
   - ``scan``: page-scale queries (Σdf ≤ ``DRIVER_POSTINGS_THRESHOLD``)
-    on an uncached reader fetch their term-filtered blocks once and
-    score them in-process;
+    on an uncached reader fetch their term-filtered blocks once (Arrow)
+    and score them in-process;
   - ``distributed``: ``groupBy(segment).applyInPandas`` scores each
-    segment on the executors.
-* Driver merge: global top-k by a (score desc, doc_id asc) sort
-  (≙ sort/SortCollectorImpl.java:354-368 +
-  util/ListMerger.java:104-137) and facet count summation
+    segment on the executors; the tasks encode ``_SegOut``s as
+    ``OUT_SCHEMA`` rows only at that boundary and the driver decodes
+    them back (``_parts_from_rows``).
+* One merge (``IndexReader._merge``) serves ``search``,
+  ``search_many`` and ``search_df``: one (score desc, doc_id asc)
+  lexsort for the page (≙ sort/SortCollectorImpl.java:354-368 +
+  util/ListMerger.java:104-137) and a sum of the count vectors with
+  facet values ordered by (count desc, value rank)
   (≙ facets/CombinedFacetAccessible.java:101-192).
 
-Pruning:
+Pruning (every path):
 * conjunctive — blocks of non-rarest terms are skipped before decode
   when their [first_doc, last_doc] interval overlaps no block of the
   rarest term (the skip-scan analogue of
@@ -39,9 +55,9 @@ Pruning:
   contributions, then whole blocks whose summed upper bound stays
   below θ are dropped *before* tf decode (block-max WAND flavor;
   every doc in a dropped block provably scores < θ).
-Both apply only where a query decodes its own blocks (``scan`` and
-``distributed`` single queries); shared-decode scoring (``cache`` and
-``search_many``) skips them — same results, different work.
+A query decodes only the blocks it keeps. Because the decode cache is
+keyed by block, a cached query also reuses every block other queries
+already decoded — pruning and decode sharing hold together.
 """
 
 from __future__ import annotations
@@ -50,6 +66,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import bm25
@@ -65,6 +82,9 @@ OUT_SCHEMA = "kind int, doc_id long, score double, field string, ordinal long, c
 _OUT_COLS = ["kind", "doc_id", "score", "field", "ordinal", "count"]
 _K_HIT, _K_FACET, _K_STATS, _K_EXPL = 1, 2, 3, 4
 FACET_FIELDS = {"lang": "lang", "ts_bucket": "ts_bucket"}
+# what a missing, remote or unreadable table raises on a driver-direct
+# read; the callers fall back to a Spark read
+_READ_ERRORS = (OSError, pa.ArrowInvalid)
 
 
 @dataclass
@@ -109,97 +129,211 @@ class SearchResult:
     explanations: pd.DataFrame | None = None
 
 
-def _plan_terms(terms_pd: pd.DataFrame, qtokens: list[str], n_docs: int) -> list[dict]:
-    by_term = terms_pd.set_index("term")
+def _plan_terms(found: dict, qtokens: list[str], n_docs: int) -> list[dict]:
+    """Plan entries of the query terms; ``found`` maps each known term
+    to its (term_id, df)."""
     plan = []
     for t in sorted(set(qtokens)):  # ascending lexicographic = accumulation order
-        if t in by_term.index:
-            row = by_term.loc[t]
-            plan.append(
-                {
-                    "term": t,
-                    "term_id": int(row["term_id"]),
-                    "df": int(row["df"]),
-                    "idf": float(bm25.idf(int(row["df"]), n_docs)),
-                }
-            )
+        if t in found:
+            tid, df = found[t]
+            plan.append({"term": t, "term_id": tid, "df": df,
+                         "idf": float(bm25.idf(df, n_docs))})
         else:
             plan.append({"term": t, "term_id": -1, "df": 0, "idf": 0.0})
     return plan
 
 
-def _decode_docs(b: pd.DataFrame) -> np.ndarray:
-    """Decode ONLY the docID streams of a term's blocks (sorted by
-    first_doc): one vectorized pass over the concatenated delta
-    buffers, per-block absolute first_docs re-based with a segmented
-    cumsum. Used standalone for exact hit counting under block-max
-    pruning (tf/meta streams stay undecoded)."""
-    nds = b["n_docs"].to_numpy(np.int64)
-    firsts = b["first_doc"].to_numpy(np.int64)
+def _spans(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Indices of the concatenated ranges [starts[i], starts[i]+lens[i])."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    return np.arange(total) + np.repeat(starts - (ends - lens), lens)
+
+
+def _rebase_docs(deltas: np.ndarray, nds: np.ndarray,
+                 firsts: np.ndarray) -> np.ndarray:
+    """Absolute docIDs of consecutive blocks from their concatenated
+    delta streams (a block's first doc lives in its row, not in the
+    stream): one segmented cumsum, per-block firsts re-based."""
     total = int(nds.sum())
     starts = np.cumsum(nds) - nds
-    deltas_all = vb_decode(b"".join(b["doc_bytes"])).astype(np.int64)
     vals = np.zeros(total, dtype=np.int64)
     mask = np.ones(total, dtype=bool)
     mask[starts] = False
-    vals[mask] = deltas_all
+    vals[mask] = deltas
     cums = np.cumsum(vals)
     return cums - np.repeat(cums[starts], nds) + np.repeat(firsts, nds)
 
 
-def _decode_docs_blocks(b: pd.DataFrame):
-    """_decode_docs plus per-block offsets into the decoded array, so
-    a later pass can re-slice surviving blocks without re-decoding."""
-    docs = _decode_docs(b)
-    nds = b["n_docs"].to_numpy(np.int64)
-    offs = np.concatenate(([0], np.cumsum(nds)))
-    return docs, offs
-
-
-def _decode_term_blocks(b: pd.DataFrame, docs: np.ndarray | None = None):
-    """Decode all blocks of one term (sorted by first_doc) at once.
-
-    Returns (docs, tf, dl, lang, ts); docs are int64 ascending
-    (global ids can exceed 32 bits at web scale), the per-posting
-    streams are int32 — tf/dl are 16-bit-clamped at encode
-    (pack_meta) and the ordinal spaces are small, so int32 is always
-    sufficient and halves the decode cache's memory traffic (the
-    batch stage's measured residual). All consumers promote to
-    int64/float64 at use. ``docs`` may be passed pre-decoded
-    (pruned-OR mode reuses the counting pass's docID decode instead
-    of paying it twice).
-    """
-    if docs is None:
-        docs = _decode_docs(b)
-    tf = vb_decode(b"".join(b["tf_bytes"])).astype(np.int32)
-    dl = vb_decode(b"".join(b["dl_bytes"])).astype(np.int32)
-    lang = vb_decode(b"".join(b["lang_bytes"])).astype(np.int32)
-    ts = vb_decode(b"".join(b["ts_bytes"])).astype(np.int32)
-    return docs, tf, dl, lang, ts
-
-
 _POS_SHIFT = 24  # (doc_id << 24 | position) occurrence keys: doc_id < 2^40, pos < 2^24
 
-
-def _decode_positions(b: pd.DataFrame, tf: np.ndarray) -> np.ndarray:
-    """Decode a term's positions stream (aligned with the decoded tf
-    order): per posting, first position absolute then gaps — recovered
-    with one segmented cumsum over the concatenated buffers."""
-    vals = vb_decode(b"".join(b["pos_bytes"])).astype(np.int64)
-    total = int(tf.sum(dtype=np.int64))
-    if vals.size != total:
-        raise ValueError(
-            "positions stream missing or truncated — index built with "
-            "store_positions=False cannot serve phrase queries")
-    # int64 accumulator: tf is int32 and a task-level position total
-    # can exceed 32 bits at scale
-    starts = np.cumsum(tf, dtype=np.int64) - tf
-    cums = np.cumsum(vals)
-    base = cums[starts] - vals[starts]  # sum of values before each run
-    return cums - np.repeat(base, tf)
+# stream name -> postings column
+_STREAMS = {"doc": "doc_bytes", "tf": "tf_bytes", "dl": "dl_bytes",
+            "lang": "lang_bytes", "ts": "ts_bytes", "pos": "pos_bytes"}
 
 
-def _phrase_filter(groups: dict, decoded: dict, phrase_ids: list[int],
+class _BlockStore:
+    """Posting blocks as plain arrays (≙ FacetDataCache's orderArray /
+    freqs / minIDs / maxIDs, SURVEY §1.1), built from an Arrow table of
+    postings rows.
+
+    Block metadata are numpy arrays sorted by (segment, term_id,
+    first_doc), so every (segment, term) run of blocks is contiguous.
+    Each stream is one concatenated byte buffer with int64 block
+    offsets. Decoding is lazy and keyed by block: ``get`` decodes only
+    the requested blocks not decoded before, into one flat array per
+    stream (docIDs int64; tf/dl/ordinal streams int32 — tf/dl are
+    16-bit-clamped at encode and the ordinal spaces are small), and a
+    contiguous run comes back as a view. Positions are decoded per
+    call (``positions``), never cached."""
+
+    def __init__(self, tbl: pa.Table):
+        def col(name):
+            return tbl.column(name).to_numpy(zero_copy_only=False)
+
+        seg = col("segment").astype(np.int64, copy=False)
+        tid = col("term_id").astype(np.int64, copy=False)
+        first = col("first_doc").astype(np.int64, copy=False)
+        order = np.lexsort((first, tid, seg))
+        self.seg, self.tid, self.first = seg[order], tid[order], first[order]
+        self.last = col("last_doc").astype(np.int64, copy=False)[order]
+        self.nd = col("n_docs").astype(np.int64)[order]
+        self.max_tf = col("max_tf")[order]
+        self.min_dl = col("min_dl")[order]
+        self.el = np.concatenate(([0], np.cumsum(self.nd)))
+        take = pa.array(order)
+        self.bufs: dict[str, tuple] = {}
+        for s, c in _STREAMS.items():
+            if c not in tbl.column_names:
+                continue
+            arr = tbl.column(c).cast(pa.large_binary()).take(take).combine_chunks()
+            _valid, offs, data = arr.buffers()
+            self.bufs[s] = (
+                np.frombuffer(data, np.uint8) if data is not None
+                else np.zeros(0, np.uint8),
+                np.frombuffer(offs, np.int64)[arr.offset:arr.offset + len(arr) + 1]
+                if len(arr) else np.zeros(1, np.int64))
+        n = self.seg.size
+        brk = np.flatnonzero((np.diff(self.tid) != 0) | (np.diff(self.seg) != 0)) + 1
+        self.run_lo = np.concatenate(([0], brk)) if n else brk
+        self.run_hi = np.concatenate((brk, [n])) if n else brk
+        self.run_tid = self.tid[self.run_lo]
+        run_seg = self.seg[self.run_lo]
+        sb = np.flatnonzero(np.diff(run_seg)) + 1
+        s_lo = np.concatenate(([0], sb)) if n else sb
+        s_hi = np.concatenate((sb, [run_seg.size])) if n else sb
+        # segment -> its [first run, end run) (runs are tid-sorted within)
+        self.segments = {int(run_seg[a]): (int(a), int(b))
+                         for a, b in zip(s_lo, s_hi)}
+        self._run_seg = run_seg
+        self._by_tid = np.lexsort((run_seg, self.run_tid))
+        self._tid_sorted = self.run_tid[self._by_tid]
+        self._flat: dict[str, np.ndarray] = {}
+        self._done: dict[str, np.ndarray] = {}
+
+    def segments_of(self, tids) -> list[int]:
+        """Ascending segments holding a block of any of ``tids``."""
+        t = np.asarray(tids, dtype=np.int64)
+        lo = np.searchsorted(self._tid_sorted, t, "left")
+        hi = np.searchsorted(self._tid_sorted, t, "right")
+        runs = self._by_tid[_spans(lo, hi - lo)]
+        return np.unique(self._run_seg[runs]).tolist()
+
+    def view(self, seg: int) -> _SegView:
+        a, b = self.segments[seg]
+        return _SegView(self, self.run_tid[a:b], self.run_lo[a:b],
+                        self.run_hi[a:b])
+
+    def raw(self, stream: str, b: np.ndarray) -> np.ndarray:
+        """The encoded bytes of blocks ``b``, concatenated."""
+        data, offs = self.bufs[stream]
+        lo, hi = int(b[0]), int(b[-1]) + 1
+        if hi - lo == b.size:
+            return data[offs[lo]:offs[hi]]
+        return data[_spans(offs[b], offs[b + 1] - offs[b])]
+
+    def get(self, stream: str, b: np.ndarray) -> np.ndarray:
+        """Decoded ``stream`` values of blocks ``b`` (ascending block
+        indices), decoding only blocks not decoded before."""
+        flat = self._flat.get(stream)
+        if flat is None:
+            flat = self._flat[stream] = np.empty(
+                int(self.el[-1]), np.int64 if stream == "doc" else np.int32)
+            self._done[stream] = np.zeros(self.nd.size, dtype=bool)
+        if b.size == 0:
+            return flat[:0]
+        done = self._done[stream]
+        lo, hi = int(b[0]), int(b[-1]) + 1
+        if hi - lo == b.size:
+            if np.count_nonzero(done[lo:hi]) != b.size:
+                self._decode(stream, b[~done[lo:hi]])
+            return flat[self.el[lo]:self.el[hi]]
+        miss = b[~done[b]]
+        if miss.size:
+            self._decode(stream, miss)
+        return flat[_spans(self.el[b], self.nd[b])]
+
+    def _decode(self, stream: str, b: np.ndarray) -> None:
+        vals = vb_decode(self.raw(stream, b))
+        if stream == "doc":
+            vals = _rebase_docs(vals.astype(np.int64), self.nd[b], self.first[b])
+        lo, hi = int(b[0]), int(b[-1]) + 1
+        if hi - lo == b.size:
+            self._flat[stream][self.el[lo]:self.el[hi]] = vals
+        else:
+            self._flat[stream][_spans(self.el[b], self.nd[b])] = vals
+        self._done[stream][b] = True
+
+    def positions(self, b: np.ndarray, tf: np.ndarray) -> np.ndarray:
+        """Positions of blocks ``b``, aligned with their decoded tf: per
+        posting, first position absolute then gaps — recovered with one
+        segmented cumsum over the concatenated buffers."""
+        vals = (vb_decode(self.raw("pos", b)).astype(np.int64)
+                if "pos" in self.bufs and b.size else np.zeros(0, np.int64))
+        total = int(tf.sum(dtype=np.int64))
+        if vals.size != total:
+            raise ValueError(
+                "positions stream missing or truncated — index built with "
+                "store_positions=False cannot serve phrase queries")
+        # int64 accumulator: tf is int32 and a position total can
+        # exceed 32 bits at scale
+        starts = np.cumsum(tf, dtype=np.int64) - tf
+        cums = np.cumsum(vals)
+        base = cums[starts] - vals[starts]  # sum of values before each run
+        return cums - np.repeat(base, tf)
+
+
+class _SegView:
+    """One segment of a ``_BlockStore``: a term's block indices
+    (ascending first_doc) by one searchsorted over the segment's
+    tid-sorted runs."""
+
+    __slots__ = ("store", "_tids", "_lo", "_hi")
+
+    def __init__(self, store: _BlockStore, tids, lo, hi):
+        self.store = store
+        self._tids, self._lo, self._hi = tids, lo, hi
+
+    def blocks(self, tid: int) -> np.ndarray | None:
+        i = int(self._tids.searchsorted(tid))
+        if i < self._tids.size and self._tids[i] == tid:
+            return np.arange(self._lo[i], self._hi[i])
+        return None
+
+
+def _task_segment(pdf: pd.DataFrame, deleted_bc):
+    """(block view, tombstones) of one segment task's block rows. The
+    tombstones (sorted doc_ids, the liveDocs analogue) come from the
+    reader's per-segment delete broadcast: each task touches ONLY its
+    own segment's entry, and the broadcast ships once per executor,
+    never per query plan."""
+    store = _BlockStore(pa.Table.from_pandas(pdf, preserve_index=False))
+    seg = int(store.seg[0])
+    deleted = deleted_bc.value.get(seg) if deleted_bc is not None else None
+    return store.view(seg), deleted
+
+
+def _phrase_filter(st: _BlockStore, groups: dict, phrase_ids: list[int],
                    cand: np.ndarray):
     """Exact phrase verification over the conjunctive candidate set.
 
@@ -209,12 +343,12 @@ def _phrase_filter(groups: dict, decoded: dict, phrase_ids: list[int],
     (matching docs ascending, phrase frequency per doc)."""
     keymap = {}
     for tid in set(phrase_ids):
-        docs, tf, _dl, _lang, _ts = decoded[tid]
-        pos = _decode_positions(groups[tid], tf)
+        b = groups[tid]
+        docs, tf = st.get("doc", b), st.get("tf", b)
+        pos = st.positions(b, tf)
         occ_docs = np.repeat(docs, tf)
         # restrict to candidate docs before building keys
-        idx = np.searchsorted(cand, occ_docs)
-        ok = (idx < cand.size) & (cand[np.minimum(idx, cand.size - 1)] == occ_docs)
+        ok = _sorted_member(cand, occ_docs)
         keymap[tid] = (occ_docs[ok].astype(np.uint64) << np.uint64(_POS_SHIFT)) \
             | pos[ok].astype(np.uint64)
     keys = keymap[phrase_ids[0]]
@@ -234,19 +368,9 @@ def _sorted_member(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
     searchsorted, no hash set (np.isin) materialization."""
     if sorted_arr.size == 0:
         return np.zeros(vals.shape, dtype=bool)
-    pos = np.searchsorted(sorted_arr, vals)
+    pos = sorted_arr.searchsorted(vals)
     return (pos < sorted_arr.size) & \
         (sorted_arr[np.minimum(pos, sorted_arr.size - 1)] == vals)
-
-
-def _segment_deleted(deleted_bc, pdf: pd.DataFrame) -> np.ndarray | None:
-    """This segment's tombstone set (sorted doc_ids) from the reader's
-    per-segment delete broadcast — the liveDocs analogue. Each task
-    touches ONLY its own segment's entry; the broadcast ships once per
-    executor, never per query plan."""
-    if deleted_bc is None or not len(pdf):
-        return None
-    return deleted_bc.value.get(int(pdf["segment"].iloc[0]))
 
 
 def _and_masks(*masks):
@@ -258,52 +382,30 @@ def _and_masks(*masks):
     return out
 
 
-def _postings_doc_mask(cand: np.ndarray, groups: dict, tids: list[int],
-                       shared_decode: dict | None = None) -> np.ndarray:
+def _postings_doc_mask(cand: np.ndarray, st: _BlockStore, groups: dict,
+                       tids: list[int]) -> np.ndarray:
     """Inverted access path for a selection: membership of candidates
     in the union of the facet-value posting lists (sorted-array
     intersection, ≙ OR of TermDocIdSets)."""
-    doc_lists = []
-    for tid in tids:
-        if shared_decode is not None and tid in shared_decode:
-            doc_lists.append(shared_decode[tid][0])
-            continue
-        g = groups.get(tid)
-        if g is not None and len(g):
-            dec = _decode_term_blocks(g)
-            if shared_decode is not None:
-                shared_decode[tid] = dec
-            doc_lists.append(dec[0])
+    doc_lists = [st.get("doc", groups[t]) for t in tids if t in groups]
     if not doc_lists:
         return np.zeros(cand.size, dtype=bool)
-    allowed = np.unique(np.concatenate(doc_lists))
-    pos = np.searchsorted(allowed, cand)
-    return (pos < allowed.size) & (allowed[np.minimum(pos, allowed.size - 1)] == cand)
-
-
-def _block_bound(g: pd.DataFrame, idf_t: float, avgdl: float) -> np.ndarray:
-    """Safe per-block upper bound of any contribution in the block:
-    contrib is monotone ↑ in tf and ↓ in dl, so (max_tf, min_dl) bound
-    it. Derived from CURRENT global stats — stays valid across
-    incremental snapshots (stored float bounds would go stale)."""
-    return bm25.contrib(g["max_tf"].to_numpy(np.float64),
-                        g["min_dl"].to_numpy(np.float64), idf_t, avgdl)
+    return _sorted_member(np.unique(np.concatenate(doc_lists)), cand)
 
 
 def _recency_factor(ts: np.ndarray, rec: dict) -> np.ndarray:
     """Quadratic decay factor per doc from its time-bucket ordinal
     (≙ query/RecencyBoostScorerBuilder.java:58-60). Shared by scoring
     and by recency-aware pruning so the two can never diverge."""
-    ord_ms = np.asarray(rec["ord_ms"], dtype=np.float64)
-    x = rec["now_ms"] - ord_ms[ts]
+    x = rec["now_ms"] - rec["ord_ms"][ts]
     mx = rec["max_factor"] + 1.0
     a = (1.0 - mx) / (float(rec["cutoff_ms"]) ** 2)
     return np.where(x > rec["cutoff_ms"], 1.0, a * x * x + mx)
 
 
-def _blockmax_prune(groups: dict, present: list, k: int, avgdl: float,
-                    doc_cache: dict | None = None, recency: dict | None = None,
-                    deleted: np.ndarray | None = None):
+def _blockmax_prune(st: _BlockStore, groups: dict, present: list, k: int,
+                    avgdl: float, recency: dict | None = None,
+                    deleted: np.ndarray | None = None) -> dict:
     """Block-max two-phase pruning for disjunctive top-k.
 
     θ = k-th largest exact single-term contribution of the
@@ -314,22 +416,25 @@ def _blockmax_prune(groups: dict, present: list, k: int, avgdl: float,
     is dropped before decode. Docs of surviving blocks that also sat
     in dropped blocks end up partial-scored BELOW θ and fall out of
     the page, so returned docIDs AND scores stay exact
-    (property-tested against the exhaustive path)."""
-    bounds = {t["term_id"]: _block_bound(groups[t["term_id"]], t["idf"], avgdl)
-              for t in present}
+    (property-tested against the exhaustive path). Block bounds come
+    from (max_tf, min_dl) — contrib is monotone ↑ in tf and ↓ in dl —
+    under CURRENT global stats, so they stay valid across incremental
+    snapshots. Returns the pruned term → blocks map."""
+    bounds = {t["term_id"]: bm25.contrib(
+        st.max_tf[groups[t["term_id"]]], st.min_dl[groups[t["term_id"]]],
+        t["idf"], avgdl) for t in present}
     gmax = {tid: (b.max() if b.size else 0.0) for tid, b in bounds.items()}
     tstar = max(present, key=lambda t: t["idf"])
-    star_docs = doc_cache[tstar["term_id"]][0] if doc_cache else None
-    docs, tf, dl, _lang, ts = _decode_term_blocks(
-        groups[tstar["term_id"]], docs=star_docs)
-    c = bm25.contrib(tf, dl, tstar["idf"], avgdl)
+    b = groups[tstar["term_id"]]
+    docs = st.get("doc", b)
+    c = bm25.contrib(st.get("tf", b), st.get("dl", b), tstar["idf"], avgdl)
     # recency-aware variant: θ uses each doc's EXACT boost (total
     # boosted score = Σcontrib × factor ≥ contrib_t* × factor), block
     # bounds scale by the boost's global max (factor ≤ max_factor+1
     # everywhere — the parabola peaks at x=0) — both stay safe
     mx = 1.0
     if recency:
-        c = c * _recency_factor(ts, recency)
+        c = c * _recency_factor(st.get("ts", b), recency)
         mx = recency["max_factor"] + 1.0
     # tombstoned docs must not contribute to θ: a deleted doc among the
     # k best t* contributions would inflate the bound and wrongly prune
@@ -337,382 +442,297 @@ def _blockmax_prune(groups: dict, present: list, k: int, avgdl: float,
     # candidate set only AFTER pruning)
     if deleted is not None and c.size:
         c = c[~_sorted_member(deleted, docs)]
-    keeps: dict = {}
     if c.size < k:
-        return groups, keeps
+        return groups
     theta = np.partition(c, c.size - k)[c.size - k]
-    out = {}
+    out = dict(groups)
     for t in present:
         tid = t["term_id"]
         if tid == tstar["term_id"]:
-            out[tid] = groups[tid]
             continue
         cross = sum(gmax[o["term_id"]] for o in present if o["term_id"] != tid)
-        keep = (bounds[tid] + cross) * mx >= theta
-        out[tid] = groups[tid][keep]
-        keeps[tid] = keep
-    return out, keeps
+        out[tid] = groups[tid][(bounds[tid] + cross) * mx >= theta]
+    return out
 
 
-def _batch_group_decode(pdf: pd.DataFrame, need_lang: bool = True,
-                        need_ts: bool = True):
-    """Batch-mode per-task preparation in ONE pass: a single
-    (term_id, first_doc) lexsort replaces the per-term
-    groupby+sort_values+re-concat, and every term's five streams
-    decode through ONE ``vb_decode`` per stream type (plus one
-    rebased docID pass) instead of five small decodes per term — the
-    per-call overhead dominated the decode profile at ~170 terms per
-    task, and the decode is the memory-bound part that contends
-    across workers. ``need_lang``/``need_ts``: the caller asserts
-    that NO query in the batch reads that ordinal stream (no facet,
-    no ords-mode selection, for ts no recency), so its decode — 1/5
-    of the memory-bound bytes each — is skipped outright and the
-    tuple slot carries None. Returns ``(shared_decode, groups_all)``:
-    the decode cache (contents identical to per-term
-    ``_decode_term_blocks`` for every decoded stream) plus per-term
-    block-row frames (cheap row slices of the one sorted frame; only
-    phrase verification dereferences them)."""
-    order = np.lexsort((pdf["first_doc"].to_numpy(np.int64),
-                        pdf["term_id"].to_numpy(np.int64)))
-    b = pdf.iloc[order]
-    tid_arr = b["term_id"].to_numpy(np.int64)
-    bnd = np.flatnonzero(np.diff(tid_arr)) + 1
-    starts = np.concatenate(([0], bnd))
-    ends = np.concatenate((bnd, [len(b)]))
-    nds = b["n_docs"].to_numpy(np.int64)
-    docs = _decode_docs(b)  # per-block rebase is term-agnostic
-    # int32 streams: same width rationale as _decode_term_blocks
-    tf = vb_decode(b"".join(b["tf_bytes"])).astype(np.int32)
-    dl = vb_decode(b"".join(b["dl_bytes"])).astype(np.int32)
-    lang = (vb_decode(b"".join(b["lang_bytes"])).astype(np.int32)
-            if need_lang else None)
-    ts = (vb_decode(b"".join(b["ts_bytes"])).astype(np.int32)
-          if need_ts else None)
-    el = np.concatenate(([0], np.cumsum(nds)))
-    shared: dict = {}
-    groups_all: dict = {}
-    for s0, e0 in zip(starts, ends):
-        tid = int(tid_arr[s0])
-        es, ee = el[s0], el[e0]
-        shared[tid] = (docs[es:ee], tf[es:ee], dl[es:ee],
-                       lang[es:ee] if need_lang else None,
-                       ts[es:ee] if need_ts else None)
-        groups_all[tid] = b.iloc[s0:e0]
-    return shared, groups_all
+_NO_DOCS = np.zeros(0, dtype=np.int64)
+_NO_SCORES = np.zeros(0, dtype=np.float64)
 
 
-class _SegGroups:
-    """Lazy per-term block-frame views over one segment's slice of the
-    driver block cache (rows pre-sorted by first_doc) — dict-shaped
-    for _segment_search_rows's ``groups_all`` protocol, materializing a
-    frame only for terms a query actually touches. Term lookup is a
-    searchsorted over the segment's tid-sorted run arrays (r6: the
-    per-run Python dict build was 0.86 s of the one-time cache build
-    at 457k runs; three numpy arrays per segment cost ~nothing)."""
+class _SegOut:
+    """One segment's answer to one plan: local top-k ``docs``/``scores``
+    (score desc, doc_id asc), the hit count, one count vector per facet
+    (indexed by ordinal) and, for explain plans, the page candidates'
+    explanation arrays (doc_id, part, value)."""
 
-    __slots__ = ("_pdf", "_tids", "_starts", "_ends")
+    __slots__ = ("n_hits", "docs", "scores", "facets", "expl")
 
-    def __init__(self, pdf: pd.DataFrame, runs: tuple):
-        self._pdf = pdf
-        self._tids, self._starts, self._ends = runs
-
-    def __contains__(self, tid) -> bool:
-        i = np.searchsorted(self._tids, tid)
-        return i < len(self._tids) and self._tids[i] == tid
-
-    def __getitem__(self, tid) -> pd.DataFrame:
-        i = np.searchsorted(self._tids, tid)
-        if i >= len(self._tids) or self._tids[i] != tid:
-            raise KeyError(tid)
-        return self._pdf.iloc[int(self._starts[i]):int(self._ends[i])]
+    def __init__(self, n_hits: int, docs: np.ndarray = _NO_DOCS,
+                 scores: np.ndarray = _NO_SCORES, facets: dict | None = None):
+        self.n_hits, self.docs, self.scores = n_hits, docs, scores
+        self.facets = {} if facets is None else facets
+        self.expl: tuple | None = None
 
 
-def _segment_rows(pdf: pd.DataFrame, plan: dict, deleted_bc) -> list:
-    """One query against one segment's term-filtered block rows,
-    decoding its own blocks (so the pruning shortcuts apply)."""
-    groups = {tid: g.sort_values("first_doc")
-              for tid, g in pdf.groupby("term_id")}
-    return _segment_search_rows(plan, groups,
-                                deleted=_segment_deleted(deleted_bc, pdf))
-
-
-def _segment_search_rows(plan: dict, groups_all, shared_decode: dict | None = None,
-                         deleted: np.ndarray | None = None) -> list:
-    """Score one segment's query-term blocks (pure pandas/numpy),
-    returning raw output TUPLES (kind, doc_id, score, field, ordinal,
-    count) — r6: batch callers accumulate rows across queries and
-    build ONE frame per task (per-query frame construction was ~25%
-    of the batch scoring loop).
-
-    ``groups_all`` maps term_id → that term's block rows sorted by
-    first_doc; ``deleted`` is the segment's sorted tombstone ids.
-    With a ``shared_decode`` dict (``_score_segment``) a term's
-    streams are decoded ONCE however many queries reference it, and
-    the per-query decode-saving shortcuts (conjunctive block skip,
-    block-max pruning) are disabled — they subset blocks per query,
-    which would defeat decode sharing; results are identical either
-    way (property-tested), only the work-skipping differs.
-    """
+def _score_plan(plan: dict, seg: _SegView,
+                deleted: np.ndarray | None = None) -> _SegOut | None:
+    """Score one plan against one segment's blocks (pure numpy); None
+    when the segment contributes nothing. ``deleted`` is the segment's
+    sorted tombstone ids. Decodes go through the segment's
+    ``_BlockStore``, so only blocks that survive pruning are decoded,
+    each at most once per store."""
+    st = seg.store
     terms = plan["terms"]
     mode = plan["mode"]
     k = plan["k"] + plan["offset"]
     avgdl = plan["avgdl"]
     sel_lang = np.array(plan["sel_lang"], dtype=np.int64) if plan["sel_lang"] is not None else None
     sel_ts = np.array(plan["sel_ts"], dtype=np.int64) if plan["sel_ts"] is not None else None
-    out_rows = []
 
-    # term_id -1 marks BOTH unknown query terms and the pseudo forward
-    # runs present in an unfiltered block source (the driver cache) —
-    # _plan_tids never lets one resolve the other
-    groups = {tid: groups_all[tid] for tid in set(_plan_tids(plan))
-              if tid in groups_all}
+    # term_id -1 marks unknown query terms; _plan_tids never returns it
+    groups = {}
+    for tid in set(_plan_tids(plan)):
+        b = seg.blocks(tid)
+        if b is not None:
+            groups[tid] = b
     present = [t for t in terms if t["term_id"] in groups]
     conj = mode in ("and", "phrase")  # phrase = conjunction + positional check
     if conj and len(present) < len(terms):
-        return []
+        return None
     if not present:
-        return []
+        return None
 
     # ---- conjunctive block skip: drop blocks not overlapping the rarest term's
-    if conj and len(present) > 1 and shared_decode is None:
+    if conj and len(present) > 1:
         rare = min(present, key=lambda t: t["df"])
         rb = groups[rare["term_id"]]
-        rf = rb["first_doc"].to_numpy(np.int64)
-        rl = rb["last_doc"].to_numpy(np.int64)
+        rf, rl = st.first[rb], st.last[rb]
         for t in present:
             if t is rare:
                 continue
             g = groups[t["term_id"]]
-            f = g["first_doc"].to_numpy(np.int64)
-            l = g["last_doc"].to_numpy(np.int64)
-            idx = np.searchsorted(rf, l, side="right") - 1
-            keep = (idx >= 0) & (rl[np.maximum(idx, 0)] >= f)
+            idx = rf.searchsorted(st.last[g], side="right") - 1
+            keep = (idx >= 0) & (rl[np.maximum(idx, 0)] >= st.first[g])
             groups[t["term_id"]] = g[keep]
+            if not keep.any():
+                return None
 
     # ---- disjunctive block-max pruning (top-k only: no facets or
     # selections; recency uses the boost-aware bound variant)
-    pruned_mode = (
-        mode == "or" and plan.get("prune") and not plan["facets"]
-        and sel_lang is None and sel_ts is None and len(present) > 1
-        and shared_decode is None
-    )
     n_hits_exact = None
-    doc_cache: dict = {}
-    keep_masks: dict = {}
-    if pruned_mode:
+    if (mode == "or" and plan.get("prune") and not plan["facets"]
+            and sel_lang is None and sel_ts is None and len(present) > 1):
         # exact hit count BEFORE pruning: union of doc streams only
         # (tf/meta streams of dropped blocks stay undecoded, so the
-        # pruning still pays — this fixes num_hits undercounting docs
-        # that lived only in dropped blocks). The decoded streams are
-        # CACHED with block offsets and re-sliced for surviving blocks
-        # below — the docID decode is paid exactly once.
-        doc_cache = {t["term_id"]: _decode_docs_blocks(groups[t["term_id"]])
-                     for t in present if len(groups[t["term_id"]])}
-        if doc_cache:
-            uni = np.unique(np.concatenate([d for d, _ in doc_cache.values()]))
-            if deleted is not None:
-                uni = uni[~_sorted_member(deleted, uni)]
-            n_hits_exact = int(uni.size)
-        else:
-            n_hits_exact = 0
-        groups, keep_masks = _blockmax_prune(groups, present, k, avgdl,
-                                             doc_cache, plan.get("recency"),
-                                             deleted)
+        # pruning still pays — num_hits also counts docs that live
+        # only in dropped blocks)
+        uni = np.unique(np.concatenate(
+            [st.get("doc", groups[t["term_id"]]) for t in present]))
+        if deleted is not None:
+            uni = uni[~_sorted_member(deleted, uni)]
+        n_hits_exact = int(uni.size)
+        groups = _blockmax_prune(st, groups, present, k, avgdl,
+                                 plan.get("recency"), deleted)
+        present = [t for t in present if groups[t["term_id"]].size]
 
-    decoded = {}
-    for t in present:
-        tid = t["term_id"]
-        if shared_decode is not None and tid in shared_decode:
-            decoded[tid] = shared_decode[tid]
-            continue
-        g = groups[tid]
-        if len(g) == 0:
-            if conj:
-                return []
-            continue
-        pre = None
-        if tid in doc_cache:
-            docs_all, offs = doc_cache[tid]
-            keep = keep_masks.get(tid)
-            if keep is None:
-                pre = docs_all
-            else:
-                idx = np.flatnonzero(keep)
-                pre = (np.concatenate([docs_all[offs[i]:offs[i + 1]] for i in idx])
-                       if idx.size else np.zeros(0, dtype=np.int64))
-        decoded[tid] = _decode_term_blocks(g, docs=pre)
-        if shared_decode is not None:
-            shared_decode[tid] = decoded[tid]
-    present = [t for t in present if t["term_id"] in decoded]
-    if not present:
-        return []
+    docs_of = {t["term_id"]: st.get("doc", groups[t["term_id"]]) for t in present}
 
     # ---- candidate doc set
     if conj:
-        cand = decoded[present[0]["term_id"]][0]
+        cand = docs_of[present[0]["term_id"]]
         for t in present[1:]:
-            cand = np.intersect1d(cand, decoded[t["term_id"]][0], assume_unique=True)
+            cand = np.intersect1d(cand, docs_of[t["term_id"]], assume_unique=True)
             if cand.size == 0:
-                return []
+                return None
     else:
-        cand = np.unique(np.concatenate([decoded[t["term_id"]][0] for t in present]))
+        cand = np.unique(np.concatenate(list(docs_of.values())))
 
     # ---- soft deletes (≙ Lucene liveDocs): tombstoned docs leave the
     # candidate set before scoring/facets/phrase verification
     if deleted is not None and cand.size:
         cand = cand[~_sorted_member(deleted, cand)]
-        if cand.size == 0 and n_hits_exact is None:
-            return []
         if cand.size == 0:
-            return [(_K_STATS, -1, 0.0, "", -1, n_hits_exact)]
+            return None if n_hits_exact is None else _SegOut(n_hits_exact)
 
     # ---- phrase: positional verification narrows the candidate set
     ptf = None
     if mode == "phrase":
-        cand, ptf = _phrase_filter(groups, decoded, plan["phrase_ids"], cand)
+        cand, ptf = _phrase_filter(st, groups, plan["phrase_ids"], cand)
         if cand.size == 0:
-            return []
+            return None
 
-    # ---- per-doc ordinals (needed for facet counts / ord-mode selections)
+    # ---- where each term's postings land in the candidate set
+    match = {}
+    for t in present:
+        docs = docs_of[t["term_id"]]
+        pos = cand.searchsorted(docs)
+        ok = (pos < cand.size) & (cand[np.minimum(pos, cand.size - 1)] == docs)
+        match[t["term_id"]] = (pos[ok], ok)
+
+    def doc_ords(stream: str) -> np.ndarray:
+        # a doc's ordinal from the first (lex-ordered) term holding it:
+        # later writes win, so write in reverse
+        out = np.zeros(cand.size, dtype=np.int64)
+        for t in reversed(present):
+            p, ok = match[t["term_id"]]
+            out[p] = st.get(stream, groups[t["term_id"]])[ok]
+        return out
+
+    # ---- per-doc ordinals, decoded only for the streams the plan reads
+    # (facet counts, ord-mode selections, recency)
     lang_postings = plan.get("sel_lang_mode") == "postings"
     ts_postings = plan.get("sel_ts_mode") == "postings"
-    need_ords = bool(plan["facets"]) or bool(plan.get("recency")) \
-        or (sel_lang is not None and not lang_postings) \
-        or (sel_ts is not None and not ts_postings)
-    doc_lang = doc_ts = None
-    if need_ords:
-        doc_lang = np.zeros(cand.size, dtype=np.int64)
-        doc_ts = np.zeros(cand.size, dtype=np.int64)
-        seen = np.zeros(cand.size, dtype=bool)
-        for t in present:
-            docs, _tf, _dl, lang, ts = decoded[t["term_id"]]
-            pos = np.searchsorted(cand, docs)
-            ok = (pos < cand.size) & (cand[np.minimum(pos, cand.size - 1)] == docs)
-            pos = pos[ok]
-            new = ~seen[pos]
-            # a None stream was skipped at decode because the batch
-            # caller proved NO plan reads it (see _batch_group_decode)
-            if lang is not None:
-                doc_lang[pos[new]] = lang[ok][new]
-            if ts is not None:
-                doc_ts[pos[new]] = ts[ok][new]
-            seen[pos[new]] = True
+    rec = plan.get("recency")
+    doc_lang = (doc_ords("lang") if "lang" in plan["facets"]
+                or (sel_lang is not None and not lang_postings) else None)
+    doc_ts = (doc_ords("ts") if "ts_bucket" in plan["facets"] or rec
+              or (sel_ts is not None and not ts_postings) else None)
 
     # ---- per-field selection masks: adaptive inverted-vs-forward path
     lang_mask = ts_mask = None
     if sel_lang is not None:
-        lang_mask = (
-            _postings_doc_mask(cand, groups, plan["sel_lang_tids"],
-                               shared_decode)
-            if lang_postings else np.isin(doc_lang, sel_lang)
-        )
+        lang_mask = (_postings_doc_mask(cand, st, groups, plan["sel_lang_tids"])
+                     if lang_postings else np.isin(doc_lang, sel_lang))
     if sel_ts is not None:
-        ts_mask = (
-            _postings_doc_mask(cand, groups, plan["sel_ts_tids"],
-                               shared_decode)
-            if ts_postings else np.isin(doc_ts, sel_ts)
-        )
+        ts_mask = (_postings_doc_mask(cand, st, groups, plan["sel_ts_tids"])
+                   if ts_postings else np.isin(doc_ts, sel_ts))
     m = _and_masks(lang_mask, ts_mask)
 
     # ---- exact TAAT scoring, ascending lexicographic term order
-    scores = np.zeros(cand.size, dtype=np.float64)
     if mode == "phrase":
         # Lucene PhraseQuery scoring: freq = phrase occurrences, idf =
         # Σ idf over the phrase's token INSTANCES (duplicates counted)
-        docs0, _tf0, dl0, _l0, _t0 = decoded[plan["phrase_ids"][0]]
-        pos = np.searchsorted(docs0, cand)
-        scores = bm25.contrib(ptf, dl0[pos], plan["phrase_idf_sum"], avgdl)
+        b0 = groups[plan["phrase_ids"][0]]
+        pos = np.searchsorted(st.get("doc", b0), cand)
+        scores = bm25.contrib(ptf, st.get("dl", b0)[pos], plan["phrase_idf_sum"], avgdl)
     else:
+        scores = np.zeros(cand.size, dtype=np.float64)
         for t in present:  # already lex-ordered
-            docs, tf, dl, _lang, _ts = decoded[t["term_id"]]
-            pos = np.searchsorted(cand, docs)
-            ok = (pos < cand.size) & (cand[np.minimum(pos, cand.size - 1)] == docs)
-            c = bm25.contrib(tf[ok], dl[ok], t["idf"], avgdl)
-            scores[pos[ok]] += c
+            b = groups[t["term_id"]]
+            p, ok = match[t["term_id"]]
+            scores[p] += bm25.contrib(st.get("tf", b)[ok], st.get("dl", b)[ok],
+                                      t["idf"], avgdl)
 
     # ---- recency boost: quadratic decay factor on the doc's time bucket
     raw_scores = scores
-    rec = plan.get("recency")
     if rec:
         scores = scores * _recency_factor(doc_ts, rec)
 
     # ---- facet counts (multi-select: leave-one-out masks) + hits
     full_mask = m if m is not None else np.ones(cand.size, dtype=bool)
+    facets = {}
     for f in plan["facets"]:
-        ords = doc_lang if f == "lang" else doc_ts
+        ords = {"lang": doc_lang, "ts_bucket": doc_ts}[f]
         if plan["expand_selection"]:
-            others = _and_masks(
-                None if f == "lang" else lang_mask,
-                None if f == "ts_bucket" else ts_mask,
-            )
-            fmask = others if others is not None else np.ones(cand.size, dtype=bool)
+            fmask = _and_masks(None if f == "lang" else lang_mask,
+                               None if f == "ts_bucket" else ts_mask)
         else:
-            fmask = full_mask
-        vals, cnts = np.unique(ords[fmask], return_counts=True)
-        for v, c in zip(vals, cnts):
-            out_rows.append((_K_FACET, -1, 0.0, f, int(v), int(c)))
+            fmask = m
+        facets[f] = np.bincount(ords if fmask is None else ords[fmask])
 
     hit_docs = cand[full_mask]
     hit_scores = scores[full_mask]
     n_local = int(hit_docs.size)
-    if n_local:
-        kk = min(k, n_local)
-        # top-k by (-score, doc_id). Select everything >= the kk-th
-        # largest score (including ALL ties) before the exact lexsort,
-        # so score ties at the boundary break by doc_id exactly.
-        if n_local > kk:
-            kth = np.partition(hit_scores, n_local - kk)[n_local - kk]
-            part = np.flatnonzero(hit_scores >= kth)
+    out = _SegOut(n_hits_exact if n_hits_exact is not None else n_local,
+                  facets=facets)
+    if not n_local:
+        return out
+    kk = min(k, n_local)
+    # top-k by (-score, doc_id). Select everything >= the kk-th largest
+    # score (including ALL ties) before the exact lexsort, so score
+    # ties at the boundary break by doc_id exactly.
+    if n_local > kk:
+        kth = np.partition(hit_scores, n_local - kk)[n_local - kk]
+        part = np.flatnonzero(hit_scores >= kth)
+    else:
+        part = np.arange(n_local)
+    sel = part[np.lexsort((hit_docs[part], -hit_scores[part]))[:kk]]
+    out.docs, out.scores = hit_docs[sel], hit_scores[sel]
+    # ---- score explanations for the local page candidates
+    # (≙ BrowseHit.getExplanation): per-term exact contributions;
+    # summed in the same ascending-lex order and multiplied by the
+    # recency factor they reproduce the score bit-for-bit
+    if plan.get("explain"):
+        sel_docs = out.docs
+        cpos = np.searchsorted(cand, sel_docs)
+        ex = []  # (doc_ids, part, values)
+        if mode == "phrase":
+            ex.append((sel_docs, "phrase", raw_scores[cpos]))
         else:
-            part = np.arange(n_local)
-        order = np.lexsort((hit_docs[part], -hit_scores[part]))[:kk]
-        sel = part[order]
-        for d, s in zip(hit_docs[sel], hit_scores[sel]):
-            out_rows.append((_K_HIT, int(d), float(s), "", -1, 0))
-        # ---- score explanations for the local page candidates
-        # (≙ BrowseHit.getExplanation): per-term exact contributions;
-        # summed in the same ascending-lex order and multiplied by the
-        # recency factor they reproduce the score bit-for-bit
-        if plan.get("explain"):
-            sel_docs = hit_docs[sel]
-            cpos = np.searchsorted(cand, sel_docs)
-            if mode == "phrase":
-                for d, v in zip(sel_docs, raw_scores[cpos]):
-                    out_rows.append((_K_EXPL, int(d), float(v), "phrase", -1, 0))
-            else:
-                for t in present:
-                    docs, tf, dl, _l, _t2 = decoded[t["term_id"]]
-                    p = np.searchsorted(docs, sel_docs)
-                    ok = (p < docs.size) & \
-                        (docs[np.minimum(p, docs.size - 1)] == sel_docs)
-                    c = bm25.contrib(tf[p[ok]], dl[p[ok]], t["idf"], avgdl)
-                    for d, v in zip(sel_docs[ok], c):
-                        out_rows.append(
-                            (_K_EXPL, int(d), float(v), t["term"], -1, 0))
-            if rec:
-                fac = _recency_factor(doc_ts[cpos], rec)
-                for d, v in zip(sel_docs, fac):
-                    out_rows.append(
-                        (_K_EXPL, int(d), float(v), "recency_boost", -1, 0))
-    out_rows.append((_K_STATS, -1, 0.0, "", -1,
-                     n_hits_exact if n_hits_exact is not None else n_local))
-    return out_rows
+            for t in present:
+                b = groups[t["term_id"]]
+                docs = docs_of[t["term_id"]]
+                p = np.searchsorted(docs, sel_docs)
+                ok = (p < docs.size) & (docs[np.minimum(p, docs.size - 1)] == sel_docs)
+                ex.append((sel_docs[ok], t["term"], bm25.contrib(
+                    st.get("tf", b)[p[ok]], st.get("dl", b)[p[ok]], t["idf"], avgdl)))
+        if rec:
+            ex.append((sel_docs, "recency_boost", _recency_factor(doc_ts[cpos], rec)))
+        out.expl = (np.concatenate([d for d, _, _ in ex]),
+                    np.array([s for d, s, _ in ex for _ in range(d.size)], dtype=object),
+                    np.concatenate([v for _, _, v in ex]))
+    return out
 
 
-_EMPTY_OUT = pd.DataFrame(
-    {"kind": pd.Series([], dtype="int32"), "doc_id": pd.Series([], dtype="int64"),
-     "score": pd.Series([], dtype="float64"), "field": pd.Series([], dtype="object"),
-     "ordinal": pd.Series([], dtype="int64"), "count": pd.Series([], dtype="int64")}
-)
+def _out_rows(o: _SegOut) -> list:
+    """A ``_SegOut`` as OUT_SCHEMA tuples (kind, doc_id, score, field,
+    ordinal, count) — the distributed tasks' wire format."""
+    rows = [(_K_HIT, d, s, "", -1, 0)
+            for d, s in zip(o.docs.tolist(), o.scores.tolist())]
+    for f, cnt in o.facets.items():
+        nz = np.flatnonzero(cnt)
+        rows += [(_K_FACET, -1, 0.0, f, v, c)
+                 for v, c in zip(nz.tolist(), cnt[nz].tolist())]
+    if o.expl is not None:
+        d, p, v = o.expl
+        rows += [(_K_EXPL, a, c, b, -1, 0)
+                 for a, b, c in zip(d.tolist(), p.tolist(), v.tolist())]
+    rows.append((_K_STATS, -1, 0.0, "", -1, o.n_hits))
+    return rows
+
+
+def _parts_from_rows(out: pd.DataFrame) -> dict:
+    """Inverse of ``_out_rows`` on the driver: qid (0 without a qid
+    column) → one ``_SegOut`` holding all that query's segment rows."""
+    if not len(out):
+        return {}
+    qid = (out["qid"].to_numpy(np.int64) if "qid" in out
+           else np.zeros(len(out), dtype=np.int64))
+    order = np.argsort(qid, kind="stable")
+    kind = out["kind"].to_numpy(np.int64)[order]
+    doc = out["doc_id"].to_numpy(np.int64)[order]
+    score = out["score"].to_numpy(np.float64)[order]
+    fld = out["field"].to_numpy(object)[order]
+    ordinal = out["ordinal"].to_numpy(np.int64)[order]
+    count = out["count"].to_numpy(np.int64)[order]
+    qid = qid[order]
+    brk = np.flatnonzero(np.diff(qid)) + 1
+    parts = {}
+    for a, b in zip(np.concatenate(([0], brk)), np.concatenate((brk, [qid.size]))):
+        kd = kind[a:b]
+        hit = np.flatnonzero(kd == _K_HIT) + a
+        o = _SegOut(int(count[a:b][kd == _K_STATS].sum()), doc[hit], score[hit])
+        fac = np.flatnonzero(kd == _K_FACET) + a
+        for f in set(fld[fac].tolist()):
+            r = fac[fld[fac] == f]
+            o.facets[f] = np.bincount(ordinal[r], weights=count[r]).astype(np.int64)
+        ex = np.flatnonzero(kd == _K_EXPL) + a
+        if ex.size:
+            o.expl = (doc[ex], fld[ex], score[ex])
+        parts[int(qid[a])] = [o]
+    return parts
 
 
 def _empty_out() -> pd.DataFrame:
-    return _EMPTY_OUT.copy()
+    return pd.DataFrame(
+        {"kind": pd.Series([], dtype="int32"), "doc_id": pd.Series([], dtype="int64"),
+         "score": pd.Series([], dtype="float64"), "field": pd.Series([], dtype="object"),
+         "ordinal": pd.Series([], dtype="int64"), "count": pd.Series([], dtype="int64")})
 
 
 def _out_frame(rows: list, qids: list | None = None) -> pd.DataFrame:
-    """Scorer output tuples as one OUT_SCHEMA frame (plus the batch
-    ``qid`` column when ``qids`` is given)."""
+    """Output tuples as one OUT_SCHEMA frame (plus the batch ``qid``
+    column when ``qids`` is given)."""
     out = pd.DataFrame(rows, columns=_OUT_COLS) if rows else _empty_out()
     if qids is not None:
         out["qid"] = np.asarray(qids, dtype=np.int32)
@@ -734,33 +754,53 @@ def _runnable(plan: dict) -> bool:
                           or known == len(plan["terms"]))
 
 
-def _score_segment(plans: list, groups_all, shared_decode: dict,
-                   deleted: np.ndarray | None, rows: list,
-                   qids: list) -> None:
-    """Score every ``(qid, plan)`` against one segment's blocks with
-    one shared decode cache — the per-segment sub-browse loop
-    (api/MultiBoboBrowser.java:100-127) behind the cache path and both
-    ``search_many`` paths. Output tuples append to ``rows`` and their
-    qids to ``qids``."""
+def _score_store(store: _BlockStore, plans: list, deleted: dict) -> dict:
+    """Score every ``(qid, plan)`` against every segment of ``store``
+    that holds one of their terms — the per-segment sub-browse loop
+    (api/MultiBoboBrowser.java:100-127) behind every keyword path.
+    ``deleted`` maps segment → sorted tombstones. Returns qid → list
+    of ``_SegOut``."""
+    tids = sorted({t for _, p in plans for t in _plan_tids(p)})
+    parts: dict = {}
+    for g in store.segments_of(tids):
+        seg, dl = store.view(g), deleted.get(g)
+        for qid, plan in plans:
+            o = _score_plan(plan, seg, dl)
+            if o is not None:
+                parts.setdefault(qid, []).append(o)
+    return parts
+
+
+def _task_rows(pdf: pd.DataFrame, plans: list, deleted_bc,
+               with_qid: bool) -> pd.DataFrame:
+    """One distributed segment task: score ``plans`` against the task's
+    block rows and encode the answers as OUT_SCHEMA rows."""
+    seg, deleted = _task_segment(pdf, deleted_bc)
+    rows: list = []
+    qids: list = []
     for qid, plan in plans:
-        if any(tid in groups_all for tid in _plan_tids(plan)):
-            r = _segment_search_rows(plan, groups_all, shared_decode, deleted)
-            rows.extend(r)
-            qids.extend([qid] * len(r))
-
-
-def _hit_page(out: pd.DataFrame, offset: int, k: int) -> pd.DataFrame:
-    """Hit rows offset..offset+k of a scorer output frame in the
-    (score desc, doc_id asc) total order."""
-    hits = out[out["kind"] == _K_HIT]
-    order = np.lexsort((hits["doc_id"].to_numpy(), -hits["score"].to_numpy()))
-    return hits.iloc[order[offset:offset + k]]
+        o = _score_plan(plan, seg, deleted)
+        if o is not None:
+            r = _out_rows(o)
+            rows += r
+            qids += [qid] * len(r)
+    return _out_frame(rows, qids if with_qid else None)
 
 
 def _section_page(out: pd.DataFrame, offset: int, k: int) -> pd.DataFrame:
     """Section hit rows offset..offset+k in doc_id order."""
     return (out[out["kind"] == _K_HIT].sort_values("doc_id")
             .iloc[offset:offset + k])
+
+
+def _read_local(paths, columns=None) -> pa.Table | None:
+    """Driver-direct Arrow read of a catalog table (zero Spark jobs;
+    see catalog.read_table_arrow), or None when its files are not
+    readable from the driver — the caller then reads through Spark."""
+    try:
+        return read_table_arrow(paths, columns=columns)
+    except _READ_ERRORS:
+        return None
 
 
 class IndexReader:
@@ -785,12 +825,12 @@ class IndexReader:
         self._postings = self._postings_full.drop("pos_bytes") \
             if "pos_bytes" in self._postings_full.columns else self._postings_full
         self._forward = self.spark.read.parquet(*self.catalog.table_paths(self.snap, "forward"))
-        self._terms_pd = None
-        # in-driver postings block cache (lazy; see _postings_driver):
-        # exact cost gate from the published token count
-        self._postings_pd_cache = None
+        # in-driver block cache (lazy; see _postings_driver): exact
+        # cost gate from the published token count
+        self._store = None
         self._driver_cache_ok = bool(cache) and (
             self.snap.stats.get("tok_sum", 1 << 62) <= self.DRIVER_CACHE_TOKSUM)
+        self._term_row = None
         if cache:
             # hot-path tables pinned like Lucene's in-heap FacetDataCache
             # (spills to disk when they don't fit executor memory).
@@ -802,19 +842,14 @@ class IndexReader:
             # shuffle at every reader open.
             self._terms = self._terms.persist()
             self._postings = self._postings.persist()
-            # small dictionaries also live driver-side: term lookup then
-            # costs zero Spark jobs (adaptive — falls back to a filtered
-            # scan when the dictionary is web-scale). r6: the pull
-            # itself is a driver-direct parquet read (no scheduled
-            # scan+collect job per reader open); same local-fs validity
-            # as the facet dictionary reads below
+            # small dictionaries also live driver-side as a term lookup,
+            # so planning costs zero Spark jobs (a web-scale dictionary
+            # resolves terms with a filtered scan instead)
             if self.snap.stats.get("n_terms", 1 << 62) <= 2_000_000:
-                try:
-                    self._terms_pd = read_table_pdf(self.catalog.table_paths(
-                        self.snap, "terms"))[["term", "term_id", "df"]]
-                except Exception:
-                    self._terms_pd = self._terms.select(
-                        "term", "term_id", "df").toPandas()
+                cols = ["term", "term_id", "df"]
+                tbl = _read_local(self.catalog.table_paths(self.snap, "terms"), cols)
+                self._index_terms(tbl.to_pandas() if tbl is not None
+                                  else self._terms.select(*cols).toPandas())
         # facet dictionaries are page-scale — driver-direct parquet
         # read (zero Spark jobs per reader open; see catalog.read_table_pdf)
         self.dicts = {
@@ -823,6 +858,29 @@ class IndexReader:
             "ts_bucket": read_table_pdf(
                 self.catalog.table_paths(self.snap, "dict_ts_bucket")),
         }
+        # per facet: dictionary values and ordinals (row order), a
+        # value → row map for selections, and per-ordinal arrays of the
+        # dictionary row and the value's rank — ordinals stop being
+        # value-sorted after an append (build._build_dict), so facet
+        # order needs the rank
+        self._facet = {}
+        for f, d in self.dicts.items():
+            vals = d["value"].to_numpy(object)
+            ords = d["ordinal"].to_numpy(np.int64)
+            n = int(ords.max()) + 1 if ords.size else 0
+            row = np.full(n, -1, dtype=np.int64)
+            row[ords] = np.arange(ords.size)
+            rank = np.full(n, -1, dtype=np.int64)
+            rank[ords[np.argsort(vals, kind="stable")]] = np.arange(ords.size)
+            self._facet[f] = (vals, ords, {v: i for i, v in enumerate(vals.tolist())},
+                              row, rank)
+        # recency table: ordinal → its time bucket's start in epoch ms
+        # (ordinal 0/missing → -1e18, i.e. factor 1)
+        vals, ords = self._facet["ts_bucket"][:2]
+        self._ord_ms = np.full(int(ords.max()) + 1 if ords.size else 1, -1e18)
+        if ords.size:
+            ms = pd.to_datetime(pd.Series(vals), utc=True).astype("int64") // 1_000_000
+            self._ord_ms[ords] = ms.to_numpy(np.float64)
         # cumulative soft-delete tombstones (≙ Lucene liveDocs): hits,
         # facet counts and num_hits exclude them; df/cf/avgdl stats
         # intentionally do NOT change until a merge — Lucene semantics.
@@ -866,6 +924,29 @@ class IndexReader:
             }
             self._deleted_bc = self.spark.sparkContext.broadcast(seg_map)
 
+    def _index_terms(self, terms: pd.DataFrame) -> None:
+        """Build the per-reader term → (term_id, df) lookup (facet
+        sentinels included) from a (term, term_id, df) frame."""
+        self._term_ids = terms["term_id"].to_numpy(np.int64)
+        self._term_dfs = terms["df"].to_numpy(np.int64)
+        self._term_row = dict(zip(terms["term"].tolist(), range(len(terms))))
+
+    def _lookup_terms(self, names) -> dict:
+        """term → (term_id, df) for the known ``names``: dictionary
+        lookups on a cached reader, one filtered scan otherwise."""
+        names = set(names)
+        if self._term_row is not None:
+            rows = [(t, self._term_row[t]) for t in names if t in self._term_row]
+            return {t: (int(self._term_ids[r]), int(self._term_dfs[r]))
+                    for t, r in rows}
+        pdf = (self._terms.where(F.col("term").isin(list(names)))
+               .select("term", "term_id", "df").toPandas())
+        return {t: (int(i), int(d))
+                for t, i, d in zip(pdf["term"], pdf["term_id"], pdf["df"])}
+
+    def _deleted_map(self) -> dict:
+        return self._deleted_bc.value if self._deleted_bc is not None else {}
+
     def _not_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join tombstones out of a doc_id-keyed DataFrame — a
         relational join Catalyst can plan (broadcast-hash for ordinary
@@ -907,29 +988,24 @@ class IndexReader:
 
     OR_THRESHOLD = 5  # ≙ AdaptiveFacetFilter.java:98
 
+    def _ords_of(self, field: str, values) -> list[int]:
+        """Ordinals of the dictionary values in ``values``, in
+        dictionary row order."""
+        _vals, ords, row_of, _row, _rank = self._facet[field]
+        return ords[sorted({row_of[v] for v in values if v in row_of})].tolist()
+
     def _resolve_selections(self, req: SearchRequest):
         sel_lang = sel_ts = None
         if "lang" in req.selections:
-            d = self.dicts["lang"]
-            sel_lang = d[d["value"].isin(req.selections["lang"])]["ordinal"].tolist()
+            sel_lang = self._ords_of("lang", req.selections["lang"])
         if req.ts_range is not None:
-            d = self.dicts["ts_bucket"]
+            vals, ords = self._facet["ts_bucket"][:2]
             lo, hi = req.ts_range
-            sel_ts = d[(d["value"] >= lo) & (d["value"] <= hi)]["ordinal"].tolist()
+            sel_ts = ords[(vals >= lo) & (vals <= hi)].tolist()
         if "ts_bucket" in req.selections:
-            d = self.dicts["ts_bucket"]
-            vals = d[d["value"].isin(req.selections["ts_bucket"])]["ordinal"].tolist()
+            vals = self._ords_of("ts_bucket", req.selections["ts_bucket"])
             sel_ts = vals if sel_ts is None else sorted(set(sel_ts) & set(vals))
         return sel_lang, sel_ts
-
-    def _sentinel_lookup(self, field: str, ords: list[int]) -> pd.DataFrame:
-        names = [f"\x00{field}:{o}" for o in ords]
-        if self._terms_pd is not None:
-            return self._terms_pd[self._terms_pd["term"].isin(names)]
-        return (
-            self._terms.where(F.col("term").isin(names))
-            .select("term", "term_id", "df").toPandas()
-        )
 
     def _access_path(self, field: str, ords: list[int] | None):
         """Adaptive access-path choice for one selection (≙ facets/
@@ -939,41 +1015,27 @@ class IndexReader:
         if ords is None:
             return None, [], 0
         if 0 < len(ords) <= self.OR_THRESHOLD:
-            found = self._sentinel_lookup(field, ords)
-            if len(found) == len(ords) and 2 * found["df"].sum() < self.n_docs:
-                return ("postings", found["term_id"].astype("int64").tolist(),
-                        int(found["df"].sum()))
+            found = self._lookup_terms(f"\x00{field}:{o}" for o in ords)
+            df = sum(d for _, d in found.values())
+            if len(found) == len(ords) and 2 * df < self.n_docs:
+                return "postings", [t for t, _ in found.values()], df
         return "ords", [], 0
 
     def plan(self, req: SearchRequest) -> dict:
         qtokens = tokenize(req.query) if isinstance(req.query, str) else [
             t for q in req.query for t in tokenize(q)
         ]
-        if self._terms_pd is not None:
-            terms_pd = self._terms_pd[self._terms_pd["term"].isin(set(qtokens))]
-        else:
-            terms_pd = (
-                self._terms.where(F.col("term").isin(list(set(qtokens))))
-                .select("term", "term_id", "df")
-                .toPandas()
-            )
-        plan_terms = _plan_terms(terms_pd, qtokens, self.n_docs)
+        plan_terms = _plan_terms(self._lookup_terms(qtokens), qtokens, self.n_docs)
         sel_lang, sel_ts = self._resolve_selections(req)
         lang_mode, lang_tids, lang_df = self._access_path("lang", sel_lang)
         ts_mode, ts_tids, ts_df = self._access_path("ts", sel_ts)
         recency = None
         if req.recency:
-            d = self.dicts["ts_bucket"]
-            max_ord = int(d["ordinal"].max()) if len(d) else 0
-            ord_ms = np.full(max_ord + 1, -1e18)  # ordinal 0/missing → factor 1
-            if len(d):
-                ms = pd.to_datetime(d["value"], utc=True).astype("int64") // 1_000_000
-                ord_ms[d["ordinal"].to_numpy(np.int64)] = ms.to_numpy(np.float64)
             recency = {
                 "now_ms": float(req.recency["now_ms"]),
                 "cutoff_ms": float(req.recency["cutoff_ms"]),
                 "max_factor": float(req.recency["max_factor"]),
-                "ord_ms": ord_ms.tolist(),
+                "ord_ms": self._ord_ms,
             }
         phrase_ids: list[int] = []
         phrase_idf_sum = 0.0
@@ -1033,110 +1095,19 @@ class IndexReader:
         total_df = sum(t["df"] for t in plan["terms"]) + plan.get("sel_df", 0)
         return total_df <= self.DRIVER_POSTINGS_THRESHOLD
 
-    def _postings_driver(self):
-        """In-driver block cache, or None past the gate. Built lazily
-        on first fast-path use: one toPandas of the postings table
-        (pos_bytes included so phrase queries are served too), one
-        (term_id, segment, first_doc) lexsort, then contiguous-slice
-        indexes per term (for whole-term gathers) and per
-        (segment, term) (for the per-segment scorer). Returns
-        (pdf, seg_slices, tid_span, tid_segs)."""
+    def _postings_driver(self) -> _BlockStore | None:
+        """The in-driver block cache — a ``_BlockStore`` of the whole
+        postings table (pos_bytes included, so phrase queries are
+        served too) — or None past the gate. Built lazily on first
+        fast-path use from one driver-direct Arrow read (a Spark read
+        where the files are not driver-readable)."""
         if not getattr(self, "_driver_cache_ok", False):
             return None
-        if self._postings_pd_cache is None:
-            # r6: driver-direct pyarrow read + Arrow-side sort (the
-            # scan+collect this replaces was 2.4 s for 645k block rows
-            # at bench scale; arrow read+take is 0.9 s — the lexsorted
-            # take runs on Arrow buffers instead of 4.5M object
-            # pointers) — valid exactly where the catalog manifest
-            # itself is (local filesystem by design, see
-            # catalog.read_table_arrow); the toPandas fallback keeps
-            # remote-fs layouts working
-            try:
-                import pyarrow as pa
-
-                tbl = read_table_arrow(
-                    self.catalog.table_paths(self.snap, "postings"))
-                if tbl is None or "segment" not in tbl.column_names:
-                    raise ValueError("postings read missing columns")
-                seg = tbl.column("segment").to_numpy(
-                    zero_copy_only=False).astype(np.int64, copy=False)
-                tid = tbl.column("term_id").to_numpy(
-                    zero_copy_only=False).astype(np.int64, copy=False)
-                fd = tbl.column("first_doc").to_numpy(
-                    zero_copy_only=False).astype(np.int64, copy=False)
-                order = np.lexsort((fd, seg, tid))
-                pdf = tbl.take(pa.array(order)).to_pandas()
-            except Exception:
-                pdf = self._postings_full.toPandas()
-                seg = pdf["segment"].to_numpy(np.int64)
-                tid = pdf["term_id"].to_numpy(np.int64)
-                fd = pdf["first_doc"].to_numpy(np.int64)
-                order = np.lexsort((fd, seg, tid))
-                pdf = pdf.iloc[order].reset_index(drop=True)
-            tid_s, seg_s = tid[order], seg[order]
-            n = len(pdf)
-            change = (np.flatnonzero((np.diff(tid_s) != 0)
-                                     | (np.diff(seg_s) != 0)) + 1
-                      if n else np.zeros(0, dtype=np.int64))
-            starts = np.concatenate(([0], change)) if n else change
-            ends = np.concatenate((change, [n])) if n else change
-            # fully vectorized index structures (the per-run Python
-            # loop this replaces was 0.86 s at 457k runs):
-            run_tids = tid_s[starts] if n else np.zeros(0, dtype=np.int64)
-            run_segs = seg_s[starts] if n else np.zeros(0, dtype=np.int64)
-            # runs are tid-major, so each term's runs are contiguous
-            u_tids, first_run = np.unique(run_tids, return_index=True)
-            last_run = (np.concatenate((first_run[1:], [len(run_tids)])) - 1
-                        if len(u_tids) else first_run)
-            tid_span: dict[int, tuple[int, int]] = dict(zip(
-                u_tids.tolist(),
-                zip(starts[first_run].tolist(), ends[last_run].tolist())))
-            tid_segs: dict[int, list[int]] = dict(zip(
-                u_tids.tolist(),
-                (a.tolist() for a in np.split(run_segs, first_run[1:]))))
-            # per-segment tid-sorted run arrays for _SegGroups
-            run_order = np.lexsort((run_tids, run_segs))
-            rs = run_segs[run_order]
-            seg_change = (np.flatnonzero(np.diff(rs) != 0) + 1
-                          if len(rs) else np.zeros(0, dtype=np.int64))
-            seg_bounds = np.concatenate(([0], seg_change, [len(rs)]))
-            seg_slices: dict[int, tuple] = {}
-            for i in range(len(seg_bounds) - 1):
-                a, b = int(seg_bounds[i]), int(seg_bounds[i + 1])
-                if a == b:
-                    continue
-                idx = run_order[a:b]
-                seg_slices[int(rs[a])] = (run_tids[idx], starts[idx],
-                                          ends[idx])
-            self._postings_pd_cache = (pdf, seg_slices, tid_span, tid_segs)
-            self._decode_shared: dict[int, dict] = {}
-        return self._postings_pd_cache
-
-    def _blocks_for_tids(self, tids: list[int]) -> pd.DataFrame | None:
-        """Term-filtered block rows from the driver cache (zero Spark
-        jobs), or None when the cache is gated off."""
-        cached = self._postings_driver()
-        if cached is None:
-            return None
-        pdf, _seg_slices, tid_span, _tid_segs = cached
-        parts = [pdf.iloc[tid_span[t][0]:tid_span[t][1]]
-                 for t in tids if t in tid_span]
-        if not parts:
-            return pdf.iloc[:0]
-        return parts[0] if len(parts) == 1 else pd.concat(parts)
-
-    def _score_cached(self, plans: list, tids: list[int], rows: list,
-                      qids: list) -> None:
-        """``_score_segment`` over every cached segment holding one of
-        ``tids``, with the reader's per-segment decode cache shared
-        across calls."""
-        pdf_all, seg_slices, _tid_span, tid_segs = self._postings_driver()
-        dmap = self._deleted_bc.value if self._deleted_bc is not None else {}
-        for g in sorted({s for t in tids for s in tid_segs.get(t, ())}):
-            _score_segment(plans, _SegGroups(pdf_all, seg_slices[g]),
-                           self._decode_shared.setdefault(g, {}),
-                           dmap.get(g), rows, qids)
+        if self._store is None:
+            tbl = _read_local(self.catalog.table_paths(self.snap, "postings"))
+            self._store = _BlockStore(tbl if tbl is not None
+                                      else self._postings_full.toArrow())
+        return self._store
 
     def _blocks(self, tids: list[int], phrase: bool) -> DataFrame:
         """Term-filtered block rows (pushed term_id IN scan). The
@@ -1147,24 +1118,26 @@ class IndexReader:
         src = self._postings_full if phrase else self._postings
         return src.where(F.col("term_id").isin(tids))
 
-    def _segment_outputs_driver(self, plan: dict) -> pd.DataFrame:
-        """Score a page-scale query on the driver: from the in-driver
-        block cache when the index is under the gate (``cache``: zero
-        Spark jobs, decode shared across queries), else from one
-        pushed term_id IN scan (``scan``) — the SAME per-segment
-        scorer either way."""
+    def _driver_store(self, tids: list[int], phrase: bool) -> _BlockStore:
+        """Blocks of ``tids`` on the driver: the block cache when the
+        index is under the gate (``cache``: zero Spark jobs, decoded
+        blocks shared across queries), else one pushed term_id IN scan
+        (``scan``)."""
+        if phrase:
+            self._require_positions()
+        store = self._postings_driver()
+        if store is None:
+            store = _BlockStore(self._blocks(tids, phrase).toArrow())
+        return store
+
+    def _segment_outputs_driver(self, plan: dict) -> list:
+        """Score a page-scale query on the driver — the SAME
+        per-segment scorer on the ``cache`` and ``scan`` paths."""
         if not _runnable(plan):
-            return _empty_out()
-        rows: list = []
-        if self._postings_driver() is not None:
-            if plan["mode"] == "phrase":
-                self._require_positions()
-            self._score_cached([(0, plan)], _plan_tids(plan), rows, [])
-            return _out_frame(rows)
-        pdf = self._blocks(_plan_tids(plan), plan["mode"] == "phrase").toPandas()
-        for _, g in pdf.groupby("segment"):
-            rows.extend(_segment_rows(g, plan, self._deleted_bc))
-        return _out_frame(rows)
+            return []
+        tids = _plan_tids(plan)
+        store = self._driver_store(tids, plan["mode"] == "phrase")
+        return _score_store(store, [(0, plan)], self._deleted_map()).get(0, [])
 
     def _require_positions(self) -> None:
         """Plan-time guard: a phrase/section query against an index
@@ -1182,9 +1155,48 @@ class IndexReader:
         blocks = self._blocks(_plan_tids(plan), plan["mode"] == "phrase")
         deleted_bc = self._deleted_bc
         return blocks.groupBy("segment").applyInPandas(
-            lambda pdf: _out_frame(_segment_rows(pdf, plan, deleted_bc)),
+            lambda pdf: _task_rows(pdf, [(0, plan)], deleted_bc, False),
             schema=OUT_SCHEMA,
         )
+
+    def _merge(self, req: SearchRequest, parts: list) -> SearchResult:
+        """The cross-segment merge of every keyword path (≙ ListMerger
+        + CombinedFacetAccessible, util/ListMerger.java:104-137,
+        facets/CombinedFacetAccessible.java:101-192): one (score desc,
+        doc_id asc) lexsort for the page, summed hit counts, summed
+        facet count vectors ordered by (count desc, value rank)."""
+        docs = np.concatenate([_NO_DOCS] + [p.docs for p in parts])
+        scores = np.concatenate([_NO_SCORES] + [p.scores for p in parts])
+        page = np.lexsort((docs, -scores))[req.offset:req.offset + req.k]
+        hits = pd.DataFrame({"doc_id": docs[page], "score": scores[page]})
+        facets = {f: self._facet_frame(f, [p.facets[f] for p in parts
+                                           if f in p.facets])
+                  for f in req.facets}
+        explanations = None
+        if req.explain:
+            ex = [p.expl for p in parts if p.expl is not None]
+            d = np.concatenate([_NO_DOCS] + [e[0] for e in ex])
+            keep = np.isin(d, docs[page])
+            explanations = pd.DataFrame({
+                "doc_id": d[keep],
+                "part": np.concatenate([np.zeros(0, object)] + [e[1] for e in ex])[keep],
+                "value": np.concatenate([_NO_SCORES] + [e[2] for e in ex])[keep],
+            }).sort_values(["doc_id", "part"], ignore_index=True)
+        return SearchResult(hits=hits, num_hits=int(sum(p.n_hits for p in parts)),
+                            facets=facets, explanations=explanations)
+
+    def _facet_frame(self, f: str, counts: list) -> pd.DataFrame:
+        """(value, count) of one facet from per-segment count vectors:
+        values with a dictionary entry and a nonzero sum, count desc,
+        value asc."""
+        vals, _ords, _row_of, row, rank = self._facet[FACET_FIELDS[f]]
+        tot = np.zeros(rank.size, dtype=np.int64)
+        for c in counts:
+            n = min(c.size, tot.size)
+            tot[:n] += c[:n]
+        o = np.flatnonzero((tot > 0) & (rank >= 0))
+        o = o[np.lexsort((rank[o], -tot[o]))]
+        return pd.DataFrame({"value": vals[row[o]], "count": tot[o]})
 
     # ----------------------------------------------- MatchAll / selection-only
 
@@ -1289,42 +1301,16 @@ class IndexReader:
 
     def search(self, req: SearchRequest) -> SearchResult:
         """At most one Spark job (none on the ``cache`` path):
-        per-segment top-k/facet/stat rows are tiny
-        (≤ P·(k + #facet values) rows), so the cross-segment merge runs
-        driver-side in pandas — the literal analogue of the reference's
-        ListMerger + CombinedFacetAccessible (util/ListMerger.java:104-137,
-        facets/CombinedFacetAccessible.java:101-192)."""
+        per-segment answers are tiny (≤ k hits + one count vector per
+        facet each), so the cross-segment merge runs driver-side."""
         if req.query is None:
             return self._matchall_search(req)
         plan = self.plan(req)
-        out = (self._segment_outputs_driver(plan) if self._driver_fastpath(plan)
-               else self._segment_outputs(plan).toPandas())
-        page = _hit_page(out, req.offset, req.k)
-        hits = page[["doc_id", "score"]].reset_index(drop=True)
-        num_hits = int(out[out["kind"] == _K_STATS]["count"].sum())
-        explanations = None
-        if req.explain:
-            ex = out[out["kind"] == _K_EXPL]
-            ex = ex[ex["doc_id"].isin(hits["doc_id"])]
-            explanations = (
-                ex[["doc_id", "field", "score"]]
-                .rename(columns={"field": "part", "score": "value"})
-                .sort_values(["doc_id", "part"], ignore_index=True)
-            )
-        facets = {}
-        if plan["facets"]:
-            fc = (
-                out[out["kind"] == _K_FACET]
-                .groupby(["field", "ordinal"], as_index=False)["count"]
-                .sum()
-            )
-            for f in plan["facets"]:
-                d = self.dicts[FACET_FIELDS[f]][["ordinal", "value"]]
-                part = fc[fc["field"] == f].merge(d, on="ordinal")
-                part = part.sort_values(["count", "value"], ascending=[False, True])
-                facets[f] = part[["value", "count"]].reset_index(drop=True)
-        return SearchResult(hits=hits, num_hits=num_hits, facets=facets,
-                            explanations=explanations)
+        if self._driver_fastpath(plan):
+            parts = self._segment_outputs_driver(plan)
+        else:
+            parts = _parts_from_rows(self._segment_outputs(plan).toPandas()).get(0, [])
+        return self._merge(req, parts)
 
     # ---------------------------------------------------------- term vectors
 
@@ -1352,57 +1338,52 @@ class IndexReader:
         blocks = src.where(F.col("segment").isin(segs))
         ids_arr = np.array(ids, dtype=np.int64)
 
-        def tv(pdf: pd.DataFrame) -> pd.DataFrame:
+        def tv(store: _BlockStore, seg: int) -> pd.DataFrame:
             out = []
-            for tid, g in pdf.groupby("term_id"):
-                g = g.sort_values("first_doc")
-                f = g["first_doc"].to_numpy(np.int64)
-                l = g["last_doc"].to_numpy(np.int64)
-                idx = np.searchsorted(ids_arr, f)
+            if seg in store.segments:
+                a, b = store.segments[seg]
+                blk = np.arange(store.run_lo[a], store.run_hi[b - 1])
+                idx = np.searchsorted(ids_arr, store.first[blk])
                 keep = (idx < ids_arr.size) & \
-                       (ids_arr[np.minimum(idx, ids_arr.size - 1)] <= l)
-                g = g[keep]
-                if not len(g):
-                    continue
-                docs, tf, _dl, _lang, _ts = _decode_term_blocks(g)
-                # facet sentinel terms carry no positions even in a
-                # positional index — they are dropped by the term-name
-                # filter below, so just skip their decode
-                # emptiness probe must not concatenate the payload:
-                # short-circuiting any()
-                g_pos = has_pos and any(len(x) for x in g["pos_bytes"])
-                pos = _decode_positions(g, tf) if g_pos else None
-                starts = np.cumsum(tf, dtype=np.int64) - tf
-                sel = np.flatnonzero(np.isin(docs, ids_arr))
-                for i in sel:
-                    ps = ("," .join(map(str, pos[starts[i]:starts[i] + tf[i]]))
-                          if pos is not None else "")
-                    out.append((int(docs[i]), int(tid), int(tf[i]), ps))
+                       (ids_arr[np.minimum(idx, ids_arr.size - 1)] <= store.last[blk])
+                blk = blk[keep & (store.tid[blk] >= 0)]  # -1: forward runs
+                brk = np.flatnonzero(np.diff(store.tid[blk])) + 1
+                for g in np.split(blk, brk) if blk.size else []:
+                    docs, tf = store.get("doc", g), store.get("tf", g)
+                    # facet sentinel terms carry no positions even in a
+                    # positional index — they are dropped by the
+                    # term-name filter below, so just skip their decode
+                    pos = (store.positions(g, tf)
+                           if has_pos and store.raw("pos", g).size else None)
+                    starts = np.cumsum(tf, dtype=np.int64) - tf
+                    tid = int(store.tid[g[0]])
+                    for i in np.flatnonzero(np.isin(docs, ids_arr)):
+                        ps = (",".join(map(str, pos[starts[i]:starts[i] + tf[i]]))
+                              if pos is not None else "")
+                        out.append((int(docs[i]), tid, int(tf[i]), ps))
             return pd.DataFrame(
                 out, columns=["doc_id", "term_id", "tf", "positions"])
 
         cached = self._postings_driver()
-        if cached is not None and self._terms_pd is not None:
+        if cached is not None and self._term_row is not None:
             # in-driver path: same tv() reconstruction over the cached
             # blocks of the target segments, sentinel filter via the
-            # driver term dictionary — one Spark job (the segs lookup)
+            # driver term lookup — one Spark job (the segs lookup)
             # instead of three
-            pdf_all = cached[0]
-            sub = pdf_all[pdf_all["segment"].isin(segs)]
-            outs = [tv(g) for _, g in sub.groupby("segment")]
-            vec_pd = (pd.concat(outs, ignore_index=True) if outs
-                      else pd.DataFrame(columns=["doc_id", "term_id", "tf",
-                                                 "positions"]))
-            merged = vec_pd.merge(
-                self._terms_pd[["term_id", "term"]], on="term_id")
-            merged = merged[~merged["term"].str.startswith("\x00")]
-            out_pd = merged[["doc_id", "term", "tf", "positions"]].astype(
+            vec_pd = pd.concat([tv(cached, int(g)) for g in segs],
+                               ignore_index=True)
+            names = dict(zip(self._term_ids.tolist(), self._term_row))
+            vec_pd["term"] = vec_pd["term_id"].map(names)
+            vec_pd = vec_pd[~vec_pd["term"].str.startswith("\x00")]
+            out_pd = vec_pd[["doc_id", "term", "tf", "positions"]].astype(
                 {"doc_id": "int64", "tf": "int64"})
             return self.spark.createDataFrame(
                 out_pd, schema="doc_id long, term string, tf long, "
                                "positions string")
         vecs = blocks.groupBy("segment").applyInPandas(
-            tv, schema="doc_id long, term_id long, tf long, positions string")
+            lambda pdf: tv(_BlockStore(pa.Table.from_pandas(pdf, preserve_index=False)),
+                           int(pdf["segment"].iloc[0])),
+            schema="doc_id long, term_id long, tf long, positions string")
         # the result is page-sized — broadcast it against the dictionary
         return (
             F.broadcast(vecs)
@@ -1425,16 +1406,11 @@ class IndexReader:
                 "BuildConfig(sections=('window', W)) or ('regex', pattern)")
         self._require_positions()
         words = sorted(set(tree_words(tree)))
-        if self._terms_pd is not None:
-            found = self._terms_pd[self._terms_pd["term"].isin(words)]
-        else:
-            found = (self._terms.where(F.col("term").isin(words))
-                     .select("term", "term_id", "df").toPandas())
-        word_tid = dict.fromkeys(words, -1)
-        word_tid.update(zip(found["term"], found["term_id"].astype(int)))
+        found = self._lookup_terms(words)
+        word_tid = {w: found[w][0] if w in found else -1 for w in words}
         return {"tree": tree, "word_tid": word_tid, "sections": tuple(sec_cfg),
                 "k": k, "offset": offset, "boost": float(boost),
-                "total_df": int(found["df"].sum())}
+                "total_df": sum(df for _, df in found.values())}
 
     def _sections_table(self) -> DataFrame:
         if getattr(self, "_sections_df", None) is None:
@@ -1450,19 +1426,20 @@ class IndexReader:
             return self.spark.createDataFrame([], OUT_SCHEMA)
         blocks = self._blocks(tids, True)
         deleted_bc = self._deleted_bc
+
+        def task(pdf, sec_pdf):
+            if not len(pdf):
+                return _empty_out()
+            return segment_section_search(*_task_segment(pdf, deleted_bc),
+                                          plan, sec_pdf)
+
         if plan["sections"][0] == "regex":
             # per-doc boundary arrays ride along via cogroup on segment
             return blocks.groupBy("segment").cogroup(
                 self._sections_table().groupBy("segment")
-            ).applyInPandas(
-                lambda left, right: segment_section_search(
-                    left, plan, right, deleted_bc),
-                schema=OUT_SCHEMA,
-            )
+            ).applyInPandas(task, schema=OUT_SCHEMA)
         return blocks.groupBy("segment").applyInPandas(
-            lambda pdf: segment_section_search(pdf, plan, None, deleted_bc),
-            schema=OUT_SCHEMA
-        )
+            lambda pdf: task(pdf, None), schema=OUT_SCHEMA)
 
     def _section_outputs_pd(self, plan: dict) -> pd.DataFrame:
         """Section outputs as pandas — driver fast path for page-scale
@@ -1476,11 +1453,10 @@ class IndexReader:
             tids = [t for t in plan["word_tid"].values() if t >= 0]
             if not tids:
                 return _empty_out()
-            pdf = self._blocks_for_tids(tids)
-            if pdf is None:
-                pdf = self._blocks(tids, True).toPandas()
-            outs = [segment_section_search(g, plan, None, self._deleted_bc)
-                    for _, g in pdf.groupby("segment")]
+            store = self._driver_store(tids, True)
+            dmap = self._deleted_map()
+            outs = [segment_section_search(store.view(g), dmap.get(g), plan, None)
+                    for g in store.segments_of(tids)]
             return (pd.concat(outs, ignore_index=True) if outs
                     else _empty_out())
         return self._section_outputs(plan).toPandas()
@@ -1532,11 +1508,11 @@ class IndexReader:
         (none when the in-driver block cache serves it).
 
         Per-segment tasks score every query against their segment
-        (results identical to search() — same code path per query);
-        per-query driver/scheduling overhead amortizes to zero, so
-        batch retrieval throughput scales with executors. This is the
-        bulk-evaluation pattern (training-data mining, offline query
-        sets); use search() for single-query latency.
+        (results identical to search() — same scorer and merge per
+        query); per-query driver/scheduling overhead amortizes to
+        zero, so batch retrieval throughput scales with executors.
+        This is the bulk-evaluation pattern (training-data mining,
+        offline query sets); use search() for single-query latency.
 
         MatchAll requests (query=None) run on the forward-scan path
         individually — they never touch the postings job."""
@@ -1546,11 +1522,6 @@ class IndexReader:
             rest_results = iter(self.search_many(rest) if rest else [])
             return [self._matchall_search(r) if i in matchall
                     else next(rest_results) for i, r in enumerate(reqs)]
-        # batch mode trades per-query block-max pruning / conjunctive
-        # block skip for CROSS-QUERY decode sharing (each term decodes
-        # once per segment no matter how many queries reference it) —
-        # results are identical either way since pruning is exact
-        # (property-tested); only the work-skipping strategy differs
         plans = [self.plan(r) for r in reqs]
         runnable = [(i, p) for i, p in enumerate(plans) if _runnable(p)]
         tids = sorted({t for _, p in runnable for t in _plan_tids(p)})
@@ -1558,54 +1529,26 @@ class IndexReader:
         if phrase:
             self._require_positions()
         if not runnable:
-            out = _out_frame([], [])
+            parts = {}
         elif self._postings_driver() is None:
-            out = self._search_many_distributed(runnable, tids, phrase)
+            parts = _parts_from_rows(
+                self._search_many_distributed(runnable, tids, phrase))
         else:
             # whole batch from the in-driver block cache: zero Spark
-            # jobs, same _score_segment loop the distributed tasks run.
-            # Web-scale indexes exceed the cache gate and keep the
-            # distributed batch.
-            rows: list = []
-            qids: list = []
-            self._score_cached(runnable, tids, rows, qids)
-            out = _out_frame(rows, qids)
-        return self._merge_batch_results(reqs, plans, out)
+            # jobs, same scorer the distributed tasks run. Web-scale
+            # indexes exceed the cache gate and keep the distributed
+            # batch.
+            parts = _score_store(self._postings_driver(), runnable,
+                                 self._deleted_map())
+        return [self._merge(r, parts.get(i, [])) for i, r in enumerate(reqs)]
 
     def _search_many_distributed(self, runnable: list, tids: list[int],
                                  phrase: bool) -> pd.DataFrame:
-        """The batch as ONE Spark job: each segment task runs
-        ``_score_segment`` over every runnable plan."""
+        """The batch as ONE Spark job: each segment task scores every
+        runnable plan, decoding each block (and each stream) at most
+        once however many plans read it; output rows accumulate
+        across plans into ONE frame per task."""
         deleted_bc = self._deleted_bc
-        # exact per-batch stream needs: skip an ordinal stream's
-        # decode (1/5 of the memory-bound bytes) when NO plan in
-        # the batch reads it — lang feeds the lang facet and
-        # ords-mode lang selections; ts additionally feeds recency
-        need_lang = any(
-            "lang" in p["facets"]
-            or (p["sel_lang"] is not None
-                and p.get("sel_lang_mode") != "postings")
-            for _, p in runnable)
-        need_ts = any(
-            "ts_bucket" in p["facets"] or p.get("recency")
-            or (p["sel_ts"] is not None
-                and p.get("sel_ts_mode") != "postings")
-            for _, p in runnable)
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            # one sort + one bulk decode per task (the measured
-            # per-task profile was ~40% repeated decode + ~30%
-            # per-query regrouping); output tuples accumulate across
-            # queries into ONE frame per task (per-query frame
-            # construction was ~25% of the loop)
-            shared, groups_all = _batch_group_decode(
-                pdf, need_lang=need_lang, need_ts=need_ts)
-            rows: list = []
-            qids: list = []
-            _score_segment(runnable, groups_all, shared,
-                           _segment_deleted(deleted_bc, pdf), rows, qids)
-            return _out_frame(rows, qids)
-
         blocks = self._blocks(tids, phrase)
         # pin the exchange width: left to AQE, the small term-
         # filtered shuffle coalesces to a handful of fat partitions
@@ -1620,8 +1563,9 @@ class IndexReader:
         if n_seg:
             npart = min(npart, n_seg)
         grouped = blocks.repartition(npart, "segment").groupBy(
-            "segment").applyInPandas(run_segment,
-                                     schema=OUT_SCHEMA + ", qid int")
+            "segment").applyInPandas(
+                lambda pdf: _task_rows(pdf, runnable, deleted_bc, True),
+                schema=OUT_SCHEMA + ", qid int")
         # AQE's shuffle materialization splits this into two jobs
         # with a barrier between scan and Python stage — a fixed
         # ~0.6 s that caps batch scaling (it is a larger fraction
@@ -1644,95 +1588,6 @@ class IndexReader:
             finally:
                 conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
-    def _merge_batch_results(self, reqs: list[SearchRequest], plans: list,
-                             out: pd.DataFrame) -> list:
-        """Assemble per-query SearchResults from the batch output
-        frame — shared by the distributed batch and the driver-cache
-        batch path (identical input shape, identical results)."""
-        results: list[SearchResult | None] = [None] * len(reqs)
-        # ---- driver merge, VECTORIZED by qid: every per-query
-        # quantity comes from ONE grouped pass over the collected
-        # frame (the per-query boolean-mask loop this replaces scanned
-        # the whole frame once per query per output kind — measured as
-        # the driver-side serial tax capping batch scaling)
-        kinds = out["kind"].to_numpy() if len(out) else np.zeros(0)
-        # per-query page: one global (qid, -score, doc_id) sort, then
-        # a rank-window mask with per-row offset/k lookups
-        hits_all = out[kinds == _K_HIT] if len(out) else out
-        empty_hits = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                   "score": pd.Series([], dtype="float64")})
-        pages: dict[int, pd.DataFrame] = {}
-        page_pairs = None
-        if len(hits_all):
-            order = np.lexsort((hits_all["doc_id"].to_numpy(),
-                                -hits_all["score"].to_numpy(),
-                                hits_all["qid"].to_numpy()))
-            h = hits_all.iloc[order]
-            rank = h.groupby("qid").cumcount().to_numpy()
-            off_by_q = np.array([r.offset for r in reqs], dtype=np.int64)
-            k_by_q = np.array([r.k for r in reqs], dtype=np.int64)
-            qv = h["qid"].to_numpy(np.int64)
-            mask = (rank >= off_by_q[qv]) & (rank < off_by_q[qv] + k_by_q[qv])
-            page_all = h[mask]
-            pages = {int(q): g[["doc_id", "score"]].reset_index(drop=True)
-                     for q, g in page_all.groupby("qid")}
-            page_pairs = page_all[["qid", "doc_id"]]
-        nh = (out[kinds == _K_STATS].groupby("qid")["count"].sum().to_dict()
-              if len(out) else {})
-        # facets: one (qid, field, ordinal) aggregation, one dictionary
-        # merge PER FIELD (not per query), then split
-        fc_by_field: dict[str, dict[int, pd.DataFrame]] = {}
-        want_fields = {f for p in plans for f in p["facets"]}
-        if want_fields and len(out):
-            fc_all = (out[kinds == _K_FACET]
-                      .groupby(["qid", "field", "ordinal"],
-                               as_index=False)["count"].sum())
-            for f in want_fields:
-                d = self.dicts[FACET_FIELDS[f]][["ordinal", "value"]]
-                part = fc_all[fc_all["field"] == f].merge(d, on="ordinal")
-                part = part.sort_values(["qid", "count", "value"],
-                                        ascending=[True, False, True])
-                fc_by_field[f] = {int(q): g for q, g in part.groupby("qid")}
-        # an absent facet has search()'s shape: dictionary value dtype,
-        # int64 counts
-        empty_facet = {f: pd.DataFrame({
-            "value": self.dicts[FACET_FIELDS[f]]["value"].iloc[:0],
-            "count": pd.Series([], dtype="int64")}).reset_index(drop=True)
-            for f in want_fields}
-        # explanations: restrict to page docs with ONE (qid, doc_id)
-        # merge instead of per-query isin scans
-        ex_by_qid: dict[int, pd.DataFrame] = {}
-        if any(r.explain for r in reqs) and len(out):
-            ex_all = out[kinds == _K_EXPL]
-            if page_pairs is not None and len(ex_all):
-                exm = ex_all.merge(page_pairs, on=["qid", "doc_id"])
-                ex_by_qid = {int(q): g for q, g in exm.groupby("qid")}
-        empty_expl = (pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                    "part": pd.Series([], dtype="object"),
-                                    "value": pd.Series([], dtype="float64")}))
-        for i, (req, plan) in enumerate(zip(reqs, plans)):
-            hits = pages.get(i, empty_hits)
-            facets = {}
-            for f in plan["facets"]:
-                part = fc_by_field.get(f, {}).get(i)
-                facets[f] = (part[["value", "count"]].reset_index(drop=True)
-                             if part is not None else empty_facet[f].copy())
-            explanations = None
-            if req.explain:
-                # same contract as search(): an empty result still
-                # yields an empty (doc_id, part, value) frame
-                ex = ex_by_qid.get(i)
-                explanations = (
-                    ex[["doc_id", "field", "score"]]
-                    .rename(columns={"field": "part", "score": "value"})
-                    .sort_values(["doc_id", "part"], ignore_index=True)
-                    if ex is not None else empty_expl.copy()
-                )
-            results[i] = SearchResult(hits=hits, num_hits=int(nh.get(i, 0)),
-                                      facets=facets,
-                                      explanations=explanations)
-        return results
-
     def search_df(self, req: SearchRequest, with_url: bool = False) -> DataFrame:
         """Spark-DataFrame result (doc_id, score[, url]) for pipelines."""
         from pyspark.sql.window import Window
@@ -1754,14 +1609,11 @@ class IndexReader:
             if (self._driver_fastpath(plan)
                     and self._postings_driver() is not None):
                 # zero-Spark-job page from the in-driver block cache —
-                # identical rows: same scorer, same (score desc,
-                # doc_id asc) total order as the distributed limit
-                page = _hit_page(self._segment_outputs_driver(plan),
-                                 req.offset, req.k)
+                # identical rows: same scorer and merge, same (score
+                # desc, doc_id asc) total order as the distributed limit
+                page = self._merge(req, self._segment_outputs_driver(plan)).hits
                 hits = self.spark.createDataFrame(
-                    page[["doc_id", "score"]].astype(
-                        {"doc_id": "int64", "score": "float64"}),
-                    schema="doc_id long, score double")
+                    page, schema="doc_id long, score double")
                 if with_url:
                     hits = F.broadcast(hits).join(
                         self._forward.select("doc_id", "url"), "doc_id")

@@ -67,13 +67,9 @@ def tree_words(tree) -> list[str]:
 class _SegmentEval:
     """Per-segment evaluator over (doc<<24|sec) key sets."""
 
-    def __init__(self, groups: dict, plan: dict, sec_pdf: pd.DataFrame | None):
-        # groups: term_id -> posting-block frame sorted by first_doc
-        from .query import _decode_positions, _decode_term_blocks
-
-        self._decode_positions = _decode_positions
-        self._decode_term_blocks = _decode_term_blocks
-        self.groups = groups
+    def __init__(self, seg, plan: dict, sec_pdf: pd.DataFrame | None):
+        # seg: the segment's query._SegView (term -> its blocks)
+        self.seg = seg
         self.word_tid = plan["word_tid"]  # word -> term_id (-1 = absent)
         self.sec_cfg = plan["sections"]
         self._occ: dict = {}  # tid -> (keys doc<<24|pos asc, secs aligned)
@@ -111,12 +107,13 @@ class _SegmentEval:
         """(doc<<24|pos ascending, section per occurrence) for a term."""
         if tid in self._occ:
             return self._occ[tid]
-        g = self.groups.get(tid)
-        if g is None or not len(g):
+        b = self.seg.blocks(tid)
+        if b is None:
             out = (np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64))
         else:
-            docs, tf, _dl, _lang, _ts = self._decode_term_blocks(g)
-            pos = self._decode_positions(g, tf)
+            st = self.seg.store
+            docs, tf = st.get("doc", b), st.get("tf", b)
+            pos = st.positions(b, tf)
             occ_docs = np.repeat(docs, tf)
             keys = (occ_docs.astype(np.uint64) << _SEC_SHIFT) | pos.astype(np.uint64)
             out = (keys, self._sections_of(occ_docs, pos))
@@ -136,7 +133,7 @@ class _SegmentEval:
     def _phrase_keys(self, phrase: str) -> np.ndarray:
         words = phrase.split()
         tids = [self.word_tid.get(w, -1) for w in words]
-        if any(t < 0 or t not in self.groups for t in tids):
+        if any(t < 0 or self.seg.blocks(t) is None for t in tids):
             return np.zeros(0, dtype=np.uint64)
         occs = {t: self.occ(t) for t in set(tids)}
         # consecutive-position intersection (≙ PhraseNode.fetchPos)
@@ -204,23 +201,21 @@ class _SegmentEval:
         raise ValueError(f"unknown section node: {tree[0]!r}")
 
 
-def segment_section_search(pdf: pd.DataFrame, plan: dict,
-                           sec_pdf: pd.DataFrame | None,
-                           deleted_bc=None) -> pd.DataFrame:
-    """Evaluate a section tree over one segment's posting blocks.
+def segment_section_search(seg, deleted: np.ndarray | None, plan: dict,
+                           sec_pdf: pd.DataFrame | None) -> pd.DataFrame:
+    """Evaluate a section tree over one segment's posting blocks
+    (``seg``: a query._SegView; ``deleted``: the segment's sorted
+    tombstone ids).
 
     Emits one hit row per matching doc: score = the query boost
     (constant-score, ≙ SectionSearchScorer.score returning getValue),
     count = number of matching sections in the doc (a free diagnostic
     the key-set representation gives us), plus a stats row.
     """
-    from .query import _K_HIT, _K_STATS, _empty_out, _segment_deleted, _sorted_member
+    from .query import _K_HIT, _K_STATS, _empty_out, _sorted_member
 
-    groups = {tid: g.sort_values("first_doc")
-              for tid, g in pdf.groupby("term_id")}
-    ev = _SegmentEval(groups, plan, sec_pdf)
+    ev = _SegmentEval(seg, plan, sec_pdf)
     keys = ev.eval(plan["tree"])
-    deleted = _segment_deleted(deleted_bc, pdf)
     if keys.size and deleted is not None:
         keys = keys[~_sorted_member(deleted, (keys >> _SEC_SHIFT).astype(np.int64))]
     if keys.size == 0:

@@ -1,8 +1,9 @@
 """Property test: block-max pruned disjunctive top-k must be EXACTLY
-the exhaustive top-k (docIDs and float64 scores). Pruning runs only on
-the paths where a query decodes its own blocks ("scan" and
-"distributed"; the cache path shares decode and never prunes), so the
-tests run there, and a spy shows the driver-side scan path pruned."""
+the exhaustive top-k (docIDs and float64 scores). Pruning runs on
+every path — on "cache" a pruned query decodes only the blocks it
+keeps and shares them with every other query through the block-keyed
+decode cache — so the tests run on all three, and a spy shows the
+driver-side paths ("cache", "scan") pruned."""
 
 from __future__ import annotations
 
@@ -12,9 +13,7 @@ from bobo_spark.build import BuildConfig, build_snapshot
 from bobo_spark.oracle import reference_queryset
 from bobo_spark.query import SearchRequest
 from bobo_spark.webgen import make_vocab, webpages
-from conftest import path_readers
-
-PRUNE_PATHS = ("scan", "distributed")
+from conftest import QUERY_PATHS, path_readers
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +21,7 @@ def readers(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_prune"))
     build_snapshot(spark, webpages(spark, 1500, 6), d,
                    BuildConfig(docs_per_segment=250, block_size=32))
-    return path_readers(spark, d, PRUNE_PATHS)
+    return path_readers(spark, d)
 
 
 def test_pruned_equals_exhaustive(readers, prune_spy):
@@ -30,7 +29,8 @@ def test_pruned_equals_exhaustive(readers, prune_spy):
     qs = reference_queryset(vocab, n_conj=0, n_disj=12, n_lang=0, n_ts=0)
     qs.append({"query": ["ba", "be", "bi"], "mode": "or"})  # head-heavy
     qs.append({"query": ["ba", vocab[4000]], "mode": "or"})  # head+tail
-    for path in PRUNE_PATHS:
+    for path in QUERY_PATHS:
+        prune_spy.clear()
         reader = readers[path]
         pruned_nonempty = 0
         for q in qs:
@@ -41,8 +41,8 @@ def test_pruned_equals_exhaustive(readers, prune_spy):
             assert a.num_hits == b.num_hits, (path, q)  # exact count survives pruning
             pruned_nonempty += len(a.hits) > 0
         assert pruned_nonempty > 5
-        if path == "scan":
-            assert prune_spy, "block-max pruning never ran on the scan path"
+        if path != "distributed":
+            assert prune_spy, f"block-max pruning never ran on the {path} path"
 
 
 def test_pruned_recency_equals_exhaustive(readers, prune_spy):
@@ -67,7 +67,8 @@ def test_pruned_recency_equals_exhaustive(readers, prune_spy):
          "max_factor": 2.0},
         {"now_ms": now_ms, "cutoff_ms": 60 * 86400000, "max_factor": 0.0},
     ]
-    for path in PRUNE_PATHS:
+    for path in QUERY_PATHS:
+        prune_spy.clear()
         reader = readers[path]
         nonempty = 0
         for rec in configs:
@@ -81,5 +82,5 @@ def test_pruned_recency_equals_exhaustive(readers, prune_spy):
                 assert a.num_hits == b.num_hits, (path, q)
                 nonempty += len(a.hits) > 0
         assert nonempty > 10
-        if path == "scan":
-            assert prune_spy, "block-max pruning never ran on the scan path"
+        if path != "distributed":
+            assert prune_spy, f"block-max pruning never ran on the {path} path"

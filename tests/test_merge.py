@@ -334,3 +334,39 @@ def test_merge_sparse_survivors_forward_fallback(spark, tmp_path):
     m = IndexReader(spark, d)._forward.orderBy("doc_id").toPandas()[cols]
     f = IndexReader(spark, fresh)._forward.orderBy("doc_id").toPandas()[cols]
     pd.testing.assert_frame_equal(m, f)
+
+
+def test_merge_mixed_docs_per_segment(spark, tmp_path):
+    """An append with a different docs_per_segment (base 500, append
+    300) leaves the snapshot's docs_per_segment unknown (None), so the
+    merge's forward rewrite takes the sampled repartitionByRange path
+    instead of the dense doc-range arithmetic; the merged index answers
+    exactly like a fresh build of the survivors."""
+    from bobo_spark.catalog import IndexCatalog
+
+    d = str(tmp_path / "mixed")
+    fresh = str(tmp_path / "fresh")
+    docs = webpages(spark, 800, 4)
+    build_snapshot(spark, docs.where(F.col("doc_id") < 500), d,
+                   BuildConfig(docs_per_segment=500, block_size=64))
+    assert IndexCatalog(d).latest().stats["docs_per_segment"] == 500
+    build_snapshot(spark, docs.where(F.col("doc_id") >= 500), d,
+                   BuildConfig(docs_per_segment=300, block_size=64))
+    assert IndexCatalog(d).latest().stats["docs_per_segment"] is None
+    victims = [3, 250, 640]
+    delete_docs(spark, d, victims)
+    snap = merge_snapshot(spark, d, block_size=64)
+    assert snap.stats["docs_per_segment"] is None
+    build_snapshot(spark, docs.where(~F.col("doc_id").isin(victims)), fresh,
+                   BuildConfig(docs_per_segment=500, block_size=64))
+    m, f = IndexReader(spark, d), IndexReader(spark, fresh)
+    for req in (SearchRequest(query="data row", mode="or", k=10,
+                              facets=("lang", "ts_bucket")),
+                SearchRequest(query="spark join", mode="and", k=10),
+                SearchRequest(query="data", mode="or", k=5, offset=5,
+                              selections={"lang": ["en"]}, explain=True)):
+        _assert_same_result(m.search(req), f.search(req))
+    cols = ["doc_id", "doclen", "lang_ord", "ts_ord", "url"]
+    pd.testing.assert_frame_equal(
+        m._forward.orderBy("doc_id").toPandas()[cols],
+        f._forward.orderBy("doc_id").toPandas()[cols])

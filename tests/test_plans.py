@@ -133,3 +133,72 @@ def test_term_vectors_segment_pushed(reader):
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "PushedFilters" in plan and "segment" in plan, plan[:900]
     assert "BroadcastHashJoin" in plan  # page-sized result × dictionary
+
+
+def test_plan_cost_flat_in_dictionary_size(spark, reader, monkeypatch):
+    """plan() resolves query terms, selection sentinels and the recency
+    table through lookups built once per reader, so its cost does not
+    grow with the dictionary: the same reader plans a request mix
+    against its real dictionary and then against a synthetic 2M-term
+    one (the real terms plus padding) — same plans, and the 2M median
+    stays within 3x of the small one. A recency plan never re-parses
+    the ts dictionary."""
+    import gc
+    import time
+
+    import numpy as np
+    import pandas as pd
+
+    from bobo_spark.catalog import read_table_pdf
+    from bobo_spark.query import SearchRequest
+
+    r = IndexReader(spark, reader.catalog.index_dir)  # cached: driver lookups
+    days = sorted(r.dicts["ts_bucket"]["value"])
+    reqs = [
+        SearchRequest(query="ba be zzznothere", mode="or"),
+        SearchRequest(query="ba ka", mode="and", facets=("lang",),
+                      selections={"lang": ["en"]}),
+        SearchRequest(query="be vu", mode="or", ts_range=(days[0], days[-1])),
+        SearchRequest(query="ba", mode="or", recency={
+            "now_ms": 1_700_000_000_000, "cutoff_ms": 86_400_000 * 30,
+            "max_factor": 2.0}),
+    ]
+
+    def plans():
+        return [(p["terms"], p["sel_lang_tids"], p["sel_ts_tids"], p["sel_ts"])
+                for p in map(r.plan, reqs)]
+
+    def median_ms():
+        gc.collect()
+        ts = []
+        for _ in range(300):
+            for q in reqs:
+                t0 = time.perf_counter()
+                r.plan(q)
+                ts.append(time.perf_counter() - t0)
+        return 1000 * float(np.median(ts))
+
+    want = plans()
+    small_ms = median_ms()
+    real = read_table_pdf(r.catalog.table_paths(r.snap, "terms"))[
+        ["term", "term_id", "df"]]
+    pad = 2_000_000 - len(real)
+    r._index_terms(pd.concat([real, pd.DataFrame({
+        "term": [f"zz{i:07d}" for i in range(pad)],
+        "term_id": np.arange(pad, dtype=np.int64) + int(real["term_id"].max()) + 1,
+        "df": np.ones(pad, dtype=np.int64)})], ignore_index=True))
+    assert len(r._term_row) == 2_000_000
+    assert plans() == want
+    big_ms = median_ms()
+    assert big_ms <= 3 * small_ms, (small_ms, big_ms)
+
+    calls = []
+    real_to_datetime = pd.to_datetime
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real_to_datetime(*args, **kwargs)
+
+    monkeypatch.setattr(pd, "to_datetime", spy)
+    assert r.plan(reqs[-1])["recency"] is not None
+    assert not calls, "a recency plan re-parsed the ts dictionary"

@@ -14,6 +14,7 @@ from bobo_spark.build import BuildConfig, build_snapshot
 from bobo_spark.query import IndexReader
 from bobo_spark.tokenizer import tokenize
 from bobo_spark.webgen import webpages
+from conftest import path_readers
 
 W = 8
 
@@ -113,6 +114,24 @@ def test_window_sections_paging(window_env):
     assert list(zip(res.hits["doc_id"], res.hits["n_sections"])) == want_rows
     df = reader.section_search_df(tree, k=5, offset=3).toPandas()
     assert list(zip(df["doc_id"], df["n_sections"])) == want_rows
+
+
+def test_window_section_search_df_all_paths(window_env, spark):
+    """section_search_df gives section_search's page on every
+    keyword-search path ("cache" and "scan" serve window sections on
+    the driver, "distributed" in Spark tasks), with and without an
+    offset."""
+    reader, _corpus = window_env
+    readers = path_readers(spark, reader.catalog.index_dir)
+    for path, r in readers.items():
+        for tree in TREES:
+            for k, offset in ((10, 0), (4, 3)):
+                want = reader.section_search(tree, k=k, offset=offset).hits
+                got = r.section_search_df(tree, k=k, offset=offset).toPandas()
+                got = got.sort_values("doc_id", ignore_index=True)
+                assert got["doc_id"].tolist() == want["doc_id"].tolist(), (path, tree)
+                assert got["n_sections"].tolist() == want["n_sections"].tolist(), \
+                    (path, tree)
 
 
 @pytest.fixture(scope="module")
