@@ -13,39 +13,43 @@ Execution model (the Spark rendition of SURVEY.md §3.1):
   Lucene's TermsEnum seek).
 * Blocks are scored from a ``_BlockStore``, laid out like the
   reference's FacetDataCache columns (SURVEY §1.1): numpy metadata
-  arrays (segment, term_id, first_doc, last_doc, n_docs, max_tf,
-  min_dl) sorted by (segment, term_id, first_doc), and one
-  concatenated byte buffer plus an int64 block-offset array per
-  stream. Streams decode lazily, per BLOCK, into one flat array per
-  stream; a (segment, term) run of decoded blocks is a zero-copy view.
-* One per-segment scorer (``_score_plan``) is the exact analogue of
-  the reference's per-segment sub-browse loop
-  (api/MultiBoboBrowser.java:100-127): selection masks →
-  intersection/union → BM25 TAAT accumulation in ascending
-  lexicographic term order (float64, pinned order = score identity
-  with the oracle) → a typed ``_SegOut`` (local top-k doc_id/score
+  arrays (term_id, first_doc, last_doc, n_docs, max_tf, min_dl)
+  sorted by (term_id, first_doc), and one concatenated byte buffer
+  plus an int64 block-offset array per stream. Streams decode lazily,
+  per BLOCK, into one flat array per stream; a term's run of decoded
+  blocks is a zero-copy view.
+* One scorer (``_score_plan``) turns one plan and one store into a
+  typed ``_SegOut``: selection masks → intersection/union → BM25 TAAT
+  accumulation in ascending lexicographic term order (float64, pinned
+  order = score identity with the oracle) → top-k doc_id/score
   arrays, one bincount vector per facet, the hit count, explanation
-  arrays). It runs on one of three paths, chosen from published stats
-  and dictionary df:
+  arrays. Doc ids are global, so a store is scored in ONE pass
+  whatever segments it holds — the reference loops over segments
+  (api/MultiBoboBrowser.java:100-127) only because each Lucene
+  segment is a separate reader. It runs on one of three paths, chosen
+  from published stats and dictionary df:
   - ``cache``: an index under ``DRIVER_CACHE_TOKSUM`` is read into an
     in-driver ``_BlockStore`` once per reader; page-scale queries
-    score there with zero Spark jobs, decoded blocks shared across
-    queries;
+    score there, one pass per plan, with zero Spark jobs, decoded
+    blocks shared across queries;
   - ``scan``: page-scale queries (Σdf ≤ ``DRIVER_POSTINGS_THRESHOLD``)
     on an uncached reader fetch their term-filtered blocks once (Arrow)
-    and score them in-process;
+    into one store and score it in one pass;
   - ``distributed``: ``groupBy(segment).applyInPandas`` scores each
-    segment on the executors; the tasks encode ``_SegOut``s as
-    ``OUT_SCHEMA`` rows only at that boundary and the driver decodes
-    them back (``_parts_from_rows``).
+    segment's store on the executors; the tasks encode ``_SegOut``s
+    as ``OUT_SCHEMA`` rows only at that boundary and the driver
+    decodes them back (``_parts_from_rows``).
+  The driver paths filter tombstones with the reader's global sorted
+  ``deleted`` array, the tasks with their segment's broadcast entry.
 * One merge (``IndexReader._merge``) serves ``search``,
   ``search_many`` and ``search_df``: one (score desc, doc_id asc)
   lexsort for the page (≙ sort/SortCollectorImpl.java:354-368 +
-  util/ListMerger.java:104-137) and a sum of the count vectors with
-  facet values ordered by (count desc, value rank)
+  util/ListMerger.java:104-137) and the facet count vectors with
+  values ordered by (count desc, value rank)
   (≙ facets/CombinedFacetAccessible.java:101-192).
 
-Pruning (every path):
+Pruning (every path, once per store — so the driver paths get one
+global θ):
 * conjunctive — blocks of non-rarest terms are skipped before decode
   when their [first_doc, last_doc] interval overlaps no block of the
   rarest term (the skip-scan analogue of
@@ -177,8 +181,13 @@ class _BlockStore:
     freqs / minIDs / maxIDs, SURVEY §1.1), built from an Arrow table of
     postings rows.
 
-    Block metadata are numpy arrays sorted by (segment, term_id,
-    first_doc), so every (segment, term) run of blocks is contiguous.
+    Block metadata are numpy arrays sorted by (term_id, first_doc), so
+    each term's blocks are one contiguous run whatever segments they
+    came from; doc ids are global, so a store of many segments is
+    scored as one unit. Doc order holds only WITHIN a block: blocks of
+    one term from different segments can overlap in doc range (a
+    merge can re-chunk a segment whose range interleaves another's),
+    so a term's concatenated doc stream need not be sorted.
     Each stream is one concatenated byte buffer with int64 block
     offsets. Decoding is lazy and keyed by block: ``get`` decodes only
     the requested blocks not decoded before, into one flat array per
@@ -191,11 +200,10 @@ class _BlockStore:
         def col(name):
             return tbl.column(name).to_numpy(zero_copy_only=False)
 
-        seg = col("segment").astype(np.int64, copy=False)
         tid = col("term_id").astype(np.int64, copy=False)
         first = col("first_doc").astype(np.int64, copy=False)
-        order = np.lexsort((first, tid, seg))
-        self.seg, self.tid, self.first = seg[order], tid[order], first[order]
+        order = np.lexsort((first, tid))
+        self.tid, self.first = tid[order], first[order]
         self.last = col("last_doc").astype(np.int64, copy=False)[order]
         self.nd = col("n_docs").astype(np.int64)[order]
         self.max_tf = col("max_tf")[order]
@@ -213,36 +221,21 @@ class _BlockStore:
                 else np.zeros(0, np.uint8),
                 np.frombuffer(offs, np.int64)[arr.offset:arr.offset + len(arr) + 1]
                 if len(arr) else np.zeros(1, np.int64))
-        n = self.seg.size
-        brk = np.flatnonzero((np.diff(self.tid) != 0) | (np.diff(self.seg) != 0)) + 1
-        self.run_lo = np.concatenate(([0], brk)) if n else brk
-        self.run_hi = np.concatenate((brk, [n])) if n else brk
-        self.run_tid = self.tid[self.run_lo]
-        run_seg = self.seg[self.run_lo]
-        sb = np.flatnonzero(np.diff(run_seg)) + 1
-        s_lo = np.concatenate(([0], sb)) if n else sb
-        s_hi = np.concatenate((sb, [run_seg.size])) if n else sb
-        # segment -> its [first run, end run) (runs are tid-sorted within)
-        self.segments = {int(run_seg[a]): (int(a), int(b))
-                         for a, b in zip(s_lo, s_hi)}
-        self._run_seg = run_seg
-        self._by_tid = np.lexsort((run_seg, self.run_tid))
-        self._tid_sorted = self.run_tid[self._by_tid]
+        # term runs: run i is blocks [_run_lo[i], _run_hi[i]) of _run_tid[i]
+        brk = np.flatnonzero(np.diff(self.tid)) + 1
+        self._run_lo = np.concatenate(([0], brk)) if self.tid.size else brk
+        self._run_hi = np.concatenate((brk, [self.tid.size])) if self.tid.size else brk
+        self._run_tid = self.tid[self._run_lo]
         self._flat: dict[str, np.ndarray] = {}
         self._done: dict[str, np.ndarray] = {}
 
-    def segments_of(self, tids) -> list[int]:
-        """Ascending segments holding a block of any of ``tids``."""
-        t = np.asarray(tids, dtype=np.int64)
-        lo = np.searchsorted(self._tid_sorted, t, "left")
-        hi = np.searchsorted(self._tid_sorted, t, "right")
-        runs = self._by_tid[_spans(lo, hi - lo)]
-        return np.unique(self._run_seg[runs]).tolist()
-
-    def view(self, seg: int) -> _SegView:
-        a, b = self.segments[seg]
-        return _SegView(self, self.run_tid[a:b], self.run_lo[a:b],
-                        self.run_hi[a:b])
+    def blocks(self, tid: int) -> np.ndarray | None:
+        """Block indices of term ``tid`` (ascending first_doc), or None
+        when the store holds none."""
+        i = int(self._run_tid.searchsorted(tid))
+        if i < self._run_tid.size and self._run_tid[i] == tid:
+            return np.arange(self._run_lo[i], self._run_hi[i])
+        return None
 
     def raw(self, stream: str, b: np.ndarray) -> np.ndarray:
         """The encoded bytes of blocks ``b``, concatenated."""
@@ -303,34 +296,16 @@ class _BlockStore:
         return cums - np.repeat(base, tf)
 
 
-class _SegView:
-    """One segment of a ``_BlockStore``: a term's block indices
-    (ascending first_doc) by one searchsorted over the segment's
-    tid-sorted runs."""
-
-    __slots__ = ("store", "_tids", "_lo", "_hi")
-
-    def __init__(self, store: _BlockStore, tids, lo, hi):
-        self.store = store
-        self._tids, self._lo, self._hi = tids, lo, hi
-
-    def blocks(self, tid: int) -> np.ndarray | None:
-        i = int(self._tids.searchsorted(tid))
-        if i < self._tids.size and self._tids[i] == tid:
-            return np.arange(self._lo[i], self._hi[i])
-        return None
-
-
 def _task_segment(pdf: pd.DataFrame, deleted_bc):
-    """(block view, tombstones) of one segment task's block rows. The
+    """(block store, tombstones) of one segment task's block rows. The
     tombstones (sorted doc_ids, the liveDocs analogue) come from the
     reader's per-segment delete broadcast: each task touches ONLY its
     own segment's entry, and the broadcast ships once per executor,
     never per query plan."""
     store = _BlockStore(pa.Table.from_pandas(pdf, preserve_index=False))
-    seg = int(store.seg[0])
+    seg = int(pdf["segment"].iloc[0])
     deleted = deleted_bc.value.get(seg) if deleted_bc is not None else None
-    return store.view(seg), deleted
+    return store, deleted
 
 
 def _phrase_filter(st: _BlockStore, groups: dict, phrase_ids: list[int],
@@ -460,7 +435,8 @@ _NO_SCORES = np.zeros(0, dtype=np.float64)
 
 
 class _SegOut:
-    """One segment's answer to one plan: local top-k ``docs``/``scores``
+    """One scoring unit's answer to one plan — the whole driver store,
+    or one segment in a distributed task: top-k ``docs``/``scores``
     (score desc, doc_id asc), the hit count, one count vector per facet
     (indexed by ordinal) and, for explain plans, the page candidates'
     explanation arrays (doc_id, part, value)."""
@@ -474,14 +450,15 @@ class _SegOut:
         self.expl: tuple | None = None
 
 
-def _score_plan(plan: dict, seg: _SegView,
+def _score_plan(plan: dict, st: _BlockStore,
                 deleted: np.ndarray | None = None) -> _SegOut | None:
-    """Score one plan against one segment's blocks (pure numpy); None
-    when the segment contributes nothing. ``deleted`` is the segment's
-    sorted tombstone ids. Decodes go through the segment's
-    ``_BlockStore``, so only blocks that survive pruning are decoded,
-    each at most once per store."""
-    st = seg.store
+    """Score one plan against every block of ``st`` in one pass (pure
+    numpy); None when the store holds no match. ``deleted`` is the
+    sorted tombstone ids (global doc ids, so the reader's whole set
+    serves a store of many segments; None when there are none). Only
+    blocks that survive pruning are decoded, each at most once per
+    store. Nothing here assumes a term's doc stream is sorted across
+    blocks (see ``_BlockStore``)."""
     terms = plan["terms"]
     mode = plan["mode"]
     k = plan["k"] + plan["offset"]
@@ -492,7 +469,7 @@ def _score_plan(plan: dict, seg: _SegView,
     # term_id -1 marks unknown query terms; _plan_tids never returns it
     groups = {}
     for tid in set(_plan_tids(plan)):
-        b = seg.blocks(tid)
+        b = st.blocks(tid)
         if b is not None:
             groups[tid] = b
     present = [t for t in terms if t["term_id"] in groups]
@@ -506,7 +483,10 @@ def _score_plan(plan: dict, seg: _SegView,
     if conj and len(present) > 1:
         rare = min(present, key=lambda t: t["df"])
         rb = groups[rare["term_id"]]
-        rf, rl = st.first[rb], st.last[rb]
+        # rf is ascending, but blocks from different segments can
+        # overlap: compare against the running max of the rare term's
+        # last_doc over the blocks starting at or before a block's end
+        rf, rl = st.first[rb], np.maximum.accumulate(st.last[rb])
         for t in present:
             if t is rare:
                 continue
@@ -537,8 +517,8 @@ def _score_plan(plan: dict, seg: _SegView,
 
     docs_of = {t["term_id"]: st.get("doc", groups[t["term_id"]]) for t in present}
 
-    # ---- candidate doc set
-    if conj:
+    # ---- candidate doc set, ascending (a term's doc stream need not be)
+    if conj and len(present) > 1:
         cand = docs_of[present[0]["term_id"]]
         for t in present[1:]:
             cand = np.intersect1d(cand, docs_of[t["term_id"]], assume_unique=True)
@@ -602,9 +582,11 @@ def _score_plan(plan: dict, seg: _SegView,
     if mode == "phrase":
         # Lucene PhraseQuery scoring: freq = phrase occurrences, idf =
         # Σ idf over the phrase's token INSTANCES (duplicates counted)
-        b0 = groups[plan["phrase_ids"][0]]
-        pos = np.searchsorted(st.get("doc", b0), cand)
-        scores = bm25.contrib(ptf, st.get("dl", b0)[pos], plan["phrase_idf_sum"], avgdl)
+        t0 = plan["phrase_ids"][0]  # every candidate holds it
+        p, ok = match[t0]
+        dl = np.zeros(cand.size, dtype=np.int64)
+        dl[p] = st.get("dl", groups[t0])[ok]
+        scores = bm25.contrib(ptf, dl, plan["phrase_idf_sum"], avgdl)
     else:
         scores = np.zeros(cand.size, dtype=np.float64)
         for t in present:  # already lex-ordered
@@ -661,11 +643,13 @@ def _score_plan(plan: dict, seg: _SegView,
         else:
             for t in present:
                 b = groups[t["term_id"]]
-                docs = docs_of[t["term_id"]]
-                p = np.searchsorted(docs, sel_docs)
-                ok = (p < docs.size) & (docs[np.minimum(p, docs.size - 1)] == sel_docs)
-                ex.append((sel_docs[ok], t["term"], bm25.contrib(
-                    st.get("tf", b)[p[ok]], st.get("dl", b)[p[ok]], t["idf"], avgdl)))
+                p, ok = match[t["term_id"]]
+                at = np.full(cand.size, -1)  # candidate -> its posting of t
+                at[p] = np.flatnonzero(ok)
+                j = at[cpos]
+                has = j >= 0
+                ex.append((sel_docs[has], t["term"], bm25.contrib(
+                    st.get("tf", b)[j[has]], st.get("dl", b)[j[has]], t["idf"], avgdl)))
         if rec:
             ex.append((sel_docs, "recency_boost", _recency_factor(doc_ts[cpos], rec)))
         out.expl = (np.concatenate([d for d, _, _ in ex]),
@@ -693,7 +677,8 @@ def _out_rows(o: _SegOut) -> list:
 
 def _parts_from_rows(out: pd.DataFrame) -> dict:
     """Inverse of ``_out_rows`` on the driver: qid (0 without a qid
-    column) → one ``_SegOut`` holding all that query's segment rows."""
+    column) → one ``_SegOut`` holding all that query's segment rows
+    (hit counts and facet vectors summed)."""
     if not len(out):
         return {}
     qid = (out["qid"].to_numpy(np.int64) if "qid" in out
@@ -719,7 +704,7 @@ def _parts_from_rows(out: pd.DataFrame) -> dict:
         ex = np.flatnonzero(kd == _K_EXPL) + a
         if ex.size:
             o.expl = (doc[ex], fld[ex], score[ex])
-        parts[int(qid[a])] = [o]
+        parts[int(qid[a])] = o
     return parts
 
 
@@ -754,20 +739,16 @@ def _runnable(plan: dict) -> bool:
                           or known == len(plan["terms"]))
 
 
-def _score_store(store: _BlockStore, plans: list, deleted: dict) -> dict:
-    """Score every ``(qid, plan)`` against every segment of ``store``
-    that holds one of their terms — the per-segment sub-browse loop
-    (api/MultiBoboBrowser.java:100-127) behind every keyword path.
-    ``deleted`` maps segment → sorted tombstones. Returns qid → list
-    of ``_SegOut``."""
-    tids = sorted({t for _, p in plans for t in _plan_tids(p)})
-    parts: dict = {}
-    for g in store.segments_of(tids):
-        seg, dl = store.view(g), deleted.get(g)
-        for qid, plan in plans:
-            o = _score_plan(plan, seg, dl)
-            if o is not None:
-                parts.setdefault(qid, []).append(o)
+def _score_store(store: _BlockStore, plans: list,
+                 deleted: np.ndarray | None) -> dict:
+    """Score every ``(qid, plan)`` against the whole ``store``, one pass
+    per plan. Returns qid → ``_SegOut`` (plans that match nothing are
+    absent)."""
+    parts = {}
+    for qid, plan in plans:
+        o = _score_plan(plan, store, deleted)
+        if o is not None:
+            parts[qid] = o
     return parts
 
 
@@ -775,15 +756,13 @@ def _task_rows(pdf: pd.DataFrame, plans: list, deleted_bc,
                with_qid: bool) -> pd.DataFrame:
     """One distributed segment task: score ``plans`` against the task's
     block rows and encode the answers as OUT_SCHEMA rows."""
-    seg, deleted = _task_segment(pdf, deleted_bc)
+    store, deleted = _task_segment(pdf, deleted_bc)
     rows: list = []
     qids: list = []
-    for qid, plan in plans:
-        o = _score_plan(plan, seg, deleted)
-        if o is not None:
-            r = _out_rows(o)
-            rows += r
-            qids += [qid] * len(r)
+    for qid, o in _score_store(store, plans, deleted).items():
+        r = _out_rows(o)
+        rows += r
+        qids += [qid] * len(r)
     return _out_frame(rows, qids if with_qid else None)
 
 
@@ -915,8 +894,10 @@ class IndexReader:
                 dpd = (self._forward.select("segment", "doc_id")
                        .join(F.broadcast(self._deletes_df.select("doc_id")
                                          .distinct()), "doc_id").toPandas())
-            # public convenience: sorted global tombstone ids (query
-            # paths use the per-segment broadcast, never this array)
+            # sorted global tombstone ids: the driver paths (``cache``,
+            # ``scan``, section search) score a store of many segments
+            # against this array; distributed tasks use the
+            # per-segment broadcast
             self.deleted = np.sort(dpd["doc_id"].to_numpy(np.int64))
             seg_map = {
                 int(s): np.sort(g["doc_id"].to_numpy(np.int64))
@@ -944,8 +925,9 @@ class IndexReader:
         return {t: (int(i), int(d))
                 for t, i, d in zip(pdf["term"], pdf["term_id"], pdf["df"])}
 
-    def _deleted_map(self) -> dict:
-        return self._deleted_bc.value if self._deleted_bc is not None else {}
+    def _tombstones(self) -> np.ndarray | None:
+        """The driver paths' tombstones: ``deleted``, or None when empty."""
+        return self.deleted if self.deleted.size else None
 
     def _not_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join tombstones out of a doc_id-keyed DataFrame — a
@@ -1068,7 +1050,7 @@ class IndexReader:
 
     # --------------------------------------------------------------- execution
 
-    # Σdf below which the per-segment scoring runs ON THE DRIVER:
+    # Σdf below which scoring runs ON THE DRIVER (one pass per plan):
     # fetching the term-filtered blocks once (pushed term_id IN scan)
     # is cheaper than the groupBy exchange + Python-worker round trip
     # when the query touches only page-scale posting counts. The
@@ -1130,14 +1112,14 @@ class IndexReader:
             store = _BlockStore(self._blocks(tids, phrase).toArrow())
         return store
 
-    def _segment_outputs_driver(self, plan: dict) -> list:
-        """Score a page-scale query on the driver — the SAME
-        per-segment scorer on the ``cache`` and ``scan`` paths."""
+    def _score_driver(self, plan: dict) -> _SegOut | None:
+        """Score a page-scale query on the driver: one ``_score_plan``
+        pass over the whole store, on the ``cache`` and ``scan`` paths
+        alike."""
         if not _runnable(plan):
-            return []
-        tids = _plan_tids(plan)
-        store = self._driver_store(tids, plan["mode"] == "phrase")
-        return _score_store(store, [(0, plan)], self._deleted_map()).get(0, [])
+            return None
+        store = self._driver_store(_plan_tids(plan), plan["mode"] == "phrase")
+        return _score_plan(plan, store, self._tombstones())
 
     def _require_positions(self) -> None:
         """Plan-time guard: a phrase/section query against an index
@@ -1159,41 +1141,37 @@ class IndexReader:
             schema=OUT_SCHEMA,
         )
 
-    def _merge(self, req: SearchRequest, parts: list) -> SearchResult:
-        """The cross-segment merge of every keyword path (≙ ListMerger
-        + CombinedFacetAccessible, util/ListMerger.java:104-137,
+    def _merge(self, req: SearchRequest, out: _SegOut | None) -> SearchResult:
+        """The final merge of every keyword path (≙ ListMerger +
+        CombinedFacetAccessible, util/ListMerger.java:104-137,
         facets/CombinedFacetAccessible.java:101-192): one (score desc,
-        doc_id asc) lexsort for the page, summed hit counts, summed
-        facet count vectors ordered by (count desc, value rank)."""
-        docs = np.concatenate([_NO_DOCS] + [p.docs for p in parts])
-        scores = np.concatenate([_NO_SCORES] + [p.scores for p in parts])
-        page = np.lexsort((docs, -scores))[req.offset:req.offset + req.k]
-        hits = pd.DataFrame({"doc_id": docs[page], "score": scores[page]})
-        facets = {f: self._facet_frame(f, [p.facets[f] for p in parts
-                                           if f in p.facets])
-                  for f in req.facets}
+        doc_id asc) lexsort for the page — the union of per-segment
+        top-ks on the distributed path — and facet count vectors
+        ordered by (count desc, value rank)."""
+        o = out if out is not None else _SegOut(0)
+        page = np.lexsort((o.docs, -o.scores))[req.offset:req.offset + req.k]
+        hits = pd.DataFrame({"doc_id": o.docs[page], "score": o.scores[page]})
+        facets = {f: self._facet_frame(f, o.facets.get(f)) for f in req.facets}
         explanations = None
         if req.explain:
-            ex = [p.expl for p in parts if p.expl is not None]
-            d = np.concatenate([_NO_DOCS] + [e[0] for e in ex])
-            keep = np.isin(d, docs[page])
+            d, part, v = (o.expl if o.expl is not None
+                          else (_NO_DOCS, np.zeros(0, object), _NO_SCORES))
+            keep = np.isin(d, o.docs[page])
             explanations = pd.DataFrame({
-                "doc_id": d[keep],
-                "part": np.concatenate([np.zeros(0, object)] + [e[1] for e in ex])[keep],
-                "value": np.concatenate([_NO_SCORES] + [e[2] for e in ex])[keep],
+                "doc_id": d[keep], "part": part[keep], "value": v[keep],
             }).sort_values(["doc_id", "part"], ignore_index=True)
-        return SearchResult(hits=hits, num_hits=int(sum(p.n_hits for p in parts)),
+        return SearchResult(hits=hits, num_hits=int(o.n_hits),
                             facets=facets, explanations=explanations)
 
-    def _facet_frame(self, f: str, counts: list) -> pd.DataFrame:
-        """(value, count) of one facet from per-segment count vectors:
-        values with a dictionary entry and a nonzero sum, count desc,
-        value asc."""
+    def _facet_frame(self, f: str, counts: np.ndarray | None) -> pd.DataFrame:
+        """(value, count) of one facet from its count vector: values
+        with a dictionary entry and a nonzero count, count desc, value
+        asc."""
         vals, _ords, _row_of, row, rank = self._facet[FACET_FIELDS[f]]
         tot = np.zeros(rank.size, dtype=np.int64)
-        for c in counts:
-            n = min(c.size, tot.size)
-            tot[:n] += c[:n]
+        if counts is not None:
+            n = min(counts.size, tot.size)
+            tot[:n] = counts[:n]
         o = np.flatnonzero((tot > 0) & (rank >= 0))
         o = o[np.lexsort((rank[o], -tot[o]))]
         return pd.DataFrame({"value": vals[row[o]], "count": tot[o]})
@@ -1300,17 +1278,17 @@ class IndexReader:
                             num_hits=int(num_hits), facets=facets)
 
     def search(self, req: SearchRequest) -> SearchResult:
-        """At most one Spark job (none on the ``cache`` path):
-        per-segment answers are tiny (≤ k hits + one count vector per
-        facet each), so the cross-segment merge runs driver-side."""
+        """At most one Spark job (none on the ``cache`` path): on the
+        distributed path per-segment answers are tiny (≤ k hits + one
+        count vector per facet each), so their merge runs driver-side."""
         if req.query is None:
             return self._matchall_search(req)
         plan = self.plan(req)
         if self._driver_fastpath(plan):
-            parts = self._segment_outputs_driver(plan)
+            out = self._score_driver(plan)
         else:
-            parts = _parts_from_rows(self._segment_outputs(plan).toPandas()).get(0, [])
-        return self._merge(req, parts)
+            out = _parts_from_rows(self._segment_outputs(plan).toPandas()).get(0)
+        return self._merge(req, out)
 
     # ---------------------------------------------------------- term vectors
 
@@ -1322,8 +1300,9 @@ class IndexReader:
         The index is term-major, so reconstruction scans only the
         target docs' SEGMENTS (segment IN pushed to the parquet scan)
         and skips every block whose [first_doc, last_doc] interval
-        misses all targets before decoding. Intended for page-sized
-        hit sets (≤ offset+k docs), where the per-segment work is one
+        misses all targets before decoding (the in-driver cache skips
+        blocks the same way over its whole store). Intended for
+        page-sized hit sets (≤ offset+k docs), where the work is one
         pruned pass."""
         ids = sorted(set(int(d) for d in doc_ids))
         segs = [r["segment"] for r in
@@ -1338,40 +1317,35 @@ class IndexReader:
         blocks = src.where(F.col("segment").isin(segs))
         ids_arr = np.array(ids, dtype=np.int64)
 
-        def tv(store: _BlockStore, seg: int) -> pd.DataFrame:
+        def tv(store: _BlockStore) -> pd.DataFrame:
             out = []
-            if seg in store.segments:
-                a, b = store.segments[seg]
-                blk = np.arange(store.run_lo[a], store.run_hi[b - 1])
-                idx = np.searchsorted(ids_arr, store.first[blk])
-                keep = (idx < ids_arr.size) & \
-                       (ids_arr[np.minimum(idx, ids_arr.size - 1)] <= store.last[blk])
-                blk = blk[keep & (store.tid[blk] >= 0)]  # -1: forward runs
-                brk = np.flatnonzero(np.diff(store.tid[blk])) + 1
-                for g in np.split(blk, brk) if blk.size else []:
-                    docs, tf = store.get("doc", g), store.get("tf", g)
-                    # facet sentinel terms carry no positions even in a
-                    # positional index — they are dropped by the
-                    # term-name filter below, so just skip their decode
-                    pos = (store.positions(g, tf)
-                           if has_pos and store.raw("pos", g).size else None)
-                    starts = np.cumsum(tf, dtype=np.int64) - tf
-                    tid = int(store.tid[g[0]])
-                    for i in np.flatnonzero(np.isin(docs, ids_arr)):
-                        ps = (",".join(map(str, pos[starts[i]:starts[i] + tf[i]]))
-                              if pos is not None else "")
-                        out.append((int(docs[i]), tid, int(tf[i]), ps))
+            idx = np.searchsorted(ids_arr, store.first)
+            keep = (idx < ids_arr.size) & \
+                   (ids_arr[np.minimum(idx, ids_arr.size - 1)] <= store.last)
+            blk = np.flatnonzero(keep & (store.tid >= 0))  # -1: forward runs
+            brk = np.flatnonzero(np.diff(store.tid[blk])) + 1
+            for g in np.split(blk, brk) if blk.size else []:
+                docs, tf = store.get("doc", g), store.get("tf", g)
+                # facet sentinel terms carry no positions even in a
+                # positional index — they are dropped by the
+                # term-name filter below, so just skip their decode
+                pos = (store.positions(g, tf)
+                       if has_pos and store.raw("pos", g).size else None)
+                starts = np.cumsum(tf, dtype=np.int64) - tf
+                tid = int(store.tid[g[0]])
+                for i in np.flatnonzero(np.isin(docs, ids_arr)):
+                    ps = (",".join(map(str, pos[starts[i]:starts[i] + tf[i]]))
+                          if pos is not None else "")
+                    out.append((int(docs[i]), tid, int(tf[i]), ps))
             return pd.DataFrame(
                 out, columns=["doc_id", "term_id", "tf", "positions"])
 
         cached = self._postings_driver()
         if cached is not None and self._term_row is not None:
-            # in-driver path: same tv() reconstruction over the cached
-            # blocks of the target segments, sentinel filter via the
-            # driver term lookup — one Spark job (the segs lookup)
-            # instead of three
-            vec_pd = pd.concat([tv(cached, int(g)) for g in segs],
-                               ignore_index=True)
+            # in-driver path: same tv() reconstruction over the whole
+            # cached store, sentinel filter via the driver term lookup
+            # — one Spark job (the segs lookup) instead of three
+            vec_pd = tv(cached)
             names = dict(zip(self._term_ids.tolist(), self._term_row))
             vec_pd["term"] = vec_pd["term_id"].map(names)
             vec_pd = vec_pd[~vec_pd["term"].str.startswith("\x00")]
@@ -1381,8 +1355,7 @@ class IndexReader:
                 out_pd, schema="doc_id long, term string, tf long, "
                                "positions string")
         vecs = blocks.groupBy("segment").applyInPandas(
-            lambda pdf: tv(_BlockStore(pa.Table.from_pandas(pdf, preserve_index=False)),
-                           int(pdf["segment"].iloc[0])),
+            lambda pdf: tv(_BlockStore(pa.Table.from_pandas(pdf, preserve_index=False))),
             schema="doc_id long, term_id long, tf long, positions string")
         # the result is page-sized — broadcast it against the dictionary
         return (
@@ -1453,12 +1426,8 @@ class IndexReader:
             tids = [t for t in plan["word_tid"].values() if t >= 0]
             if not tids:
                 return _empty_out()
-            store = self._driver_store(tids, True)
-            dmap = self._deleted_map()
-            outs = [segment_section_search(store.view(g), dmap.get(g), plan, None)
-                    for g in store.segments_of(tids)]
-            return (pd.concat(outs, ignore_index=True) if outs
-                    else _empty_out())
+            return segment_section_search(self._driver_store(tids, True),
+                                          self._tombstones(), plan, None)
         return self._section_outputs(plan).toPandas()
 
     def section_search(self, tree, k: int = 10, offset: int = 0,
@@ -1507,9 +1476,10 @@ class IndexReader:
         """Batch execution: the whole query set runs as ONE Spark job
         (none when the in-driver block cache serves it).
 
-        Per-segment tasks score every query against their segment
-        (results identical to search() — same scorer and merge per
-        query); per-query driver/scheduling overhead amortizes to
+        The cached batch scores each plan once over the whole store;
+        the distributed batch's segment tasks score every plan against
+        their segment (results identical to search() — same scorer and
+        merge per query); per-query driver/scheduling overhead amortizes to
         zero, so batch retrieval throughput scales with executors.
         This is the bulk-evaluation pattern (training-data mining,
         offline query sets); use search() for single-query latency.
@@ -1539,8 +1509,8 @@ class IndexReader:
             # indexes exceed the cache gate and keep the distributed
             # batch.
             parts = _score_store(self._postings_driver(), runnable,
-                                 self._deleted_map())
-        return [self._merge(r, parts.get(i, [])) for i, r in enumerate(reqs)]
+                                 self._tombstones())
+        return [self._merge(r, parts.get(i)) for i, r in enumerate(reqs)]
 
     def _search_many_distributed(self, runnable: list, tids: list[int],
                                  phrase: bool) -> pd.DataFrame:
@@ -1611,7 +1581,7 @@ class IndexReader:
                 # zero-Spark-job page from the in-driver block cache —
                 # identical rows: same scorer and merge, same (score
                 # desc, doc_id asc) total order as the distributed limit
-                page = self._merge(req, self._segment_outputs_driver(plan)).hits
+                page = self._merge(req, self._score_driver(plan)).hits
                 hits = self.spark.createDataFrame(
                     page, schema="doc_id long, score double")
                 if with_url:

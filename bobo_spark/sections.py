@@ -36,7 +36,7 @@ Tree grammar (plain tuples, mirroring the reference's translation):
     ("not", node)                   # at the root (or as the only
                                     # content) → zero hits
 
-A doc matches iff some section satisfies the whole tree; the segment
+A doc matches iff some section satisfies the whole tree; the
 evaluator works on sorted-unique uint64 ``doc<<24 | section`` keys
 (sections < 2^24 — bounded by the positions codec limit) with numpy
 set algebra, the vectorized equivalent of the reference's zig-zag
@@ -65,11 +65,11 @@ def tree_words(tree) -> list[str]:
 
 
 class _SegmentEval:
-    """Per-segment evaluator over (doc<<24|sec) key sets."""
+    """Evaluator over (doc<<24|sec) key sets of one block store: the
+    driver's whole store, or one segment in a distributed task."""
 
-    def __init__(self, seg, plan: dict, sec_pdf: pd.DataFrame | None):
-        # seg: the segment's query._SegView (term -> its blocks)
-        self.seg = seg
+    def __init__(self, store, plan: dict, sec_pdf: pd.DataFrame | None):
+        self.store = store  # a query._BlockStore (term -> its blocks)
         self.word_tid = plan["word_tid"]  # word -> term_id (-1 = absent)
         self.sec_cfg = plan["sections"]
         self._occ: dict = {}  # tid -> (keys doc<<24|pos asc, secs aligned)
@@ -88,7 +88,7 @@ class _SegmentEval:
         if self.sec_cfg[0] == "window":
             return pos // int(self.sec_cfg[1])
         # regex mode: per-doc searchsorted over the boundary arrays.
-        # occurrences arrive doc-ascending -> one pass over doc runs.
+        # a doc's occurrences are contiguous -> one pass over doc runs.
         sec = np.zeros(pos.size, dtype=np.int64)
         if pos.size == 0:
             return sec
@@ -107,16 +107,21 @@ class _SegmentEval:
         """(doc<<24|pos ascending, section per occurrence) for a term."""
         if tid in self._occ:
             return self._occ[tid]
-        b = self.seg.blocks(tid)
+        b = self.store.blocks(tid)
         if b is None:
             out = (np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64))
         else:
-            st = self.seg.store
+            st = self.store
             docs, tf = st.get("doc", b), st.get("tf", b)
             pos = st.positions(b, tf)
             occ_docs = np.repeat(docs, tf)
             keys = (occ_docs.astype(np.uint64) << _SEC_SHIFT) | pos.astype(np.uint64)
-            out = (keys, self._sections_of(occ_docs, pos))
+            secs = self._sections_of(occ_docs, pos)
+            if not np.all(keys[1:] > keys[:-1]):
+                # the term's blocks overlap in doc range across segments
+                o = np.argsort(keys)
+                keys, secs = keys[o], secs[o]
+            out = (keys, secs)
         self._occ[tid] = out
         return out
 
@@ -133,7 +138,7 @@ class _SegmentEval:
     def _phrase_keys(self, phrase: str) -> np.ndarray:
         words = phrase.split()
         tids = [self.word_tid.get(w, -1) for w in words]
-        if any(t < 0 or self.seg.blocks(t) is None for t in tids):
+        if any(t < 0 or self.store.blocks(t) is None for t in tids):
             return np.zeros(0, dtype=np.uint64)
         occs = {t: self.occ(t) for t in set(tids)}
         # consecutive-position intersection (≙ PhraseNode.fetchPos)
@@ -201,11 +206,12 @@ class _SegmentEval:
         raise ValueError(f"unknown section node: {tree[0]!r}")
 
 
-def segment_section_search(seg, deleted: np.ndarray | None, plan: dict,
+def segment_section_search(store, deleted: np.ndarray | None, plan: dict,
                            sec_pdf: pd.DataFrame | None) -> pd.DataFrame:
-    """Evaluate a section tree over one segment's posting blocks
-    (``seg``: a query._SegView; ``deleted``: the segment's sorted
-    tombstone ids).
+    """Evaluate a section tree over the posting blocks of ``store`` (a
+    query._BlockStore: the driver's whole store, or one segment in a
+    distributed task; ``deleted``: sorted tombstone ids, None when
+    there are none).
 
     Emits one hit row per matching doc: score = the query boost
     (constant-score, ≙ SectionSearchScorer.score returning getValue),
@@ -214,7 +220,7 @@ def segment_section_search(seg, deleted: np.ndarray | None, plan: dict,
     """
     from .query import _K_HIT, _K_STATS, _empty_out, _sorted_member
 
-    ev = _SegmentEval(seg, plan, sec_pdf)
+    ev = _SegmentEval(store, plan, sec_pdf)
     keys = ev.eval(plan["tree"])
     if keys.size and deleted is not None:
         keys = keys[~_sorted_member(deleted, (keys >> _SEC_SHIFT).astype(np.int64))]
@@ -223,7 +229,7 @@ def segment_section_search(seg, deleted: np.ndarray | None, plan: dict,
     docs = (keys >> _SEC_SHIFT).astype(np.int64)
     uniq, counts = np.unique(docs, return_counts=True)
     boost = float(plan.get("boost", 1.0))
-    # constant-score ⇒ global order is doc_id ascending: each segment
+    # constant-score ⇒ global order is doc_id ascending: each call
     # only ships its first offset+k docs (uniq is already ascending)
     page = min(plan.get("k", 10) + plan.get("offset", 0), uniq.size)
     out = pd.DataFrame({

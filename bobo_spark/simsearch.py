@@ -15,6 +15,7 @@ so a query probes only its bucket (+ optional 1-bit neighbors).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .webgen import _splitmix64
@@ -94,8 +95,6 @@ def cosine_neardup_pairs_lsh(df: DataFrame, dim: int, threshold: float = 0.95,
     round can move a value), and the authoritative
     ``round(cos,4) >= threshold`` filter stays a Spark expression, so
     results are identical to the join formulation (oracle-verified)."""
-    import pandas as pd
-
     planes = hyperplanes(dim, n_planes, seed)
     from .textops import _spread
 
@@ -106,49 +105,59 @@ def cosine_neardup_pairs_lsh(df: DataFrame, dim: int, threshold: float = 0.95,
         lsh_bucket_col(vec_col, planes).alias("bucket"),
     )
     margin = threshold - 6e-5
-
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        V = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf["sig"].iloc[order]])
-        c = len(ids)
-        if c < 2:
-            return pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0],
-                                 "cosine": np.zeros(0)})
-        ndim = V.shape[1]
-        nrm = np.zeros(c)
-        for d in range(ndim):            # left fold ≡ _norm's aggregate
-            nrm = nrm + V[:, d] * V[:, d]
-        nrm = np.sqrt(nrm)
-        if max_bucket_size is not None and c > max_bucket_size:
-            # representative pairing: min-id row vs every other member
-            dot = np.zeros(c)
-            for d in range(ndim):
-                dot = dot + V[0, d] * V[:, d]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / (nrm[0] * nrm)
-            ia, ib = np.zeros(c - 1, dtype=np.int64), np.arange(1, c)
-            ca = cos[1:]
-        else:
-            dot = np.zeros((c, c))
-            for d in range(ndim):        # dim-ordered ≡ _dot's left fold
-                dot = dot + np.outer(V[:, d], V[:, d])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / np.outer(nrm, nrm)
-            ia, ib = np.triu_indices(c, k=1)
-            ca = cos[ia, ib]
-        keep = (ca >= margin) | np.isnan(ca)  # NaN >= x is TRUE in Spark SQL
-        return pd.DataFrame({"id_a": ids[ia[keep]], "id_b": ids[ib[keep]],
-                             "cosine": ca[keep]})
-
     pairs = banded.groupBy("bucket").applyInPandas(
-        bucket_pairs, schema=f"id_a {id_type}, id_b {id_type}, cosine double")
+        lambda pdf: _cosine_bucket_pairs(pdf, margin, max_bucket_size),
+        schema=f"id_a {id_type}, id_b {id_type}, cosine double")
     return (
         pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
+
+
+# bytes of one anchor tile's float64 pair block in _cosine_bucket_pairs
+_PAIR_TILE_BYTES = 1 << 22
+
+
+def _cosine_bucket_pairs(pdf: pd.DataFrame, margin: float,
+                         max_bucket_size: int | None) -> pd.DataFrame:
+    """Candidate pairs (id_a < id_b) of one LSH bucket whose cosine is
+    ``>= margin`` or NaN. A bucket over ``max_bucket_size`` pairs its
+    min-id member with every other; otherwise every pair is expanded,
+    a tile of anchor rows at a time, each tile's pair block under
+    ``_PAIR_TILE_BYTES`` — peak memory stays O(c·dim), never c×c. Dot
+    products and norms are dim-ordered left folds (≡ ``_dot`` and
+    ``_norm``'s aggregate), bit-for-bit whatever the tiling."""
+    ids = pdf["id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    V = np.asarray(
+        [np.asarray(v, dtype=np.float64) for v in pdf["sig"].iloc[order]])
+    c, ndim = V.shape
+    nrm = np.zeros(c)
+    for d in range(ndim):
+        nrm = nrm + V[:, d] * V[:, d]
+    nrm = np.sqrt(nrm)
+    n_anchor = 1 if max_bucket_size is not None and c > max_bucket_size else c - 1
+    step = max(1, _PAIR_TILE_BYTES // (8 * c))
+    out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.zeros(0)]
+    for a0 in range(0, n_anchor, step):
+        a1 = min(a0 + step, n_anchor)
+        # anchors a0..a1-1 against members a0+1..c-1; the pair (r, q)
+        # of the tile is (a0+r, a0+1+q), a real pair iff q >= r
+        dot = np.zeros((a1 - a0, c - a0 - 1))
+        for d in range(ndim):
+            dot += np.outer(V[a0:a1, d], V[a0 + 1:, d])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dot / np.outer(nrm[a0:a1], nrm[a0 + 1:])
+        keep = (cos >= margin) | np.isnan(cos)  # NaN >= x is TRUE in Spark SQL
+        keep &= np.arange(c - a0 - 1) >= np.arange(a1 - a0)[:, None]
+        r, q = np.nonzero(keep)
+        out_a.append(ids[a0 + r])
+        out_b.append(ids[a0 + 1 + q])
+        out_c.append(cos[r, q])
+    return pd.DataFrame({"id_a": np.concatenate(out_a),
+                         "id_b": np.concatenate(out_b),
+                         "cosine": np.concatenate(out_c)})
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 7) -> np.ndarray:

@@ -1,8 +1,9 @@
 """Driver fast path: queries whose total posting count (known exactly
 from the dictionary df) is page-scale score on the driver — from the
 in-driver block cache ("cache") or one term-filtered scan ("scan") —
-with no groupBy exchange and no Python-worker round trip. Results must
-be IDENTICAL to the distributed path (same per-segment scorer)."""
+with no groupBy exchange and no Python-worker round trip, one scoring
+pass per plan over the whole store. Results must be IDENTICAL to the
+distributed path (same scorer, per segment there)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pandas as pd
 import pytest
 
 from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
+from bobo_spark import query
 from bobo_spark.query import SearchRequest
 from bobo_spark.webgen import webpages
 from conftest import assert_same_result, path_readers
@@ -87,3 +89,30 @@ def test_cached_fastpath_unknown_term_with_selection(env):
     want = env["cache"].search(req)
     for path in ("scan", "distributed"):
         assert_same_result(env[path].search(req), want, path)
+
+
+def test_one_score_pass_per_plan(env, monkeypatch):
+    """The driver paths score each plan ONCE over the whole store, not
+    once per segment: cached search calls _score_plan once, cached
+    search_many once per runnable plan, and the scan path once per
+    plan."""
+    calls = []
+    orig = query._score_plan
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(query, "_score_plan", spy)
+    assert env["cache"].snap.stats["n_segments"] >= 4
+    reqs = REQS + [SearchRequest(query="ba zzznothing", mode="and")]
+    runnable = sum(query._runnable(env["cache"].plan(r)) for r in reqs)
+    assert runnable == len(REQS)
+    for path in ("cache", "scan"):
+        for req in REQS:
+            calls.clear()
+            env[path].search(req)
+            assert len(calls) == 1, (path, req)
+    calls.clear()
+    env["cache"].search_many(reqs)
+    assert len(calls) == runnable

@@ -156,3 +156,35 @@ def test_uncapped_big_bucket_anchor_path(spark):
                                        max_bucket_size=None).toPandas()
     assert len(sp) == c2 * (c2 - 1) // 2
     assert (sp["hamming"] == 0).all()
+
+
+def test_uncapped_cosine_bucket_memory(monkeypatch):
+    """An uncapped cosine bucket expands its pairs in anchor tiles under
+    a fixed byte budget: peak memory stays O(c·dim), far under one
+    dense c×c float64 block, and the tiling never changes a bit of the
+    output."""
+    import tracemalloc
+
+    import pandas as pd
+
+    c, dim = 4096, 16
+    rng = np.random.default_rng(3)
+    x = rng.normal(size=(c, dim))
+    x[7] = 2.0 * x[3]  # planted pair, cosine 1
+    pdf = pd.DataFrame({"id": np.arange(c, dtype=np.int64), "sig": list(x)})
+    tracemalloc.start()
+    try:
+        out = simsearch._cosine_bucket_pairs(pdf, 0.99, None)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out[["id_a", "id_b"]].values.tolist() == [[3, 7]]
+    bound = 8 * simsearch._PAIR_TILE_BYTES + 32 * c * dim * 8
+    assert bound < c * c * 8 and peak < bound, peak
+
+    small = pdf.iloc[:300]
+    whole = simsearch._cosine_bucket_pairs(small, -2.0, None)  # one tile
+    assert len(whole) == 300 * 299 // 2
+    monkeypatch.setattr(simsearch, "_PAIR_TILE_BYTES", 8 * 300 * 7)
+    pd.testing.assert_frame_equal(
+        simsearch._cosine_bucket_pairs(small, -2.0, None), whole)
