@@ -1053,12 +1053,12 @@ def queries() -> dict[str, _T]:
         "facet_attributes": _q_facet_attributes,
         "facet_dynamic_timerange": _q_facet_dyntime,
         # --- r5 round-robin rotations back IN (evidence was 1 round old)
-        "facet_histogram_nchars": _q_facet_histogram,
         "facet_geo_box": _q_facet_geo_box,
         "browse_facet_term_query": _q_browse_facet_term_q,
         "map_reduce_hook": _q_map_reduce,
         # --- LLM-pipeline scale paths
         "dedup_minhash_lsh": _q_dedup_minhash,
+        "dedup_simhash_pairs": _q_dedup_simhash_pairs,
         "simsearch_neardup_lsh": _q_sim_neardup_lsh,
         "simsearch_lsh_topk_indexed": _q_simsearch_lsh_indexed,
         "simsearch_ivf_topk": _q_simsearch_ivf,
@@ -1071,10 +1071,13 @@ def queries() -> dict[str, _T]:
         # All 67 were re-verified against the DuckDB oracle locally
         # in r6 (optimization round; window order deliberately frozen).
         # Ledger: WINDOW.md.
+        # driver-green in r05 and r06; its range-handler sibling
+        # facet_range_nchars stays inside (rotated out for
+        # dedup_simhash_pairs, whose pair kernel changed)
+        "facet_histogram_nchars": _q_facet_histogram,
         "facet_geo_distance": _q_facet_geo_distance,
         "token_counts": _q_token_counts,
         "dedup_exact": _q_dedup_exact,
-        "dedup_simhash_pairs": _q_dedup_simhash_pairs,
         "simsearch_topk_cosine": _q_simsearch,
         "multimodal_features": _q_multimodal,
         "sessionize_events": _q_sessionize,

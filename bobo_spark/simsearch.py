@@ -15,9 +15,9 @@ so a query probes only its bucket (+ optional 1-bit neighbors).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .textops import DEFAULT_MAX_BUCKET_SIZE, _banded_pairs, _PairScore, _spread
 from .webgen import _splitmix64
 
 
@@ -42,8 +42,6 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     per-row dot fold was the whole cost and a single small parquet
     file otherwise runs it on one task (identical arithmetic, same
     TakeOrderedAndProject merge)."""
-    from .textops import _spread
-
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     v = _dvec(F.col(vec_col))
     cos = _dot(v, q) / (_norm(v) * _norm(q))
@@ -73,7 +71,7 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
 
 def cosine_neardup_pairs_lsh(df: DataFrame, dim: int, threshold: float = 0.95,
                              n_planes: int = 8, seed: int = 7,
-                             max_bucket_size: int | None = 1000,
+                             max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding") -> DataFrame:
     """Embedding near-dup pairs at scale: candidates share a hyperplane
@@ -81,83 +79,57 @@ def cosine_neardup_pairs_lsh(df: DataFrame, dim: int, threshold: float = 0.95,
     buckets), then the exact cosine filter runs on candidates only.
     Deterministic (seeded planes) so an exact oracle exists.
     ``max_bucket_size`` caps a degenerate bucket via min-id
-    representative pairing (same policy and default as
-    textops._bucket_pairs; None = exact uncapped).
+    representative pairing (same policy and default as the textops
+    operators, see ``textops._expand_bucket``; None = exact uncapped).
 
-    r6: candidate pairs are generated and scored INSIDE a per-bucket
-    pandas kernel instead of a bucket self-join — the exchange moves
-    each vector once (N rows) rather than every candidate pair with
-    both payload arrays (3.4M × 1 KB at sf1.0), and the dot product is
-    a dim-ordered numpy accumulation that reproduces the previous
-    ``zip_with``+``aggregate`` left fold bit-for-bit (same additions,
-    same order, IEEE doubles). The kernel pre-filters at threshold
-    minus the round-off bound (6e-5 > the 5e-5 a 4-decimal HALF_UP
-    round can move a value), and the authoritative
-    ``round(cos,4) >= threshold`` filter stays a Spark expression, so
-    results are identical to the join formulation (oracle-verified)."""
+    Candidate pairs are generated and scored inside the shared
+    ``textops._banded_pairs`` kernel (one band, band 0) instead of a
+    bucket self-join — the exchange moves each vector once (N rows)
+    rather than every candidate pair with both payload arrays (3.4M ×
+    1 KB at sf1.0), and the dot product is a dim-ordered numpy
+    accumulation that reproduces the ``zip_with``+``aggregate`` left
+    fold bit-for-bit (same additions, same order, IEEE doubles). The
+    kernel pre-filters at threshold minus the round-off bound (6e-5 >
+    the 5e-5 a 4-decimal HALF_UP round can move a value), and the
+    authoritative ``round(cos,4) >= threshold`` filter stays a Spark
+    expression (oracle-verified)."""
     planes = hyperplanes(dim, n_planes, seed)
-    from .textops import _spread
-
-    id_type = dict(df.dtypes)[id_col]
     banded = _spread(df).select(
         F.col(id_col).alias("id"),
         _dvec(F.col(vec_col)).alias("sig"),
+        F.lit(0).alias("band"),
         lsh_bucket_col(vec_col, planes).alias("bucket"),
     )
-    margin = threshold - 6e-5
-    pairs = banded.groupBy("bucket").applyInPandas(
-        lambda pdf: _cosine_bucket_pairs(pdf, margin, max_bucket_size),
-        schema=f"id_a {id_type}, id_b {id_type}, cosine double")
     return (
-        pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
+        _banded_pairs(banded, _cosine_score(threshold - 6e-5), max_bucket_size)
+        .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
 
-# bytes of one anchor tile's float64 pair block in _cosine_bucket_pairs
-_PAIR_TILE_BYTES = 1 << 22
+def _cosine_score(margin: float) -> _PairScore:
+    """Cosine per pair, kept at >= margin or NaN (NaN >= x is TRUE in
+    Spark SQL). A row's payload is its vector plus its norm, computed
+    once per row; dot products and norms are dim-ordered left folds
+    (≡ ``_dot`` and ``_norm``'s aggregate)."""
+    def rows(sig):
+        V = np.stack(sig.to_numpy()).astype(np.float64, copy=False)
+        nrm = np.zeros(len(V))
+        for d in range(V.shape[1]):
+            nrm = nrm + V[:, d] * V[:, d]
+        return np.column_stack([V, np.sqrt(nrm)])
 
-
-def _cosine_bucket_pairs(pdf: pd.DataFrame, margin: float,
-                         max_bucket_size: int | None) -> pd.DataFrame:
-    """Candidate pairs (id_a < id_b) of one LSH bucket whose cosine is
-    ``>= margin`` or NaN. A bucket over ``max_bucket_size`` pairs its
-    min-id member with every other; otherwise every pair is expanded,
-    a tile of anchor rows at a time, each tile's pair block under
-    ``_PAIR_TILE_BYTES`` — peak memory stays O(c·dim), never c×c. Dot
-    products and norms are dim-ordered left folds (≡ ``_dot`` and
-    ``_norm``'s aggregate), bit-for-bit whatever the tiling."""
-    ids = pdf["id"].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    V = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in pdf["sig"].iloc[order]])
-    c, ndim = V.shape
-    nrm = np.zeros(c)
-    for d in range(ndim):
-        nrm = nrm + V[:, d] * V[:, d]
-    nrm = np.sqrt(nrm)
-    n_anchor = 1 if max_bucket_size is not None and c > max_bucket_size else c - 1
-    step = max(1, _PAIR_TILE_BYTES // (8 * c))
-    out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.zeros(0)]
-    for a0 in range(0, n_anchor, step):
-        a1 = min(a0 + step, n_anchor)
-        # anchors a0..a1-1 against members a0+1..c-1; the pair (r, q)
-        # of the tile is (a0+r, a0+1+q), a real pair iff q >= r
-        dot = np.zeros((a1 - a0, c - a0 - 1))
+    def cosine(A, M):
+        ndim = A.shape[1] - 1
+        dot = np.zeros((len(A), len(M)))
         for d in range(ndim):
-            dot += np.outer(V[a0:a1, d], V[a0 + 1:, d])
+            dot += np.outer(A[:, d], M[:, d])
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dot / np.outer(nrm[a0:a1], nrm[a0 + 1:])
-        keep = (cos >= margin) | np.isnan(cos)  # NaN >= x is TRUE in Spark SQL
-        keep &= np.arange(c - a0 - 1) >= np.arange(a1 - a0)[:, None]
-        r, q = np.nonzero(keep)
-        out_a.append(ids[a0 + r])
-        out_b.append(ids[a0 + 1 + q])
-        out_c.append(cos[r, q])
-    return pd.DataFrame({"id_a": np.concatenate(out_a),
-                         "id_b": np.concatenate(out_b),
-                         "cosine": np.concatenate(out_c)})
+            return dot / np.outer(A[:, ndim], M[:, ndim])
+
+    # float64 dot, outer term, norm product and cosine; three bool masks
+    return _PairScore("cosine double", rows, cosine,
+                      lambda cos: (cos >= margin) | np.isnan(cos), 8 * 4 + 3)
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 7) -> np.ndarray:

@@ -13,19 +13,22 @@ Scale notes (10^12-doc corpus):
 * exact dedup — one hash shuffle on md5(text); skew-free (hashes
   uniform).
 * MinHash-LSH — signatures via a per-partition Arrow kernel (no
-  explode, no shuffle; the output moves k longs per doc); the band
-  join shuffles only (band_hash) keys, pairs are scored and
-  threshold-filtered BEFORE the distinct so the dedup exchange
-  carries survivors, not payloads; ``max_bucket_size`` caps
-  degenerate buckets via min-id representative pairing.
+  explode, no shuffle; the output moves k longs per doc); one
+  (band, bucket) exchange feeds the shared bucket-pair kernel
+  (``_banded_pairs``), which scores and threshold-filters pairs
+  BEFORE the distinct so the dedup exchange carries survivors, not
+  payloads; ``max_bucket_size`` caps degenerate buckets via min-id
+  representative pairing.
 * n-gram Jaccard — the exact variant (self-join on shingles) is the
   small-scale oracle; LSH is the scale path.
-* SimHash — JVM md5 hashes + numpy bit fold, 64-bit hamming band join.
+* SimHash — JVM md5 hashes + numpy bit fold; 15-bit bands through the
+  same bucket-pair kernel, exact 64-bit hamming (XOR popcount) score.
 """
 
 from __future__ import annotations
 
 import hashlib
+from typing import Callable, NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
@@ -169,13 +172,110 @@ def _minhash_params(k: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-# Default within-bucket expansion cap for the banded-LSH pair
-# generators below. A degenerate bucket (a giant duplicate cluster at
-# crawl scale) would otherwise expand O(c^2); past the cap, members
-# pair only with the bucket's min-id representative (connectivity
-# preserved — see _bucket_pairs). Pass max_bucket_size=None for the
-# EXACT uncapped expansion (the oracle-equality variant).
+# ------------------------------------------------------ banded-LSH pairs
+
+# Default within-bucket expansion cap of the banded-LSH pair operators
+# (minhash_lsh_pairs, simhash_neardup_pairs and
+# simsearch.cosine_neardup_pairs_lsh). A degenerate bucket (a giant
+# duplicate cluster at crawl scale) would otherwise expand O(c^2); past
+# the cap, members pair only with the bucket's min-id representative
+# (connectivity preserved — see _expand_bucket). Pass
+# max_bucket_size=None for the EXACT uncapped expansion (the
+# oracle-equality variant).
 DEFAULT_MAX_BUCKET_SIZE = 1000
+
+# byte budget of one anchor tile's temporaries in _expand_bucket
+_PAIR_TILE_BYTES = 1 << 22
+
+
+class _PairScore(NamedTuple):
+    """How one banded-LSH operator scores a bucket's candidate pairs."""
+
+    value: str  # output column and its Spark type, e.g. "hamming int"
+    rows: Callable  # sig column (pandas Series) -> per-row payload array
+    score: Callable  # (anchor rows, member rows) -> anchors × members values
+    keep: Callable  # values -> bool mask of the pairs to emit
+    pair_bytes: int  # bytes per pair of score's and keep's temporaries
+
+
+def _expand_bucket(ids: np.ndarray, rows: np.ndarray, ps: _PairScore,
+                   max_bucket_size: int | None):
+    """(id_a, id_b, value) of one bucket's pairs (id_a < id_b) that
+    pass ``ps.keep``; ``ids`` ascend and ``rows[i]`` is the payload of
+    ``ids[i]``.
+
+    A bucket over ``max_bucket_size`` has one anchor, its min-id row,
+    which pairs with every other member (O(c), and a duplicate cluster
+    stays connected). Otherwise every row is an anchor, expanded a tile
+    of anchors at a time against all later rows; a tile's temporaries,
+    ``ps.pair_bytes`` (plus 2 for the masks) per pair, stay under
+    ``_PAIR_TILE_BYTES``, so peak memory is O(c·payload) and never a
+    c×c block. The values are the score's own arithmetic per pair,
+    bit-for-bit whatever the tiling."""
+    c = len(ids)
+    n_anchor = 1 if max_bucket_size is not None and c > max_bucket_size else c - 1
+    step = max(1, _PAIR_TILE_BYTES // ((ps.pair_bytes + 2) * (c - 1)))
+    out_a, out_b, out_v = [], [], []
+    for a0 in range(0, n_anchor, step):
+        a1 = min(a0 + step, n_anchor)
+        # anchors a0..a1-1 against rows a0+1..c-1: cell (r, q) is the
+        # pair (a0+r, a0+1+q), a real pair iff q >= r
+        val = ps.score(rows[a0:a1], rows[a0 + 1:])
+        ok = ps.keep(val)
+        ok &= np.arange(c - a0 - 1) >= np.arange(a1 - a0)[:, None]
+        r, q = np.nonzero(ok)
+        out_a.append(ids[a0 + r])
+        out_b.append(ids[a0 + 1 + q])
+        out_v.append(val[r, q])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_v)
+
+
+def _banded_pairs(banded: DataFrame, ps: _PairScore,
+                  max_bucket_size: int | None) -> DataFrame:
+    """Scored candidate pairs (id_a, id_b, value) of a banded frame
+    (id, sig, band, bucket): rows sharing a (band, bucket) are
+    candidates, expanded and kept by ``_expand_bucket``. NOT
+    de-duplicated: a pair sharing several bands appears once per band;
+    callers filter and ``distinct()`` the narrow result.
+
+    One exchange on (band, bucket) moves each (id, sig) once per band,
+    and the kernel runs once per shuffle PARTITION (mapInPandas, not a
+    per-group applyInPandas): singleton buckets, the vast majority, are
+    skipped by a vectorized size mask instead of each paying a
+    per-group Arrow dispatch (measured ~1 ms each at 20k multi-member
+    buckets)."""
+    import pandas as pd
+
+    id_type = dict(banded.dtypes)["id"]
+    value = ps.value.split()[0]
+
+    def expand_partition(batches):
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        if not len(pdf):
+            return
+        band = pdf["band"].to_numpy(np.int64)
+        bucket = pd.factorize(pdf["bucket"])[0]
+        ids = pdf["id"].to_numpy()
+        order = np.lexsort((ids, bucket, band))
+        band, bucket, ids = band[order], bucket[order], ids[order]
+        bnd = np.flatnonzero((np.diff(band) != 0) | (np.diff(bucket) != 0)) + 1
+        starts = np.concatenate(([0], bnd))
+        ends = np.concatenate((bnd, [len(ids)]))
+        multi = np.flatnonzero(ends - starts >= 2)
+        if not len(multi):
+            return
+        rows = ps.rows(pdf["sig"])[order]
+        parts = [_expand_bucket(ids[s:e], rows[s:e], ps, max_bucket_size)
+                 for s, e in zip(starts[multi], ends[multi])]
+        id_a, id_b, vals = (np.concatenate(x) for x in zip(*parts))
+        if len(id_a):
+            yield pd.DataFrame({"id_a": id_a, "id_b": id_b, value: vals})
+
+    return banded.repartition("band", "bucket").mapInPandas(
+        expand_partition, schema=f"id_a {id_type}, id_b {id_type}, {ps.value}")
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -226,53 +326,15 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     return src.mapInArrow(kernel, schema=f"{id_col} {id_type}, minhash array<bigint>")
 
 
-def _bucket_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """REFERENCE formulation (join-based) of banded candidate pairing,
-    retained for bench_extra's before/after reproduction — the shipped
-    operators (minhash_lsh_pairs, simhash_neardup_pairs) now generate
-    and score pairs inside a per-partition kernel instead, which
-    evaluates the signature subtree once and needs no bucket-sizes
-    join; the capped-bucket POLICY below (min-id representative
-    pairing) is the contract both implementations share.
-
-    Candidate pairs from a banded frame (id, sig, band, bucket) —
-    NOT de-duplicated: a pair agreeing on several bands appears once
-    per band. Callers compute their score (a pure function of the
-    sigs, so duplicates score identically), apply the threshold, and
-    ``distinct()`` the final NARROW projection (guide §2.3: shuffle
-    keys and scores, not payloads).
-
-    Uncapped: full within-bucket pairing (O(c²) per bucket — exact,
-    the oracle variant). With ``max_bucket_size``: buckets larger than
-    the cap are NOT expanded pairwise — each member pairs only with
-    the bucket's min-id REPRESENTATIVE (O(c)), which preserves
-    duplicate-cluster connectivity for dedup while bounding the worst
-    bucket a 100-TB crawl's giant dup cluster can produce."""
-    left = banded.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"),
-                         "band", "bucket")
-    right = banded.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"),
-                          "band", "bucket")
-    if max_bucket_size is None:
-        joined = left.join(right, ["band", "bucket"])
-    else:
-        sizes = banded.groupBy("band", "bucket").agg(F.count("*").alias("_bsz"))
-        sized = banded.join(sizes, ["band", "bucket"])
-        small = sized.where(F.col("_bsz") <= max_bucket_size)
-        sl = small.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"),
-                          "band", "bucket")
-        sr = small.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"),
-                          "band", "bucket")
-        big = sized.where(F.col("_bsz") > max_bucket_size)
-        reps = big.groupBy("band", "bucket").agg(
-            F.min("id").alias("id_a"), F.expr("min_by(sig, id)").alias("sig_a"))
-        br = big.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"),
-                        "band", "bucket")
-        joined = sl.join(sr, ["band", "bucket"]).unionByName(
-            reps.join(br, ["band", "bucket"]))
-    return (
-        joined.where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-    )
+def _minhash_score(k: int, margin: float) -> _PairScore:
+    """Matching signature fraction (match count / k), kept at >= margin."""
+    kf = float(k)
+    return _PairScore(
+        "est_jaccard double",
+        lambda sig: np.stack(sig.to_numpy()).astype(np.int64, copy=False),
+        lambda A, M: (A[:, None, :] == M[None, :, :]).sum(axis=2) / kf,
+        lambda est: est >= margin,
+        k + 8 + 8 + 1)  # bool compare per hash, int64 count, float64 est, keep
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -284,26 +346,21 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     Bands of r = k/bands rows; docs sharing any band bucket become
     candidates; est_jaccard = matching signature fraction; pairs kept
     at est_jaccard >= threshold. ``max_bucket_size`` caps
-    within-bucket expansion via min-id representative pairing (the
-    ``_bucket_pairs`` policy) — capped by DEFAULT (the scale-safe
-    path); pass None for the exact uncapped oracle variant.
+    within-bucket expansion via min-id representative pairing (see
+    ``_expand_bucket``) — capped by DEFAULT (the scale-safe path);
+    pass None for the exact uncapped oracle variant.
 
-    r6: candidates are generated and scored INSIDE a per-(band,
-    bucket) pandas kernel instead of a bucket self-join — one exchange
-    moves each (id, sig) once per band, the signature kernel upstream
-    is evaluated ONCE (the join evaluated it per branch), and the
-    capped path needs no bucket-sizes join. The kernel's match count
-    over the same int64 signatures reproduces the previous
-    ``zip_with`` comparison exactly; it pre-filters at threshold minus
-    the round-off bound (6e-5 > the 5e-5 a 4-decimal HALF_UP round
-    can move a value) and the authoritative
-    ``round(est,4) >= threshold`` filter stays a Spark expression, so
-    results are identical to the join formulation (oracle-verified)."""
-    import pandas as pd
-
+    Candidates are generated and scored inside the shared
+    ``_banded_pairs`` kernel, not a bucket self-join: the signature
+    kernel upstream is evaluated ONCE and the capped path needs no
+    bucket-sizes join. The match count over the same int64 signatures
+    reproduces the ``zip_with`` comparison exactly; the kernel
+    pre-filters at threshold minus the round-off bound (6e-5 > the
+    5e-5 a 4-decimal HALF_UP round can move a value) and the
+    authoritative ``round(est,4) >= threshold`` filter stays a Spark
+    expression (oracle-verified)."""
     r = k // bands
     sigs = minhash_signatures(df, id_col, text_col, n, k)
-    id_type = dict(df.dtypes)[id_col]
     banded = sigs.select(
         F.col(id_col).alias("id"),
         F.col("minhash").alias("sig"),
@@ -319,81 +376,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
             )
         ).alias("bb"),
     ).select("id", "sig", "bb.band", "bb.bucket")
-    margin = threshold - 6e-5
-    kf = float(k)
-    nbands = bands
-
-    def part_pairs(batches):
-        # one kernel invocation per shuffle PARTITION (mapInPandas,
-        # not per-group applyInPandas): singleton buckets — the vast
-        # majority — are skipped by a vectorized size mask instead of
-        # each paying a per-group Arrow dispatch (measured ~1 ms each
-        # at 20k multi-member buckets)
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if not len(pdf):
-            return
-        bcodes = pd.factorize(pdf["bucket"])[0].astype(np.int64)
-        gcode = bcodes * nbands + pdf["band"].to_numpy(np.int64)
-        ids = pdf["id"].to_numpy()
-        order = np.lexsort((ids, gcode))
-        ids = ids[order]
-        gc = gcode[order]
-        bnd = np.flatnonzero(np.diff(gc) != 0) + 1
-        gstarts = np.concatenate(([0], bnd))
-        gends = np.concatenate((bnd, [len(gc)]))
-        sizes = gends - gstarts
-        multi = np.flatnonzero(sizes >= 2)
-        if not len(multi):
-            return
-        S_all = np.stack(pdf["sig"].to_numpy()[order]).astype(
-            np.int64, copy=False)
-        out_a, out_b, out_e = [], [], []
-        for gi in multi:
-            s0, e0 = gstarts[gi], gends[gi]
-            c = int(e0 - s0)
-            gids = ids[s0:e0]
-            S = S_all[s0:e0]
-            if max_bucket_size is not None and c > max_bucket_size:
-                # representative pairing: min-id row vs every other
-                est = (S[0:1] == S[1:]).sum(axis=1) / kf
-                keep = est >= margin
-                if keep.any():
-                    out_a.append(np.repeat(gids[0], int(keep.sum())))
-                    out_b.append(gids[1:][keep])
-                    out_e.append(est[keep])
-            elif c <= 512:
-                ia, ib = np.triu_indices(c, k=1)
-                est = (S[ia] == S[ib]).sum(axis=1) / kf
-                keep = est >= margin
-                if keep.any():
-                    out_a.append(gids[ia[keep]])
-                    out_b.append(gids[ib[keep]])
-                    out_e.append(est[keep])
-            else:
-                # big uncapped bucket (oracle variant — O(c²) BY
-                # SPEC): per-anchor rows instead of one triu block, so
-                # the temp is O(c·k), never a multi-GB c²-wide array
-                for a0 in range(c - 1):
-                    est = (S[a0:a0 + 1] == S[a0 + 1:]).sum(axis=1) / kf
-                    keep = est >= margin
-                    if keep.any():
-                        out_a.append(np.repeat(gids[a0], int(keep.sum())))
-                        out_b.append(gids[a0 + 1:][keep])
-                        out_e.append(est[keep])
-        if out_a:
-            yield pd.DataFrame({"id_a": np.concatenate(out_a),
-                                "id_b": np.concatenate(out_b),
-                                "est_jaccard": np.concatenate(out_e)})
-
-    pairs = banded.repartition("band", "bucket").mapInPandas(
-        part_pairs,
-        schema=f"id_a {id_type}, id_b {id_type}, est_jaccard double")
     return (
-        pairs.select("id_a", "id_b",
-                     F.round("est_jaccard", 4).alias("est_jaccard"))
+        _banded_pairs(banded, _minhash_score(k, threshold - 6e-5), max_bucket_size)
+        .select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
         .distinct()
     )
@@ -473,20 +458,35 @@ def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     return src.mapInArrow(kernel, schema=f"{id_col} {id_type}, simhash bigint")
 
 
+def _simhash_score(max_hamming: int) -> _PairScore:
+    """Hamming distance (XOR popcount), kept at <= max_hamming."""
+    def hamming(A, M):
+        x = np.bitwise_xor(A[:, None], M[None, :])
+        bits = np.unpackbits(x.reshape(-1).view(np.uint8).reshape(-1, 8), axis=1)
+        return bits.sum(axis=1, dtype=np.int32).reshape(x.shape)
+
+    return _PairScore(
+        "hamming int",
+        lambda sig: sig.to_numpy().astype(np.int64, copy=False).view(np.uint64),
+        hamming,
+        lambda ham: ham <= max_hamming,
+        8 + 64 + 4 + 1)  # uint64 xor, unpacked bits, int32 count, keep
+
+
 def simhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                           max_hamming: int = 3,
                           max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
 
     Candidate generation via 4 15-bit bands (a pair within hamming 3
-    must agree on ≥1 band), exact popcount filter after.
-    ``max_bucket_size`` caps within-bucket expansion (min-id
-    representative fallback, see ``_bucket_pairs``) — capped by
-    DEFAULT; pass None for the exact uncapped oracle variant."""
-    import pandas as pd
-
+    must agree on ≥1 band), exact popcount filter after, in the shared
+    ``_banded_pairs`` kernel. ``max_bucket_size`` caps within-bucket
+    expansion (min-id representative fallback, see ``_expand_bucket``)
+    — capped by DEFAULT; pass None for the exact uncapped oracle
+    variant. popcount(xor) over the same int64 simhashes is exact
+    integer arithmetic — identical to Spark's bit_count — and the
+    authoritative hamming filter stays a Spark expression."""
     sig = simhash64(df, id_col, text_col)
-    id_type = dict(df.dtypes)[id_col]
     banded = sig.select(
         F.col(id_col).alias("id"), F.col("simhash").alias("sig"),
         F.explode(F.array(*[
@@ -501,85 +501,9 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str =
     # int64 in pandas (a nullable bigint would arrive as float64 and
     # lose 60-bit precision)
     banded = banded.where(F.col("sig").isNotNull())
-
-    # r6: per-partition pandas kernel (mapInPandas over one
-    # (band, bucket) hash exchange) instead of a bucket self-join —
-    # the signature subtree is evaluated once, no bucket-sizes join on
-    # the capped path, and singleton buckets are skipped by a
-    # vectorized size mask (see minhash_lsh_pairs). popcount(xor) over
-    # the same int64 simhashes is exact integer arithmetic — identical
-    # to Spark's bit_count — and the authoritative hamming filter
-    # stays a Spark expression.
-    def part_pairs(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if not len(pdf):
-            return
-        gcode = (pdf["bucket"].to_numpy(np.int64) * 4
-                 + pdf["band"].to_numpy(np.int64))
-        ids = pdf["id"].to_numpy()
-        order = np.lexsort((ids, gcode))
-        ids = ids[order]
-        gc = gcode[order]
-        s_all = pdf["sig"].to_numpy()[order].astype(np.int64, copy=False)
-        bnd = np.flatnonzero(np.diff(gc) != 0) + 1
-        gstarts = np.concatenate(([0], bnd))
-        gends = np.concatenate((bnd, [len(gc)]))
-        multi = np.flatnonzero(gends - gstarts >= 2)
-        if not len(multi):
-            return
-        out_a, out_b, out_h = [], [], []
-
-        def popcount(x):
-            return np.unpackbits(
-                x.astype(np.uint64).view(np.uint8).reshape(-1, 8),
-                axis=1).sum(axis=1).astype(np.int32)
-
-        for gi in multi:
-            s0, e0 = gstarts[gi], gends[gi]
-            c = int(e0 - s0)
-            gids = ids[s0:e0]
-            s = s_all[s0:e0]
-            if max_bucket_size is not None and c > max_bucket_size:
-                ham = popcount(np.bitwise_xor(s[0], s[1:]))
-                keep = ham <= max_hamming
-                if keep.any():
-                    out_a.append(np.repeat(gids[0], int(keep.sum())))
-                    out_b.append(gids[1:][keep])
-                    out_h.append(ham[keep])
-            elif c <= 1024:
-                ia, ib = np.triu_indices(c, k=1)
-                ham = popcount(np.bitwise_xor(s[ia], s[ib]))
-                keep = ham <= max_hamming
-                if keep.any():
-                    out_a.append(gids[ia[keep]])
-                    out_b.append(gids[ib[keep]])
-                    out_h.append(ham[keep])
-            else:
-                # big uncapped bucket (oracle variant — O(c²) BY
-                # SPEC): per-anchor rows bound the temp to O(c), never
-                # a c²-wide pair block (15-bit simhash bands collide by
-                # construction, so giant buckets are reachable even
-                # without giant dup clusters)
-                for a0 in range(c - 1):
-                    ham = popcount(np.bitwise_xor(s[a0], s[a0 + 1:]))
-                    keep = ham <= max_hamming
-                    if keep.any():
-                        out_a.append(np.repeat(gids[a0], int(keep.sum())))
-                        out_b.append(gids[a0 + 1:][keep])
-                        out_h.append(ham[keep])
-        if out_a:
-            yield pd.DataFrame({"id_a": np.concatenate(out_a),
-                                "id_b": np.concatenate(out_b),
-                                "hamming": np.concatenate(out_h)})
-
-    pairs = banded.repartition("band", "bucket").mapInPandas(
-        part_pairs, schema=f"id_a {id_type}, id_b {id_type}, hamming int")
     return (
-        pairs.select("id_a", "id_b",
-                     F.col("hamming").cast("int").alias("hamming"))
+        _banded_pairs(banded, _simhash_score(max_hamming), max_bucket_size)
+        .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )

@@ -89,6 +89,7 @@ def test_cap_is_the_default(spark):
                simsearch.cosine_neardup_pairs_lsh):
         default = inspect.signature(fn).parameters["max_bucket_size"].default
         assert isinstance(default, int) and default > 0, fn.__name__
+        assert default is textops.DEFAULT_MAX_BUCKET_SIZE, fn.__name__
     rows = [(i, "one enormous duplicated cluster of pages") for i in range(1500)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = textops.minhash_lsh_pairs(docs, threshold=0.9).toPandas()
@@ -136,9 +137,9 @@ def test_ivf_centroids_deterministic(spark, ivf_index):
 
 
 def test_uncapped_big_bucket_anchor_path(spark):
-    """Uncapped buckets past the triu-block size limit (512 for
-    minhash, 1024 for simhash) take the per-anchor chunked path —
-    it must produce the exact full O(c^2) expansion."""
+    """Uncapped buckets of 600 (minhash) and 1100 (simhash) members
+    span several anchor tiles under the shared byte budget — the tiled
+    path must produce the exact full O(c^2) expansion."""
     c = 600
     rows = [(i, "same duplicated payload for the anchor path test") for i in range(c)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -158,33 +159,58 @@ def test_uncapped_big_bucket_anchor_path(spark):
     assert (sp["hamming"] == 0).all()
 
 
-def test_uncapped_cosine_bucket_memory(monkeypatch):
-    """An uncapped cosine bucket expands its pairs in anchor tiles under
-    a fixed byte budget: peak memory stays O(c·dim), far under one
-    dense c×c float64 block, and the tiling never changes a bit of the
-    output."""
+def _check_bucket_memory(monkeypatch, ps, sigs):
+    """One uncapped bucket of ``len(sigs)`` members (row 7 planted as a
+    copy of row 3) expands its pairs in anchor tiles under a fixed
+    byte budget: peak memory stays O(c·payload), far under one dense
+    c×c float64 block, the planted pair is the only one kept, and the
+    tiling never changes a bit of the output."""
     import tracemalloc
 
     import pandas as pd
 
-    c, dim = 4096, 16
-    rng = np.random.default_rng(3)
-    x = rng.normal(size=(c, dim))
-    x[7] = 2.0 * x[3]  # planted pair, cosine 1
-    pdf = pd.DataFrame({"id": np.arange(c, dtype=np.int64), "sig": list(x)})
+    c = len(sigs)
+    sigs[7] = sigs[3]
+    ids = np.arange(c, dtype=np.int64)
+    rows = ps.rows(pd.Series(sigs))
     tracemalloc.start()
     try:
-        out = simsearch._cosine_bucket_pairs(pdf, 0.99, None)
+        a, b, _ = textops._expand_bucket(ids, rows, ps, None)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
-    assert out[["id_a", "id_b"]].values.tolist() == [[3, 7]]
-    bound = 8 * simsearch._PAIR_TILE_BYTES + 32 * c * dim * 8
+    assert list(zip(a, b)) == [(3, 7)]
+    bound = 8 * textops._PAIR_TILE_BYTES + 32 * rows.nbytes
     assert bound < c * c * 8 and peak < bound, peak
 
-    small = pdf.iloc[:300]
-    whole = simsearch._cosine_bucket_pairs(small, -2.0, None)  # one tile
-    assert len(whole) == 300 * 299 // 2
-    monkeypatch.setattr(simsearch, "_PAIR_TILE_BYTES", 8 * 300 * 7)
-    pd.testing.assert_frame_equal(
-        simsearch._cosine_bucket_pairs(small, -2.0, None), whole)
+    keep_all = ps._replace(keep=lambda v: np.ones(v.shape, dtype=bool))
+
+    def tiled(anchors):  # every pair of the first 300 rows, `anchors` per tile
+        monkeypatch.setattr(textops, "_PAIR_TILE_BYTES",
+                            (keep_all.pair_bytes + 2) * 299 * anchors)
+        return textops._expand_bucket(ids[:300], rows[:300], keep_all, None)
+
+    whole = tiled(299)  # one tile
+    assert len(whole[0]) == 300 * 299 // 2
+    for got, want in zip(tiled(7), whole):
+        assert got.dtype == want.dtype and np.array_equal(got, want, equal_nan=True)
+
+
+def test_uncapped_cosine_bucket_memory(monkeypatch):
+    rng = np.random.default_rng(3)
+    sigs = list(rng.normal(size=(4096, 16)))
+    _check_bucket_memory(monkeypatch, simsearch._cosine_score(0.99), sigs)
+
+
+def test_uncapped_minhash_bucket_memory(monkeypatch):
+    rng = np.random.default_rng(4)
+    # few distinct values: unrelated rows share some entries, so the
+    # estimates vary and the tiled-vs-one-tile check compares real values
+    sigs = list(rng.integers(0, 8, size=(4096, 16)))
+    _check_bucket_memory(monkeypatch, textops._minhash_score(16, 0.99), sigs)
+
+
+def test_uncapped_simhash_bucket_memory(monkeypatch):
+    rng = np.random.default_rng(5)
+    sigs = list(rng.integers(0, 1 << 60, size=4096))
+    _check_bucket_memory(monkeypatch, textops._simhash_score(3), sigs)
