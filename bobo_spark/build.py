@@ -68,6 +68,16 @@ POSTINGS_SCHEMA = (
     "doc_bytes binary, tf_bytes binary, dl_bytes binary, lang_bytes binary, "
     "ts_bytes binary, pos_bytes binary, max_tf int, min_dl int"
 )
+SECTIONS_SCHEMA = "doc_id long, n_secs int, sec_bytes binary, segment long"
+# Spark schema of each catalog table a reader opens: a spark.read
+# given one skips the schema-inference job a bare read runs
+TABLE_SCHEMAS = {
+    "terms": "term string, df long, cf long, term_id long",
+    "postings": POSTINGS_SCHEMA,
+    "forward": ("segment long, doc_id long, doclen long, url string, "
+                "lang_ord long, ts_ord long"),
+    "sections": SECTIONS_SCHEMA,
+}
 
 
 def _small_table_pdf(paths, max_bytes: int = 64 << 20, columns=None):
@@ -811,10 +821,8 @@ def build_snapshot(
 
             sec_src = (docs.select("doc_id", "text") if have_text
                        else _docs_table().select("doc_id", "text"))
-            sec_src.mapInPandas(
-                to_sections,
-                schema="doc_id long, n_secs int, sec_bytes binary, segment long",
-            ).write.mode("overwrite").parquet(sections_path)
+            sec_src.mapInPandas(to_sections, schema=SECTIONS_SCHEMA) \
+                .write.mode("overwrite").parquet(sections_path)
             mark("sections")
 
         # ---- pair source (both pipelines): (doc_id, text, ords, segment) ----

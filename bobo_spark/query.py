@@ -44,9 +44,10 @@ Execution model (the Spark rendition of SURVEY.md §3.1):
 * One merge (``IndexReader._merge``) serves ``search``,
   ``search_many`` and ``search_df``: one (score desc, doc_id asc)
   lexsort for the page (≙ sort/SortCollectorImpl.java:354-368 +
-  util/ListMerger.java:104-137) and the facet count vectors with
-  values ordered by (count desc, value rank)
-  (≙ facets/CombinedFacetAccessible.java:101-192).
+  util/ListMerger.java:104-137), one (doc_id, part) lexsort for the
+  explanation rows, and ``_facet_frame``'s (count desc, value rank)
+  order (≙ facets/CombinedFacetAccessible.java:101-192), which MatchAll
+  and collectAll facets share. No pandas sort or merge.
 
 Pruning (every path, once per store — so the driver paths get one
 global θ):
@@ -74,6 +75,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import bm25
+from .build import TABLE_SCHEMAS
 from .catalog import IndexCatalog, Snapshot, read_table_arrow, read_table_pdf
 from .codecs import vb_decode
 from .tokenizer import tokenize
@@ -125,11 +127,15 @@ class SearchRequest:
 
 @dataclass
 class SearchResult:
-    hits: pd.DataFrame  # doc_id, score (page: offset..offset+k)
+    """One search answer. Row order is part of the contract, the same
+    on every path: ``hits`` by score desc, then doc_id asc; each facet
+    frame by count desc, then value asc; ``explanations`` by doc_id
+    asc, then part asc (code-point order)."""
+    hits: pd.DataFrame  # doc_id int64, score float64 (page: offset..offset+k)
     num_hits: int
-    facets: dict  # field -> pd.DataFrame(value, count) count-desc, value-asc
-    # explain=True only: (doc_id, part, value); part = term or
-    # 'recency_boost'
+    facets: dict  # field -> pd.DataFrame(value object, count int64)
+    # explain=True only: (doc_id int64, part object, value float64);
+    # part = term, 'phrase' or 'recency_boost'
     explanations: pd.DataFrame | None = None
 
 
@@ -653,7 +659,8 @@ def _score_plan(plan: dict, st: _BlockStore,
         if rec:
             ex.append((sel_docs, "recency_boost", _recency_factor(doc_ts[cpos], rec)))
         out.expl = (np.concatenate([d for d, _, _ in ex]),
-                    np.array([s for d, s, _ in ex for _ in range(d.size)], dtype=object),
+                    np.repeat(np.array([s for _, s, _ in ex], dtype=object),
+                              [d.size for d, _, _ in ex]),
                     np.concatenate([v for _, _, v in ex]))
     return out
 
@@ -796,14 +803,12 @@ class IndexReader:
             raise ValueError(f"no published snapshot in {index_dir}")
         self.n_docs = self.snap.stats["n_docs"]
         self.avgdl = self.snap.stats["avgdl"]
-        self._terms = self.spark.read.parquet(*self.catalog.table_paths(self.snap, "terms"))
-        self._postings_full = self.spark.read.parquet(
-            *self.catalog.table_paths(self.snap, "postings"))
+        self._terms = self._read("terms")
+        self._postings_full = self._read("postings")
         # non-phrase queries never read the positions stream — keep the
         # hot cache pruned so it pins only the scoring columns
-        self._postings = self._postings_full.drop("pos_bytes") \
-            if "pos_bytes" in self._postings_full.columns else self._postings_full
-        self._forward = self.spark.read.parquet(*self.catalog.table_paths(self.snap, "forward"))
+        self._postings = self._postings_full.drop("pos_bytes")
+        self._forward = self._read("forward")
         # in-driver block cache (lazy; see _postings_driver): exact
         # cost gate from the published token count
         self._store = None
@@ -905,6 +910,12 @@ class IndexReader:
             }
             self._deleted_bc = self.spark.sparkContext.broadcast(seg_map)
 
+    def _read(self, table: str) -> DataFrame:
+        """This snapshot's files of a catalog table, read with the
+        table's declared schema (no schema-inference Spark job)."""
+        return self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(
+            *self.catalog.table_paths(self.snap, table))
+
     def _index_terms(self, terms: pd.DataFrame) -> None:
         """Build the per-reader term → (term_id, df) lookup (facet
         sentinels included) from a (term, term_id, df) frame."""
@@ -945,26 +956,19 @@ class IndexReader:
         straight from the facet dictionary's df stats — ZERO index scan
         (≙ FacetCountCollector.collectAll over dataCache.freqs,
         facets/impl/SimpleFacetHandler.java:222-225 +
-        api/BoboSubBrowser.java:59-64)."""
+        api/BoboSubBrowser.java:59-64). Every dictionary value is
+        listed, count 0 included."""
         if self._deletes_df is not None:
             # tombstones present: the dictionary df stats still count
-            # deleted docs — fall back to a real (anti-joined) count.
-            # LEFT-merge from the dictionary so values whose every doc
-            # is deleted still appear (count 0), matching the
-            # no-deletes path's value universe.
+            # deleted docs — fall back to a real (anti-joined) count;
+            # values whose every doc is deleted keep count 0
             col = self._ORD_COL[field]
             cnt = (self._not_deleted(self._forward)
-                   .groupBy(col).count().toPandas()
-                   .rename(columns={col: "ordinal"}))
-            d = self.dicts[field][["ordinal", "value"]].merge(
-                cnt, on="ordinal", how="left")
-            d["count"] = d["count"].fillna(0).astype("int64")
-            d = d[["value", "count"]]
+                   .groupBy(col).count().toPandas())
+            counts = np.bincount(cnt[col].to_numpy(np.int64), weights=cnt["count"])
         else:
-            d = self.dicts[field][["value", "df"]].rename(columns={"df": "count"})
-            d = d.astype({"count": "int64"})
-        return d.sort_values(["count", "value"], ascending=[False, True],
-                             ignore_index=True)
+            counts = np.bincount(self._facet[field][1], weights=self.dicts[field]["df"])
+        return self._facet_frame(field, counts, keep_zero=True)
 
     # ---------------------------------------------------------------- planning
 
@@ -1125,8 +1129,7 @@ class IndexReader:
         """Plan-time guard: a phrase/section query against an index
         built with store_positions=False must fail on the DRIVER with
         the real reason, not as a pandas KeyError inside an executor."""
-        if ("pos_bytes" not in self._postings_full.columns
-                or not self.snap.stats.get("store_positions", True)):
+        if not self.snap.stats.get("store_positions", True):
             raise ValueError(
                 "index built with store_positions=False cannot serve "
                 "phrase queries (no positions stream)")
@@ -1146,35 +1149,39 @@ class IndexReader:
         CombinedFacetAccessible, util/ListMerger.java:104-137,
         facets/CombinedFacetAccessible.java:101-192): one (score desc,
         doc_id asc) lexsort for the page — the union of per-segment
-        top-ks on the distributed path — and facet count vectors
-        ordered by (count desc, value rank)."""
+        top-ks on the distributed path — facet count vectors ordered
+        by (count desc, value rank) and one (doc_id, part) lexsort for
+        the page's explanation rows."""
         o = out if out is not None else _SegOut(0)
         page = np.lexsort((o.docs, -o.scores))[req.offset:req.offset + req.k]
-        hits = pd.DataFrame({"doc_id": o.docs[page], "score": o.scores[page]})
+        hits = pd.DataFrame({"doc_id": o.docs[page], "score": o.scores[page]}, copy=False)
         facets = {f: self._facet_frame(f, o.facets.get(f)) for f in req.facets}
         explanations = None
         if req.explain:
             d, part, v = (o.expl if o.expl is not None
                           else (_NO_DOCS, np.zeros(0, object), _NO_SCORES))
-            keep = np.isin(d, o.docs[page])
-            explanations = pd.DataFrame({
-                "doc_id": d[keep], "part": part[keep], "value": v[keep],
-            }).sort_values(["doc_id", "part"], ignore_index=True)
+            keep = np.flatnonzero(np.isin(d, o.docs[page]))
+            keep = keep[np.lexsort((part[keep], d[keep]))]
+            explanations = pd.DataFrame(
+                {"doc_id": d[keep], "part": part[keep], "value": v[keep]}, copy=False)
         return SearchResult(hits=hits, num_hits=int(o.n_hits),
                             facets=facets, explanations=explanations)
 
-    def _facet_frame(self, f: str, counts: np.ndarray | None) -> pd.DataFrame:
-        """(value, count) of one facet from its count vector: values
-        with a dictionary entry and a nonzero count, count desc, value
-        asc."""
+    def _facet_frame(self, f: str, counts: np.ndarray | None,
+                     keep_zero: bool = False) -> pd.DataFrame:
+        """(value, count) of one facet from its count vector (indexed
+        by ordinal; any numeric dtype, counts cast to int64), count
+        desc, value asc: values with a dictionary entry and a nonzero
+        count, or every dictionary value with ``keep_zero``. Serves
+        keyword, MatchAll and collectAll facets."""
         vals, _ords, _row_of, row, rank = self._facet[FACET_FIELDS[f]]
         tot = np.zeros(rank.size, dtype=np.int64)
         if counts is not None:
             n = min(counts.size, tot.size)
             tot[:n] = counts[:n]
-        o = np.flatnonzero((tot > 0) & (rank >= 0))
+        o = np.flatnonzero((rank >= 0) if keep_zero else (tot > 0) & (rank >= 0))
         o = o[np.lexsort((rank[o], -tot[o]))]
-        return pd.DataFrame({"value": vals[row[o]], "count": tot[o]})
+        return pd.DataFrame({"value": vals[row[o]], "count": tot[o]}, copy=False)
 
     # ----------------------------------------------- MatchAll / selection-only
 
@@ -1226,19 +1233,15 @@ class IndexReader:
                     # anti-joined counts sum to the live-doc total
                     num_hits = int(facets[f]["count"].sum())
                 continue
-            cnt = (
-                hitset(others).groupBy(self._ORD_COL[f]).count().toPandas()
-                .rename(columns={self._ORD_COL[f]: "ordinal"})
-            )
+            col = self._ORD_COL[f]
+            cnt = hitset(others).groupBy(col).count().toPandas()
             if num_hits is None and set(others) == set(preds):
                 # this facet's filter set IS the full selection set —
-                # its raw ordinal counts (pre dictionary merge, so
-                # nothing is dropped) sum to num_hits
+                # its raw ordinal counts (before the dictionary lookup,
+                # so nothing is dropped) sum to num_hits
                 num_hits = int(cnt["count"].sum())
-            d = self.dicts[f][["ordinal", "value"]]
-            part = cnt.merge(d, on="ordinal")
-            part = part.sort_values(["count", "value"], ascending=[False, True])
-            facets[f] = part[["value", "count"]].reset_index(drop=True)
+            facets[f] = self._facet_frame(
+                f, np.bincount(cnt[col].to_numpy(np.int64), weights=cnt["count"]))
         need = req.offset + req.k
         if num_hits is None:
             # ONE scan for page + count: per-partition partials keep a
@@ -1311,8 +1314,7 @@ class IndexReader:
         if not segs:
             return self.spark.createDataFrame(
                 [], "doc_id long, term string, tf long, positions string")
-        has_pos = ("pos_bytes" in self._postings_full.columns
-                   and self.snap.stats.get("store_positions", True))
+        has_pos = self.snap.stats.get("store_positions", True)
         src = self._postings_full if has_pos else self._postings
         blocks = src.where(F.col("segment").isin(segs))
         ids_arr = np.array(ids, dtype=np.int64)
@@ -1387,8 +1389,7 @@ class IndexReader:
 
     def _sections_table(self) -> DataFrame:
         if getattr(self, "_sections_df", None) is None:
-            self._sections_df = self.spark.read.parquet(
-                *self.catalog.table_paths(self.snap, "sections"))
+            self._sections_df = self._read("sections")
         return self._sections_df
 
     def _section_outputs(self, plan: dict) -> DataFrame:

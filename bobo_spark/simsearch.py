@@ -52,12 +52,22 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     )
 
 
+def _nonzero_vectors(df: DataFrame, vec_col: str) -> DataFrame:
+    """The rows of ``df`` whose vector has a nonzero norm: a zero
+    vector has no cosine, so it pairs with nothing (the near-dup
+    operators' shared rule; the DuckDB oracle's division by zero
+    yields NULL and drops those pairs the same way)."""
+    return df.where(_norm(_dvec(F.col(vec_col))) > 0)
+
+
 def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
                          id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact embedding near-duplicate pairs (cosine >= threshold).
+    A zero vector pairs with nothing (see ``_nonzero_vectors``).
 
     O(N^2) oracle variant — use lsh_buckets + within-bucket pairs at
     corpus scale."""
+    df = _nonzero_vectors(df, vec_col)
     a = df.select(F.col(id_col).alias("id_a"), _dvec(F.col(vec_col)).alias("va"))
     b = df.select(F.col(id_col).alias("id_b"), _dvec(F.col(vec_col)).alias("vb"))
     cos = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
@@ -81,6 +91,8 @@ def cosine_neardup_pairs_lsh(df: DataFrame, dim: int, threshold: float = 0.95,
     ``max_bucket_size`` caps a degenerate bucket via min-id
     representative pairing (same policy and default as the textops
     operators, see ``textops._expand_bucket``; None = exact uncapped).
+    A zero vector pairs with nothing (see ``_nonzero_vectors``), as in
+    ``cosine_neardup_pairs``.
 
     Candidate pairs are generated and scored inside the shared
     ``textops._banded_pairs`` kernel (one band, band 0) instead of a
@@ -94,7 +106,7 @@ def cosine_neardup_pairs_lsh(df: DataFrame, dim: int, threshold: float = 0.95,
     authoritative ``round(cos,4) >= threshold`` filter stays a Spark
     expression (oracle-verified)."""
     planes = hyperplanes(dim, n_planes, seed)
-    banded = _spread(df).select(
+    banded = _nonzero_vectors(_spread(df), vec_col).select(
         F.col(id_col).alias("id"),
         _dvec(F.col(vec_col)).alias("sig"),
         F.lit(0).alias("band"),

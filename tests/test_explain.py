@@ -7,19 +7,27 @@ factor."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from bobo_spark.build import BuildConfig, build_snapshot
 from bobo_spark.query import IndexReader, SearchRequest
+from bobo_spark.tokenizer import tokenize
 from bobo_spark.webgen import webpages
+from conftest import QUERY_PATHS, path_readers
 
 
 @pytest.fixture(scope="module")
-def reader(spark, tmp_path_factory):
+def index_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_expl"))
     build_snapshot(spark, webpages(spark, 700, 4), d,
                    BuildConfig(docs_per_segment=175))
-    return IndexReader(spark, d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def reader(spark, index_dir):
+    return IndexReader(spark, index_dir)
 
 
 def _check_exact(res, with_recency=False):
@@ -47,13 +55,15 @@ def test_explanations_reproduce_scores(reader, mode):
     _check_exact(res)
 
 
-def test_explanations_with_recency(reader):
-    import pandas as pd
-
+def _recency(reader) -> dict:
     d = reader.dicts["ts_bucket"]
     now_ms = int(pd.to_datetime(d["value"], utc=True).astype("int64").max()
                  // 1_000_000) + 86400000
-    rec = {"now_ms": now_ms, "cutoff_ms": 60 * 86400000, "max_factor": 2.0}
+    return {"now_ms": now_ms, "cutoff_ms": 60 * 86400000, "max_factor": 2.0}
+
+
+def test_explanations_with_recency(reader):
+    rec = _recency(reader)
     res = reader.search(SearchRequest(query="ba be", mode="or", k=10,
                                       recency=rec, explain=True))
     assert len(res.hits)
@@ -81,7 +91,57 @@ def test_batch_explanations_match_single(reader):
             SearchRequest(query="ba be", mode="and", k=5)]
     batch = reader.search_many(reqs)
     single = reader.search(reqs[0])
-    import pandas as pd
     pd.testing.assert_frame_equal(batch[0].explanations,
                                   single.explanations)
     assert batch[1].explanations is None
+
+
+def _explain_requests(spark, reader):
+    """AND, OR with recency and phrase explain requests; the phrase is
+    the first two tokens of doc 0, so it matches at least once."""
+    text = webpages(spark, 700, 4).where("doc_id = 0").first()["text"]
+    return [
+        SearchRequest(query="ba be", mode="and", k=10, offset=2,
+                      facets=("lang",), explain=True),
+        SearchRequest(query="ba be ka", mode="or", k=10, facets=("ts_bucket",),
+                      recency=_recency(reader), explain=True),
+        SearchRequest(query=" ".join(tokenize(text)[:2]), mode="phrase",
+                      k=10, explain=True),
+    ]
+
+
+def test_explanations_same_on_every_path(spark, index_dir, reader):
+    """Explanation frames are identical on the cache, scan and
+    distributed paths, ordered by (doc_id, part) with part in
+    code-point order."""
+    readers = path_readers(spark, index_dir)
+    for req in _explain_requests(spark, reader):
+        want = readers["cache"].search(req).explanations
+        assert len(want), req
+        assert want.dtypes.tolist() == [np.int64, object, np.float64]
+        keys = list(zip(want["doc_id"].tolist(), want["part"].tolist()))
+        assert keys == sorted(keys), req
+        for path in QUERY_PATHS[1:]:
+            pd.testing.assert_frame_equal(readers[path].search(req).explanations,
+                                          want, obj=f"{path} {req}")
+
+
+def test_cached_shaping_uses_no_pandas_sort_or_merge(spark, reader, monkeypatch):
+    """A cached search or search_many with explanations and facets
+    shapes its frames from arrays: no DataFrame.sort_values or
+    DataFrame.merge call."""
+    reqs = _explain_requests(spark, reader)
+    want = [reader.search(r) for r in reqs]
+    assert reader._postings_driver() is not None
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("pandas sort/merge on the cached search path")
+
+    monkeypatch.setattr(pd.DataFrame, "sort_values", forbidden)
+    monkeypatch.setattr(pd.DataFrame, "merge", forbidden)
+    got = [reader.search(r) for r in reqs] + reader.search_many(reqs)
+    monkeypatch.undo()
+    for g, w in zip(got, want + want):
+        pd.testing.assert_frame_equal(g.explanations, w.explanations)
+        for f in w.facets:
+            pd.testing.assert_frame_equal(g.facets[f], w.facets[f])

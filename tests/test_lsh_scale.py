@@ -214,3 +214,30 @@ def test_uncapped_simhash_bucket_memory(monkeypatch):
     rng = np.random.default_rng(5)
     sigs = list(rng.integers(0, 1 << 60, size=4096))
     _check_bucket_memory(monkeypatch, textops._simhash_score(3), sigs)
+
+
+def test_zero_vectors_pair_with_nothing(spark):
+    """A zero vector has no cosine and pairs with nothing: the exact
+    and the (uncapped) LSH near-dup operators agree on 40 4-dim
+    vectors with 3 zero rows, and neither raises."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    V = rng.normal(size=(40, 4))
+    V[:3] = 0.0
+    V[[10, 11, 12]] = V[5] * np.array([[2.0], [3.0], [0.5]])
+    V[[20, 21]] = V[15] * np.array([[4.0], [1.5]])
+    df = spark.createDataFrame([(i, V[i].tolist()) for i in range(40)],
+                               "vec_id long, embedding array<double>")
+    key = ["id_a", "id_b"]
+    exact = simsearch.cosine_neardup_pairs(df, threshold=0.99).toPandas() \
+        .sort_values(key, ignore_index=True)
+    lsh = simsearch.cosine_neardup_pairs_lsh(
+        df, dim=4, threshold=0.99, n_planes=4, max_bucket_size=None).toPandas() \
+        .sort_values(key, ignore_index=True)
+    pd.testing.assert_frame_equal(lsh, exact)
+    planted = {(a, b) for g in ([5, 10, 11, 12], [15, 20, 21])
+               for a in g for b in g if a < b}
+    got = set(zip(exact["id_a"], exact["id_b"]))
+    assert planted <= got
+    assert not any(a < 3 or b < 3 for a, b in got)
