@@ -1047,13 +1047,11 @@ def queries() -> dict[str, _T]:
         "facet_path_region": _q_facet_path_region,
         "facet_groupby_flag_status": _q_facet_groupby,
         "facet_buckets_priority": _q_facet_buckets,
-        "facet_filtered_range": _q_filtered_range,
         "facet_multirange_toklen": _q_multirange,
         "facet_attributes": _q_facet_attributes,
         "facet_dynamic_timerange": _q_facet_dyntime,
         # --- r5 round-robin rotations back IN (evidence was 1 round old)
         "facet_geo_box": _q_facet_geo_box,
-        "browse_facet_term_query": _q_browse_facet_term_q,
         "map_reduce_hook": _q_map_reduce,
         # --- LLM-pipeline scale paths
         "dedup_minhash_lsh": _q_dedup_minhash,
@@ -1061,6 +1059,9 @@ def queries() -> dict[str, _T]:
         "simsearch_neardup_lsh": _q_sim_neardup_lsh,
         # exact twin of simsearch_neardup_lsh (same zero-vector rule)
         "simsearch_neardup_pairs": _q_sim_neardup,
+        # exact and LSH top-k (zero vectors are never ranked)
+        "simsearch_topk_cosine": _q_simsearch,
+        "simsearch_lsh_topk": _q_simsearch_lsh,
         "simsearch_lsh_topk_indexed": _q_simsearch_lsh_indexed,
         "simsearch_ivf_topk": _q_simsearch_ivf,
         # ================= driver window ends here (entry 50) =========
@@ -1072,6 +1073,12 @@ def queries() -> dict[str, _T]:
         # All 67 were re-verified against the DuckDB oracle locally
         # in r6 (optimization round; window order deliberately frozen).
         # Ledger: WINDOW.md.
+        # range-handler sibling facet_range_nchars stays inside
+        # (rotated out for simsearch_topk_cosine, whose operator changed)
+        "facet_filtered_range": _q_filtered_range,
+        # facet-query sibling browse_boolean_facet_query (FacetTermQuery
+        # clauses) stays inside (rotated out for simsearch_lsh_topk)
+        "browse_facet_term_query": _q_browse_facet_term_q,
         # path-handler sibling facet_path_region stays inside (rotated
         # out for simsearch_neardup_pairs, whose operator changed)
         "facet_path_multival": _q_facet_path_multival,
@@ -1082,7 +1089,6 @@ def queries() -> dict[str, _T]:
         "facet_geo_distance": _q_facet_geo_distance,
         "token_counts": _q_token_counts,
         "dedup_exact": _q_dedup_exact,
-        "simsearch_topk_cosine": _q_simsearch,
         "multimodal_features": _q_multimodal,
         "sessionize_events": _q_sessionize,
         "dedup_ngram_jaccard": _q_dedup_jaccard,
@@ -1091,7 +1097,6 @@ def queries() -> dict[str, _T]:
         "simhash64": _q_simhash,
         "quality_scores": _q_quality,
         "langid": _q_langid,
-        "simsearch_lsh_topk": _q_simsearch_lsh,
         "multimodal_frame_sample": _q_multimodal_frames,
         "multimodal_resize": _q_multimodal_resize,
     }

@@ -12,20 +12,21 @@ the north rule's "resumable from Iceberg snapshot checkpoints"):
 2. ``terms``    — global term dictionary (df, cf) + dense ``term_id``
    assigned by distributed two-pass sorted rank (lexicographic on
    first build; new terms append after parent max id → old postings
-   never invalidated). Default (segment_local) pipeline counts terms
-   straight off the tokenizer with map-side partials; the classic
-   pipeline first materializes a ``pairs`` table (Arrow-vectorized
-   tokenize → (doc_id, term, packed, segment) rows incl. facet
-   sentinel pairs "\\x00field:ord" for the AdaptiveFacetFilter-style
-   inverted access path) and aggregates that.
-3. ``postings`` — segment_local (default): ONE wide shuffle of the
-   raw text by doc range (driver-computed identity partition keys —
-   no boundary-sampling pass when doc ids are dense), then tokenize +
+   never invalidated). Terms are counted straight off the tokenizer
+   with map-side partials, facet sentinel terms "\\x00field:ord"
+   included (the AdaptiveFacetFilter-style inverted access path for
+   selections).
+3. ``postings`` — while the dictionary fits
+   ``broadcast_terms_threshold``: ONE wide shuffle of the raw text by
+   doc range (driver-computed identity partition keys — no
+   boundary-sampling pass when doc ids are dense), then tokenize +
    broadcast term-id map + packed-key sort + block encode inside each
    partition; per-doc forward data rides as pseudo runs (term_id=-1).
-   Classic: pairs ⋈ terms → ``repartitionByRange(segment, term_id,
-   doc_id)`` (sampled boundaries split a Zipf head term by doc range)
-   → ``sortWithinPartitions`` → block encoder. Both emit the same
+   Past it (web-scale dictionaries): a materialized ``pairs`` table
+   (tokenize → (doc_id, term, packed, segment) rows incl. sentinel
+   pairs) ⋈ terms → ``repartitionByRange(segment, term_id, doc_id)``
+   (sampled boundaries split a Zipf head term by doc range) →
+   ``sortWithinPartitions`` → block encoder. Both emit the same
    self-contained blocks (docID-delta varbyte + tf/doclen/facet
    streams + block-max metadata): scoring and facet counting need no
    query-time joins.
@@ -50,16 +51,17 @@ from __future__ import annotations
 
 import math
 import os
-import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .catalog import IndexCatalog, Snapshot, read_table_pdf, write_table_pdf
-from .codecs import (binary_array, binary_parts, compact_binary,
-                     empty_binary_array, vb_encode_segmented)
+from .catalog import (IndexCatalog, Snapshot, StageClock, read_table_arrow,
+                      read_table_pdf, write_table_pdf)
+from .codecs import (_rebase_docs, binary_array, binary_parts, compact_binary,
+                     empty_binary_array, vb_decode, vb_encode_segmented)
 from .extract import extract_text
 from .tokenizer import term_freq_frame
 
@@ -78,6 +80,12 @@ TABLE_SCHEMAS = {
                 "lang_ord long, ts_ord long"),
     "sections": SECTIONS_SCHEMA,
 }
+
+
+def read_table(spark: SparkSession, table: str, paths: list[str]) -> DataFrame:
+    """A catalog table's files read with its declared schema
+    (``TABLE_SCHEMAS``): no schema-inference job."""
+    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(*paths)
 
 
 def _small_table_pdf(paths, max_bytes: int = 64 << 20, columns=None):
@@ -105,7 +113,13 @@ class BuildConfig:
     docs_per_segment: int = 25_000
     block_size: int = 128
     rows_per_posting_partition: int = 2_000_000  # (term,doc) pairs per shuffle partition
-    broadcast_terms_threshold: int = 2_000_000  # broadcast dictionary below this
+    # postings: a dictionary of at most this many terms is broadcast
+    # and the text takes ONE doc-range shuffle, tokenized + encoded
+    # inside each partition (~5× fewer shuffle bytes than exploded
+    # pairs; forward doclen saturates at 65535, the clamp BM25 scoring
+    # uses). A larger dictionary materializes the (doc, term) pair
+    # table and range-shuffles it on (segment, term_id, doc_id).
+    broadcast_terms_threshold: int = 2_000_000
     ts_bucket: str = "day"
     # store per-posting token positions (delta varbyte; the positions
     # stream Lucene keeps for PhraseQuery). Off => pos_bytes empty and
@@ -122,25 +136,6 @@ class BuildConfig:
     #                        per-occurrence section payloads
     #                        (search/section/TermNode.java:55-63).
     sections: tuple | None = None
-    # posting construction pipeline:
-    #   "pairs"         — classic: tokenize → materialized (doc,term)
-    #                     pair table → range shuffle on (segment,
-    #                     term_id, doc_id) → encode. Resumable at the
-    #                     pair level; works for any dictionary size.
-    #   "segment_local" — one wide shuffle of the RAW TEXT by doc
-    #                     range; tokenize + term-id map (broadcast
-    #                     dictionary) + sort + encode happen inside
-    #                     each partition. Shuffles ~5× fewer bytes
-    #                     (text instead of exploded pairs+positions)
-    #                     and never materializes the pair table
-    #                     (~30% faster measured at 50k docs);
-    #                     requires the term dictionary to fit the
-    #                     broadcast threshold (raises otherwise).
-    #                     Forward doclen saturates at 65535 (the same
-    #                     clamp BM25 scoring uses).
-    #   "auto"          — segment_local while the dictionary fits
-    #                     broadcast_terms_threshold, else pairs.
-    pipeline: str = "auto"
 
 
 def _segment_col(cfg: BuildConfig):
@@ -437,7 +432,7 @@ def _encode_partition(batches, block_size: int):
     yield res
 
 
-# ----------------------------------------------- segment-local pipeline (v2)
+# ------------------------------------- terms + broadcast-dictionary postings
 
 
 def _sentinel_stats(pdf: pd.DataFrame) -> list[pd.DataFrame]:
@@ -469,11 +464,11 @@ def _distinct_pair_codes(rows: np.ndarray, codes: np.ndarray,
 
 
 def _term_stats_partial(batches):
-    """Pass 1 of the segment-local pipeline: per-batch (term, df, cf)
-    partials (text terms + facet sentinels). Map-side pre-aggregation:
+    """The terms stage's per-batch (term, df, cf) partials (text
+    terms + facet sentinels). Map-side pre-aggregation:
     the global dictionary then costs one tiny groupBy over ~vocab rows
     per partition instead of a full pair shuffle. Positions are NOT
-    computed here — pass 1 only needs counts."""
+    computed here — the dictionary only needs counts."""
     from .tokenizer import flat_token_codes
 
     for pdf in batches:
@@ -497,7 +492,7 @@ def _term_stats_partial(batches):
 
 
 def _encode_segment_local(batches, cfg: BuildConfig, tmap_bc):
-    """Pass 2 of the segment-local pipeline: consume one doc-range
+    """Postings under the broadcast gate: consume one doc-range
     partition of RAW DOCS, tokenize (with positions), resolve term ids
     against the broadcast dictionary, in-memory lexsort by (segment,
     term_id, doc_id), and emit posting blocks via the shared block
@@ -609,24 +604,14 @@ def _encode_segment_local(batches, cfg: BuildConfig, tmap_bc):
 def _decode_forward_runs(batches):
     """Decode the pseudo forward runs (term_id = -1) back into per-doc
     (doc_id, doclen) rows — one vectorized pass per partition."""
-    from .codecs import vb_decode as _vbd
-
     for pdf in batches:
         if not len(pdf):
             continue
         pdf = pdf.sort_values(["segment", "first_doc"])
-        nds = pdf["n_docs"].to_numpy(np.int64)
-        firsts = pdf["first_doc"].to_numpy(np.int64)
-        total = int(nds.sum())
-        starts = np.cumsum(nds) - nds
-        deltas = _vbd(b"".join(pdf["doc_bytes"])).astype(np.int64)
-        vals = np.zeros(total, dtype=np.int64)
-        mask = np.ones(total, dtype=bool)
-        mask[starts] = False
-        vals[mask] = deltas
-        cums = np.cumsum(vals)
-        docs = cums - np.repeat(cums[starts], nds) + np.repeat(firsts, nds)
-        dl = _vbd(b"".join(pdf["dl_bytes"])).astype(np.int64)
+        deltas = vb_decode(b"".join(pdf["doc_bytes"])).astype(np.int64)
+        docs = _rebase_docs(deltas, pdf["n_docs"].to_numpy(np.int64),
+                            pdf["first_doc"].to_numpy(np.int64))
+        dl = vb_decode(b"".join(pdf["dl_bytes"])).astype(np.int64)
         yield pd.DataFrame({"doc_id": docs, "doclen": dl})
 
 
@@ -650,6 +635,49 @@ def _identity_partition_keys(spark: SparkSession, n_parts: int) -> list[int]:
             found.setdefault(r["p"], r["k"])
         base += n_parts * 20
     return [found[i] for i in range(n_parts)]
+
+
+def _doc_range_repartition(df: DataFrame, n_parts: int, stats: dict,
+                           live: int, fallback: tuple[str, ...],
+                           monotone: bool = True) -> DataFrame:
+    """``df`` shuffled into ``n_parts`` contiguous doc_id ranges.
+
+    Dense ids (``stats``' doc_min..doc_max span ≤ 2·``live`` docs) get
+    arithmetic boundaries placed by identity keys — repartitionByRange
+    would evaluate the whole child a second time just to sample
+    boundaries. Sparse or unknown id spaces fall back to sampled ranges
+    on the ``fallback`` columns, and so does a table whose segment is
+    not ``monotone`` in doc_id (then a doc range would not keep the
+    (segment, doc_id) range layout)."""
+    dmin, dmax = stats.get("doc_min"), stats.get("doc_max")
+    span = (dmax - dmin + 1) if dmin is not None else None
+    if not (monotone and span and span <= 2 * max(1, live)):
+        return df.repartitionByRange(n_parts, *fallback)
+    keys = _identity_partition_keys(df.sparkSession, n_parts)
+    part = F.floor((F.col("doc_id") - F.lit(dmin)) * F.lit(n_parts)
+                   / F.lit(span)).cast("int")
+    pk = F.element_at(F.array(*[F.lit(k) for k in keys]), part + 1)
+    return df.withColumn("_pk", pk).repartition(n_parts, "_pk").drop("_pk")
+
+
+def _write_meta(spark: SparkSession, sid: int, postings_path: str,
+                meta_path: str) -> None:
+    """Per-segment lineage of a postings table: rows, bytes, term
+    count and an xxhash64 checksum. Pseudo forward runs (term_id = -1)
+    are storage detail, not postings, so the counts are the same on
+    both postings paths."""
+    (read_table(spark, "postings", [postings_path])
+     .where(F.col("term_id") >= 0)
+     .groupBy("segment")
+     .agg(F.sum("n_docs").alias("rows"),
+          F.sum(F.length("doc_bytes") + F.length("tf_bytes")
+                + F.length("dl_bytes") + F.length("lang_bytes")
+                + F.length("ts_bytes")).alias("bytes"),
+          F.countDistinct("term_id").alias("n_terms"),
+          F.expr("bit_xor(xxhash64(term_id, first_doc, last_doc, "
+                 "n_docs))").alias("checksum"))
+     .withColumn("snapshot_id", F.lit(sid))
+     .write.mode("overwrite").parquet(meta_path))
 
 
 # ------------------------------------------------------------------ the build
@@ -690,16 +718,7 @@ def build_snapshot(
     if snap is None:
         snap = cat.begin_snapshot()
     sid = snap.snapshot_id
-    _stage_t = [time.time()]
-
-    def mark(name: str) -> None:
-        """mark_stage + wall-time profile: per-stage seconds land in
-        snap.stats['stage_secs'] (published with the manifest), the
-        raw material for scaling work — no separate profiler run."""
-        now = time.time()
-        snap.stats.setdefault("stage_secs", {})[name] = round(now - _stage_t[0], 2)
-        _stage_t[0] = now
-        cat.mark_stage(snap, name)
+    clock = StageClock(cat, snap)
 
     # text already a column => the doc table stays SLIM (ords + n_bytes,
     # no text rewrite — the pairs stage re-reads text from the caller's
@@ -744,8 +763,7 @@ def build_snapshot(
         )
         keep_text = [] if have_text else ["text"]
 
-        def _write_docs_table() -> float:
-            t0 = time.time()
+        def _write_docs_table() -> None:
             (
                 base.join(F.broadcast(lang_map), "lang")
                 .join(F.broadcast(ts_map), "ts_bucket")
@@ -754,7 +772,6 @@ def build_snapshot(
                 .write.mode("overwrite")
                 .parquet(docs_path)
             )
-            return time.time() - t0
 
         if have_text:
             # guide §2.6 (overlap independent jobs): with a text-bearing
@@ -764,31 +781,24 @@ def build_snapshot(
             # never docs_t, so the write runs concurrently with the
             # terms tokenize pass and its wall time disappears behind
             # it. html inputs keep the serial write (later stages read
-            # the extracted text FROM docs_t).
-            from concurrent.futures import ThreadPoolExecutor
-
+            # the extracted text FROM docs_t). The dict aggregation
+            # above is the docs stage's serial lead.
             docs_pool = ThreadPoolExecutor(max_workers=1)
-            # dict-aggregation wall up to the submit stays attributed to
-            # the docs stage (added to the write secs at join time)
-            docs_dict_secs = time.time() - _stage_t[0]
-            docs_fut = docs_pool.submit(_write_docs_table)
-            _stage_t[0] = time.time()  # next mark() times its own stage
+            docs_fut = clock.submit(docs_pool, _write_docs_table,
+                                    lead=clock.lap())
         else:
             _write_docs_table()
-            mark("docs")
+            clock.mark("docs")
 
     def _docs_table() -> DataFrame:
         """Join the overlapped doc-table write (if any) and read the
         table — called at the first point a stage needs docs_t."""
         nonlocal docs_pool, docs_fut
         if docs_fut is not None:
-            secs = docs_fut.result()  # re-raises a failed write loud
-            docs_fut = None
+            fut, docs_fut = docs_fut, None
+            clock.join("docs", fut)  # re-raises a failed write loud
             docs_pool.shutdown()
             docs_pool = None
-            snap.stats.setdefault("stage_secs", {})["docs"] = round(
-                docs_dict_secs + secs, 2)
-            cat.mark_stage(snap, "docs")
         return spark.read.parquet(docs_path)
 
     # Everything between the overlapped doc-table submit and the
@@ -823,9 +833,9 @@ def build_snapshot(
                        else _docs_table().select("doc_id", "text"))
             sec_src.mapInPandas(to_sections, schema=SECTIONS_SCHEMA) \
                 .write.mode("overwrite").parquet(sections_path)
-            mark("sections")
+            clock.mark("sections")
 
-        # ---- pair source (both pipelines): (doc_id, text, ords, segment) ----
+        # ---- text source: (doc_id, text, ords, segment) --------------------
         if have_text:
             # slim-docs path: ords/segment recomputed from the caller's
             # frame + broadcast dict maps — text is never rewritten
@@ -844,9 +854,7 @@ def build_snapshot(
         else:
             pair_src = _docs_table().select("doc_id", "text", "lang_ord", "ts_ord", "segment")
 
-        want_v2 = cfg.pipeline in ("auto", "segment_local")
-
-        # ---- stage: pairs (built lazily; classic pipeline / auto-fallback) ---
+        # ---- stage: pairs (built lazily; postings past the broadcast gate) --
         # (tf, doclen, lang_ord, ts_ord) are bit-packed into ONE long
         # (tf<<40 | dl<<24 | lang<<16 | ts) — halves the bytes moved
         # through the posting shuffle, the build's dominant memory/IO cost.
@@ -900,38 +908,29 @@ def build_snapshot(
             pairs_schema = "doc_id long, term string, packed long, segment long, pos_bytes binary"
             pair_src.mapInPandas(to_pairs, schema=pairs_schema).write.mode("overwrite").parquet(pairs_path)
 
-        _pairs_cache: list = []
-
         def ensure_pairs() -> DataFrame:
-            """Materialize the pair table on first need (classic pipeline,
-            or auto-fallback when the dictionary outgrows broadcast)."""
-            if not _pairs_cache:
-                if "pairs" not in snap.stages:
-                    build_pairs_table()
-                    mark("pairs")
-                _pairs_cache.append(spark.read.parquet(pairs_path))
-            return _pairs_cache[0]
+            """The pair table, materialized on first need (a dictionary
+            past ``broadcast_terms_threshold``)."""
+            if "pairs" not in snap.stages:
+                build_pairs_table()
+                clock.mark("pairs")
+            return spark.read.parquet(pairs_path)
 
         TF = F.shiftright("packed", 40)
 
         # ---- stage: terms ----------------------------------------------------
         terms_path = cat.table_path("terms", sid)
         if "terms" not in snap.stages:
-            if want_v2:
-                # pass 1: tokenize-and-count partials, one tiny shuffle of
-                # ~vocab rows per partition (no pair materialization)
-                delta_terms = (
-                    pair_src.mapInPandas(_term_stats_partial,
-                                         schema="term string, df long, cf long")
-                    .groupBy("term")
-                    .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                )
-            else:
-                delta_terms = ensure_pairs().groupBy("term").agg(
-                    F.count("*").alias("df"), F.sum(TF).alias("cf")
-                )
+            # tokenize-and-count partials, one tiny shuffle of ~vocab
+            # rows per partition (no pair materialization)
+            delta_terms = (
+                pair_src.mapInPandas(_term_stats_partial,
+                                     schema="term string, df long, cf long")
+                .groupBy("term")
+                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            )
             if parent is not None:
-                old = spark.read.parquet(*cat.table_paths(parent, "terms"))
+                old = read_table(spark, "terms", cat.table_paths(parent, "terms"))
                 merged = (
                     delta_terms.join(old.withColumnsRenamed({"df": "df0", "cf": "cf0"}), "term", "full")
                     .select(
@@ -956,7 +955,7 @@ def build_snapshot(
                     write_table_pdf(full, terms_path)
                 else:
                     full.write.mode("overwrite").parquet(terms_path)
-            mark("terms")
+            clock.mark("terms")
 
     except BaseException as exc:
         if docs_fut is not None:
@@ -970,7 +969,7 @@ def build_snapshot(
             docs_pool.shutdown()
         raise
 
-    terms = spark.read.parquet(terms_path)
+    terms = read_table(spark, "terms", [terms_path])
     # serialization point for the overlapped doc-table write: stats and
     # forward both consume docs_t
     docs_t = _docs_table()
@@ -1023,10 +1022,13 @@ def build_snapshot(
                     else None),
             }
         )
-        mark("stats")
+        clock.mark("stats")
 
     # ---- stage: postings -------------------------------------------------
     postings_path = cat.table_path("postings", sid)
+    # the broadcast gate picks the postings path; the forward stage
+    # reads the matching doclen source, also on a resume
+    use_pairs = snap.stats["n_terms"] > cfg.broadcast_terms_threshold
     if "postings" not in snap.stages:
         # pair count ≈ distinct (doc,term) ≤ token count — stats are
         # already on the manifest, no extra count job
@@ -1035,54 +1037,24 @@ def build_snapshot(
             spark.sparkContext.defaultParallelism,
             math.ceil(n_pairs / cfg.rows_per_posting_partition),
         )
-        n_terms = snap.stats.get("n_terms") or terms.count()
-        use_v2 = want_v2 and n_terms <= cfg.broadcast_terms_threshold
-        if want_v2 and not use_v2 and cfg.pipeline == "segment_local":
-            raise ValueError(
-                f"segment_local pipeline needs the term dictionary "
-                f"({n_terms} terms) within broadcast_terms_threshold "
-                f"({cfg.broadcast_terms_threshold}) — use 'auto' or "
-                "'pairs' for web-scale dictionaries")
-        if use_v2:
-            # pass 2: ONE wide shuffle of the raw text by doc range;
-            # tokenize + id-map + sort + encode all inside the
-            # partition. The dictionary travels as a Spark broadcast.
-            tmap_pd = _small_table_pdf(terms_path)
-            if tmap_pd is not None:
-                tmap_pd = tmap_pd[["term", "term_id"]]
-            else:
-                tmap_pd = terms.select("term", "term_id").toPandas()
+        if not use_pairs:
+            # ONE wide shuffle of the raw text by doc range; tokenize +
+            # id-map + sort + encode all inside the partition. The
+            # dictionary travels as a Spark broadcast.
+            tmap = read_table_pdf(terms_path, columns=["term", "term_id"])
             tmap_bc = spark.sparkContext.broadcast(
-                tmap_pd.set_index("term")["term_id"])
-            dmin = snap.stats.get("doc_min")
-            dmax = snap.stats.get("doc_max")
-            span = (dmax - dmin + 1) if dmin is not None else None
-            if span and span <= 2 * max(1, snap.stats.get("new_docs", 0)):
-                # dense doc ids: boundaries are pure arithmetic — skip
-                # repartitionByRange's sampling pass (a full extra
-                # evaluation of the text source) via identity keys
-                keys = _identity_partition_keys(spark, n_parts)
-                part = F.floor(
-                    (F.col("doc_id") - F.lit(dmin)) * F.lit(n_parts)
-                    / F.lit(span)).cast("int")
-                pk = F.element_at(F.array(*[F.lit(k) for k in keys]), part + 1)
-                src2 = (pair_src.withColumn("_pk", pk)
-                        .repartition(n_parts, "_pk").drop("_pk"))
-            else:
-                # sparse/unknown id space: fall back to sampled ranges
-                src2 = pair_src.repartitionByRange(n_parts, "doc_id")
+                tmap.set_index("term")["term_id"])
             (
-                src2.mapInPandas(
-                    lambda it: _encode_segment_local(it, cfg, tmap_bc),
-                    schema=POSTINGS_SCHEMA)
+                _doc_range_repartition(pair_src, n_parts, snap.stats,
+                                       snap.stats.get("new_docs", 0),
+                                       ("doc_id",))
+                .mapInPandas(lambda it: _encode_segment_local(it, cfg, tmap_bc),
+                             schema=POSTINGS_SCHEMA)
                 .write.mode("overwrite")
                 .parquet(postings_path)
             )
         else:
-            tmap = terms.select("term", "term_id")
-            if n_terms <= cfg.broadcast_terms_threshold:
-                tmap = F.broadcast(tmap)
-            enriched = ensure_pairs().join(tmap, "term").select(
+            enriched = ensure_pairs().join(terms.select("term", "term_id"), "term").select(
                 "segment", "term_id", "doc_id", "packed", "pos_bytes"
             )
             (
@@ -1092,7 +1064,7 @@ def build_snapshot(
                 .write.mode("overwrite")
                 .parquet(postings_path)
             )
-        mark("postings")
+        clock.mark("postings")
 
     # ---- stages: forward + meta (run CONCURRENTLY) ------------------------
     # both are small jobs over the postings output with mostly-fixed
@@ -1102,14 +1074,11 @@ def build_snapshot(
     meta_path = cat.table_path("meta", sid)
 
     def _run_forward() -> None:
-        # same pipeline decision as the postings stage, recomputed so a
-        # resume that skipped postings still picks the matching source
-        n_terms = snap.stats.get("n_terms") or terms.count()
-        if want_v2 and n_terms <= cfg.broadcast_terms_threshold:
+        if not use_pairs:
             # doclen decoded from the pseudo forward runs written by
             # the encoder — no pair re-aggregation
             dl_df = (
-                spark.read.parquet(postings_path)
+                read_table(spark, "postings", [postings_path])
                 .where(F.col("term_id") == -1)
                 .select("segment", "first_doc", "n_docs", "doc_bytes", "dl_bytes")
                 .mapInPandas(_decode_forward_runs,
@@ -1128,77 +1097,29 @@ def build_snapshot(
             "lang_ord",
             "ts_ord",
         )
-        nfp = max(8, spark.sparkContext.defaultParallelism)
-        dmin_f = snap.stats.get("doc_min")
-        dmax_f = snap.stats.get("doc_max")
-        span_f = (dmax_f - dmin_f + 1) if dmin_f is not None else None
-        if span_f and span_f <= 2 * max(1, snap.stats.get("new_docs", 0)):
-            # dense ids: arithmetic range partitioning via identity
-            # keys — repartitionByRange would evaluate the forward
-            # join + pseudo-run decode a second time just to sample
-            # boundaries (same trick as the postings text shuffle)
-            fkeys = _identity_partition_keys(spark, nfp)
-            fpart = F.floor((F.col("doc_id") - F.lit(dmin_f)) * F.lit(nfp)
-                            / F.lit(span_f)).cast("int")
-            fpk = F.element_at(F.array(*[F.lit(k) for k in fkeys]), fpart + 1)
-            fwd_rows = (fwd_rows.withColumn("_pk", fpk)
-                        .repartition(nfp, "_pk").drop("_pk"))
-        else:
-            fwd_rows = fwd_rows.repartitionByRange(nfp, "segment", "doc_id")
         (
-            fwd_rows.sortWithinPartitions("segment", "doc_id")
+            _doc_range_repartition(fwd_rows,
+                                   max(8, spark.sparkContext.defaultParallelism),
+                                   snap.stats, snap.stats.get("new_docs", 0),
+                                   ("segment", "doc_id"))
+            .sortWithinPartitions("segment", "doc_id")
             .write.mode("overwrite")
             .parquet(forward_path)
         )
 
-    def _run_meta() -> None:
-        post = spark.read.parquet(postings_path)
-        (
-            # pseudo forward runs (term_id=-1, segment_local pipeline)
-            # are storage detail, not postings — keep lineage counts
-            # pipeline-invariant
-            post.where(F.col("term_id") >= 0)
-            .groupBy("segment")
-            .agg(
-                F.sum("n_docs").alias("rows"),
-                F.sum(
-                    F.length("doc_bytes")
-                    + F.length("tf_bytes")
-                    + F.length("dl_bytes")
-                    + F.length("lang_bytes")
-                    + F.length("ts_bytes")
-                ).alias("bytes"),
-                F.countDistinct("term_id").alias("n_terms"),
-                F.expr("bit_xor(xxhash64(term_id, first_doc, last_doc, n_docs))").alias("checksum"),
-            )
-            .withColumn("snapshot_id", F.lit(sid))
-            .write.mode("overwrite")
-            .parquet(meta_path)
-        )
-
-    need_fwd = "forward" not in snap.stages
-    need_meta = "meta" not in snap.stages
-    if need_fwd or need_meta:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = []
-            if need_fwd:
-                futs.append(ex.submit(_run_forward))
-            if need_meta:
-                futs.append(ex.submit(_run_meta))
-            for f in futs:
-                f.result()
-        if need_fwd:
-            mark("forward")
-        if need_meta:
-            mark("meta")
+    stages = [(name, fn) for name, fn in (
+        ("forward", _run_forward),
+        ("meta", lambda: _write_meta(spark, sid, postings_path, meta_path)))
+        if name not in snap.stages]
+    if stages:
+        with ThreadPoolExecutor(max_workers=len(stages)) as ex:
+            futs = [(name, clock.submit(ex, fn)) for name, fn in stages]
+            for name, fut in futs:
+                clock.join(name, fut)
 
     # ---- publish ----------------------------------------------------------
     if "published" not in snap.stages:
         snap.stats.update(extra_stats or {})
-        if "n_terms" not in snap.stats:
-            snap.stats["n_terms"] = terms.count()
         snap.stats["n_segments"] = int(
             len(read_table_pdf(meta_path))
             + (parent.stats.get("n_segments", 0) if parent else 0)
@@ -1218,7 +1139,7 @@ def build_snapshot(
             snap.stats["n_deleted"] = parent.stats.get("n_deleted", 0)
         snap.tables = cumulative
         cat.update_snapshot(snap)
-        mark("published")
+        clock.mark("published")
     return cat.get(sid)
 
 
@@ -1241,12 +1162,11 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> Snapshot:
 
     ``doc_ids``: iterable of ids or a single-column DataFrame.
 
-    Tombstones are stored PER SEGMENT as ``(segment, doc_id)`` —
-    the analogue of Lucene's per-segment liveDocs bitsets
-    (api/BoboSegmentReader.java): each query task only ever consults
-    its own segment's delete set, so query cost never scales with the
-    GLOBAL tombstone count. Ids absent from the index are dropped
-    (deleting a nonexistent doc is a no-op, as in IndexWriter).
+    Tombstones are stored as ``(segment, doc_id)`` rows. Readers and
+    the merge load them with ``load_tombstones`` as one sorted global
+    doc_id array (doc ids are global, so no per-segment split is
+    consulted). Ids absent from the index are dropped (deleting a
+    nonexistent doc is a no-op, as in IndexWriter).
     """
     cat = IndexCatalog(index_dir)
     parent = cat.latest()
@@ -1296,7 +1216,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> Snapshot:
         # segment lookup: broadcast the (small) delete set against the
         # forward table — one pushed-down semi-join scan, no forward
         # shuffle
-        fwd = spark.read.parquet(*fwd_paths)
+        fwd = read_table(spark, "forward", fwd_paths)
         del_df = (fwd.select("segment", "doc_id")
                   .join(F.broadcast(del_df), "doc_id")
                   .select("segment", "doc_id"))
@@ -1312,3 +1232,16 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> Snapshot:
     cat.update_snapshot(snap)
     cat.mark_stage(snap, "published")
     return cat.get(sid)
+
+
+def load_tombstones(cat: IndexCatalog, snap: Snapshot) -> np.ndarray:
+    """The snapshot's cumulative tombstones as one sorted unique doc_id
+    array (≙ Lucene liveDocs, api/BoboSegmentReader.java, but global:
+    doc ids are global, so one array serves every segment). Reads only
+    the doc_id column — legacy doc_id-only delete files and
+    ``(segment, doc_id)`` files load alike — driver-direct, zero Spark
+    jobs."""
+    tbl = read_table_arrow(cat.table_paths(snap, "deletes"), columns=["doc_id"])
+    if tbl is None:
+        return np.zeros(0, dtype=np.int64)
+    return np.unique(tbl.column("doc_id").to_numpy().astype(np.int64, copy=False))

@@ -194,3 +194,47 @@ class IndexCatalog:
         if stage not in snap.stages:
             snap.stages.append(stage)
         self.update_snapshot(snap)
+
+
+class StageClock:
+    """Checkpoints the stages of one snapshot being built or merged,
+    with each stage's wall seconds in ``snap.stats['stage_secs']``
+    (published with the manifest — no separate profiler run).
+
+    A serial stage records its lap: the time since the previous stage
+    was recorded. A stage overlapped on a worker thread (``submit`` +
+    ``join``) records its own thread's duration; recording it restarts
+    the lap, so the wait for an overlapped stage is never charged to
+    the next serial stage."""
+
+    def __init__(self, cat: IndexCatalog, snap: Snapshot):
+        self.cat, self.snap = cat, snap
+        self._t = time.time()
+
+    def lap(self) -> float:
+        """Seconds since the last lap; starts the next one."""
+        now = time.time()
+        secs, self._t = now - self._t, now
+        return secs
+
+    def mark(self, stage: str, secs: float | None = None) -> None:
+        """Checkpoint ``stage`` with ``secs``, or with its lap."""
+        lap = self.lap()
+        self.snap.stats.setdefault("stage_secs", {})[stage] = round(
+            lap if secs is None else secs, 2)
+        self.cat.mark_stage(self.snap, stage)
+
+    def submit(self, pool, fn, lead: float = 0.0):
+        """Run ``fn`` on ``pool`` as an overlapped stage. The future's
+        result is the thread's duration plus ``lead``: the stage's own
+        serial work done before the submit."""
+        def run() -> float:
+            t0 = time.time()
+            fn()
+            return lead + time.time() - t0
+        return pool.submit(run)
+
+    def join(self, stage: str, fut) -> None:
+        """Wait for an overlapped stage and checkpoint it (re-raises
+        the thread's failure)."""
+        self.mark(stage, fut.result())

@@ -192,6 +192,31 @@ def delta_decode(first: int, deltas: np.ndarray) -> np.ndarray:
     return out
 
 
+def _rebase_docs(deltas: np.ndarray, nds: np.ndarray,
+                 firsts: np.ndarray) -> np.ndarray:
+    """Absolute docIDs of consecutive blocks from their concatenated
+    delta streams (a block's first doc lives in its row, not in the
+    stream): one segmented cumsum, per-block firsts re-based."""
+    total = int(nds.sum())
+    starts = np.cumsum(nds) - nds
+    vals = np.zeros(total, dtype=np.int64)
+    mask = np.ones(total, dtype=bool)
+    mask[starts] = False
+    vals[mask] = deltas
+    cums = np.cumsum(vals)
+    return cums - np.repeat(cums[starts], nds) + np.repeat(firsts, nds)
+
+
+def _sorted_member(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """Boolean membership of ``vals`` in a SORTED int64 array — one
+    searchsorted, no hash set (np.isin) materialization."""
+    if sorted_arr.size == 0:
+        return np.zeros(vals.shape, dtype=bool)
+    pos = sorted_arr.searchsorted(vals)
+    return (pos < sorted_arr.size) & \
+        (sorted_arr[np.minimum(pos, sorted_arr.size - 1)] == vals)
+
+
 def encode_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,

@@ -31,25 +31,29 @@ Scale shape: two passes over the postings table — a column-pruned
 stats pass (docID + tf streams only) and a map-only rewrite (NO
 shuffle: blocks are filtered/re-encoded in place, so the merge moves
 each posting byte exactly once) — plus one narrow forward shuffle.
-Tombstones and ordinal remaps ride per-executor broadcasts; the new
-term-id map broadcasts below ``broadcast_idmap_threshold`` ids and
-falls back to a distributed join above it (web-scale dictionaries).
+The tombstones (one sorted global doc_id array, ``build.load_tombstones``)
+and the ordinal remaps ride per-executor broadcasts; the new term-id
+map broadcasts below ``broadcast_idmap_threshold`` ids and falls back
+to a distributed join above it (web-scale dictionaries).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from .build import (POSTINGS_SCHEMA, _encode_partition, _small_table_pdf,
-                    assign_sorted_ids, pack_meta)
-from .catalog import IndexCatalog, Snapshot, read_table_pdf, write_table_pdf
-from .codecs import binary_array, binary_parts, vb_decode, vb_encode_segmented
-# shared with the query engine on purpose: a codec change that reaches
-# query-side decode but not the merge (or vice versa) would silently
-# corrupt merged indexes
-from .query import _rebase_docs, _sorted_member
+from concurrent.futures import ThreadPoolExecutor
+
+from .build import (POSTINGS_SCHEMA, _doc_range_repartition, _encode_partition,
+                    _small_table_pdf, _write_meta, assign_sorted_ids,
+                    load_tombstones, pack_meta, read_table)
+from .catalog import IndexCatalog, Snapshot, StageClock, read_table_pdf, write_table_pdf
+# the docID rebase and tombstone membership are the query engine's own
+# (codecs): a codec change that reached query-side decode but not the
+# merge (or vice versa) would silently corrupt merged indexes
+from .codecs import (_rebase_docs, _sorted_member, binary_array, binary_parts,
+                     vb_decode, vb_encode_segmented)
 
 _SENTINEL_FIELDS = {"lang": "dict_lang", "ts": "dict_ts_bucket"}
 
@@ -58,33 +62,13 @@ _SENTINEL_FIELDS = {"lang": "dict_lang", "ts": "dict_ts_bucket"}
 
 
 def _decode_block_docs(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """(decoded docIDs, n_docs per block) for a batch of block rows —
-    the docID rebase is query._rebase_docs (the engine's own decode)."""
+    """(decoded docIDs, n_docs per block) for a batch of block rows."""
     nds = pdf["n_docs"].to_numpy(np.int64)
     deltas = vb_decode(b"".join(pdf["doc_bytes"])).astype(np.int64)
     return _rebase_docs(deltas, nds, pdf["first_doc"].to_numpy(np.int64)), nds
 
 
-def _keep_mask(pdf: pd.DataFrame, docs: np.ndarray, nds: np.ndarray,
-               del_bc) -> np.ndarray:
-    """Per-posting survivor mask against the per-segment tombstone
-    broadcast (same liveDocs shape the query engine uses)."""
-    keep = np.ones(docs.size, dtype=bool)
-    dmap = del_bc.value if del_bc is not None else {}
-    if not dmap:
-        return keep
-    segs = pdf["segment"].to_numpy(np.int64)
-    elem_seg = np.repeat(segs, nds)
-    for s in np.unique(segs):
-        tomb = dmap.get(int(s))
-        if tomb is None or len(tomb) == 0:
-            continue
-        m = elem_seg == s
-        keep[m] &= ~_sorted_member(tomb, docs[m])
-    return keep
-
-
-def _stats_partials(batches, del_bc):
+def _stats_partials(batches, dead_bc):
     """Column-pruned pass over the old postings: per-batch
     (term_id, df, cf) partials with tombstoned docs excluded.
     Pseudo forward runs (term_id = -1) are not terms."""
@@ -93,7 +77,7 @@ def _stats_partials(batches, del_bc):
         if not len(pdf):
             continue
         docs, nds = _decode_block_docs(pdf)
-        keep = _keep_mask(pdf, docs, nds, del_bc)
+        keep = ~_sorted_member(dead_bc.value, docs)
         tf = vb_decode(binary_parts(pdf["tf_bytes"])[0]).astype(np.int64)
         tid_el = np.repeat(pdf["term_id"].to_numpy(np.int64), nds)
         g = pd.DataFrame({"term_id": tid_el[keep], "cf": tf[keep]})
@@ -102,7 +86,7 @@ def _stats_partials(batches, del_bc):
         yield out[["term_id", "df", "cf"]]
 
 
-def _rewrite_blocks(batches, del_bc, maps_bc, block_size: int):
+def _rewrite_blocks(batches, dead_bc, maps_bc, block_size: int):
     """Map-only rewrite of posting blocks: drop tombstoned docs,
     remap facet ordinals in the lang/ts streams, remap term ids
     (when the id map is broadcast), re-encode through the build's
@@ -116,7 +100,7 @@ def _rewrite_blocks(batches, del_bc, maps_bc, block_size: int):
             continue
         lang_rm, ts_rm, tid_rm = maps_bc.value
         docs, nds = _decode_block_docs(pdf)
-        keep = _keep_mask(pdf, docs, nds, del_bc)
+        keep = ~_sorted_member(dead_bc.value, docs)
         if not keep.any():
             continue
         cat = lambda c: binary_parts(pdf[c])[0]  # noqa: E731
@@ -168,30 +152,6 @@ def _rewrite_blocks(batches, del_bc, maps_bc, block_size: int):
 # ---------------------------------------------------------------- the merge
 
 
-def _load_tombstones(spark: SparkSession, cat: IndexCatalog,
-                     parent: Snapshot):
-    """(per-segment sorted-array broadcast, distinct doc_id DataFrame
-    or None) — the same per-segment liveDocs layout query.IndexReader
-    builds, computed once for the whole merge."""
-    del_paths = cat.table_paths(parent, "deletes")
-    if not del_paths:
-        return spark.sparkContext.broadcast({}), None
-    # r6: driver-direct read (read_table_pdf promotes mixed schemas
-    # like mergeSchema=true) — zero Spark jobs for ordinary volumes
-    dpd = read_table_pdf(del_paths).drop_duplicates(ignore_index=True)
-    ddf = spark.createDataFrame(
-        dpd[["doc_id"]].astype({"doc_id": "int64"}).drop_duplicates(),
-        schema="doc_id long")
-    if "segment" not in dpd.columns or dpd["segment"].isna().any():
-        fwd = spark.read.parquet(*cat.table_paths(parent, "forward"))
-        dpd = (fwd.select("segment", "doc_id")
-               .join(F.broadcast(ddf), "doc_id")
-               .toPandas())
-    seg_map = {int(s): np.sort(g["doc_id"].to_numpy(np.int64))
-               for s, g in dpd.groupby("segment")}
-    return spark.sparkContext.broadcast(seg_map), ddf
-
-
 def merge_snapshot(spark: SparkSession, index_dir: str,
                    block_size: int = 128,
                    broadcast_idmap_threshold: int = 20_000_000) -> Snapshot:
@@ -215,22 +175,15 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
         snap.stats["merge_of"] = parent.snapshot_id
         cat.update_snapshot(snap)
     sid = snap.snapshot_id
-    import time as _time
-    _stage_t = [_time.time()]
-
-    def mark(stage: str) -> None:
-        # same per-stage wall-time profile the build records — the
-        # raw material for merge scaling analysis
-        now = _time.time()
-        snap.stats.setdefault("stage_secs", {})[stage] = round(
-            now - _stage_t[0], 2)
-        _stage_t[0] = now
-        cat.mark_stage(snap, stage)
-
-    del_bc, del_df = _load_tombstones(spark, cat, parent)
+    clock = StageClock(cat, snap)
+    dead = load_tombstones(cat, parent)
+    dead_bc = spark.sparkContext.broadcast(dead)
+    del_df = (spark.createDataFrame(pd.DataFrame({"doc_id": dead}),
+                                    schema="doc_id long")
+              if dead.size else None)
 
     # ---- stage: dicts (facet dictionaries over survivors) ----------------
-    fwd = spark.read.parquet(*cat.table_paths(parent, "forward"))
+    fwd = read_table(spark, "forward", cat.table_paths(parent, "forward"))
     surv_fwd = fwd if del_df is None else fwd.join(del_df, "doc_id", "left_anti")
     if "dicts" not in snap.stages:
         # r6: driver twin under the shared 64 MB file-size gate — the
@@ -239,9 +192,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
         # zero Spark jobs; big forwards keep the distributed agg
         fpd = _small_table_pdf(cat.table_paths(parent, "forward"))
         if fpd is not None:
-            if del_df is not None and del_bc.value:
-                dead = np.concatenate(list(del_bc.value.values()))
-                fpd = fpd[~fpd["doc_id"].isin(dead)]
+            fpd = fpd[~_sorted_member(dead, fpd["doc_id"].to_numpy(np.int64))]
             parts = []
             for fld, col in (("lang", "lang_ord"), ("ts", "ts_ord")):
                 g = (fpd.groupby(col)["doc_id"]
@@ -288,7 +239,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             })
             write_table_pdf(new, cat.table_path(tbl, sid))
         cat.update_snapshot(snap)
-        mark("dicts")
+        clock.mark("dicts")
 
     def _ord_remap(fld: str) -> np.ndarray:
         tbl = _SENTINEL_FIELDS[fld]
@@ -306,13 +257,13 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
     # ---- stage: terms (df/cf over survivors, fresh sorted ids) -----------
     terms_path = cat.table_path("terms", sid)
     idmap_path = cat.table_path("_idmap", sid)
-    old_terms = spark.read.parquet(*cat.table_paths(parent, "terms"))
+    old_terms = read_table(spark, "terms", cat.table_paths(parent, "terms"))
     if "terms" not in snap.stages:
-        pruned = spark.read.parquet(*cat.table_paths(parent, "postings")) \
+        pruned = read_table(spark, "postings", cat.table_paths(parent, "postings")) \
             .select("segment", "term_id", "first_doc", "n_docs",
                     "doc_bytes", "tf_bytes")
         partials = pruned.mapInPandas(
-            lambda it: _stats_partials(it, del_bc),
+            lambda it: _stats_partials(it, dead_bc),
             schema="term_id long, df long, cf long")
         stats = partials.groupBy("term_id").agg(
             F.sum("df").alias("df"), F.sum("cf").alias("cf"))
@@ -365,9 +316,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             (with_ids.select("old_id", "term_id")
              .write.mode("overwrite").parquet(idmap_path))
             with_ids.unpersist()
-        mark("terms")
-
-    terms = spark.read.parquet(terms_path)
+        clock.mark("terms")
 
     # ---- stage: stats ----------------------------------------------------
     if "stats" not in snap.stages:
@@ -388,7 +337,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             "docs_per_segment": parent.stats.get("docs_per_segment"),
         })
         cat.update_snapshot(snap)
-        mark("stats")
+        clock.mark("stats")
 
     # ---- stage: postings (map-only rewrite, no shuffle) ------------------
     postings_path = cat.table_path("postings", sid)
@@ -405,9 +354,9 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             tid_rm[idm["old_id"].to_numpy(np.int64)] = \
                 idm["term_id"].to_numpy(np.int64)
         maps_bc = spark.sparkContext.broadcast((lang_rm, ts_rm, tid_rm))
-        rewritten = spark.read.parquet(
-            *cat.table_paths(parent, "postings")).mapInPandas(
-            lambda it: _rewrite_blocks(it, del_bc, maps_bc, block_size),
+        rewritten = read_table(
+            spark, "postings", cat.table_paths(parent, "postings")).mapInPandas(
+            lambda it: _rewrite_blocks(it, dead_bc, maps_bc, block_size),
             schema=POSTINGS_SCHEMA)
         if not use_bc:
             # web-scale dictionary: remap ids with a distributed join
@@ -456,66 +405,26 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
                 pd.DataFrame({fld: np.arange(rm.size, dtype=np.int64),
                               f"new_{fld}": rm}))
             maps.append(F.broadcast(mdf))
-        nfp = max(8, spark.sparkContext.defaultParallelism)
         rows = (surv_fwd.join(maps[0], "lang_ord").join(maps[1], "ts_ord")
                 .select("segment", "doc_id", "doclen", "url",
                         F.col("new_lang_ord").alias("lang_ord"),
                         F.col("new_ts_ord").alias("ts_ord")))
-        dmin = snap.stats.get("doc_min")
-        dmax = snap.stats.get("doc_max")
-        span = (dmax - dmin + 1) if dmin is not None else None
-        if (span and span <= 2 * max(1, snap.stats.get("n_docs", 0))
-                and parent.stats.get("docs_per_segment") is not None):
-            # dense survivor ids: arithmetic range partitioning via
-            # identity keys — repartitionByRange would evaluate the
-            # anti-join + remap joins a SECOND time just to sample
-            # boundaries (the same fix the build's forward stage uses —
-            # the sampling pass cost ~half the 2M forward rewrite).
-            # segment is monotone in doc_id while every batch used the
-            # same docs_per_segment (segment = doc_id // docs_per_segment,
-            # appends only grow both), so doc-range partitioning
-            # preserves the (segment, doc_id) range layout. Batches
-            # with different values record None, and snapshots that
-            # predate the stat carry none: both take the sampled
-            # ranges below.
-            from .build import _identity_partition_keys
-            keys = _identity_partition_keys(spark, nfp)
-            part = F.floor((F.col("doc_id") - F.lit(dmin)) * F.lit(nfp)
-                           / F.lit(span)).cast("int")
-            pk = F.element_at(F.array(*[F.lit(k) for k in keys]), part + 1)
-            rows = (rows.withColumn("_pk", pk)
-                    .repartition(nfp, "_pk").drop("_pk"))
-        else:
-            # sparse survivors (heavy tombstoning) or mixed
-            # docs_per_segment: sampled ranges
-            rows = rows.repartitionByRange(nfp, "segment", "doc_id")
-        (rows.sortWithinPartitions("segment", "doc_id")
+        # segment = doc_id // docs_per_segment is monotone in doc_id
+        # while every batch used the same docs_per_segment (appends
+        # only grow both); batches with different values record None,
+        # and snapshots that predate the stat carry none
+        (_doc_range_repartition(rows, max(8, spark.sparkContext.defaultParallelism),
+                                snap.stats, snap.stats.get("n_docs", 0),
+                                ("segment", "doc_id"),
+                                monotone=parent.stats.get("docs_per_segment") is not None)
+         .sortWithinPartitions("segment", "doc_id")
          .write.mode("overwrite").parquet(forward_path))
 
     def _run_sections() -> None:
-        sec = spark.read.parquet(*cat.table_paths(parent, "sections"))
+        sec = read_table(spark, "sections", cat.table_paths(parent, "sections"))
         surv_sec = sec if del_df is None else sec.join(del_df, "doc_id",
                                                        "left_anti")
         surv_sec.write.mode("overwrite").parquet(sections_path)
-
-    def _run_meta() -> None:
-        post = spark.read.parquet(postings_path)
-        (post.where(F.col("term_id") >= 0)
-         .groupBy("segment")
-         .agg(F.sum("n_docs").alias("rows"),
-              F.sum(F.length("doc_bytes") + F.length("tf_bytes")
-                    + F.length("dl_bytes") + F.length("lang_bytes")
-                    + F.length("ts_bytes")).alias("bytes"),
-              F.countDistinct("term_id").alias("n_terms"),
-              F.expr("bit_xor(xxhash64(term_id, first_doc, last_doc, "
-                     "n_docs))").alias("checksum"))
-         .withColumn("snapshot_id", F.lit(sid))
-         .write.mode("overwrite").parquet(meta_path))
-
-    def _timed(fn) -> float:
-        t0 = _time.time()
-        fn()
-        return _time.time() - t0
 
     pre = []
     if "forward" not in snap.stages:
@@ -525,24 +434,19 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
     need_postings = "postings" not in snap.stages
     need_meta = "meta" not in snap.stages
     if pre or need_postings or need_meta:
-        from concurrent.futures import ThreadPoolExecutor
-
         # the executor context joins every thread even when the
         # postings rewrite raises, so a resume never races leftover
         # forward/sections writes
         with ThreadPoolExecutor(max_workers=len(pre) + 1) as ex:
-            futs = [(name, ex.submit(_timed, fn)) for name, fn in pre]
+            futs = [(name, clock.submit(ex, fn)) for name, fn in pre]
             if need_postings:
                 _run_postings()  # on the calling thread
-                mark("postings")
+                clock.mark("postings")
             if need_meta:
-                futs.append(("meta", ex.submit(_timed, _run_meta)))
-            for name, f in futs:
-                # per-thread durations (walls overlap by design)
-                snap.stats.setdefault("stage_secs", {})[name] = round(
-                    f.result(), 2)
-                cat.mark_stage(snap, name)
-        _stage_t[0] = _time.time()  # publish times only its own work
+                futs.append(("meta", clock.submit(
+                    ex, lambda: _write_meta(spark, sid, postings_path, meta_path))))
+            for name, fut in futs:
+                clock.join(name, fut)
 
     # ---- publish ---------------------------------------------------------
     if "published" not in snap.stages:
@@ -559,7 +463,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             tables["sections"] = [sections_path]
         snap.tables = tables  # NO deletes key: tombstones are reclaimed
         cat.update_snapshot(snap)
-        mark("published")
+        clock.mark("published")
         # the old→new id map was resume scratch for the postings
         # stage; nothing references it once the snapshot is published
         import shutil

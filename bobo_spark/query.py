@@ -39,8 +39,8 @@ Execution model (the Spark rendition of SURVEY.md §3.1):
     segment's store on the executors; the tasks encode ``_SegOut``s
     as ``OUT_SCHEMA`` rows only at that boundary and the driver
     decodes them back (``_parts_from_rows``).
-  The driver paths filter tombstones with the reader's global sorted
-  ``deleted`` array, the tasks with their segment's broadcast entry.
+  Every path filters tombstones with the reader's one sorted global
+  ``deleted`` array; the tasks get it as one broadcast.
 * One merge (``IndexReader._merge``) serves ``search``,
   ``search_many`` and ``search_df``: one (score desc, doc_id asc)
   lexsort for the page (≙ sort/SortCollectorImpl.java:354-368 +
@@ -75,9 +75,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import bm25
-from .build import TABLE_SCHEMAS
+from .build import load_tombstones, read_table
 from .catalog import IndexCatalog, Snapshot, read_table_arrow, read_table_pdf
-from .codecs import vb_decode
+from .codecs import _rebase_docs, _sorted_member, vb_decode
 from .tokenizer import tokenize
 
 # serializes search_many's session-conf AQE flip (see its comment)
@@ -158,21 +158,6 @@ def _spans(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     ends = np.cumsum(lens)
     total = int(ends[-1]) if ends.size else 0
     return np.arange(total) + np.repeat(starts - (ends - lens), lens)
-
-
-def _rebase_docs(deltas: np.ndarray, nds: np.ndarray,
-                 firsts: np.ndarray) -> np.ndarray:
-    """Absolute docIDs of consecutive blocks from their concatenated
-    delta streams (a block's first doc lives in its row, not in the
-    stream): one segmented cumsum, per-block firsts re-based."""
-    total = int(nds.sum())
-    starts = np.cumsum(nds) - nds
-    vals = np.zeros(total, dtype=np.int64)
-    mask = np.ones(total, dtype=bool)
-    mask[starts] = False
-    vals[mask] = deltas
-    cums = np.cumsum(vals)
-    return cums - np.repeat(cums[starts], nds) + np.repeat(firsts, nds)
 
 
 _POS_SHIFT = 24  # (doc_id << 24 | position) occurrence keys: doc_id < 2^40, pos < 2^24
@@ -304,14 +289,11 @@ class _BlockStore:
 
 def _task_segment(pdf: pd.DataFrame, deleted_bc):
     """(block store, tombstones) of one segment task's block rows. The
-    tombstones (sorted doc_ids, the liveDocs analogue) come from the
-    reader's per-segment delete broadcast: each task touches ONLY its
-    own segment's entry, and the broadcast ships once per executor,
-    never per query plan."""
+    tombstones are the reader's one sorted global doc_id array (the
+    liveDocs analogue; doc ids are global, so no per-segment split),
+    shipped once per executor as a broadcast, never per query plan."""
     store = _BlockStore(pa.Table.from_pandas(pdf, preserve_index=False))
-    seg = int(pdf["segment"].iloc[0])
-    deleted = deleted_bc.value.get(seg) if deleted_bc is not None else None
-    return store, deleted
+    return store, (deleted_bc.value if deleted_bc is not None else None)
 
 
 def _phrase_filter(st: _BlockStore, groups: dict, phrase_ids: list[int],
@@ -342,16 +324,6 @@ def _phrase_filter(st: _BlockStore, groups: dict, phrase_ids: list[int],
     match_docs, ptf = np.unique((keys >> np.uint64(_POS_SHIFT)).astype(np.int64),
                                 return_counts=True)
     return match_docs, ptf.astype(np.int64)
-
-
-def _sorted_member(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
-    """Boolean membership of ``vals`` in a SORTED int64 array — one
-    searchsorted, no hash set (np.isin) materialization."""
-    if sorted_arr.size == 0:
-        return np.zeros(vals.shape, dtype=bool)
-    pos = sorted_arr.searchsorted(vals)
-    return (pos < sorted_arr.size) & \
-        (sorted_arr[np.minimum(pos, sorted_arr.size - 1)] == vals)
 
 
 def _and_masks(*masks):
@@ -868,53 +840,25 @@ class IndexReader:
         # cumulative soft-delete tombstones (≙ Lucene liveDocs): hits,
         # facet counts and num_hits exclude them; df/cf/avgdl stats
         # intentionally do NOT change until a merge — Lucene semantics.
-        # Loaded ONCE per reader open into (a) a Spark DataFrame for
-        # anti-joins on the DataFrame paths and (b) one per-segment
-        # broadcast dict for the applyInPandas paths — query plans
-        # carry only the broadcast HANDLE, never the id list, so plan
-        # size is O(1) in the tombstone count (the r3 scale-killer).
-        del_paths = self.catalog.table_paths(self.snap, "deletes")
+        # Loaded ONCE per reader open as one sorted doc_id array: the
+        # driver paths filter with it directly, a Spark DataFrame of it
+        # serves the DataFrame paths' anti-joins, and one broadcast of
+        # it serves the distributed tasks — query plans carry only the
+        # broadcast HANDLE, never the id list, so plan size is O(1) in
+        # the tombstone count (the r3 scale-killer).
+        self.deleted = load_tombstones(self.catalog, self.snap)
         self._deletes_df = None
         self._deleted_bc = None
-        self.deleted = np.zeros(0, dtype=np.int64)
-        if del_paths:
-            # mergeSchema: a cumulative set can MIX legacy doc_id-only
-            # files with new (segment, doc_id) files — without it the
-            # scan picks one file's schema and (file-order dependent)
-            # either drops the segment column or nulls legacy rows,
-            # whose tombstones would then silently vanish from the
-            # per-segment broadcast
-            # r6: driver-direct read (read_table_pdf promotes mixed
-            # schemas exactly like mergeSchema=true); the Spark-side
-            # frame for anti-joins is created from the deduped pandas
-            # (lazy, no job)
-            dpd = read_table_pdf(del_paths).drop_duplicates(
-                ignore_index=True)
+        if self.deleted.size:
             self._deletes_df = self.spark.createDataFrame(
-                dpd[["doc_id"]].astype({"doc_id": "int64"}).drop_duplicates(),
-                schema="doc_id long")
-            if "segment" not in dpd.columns or dpd["segment"].isna().any():
-                # legacy rows (no segment): resolve ALL ids via one
-                # broadcast semi-join against the forward table
-                dpd = (self._forward.select("segment", "doc_id")
-                       .join(F.broadcast(self._deletes_df.select("doc_id")
-                                         .distinct()), "doc_id").toPandas())
-            # sorted global tombstone ids: the driver paths (``cache``,
-            # ``scan``, section search) score a store of many segments
-            # against this array; distributed tasks use the
-            # per-segment broadcast
-            self.deleted = np.sort(dpd["doc_id"].to_numpy(np.int64))
-            seg_map = {
-                int(s): np.sort(g["doc_id"].to_numpy(np.int64))
-                for s, g in dpd.groupby("segment")
-            }
-            self._deleted_bc = self.spark.sparkContext.broadcast(seg_map)
+                pd.DataFrame({"doc_id": self.deleted}), schema="doc_id long")
+            self._deleted_bc = self.spark.sparkContext.broadcast(self.deleted)
 
     def _read(self, table: str) -> DataFrame:
         """This snapshot's files of a catalog table, read with the
         table's declared schema (no schema-inference Spark job)."""
-        return self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(
-            *self.catalog.table_paths(self.snap, table))
+        return read_table(self.spark, table,
+                          self.catalog.table_paths(self.snap, table))
 
     def _index_terms(self, terms: pd.DataFrame) -> None:
         """Build the per-reader term → (term_id, df) lookup (facet

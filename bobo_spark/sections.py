@@ -218,7 +218,8 @@ def segment_section_search(store, deleted: np.ndarray | None, plan: dict,
     count = number of matching sections in the doc (a free diagnostic
     the key-set representation gives us), plus a stats row.
     """
-    from .query import _K_HIT, _K_STATS, _empty_out, _sorted_member
+    from .codecs import _sorted_member
+    from .query import _K_HIT, _K_STATS, _empty_out
 
     ev = _SegmentEval(store, plan, sec_pdf)
     keys = ev.eval(plan["tree"])

@@ -38,15 +38,22 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact brute-force cosine top-k against one query vector.
 
+    A zero vector has no cosine: zero rows of ``df`` are never ranked
+    (see ``_nonzero_vectors``), and a zero ``query_vec`` raises
+    ValueError.
+
     r6: _spread raises the scan's parallelism floor — the interpreted
     per-row dot fold was the whole cost and a single small parquet
     file otherwise runs it on one task (identical arithmetic, same
     TakeOrderedAndProject merge)."""
+    if not any(float(x) != 0.0 for x in query_vec):
+        raise ValueError("cosine_topk: the query vector is zero and has no cosine")
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     v = _dvec(F.col(vec_col))
     cos = _dot(v, q) / (_norm(v) * _norm(q))
     return (
-        _spread(df).select(F.col(id_col), F.round(cos, 4).alias("cosine"))
+        _nonzero_vectors(_spread(df), vec_col)
+        .select(F.col(id_col), F.round(cos, 4).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
     )
@@ -166,6 +173,8 @@ def lsh_bucket_col(vec_col: str, planes: np.ndarray) -> Column:
 def lsh_topk(df: DataFrame, query_vec: list[float], k: int = 10, n_planes: int = 8,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate cosine top-k: probe only the query's LSH bucket.
+    Zero vectors follow ``cosine_topk``'s rule: zero rows are never
+    ranked, and a zero ``query_vec`` raises ValueError.
 
     Computes buckets on the fly (O(N) scan — the small-scale / oracle
     variant). The scale path is ``build_lsh_index`` +

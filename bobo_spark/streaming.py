@@ -13,7 +13,7 @@ ledger kept on the manifest.
 The micro-batch must carry monotonically increasing ``doc_id``s (new
 docs only — the reference appends too). Deletes are served by the
 separate soft-delete path (``build.delete_docs`` publishes cumulative
-per-segment tombstone snapshots; see tests/test_deletes.py) and
+tombstone snapshots; see tests/test_deletes.py) and
 compose with streaming appends: the publish step carries the parent's
 deletes table forward, so an appended batch never resurrects them.
 """

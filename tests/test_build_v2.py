@@ -1,9 +1,11 @@
-"""segment_local build pipeline: one text shuffle instead of a
-materialized pair table. Must be SEMANTICALLY identical to the classic
-pairs pipeline — same term dictionary, same stats, same forward rows,
-and identical query results (the posting block layout may differ:
-blocks split at doc-range partition boundaries, which the reader's
-block concatenation tolerates by design)."""
+"""The build's two postings paths: a dictionary within
+``broadcast_terms_threshold`` takes one text shuffle and encodes inside
+each partition; past it, a materialized pair table is range-shuffled.
+``broadcast_terms_threshold=0`` pins the pairs path. Both must be
+SEMANTICALLY identical — same term dictionary, same stats, same
+forward rows, and identical query results (the posting block layout
+may differ: blocks split at doc-range partition boundaries, which the
+reader's block concatenation tolerates by design)."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from bobo_spark.build import BuildConfig, build_snapshot
+from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
 from bobo_spark.query import IndexReader, SearchRequest
 from bobo_spark.webgen import webpages
 
@@ -20,10 +22,10 @@ from bobo_spark.webgen import webpages
 def both(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("v2")
     docs = webpages(spark, 900, 5)
-    cfg_a = BuildConfig(docs_per_segment=200, block_size=32, pipeline="pairs",
-                        sections=("window", 8))
+    cfg_a = BuildConfig(docs_per_segment=200, block_size=32,
+                        broadcast_terms_threshold=0, sections=("window", 8))
     cfg_b = BuildConfig(docs_per_segment=200, block_size=32,
-                        pipeline="segment_local", sections=("window", 8),
+                        sections=("window", 8),
                         rows_per_posting_partition=20_000)
     build_snapshot(spark, docs, str(base / "a"), cfg_a)
     build_snapshot(spark, docs, str(base / "b"), cfg_b)
@@ -78,27 +80,41 @@ def test_section_search_identical(both):
     pd.testing.assert_frame_equal(ra.hits, rb.hits)
 
 
-def test_v2_rejects_oversized_dictionary(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("v2big"))
+def test_oversized_dictionary_falls_back_to_pairs(spark, tmp_path_factory):
+    """A dictionary past broadcast_terms_threshold builds its postings
+    from the materialized pair table (the ``pairs`` stage runs) and
+    answers like the broadcast path."""
+    base = tmp_path_factory.mktemp("v2big")
     docs = webpages(spark, 100, 2)
-    with pytest.raises(ValueError, match="broadcast_terms_threshold"):
-        build_snapshot(spark, docs, d, BuildConfig(
-            docs_per_segment=50, pipeline="segment_local",
-            broadcast_terms_threshold=5))
+    snaps = {}
+    for sub, thr in (("big", 5), ("ref", BuildConfig.broadcast_terms_threshold)):
+        snaps[sub] = build_snapshot(spark, docs, str(base / sub), BuildConfig(
+            docs_per_segment=50, broadcast_terms_threshold=thr))
+    assert snaps["big"].stats["n_terms"] > 5
+    assert "pairs" in snaps["big"].stages
+    assert "pairs" not in snaps["ref"].stages
+    a, b = IndexReader(spark, str(base / "big")), IndexReader(spark, str(base / "ref"))
+    for req in (SearchRequest(query="ba be", mode="and", k=10, facets=("lang",)),
+                SearchRequest(query="ba be", mode="phrase", k=10)):
+        ra, rb = a.search(req), b.search(req)
+        assert ra.num_hits == rb.num_hits > 0
+        pd.testing.assert_frame_equal(ra.hits, rb.hits)
+        for f in rb.facets:
+            pd.testing.assert_frame_equal(ra.facets[f], rb.facets[f])
 
 
 def test_mixed_pipeline_incremental(spark, tmp_path_factory):
-    """Snapshot 0 built with the classic pairs pipeline, snapshot 1
-    appended with segment_local: the merged index must answer queries
+    """Snapshot 0's postings built on the pairs path, snapshot 1
+    appended on the broadcast path: the index must answer queries
     identically to a single-shot build of the full corpus."""
     base = tmp_path_factory.mktemp("v2mix")
     docs = webpages(spark, 600, 4)
     half = 300
     d_mix = str(base / "mix")
     build_snapshot(spark, docs.where(F.col("doc_id") < half), d_mix,
-                   BuildConfig(docs_per_segment=150, pipeline="pairs"))
+                   BuildConfig(docs_per_segment=150, broadcast_terms_threshold=0))
     build_snapshot(spark, docs.where(F.col("doc_id") >= half), d_mix,
-                   BuildConfig(docs_per_segment=150, pipeline="segment_local"))
+                   BuildConfig(docs_per_segment=150))
     d_full = str(base / "full")
     build_snapshot(spark, docs, d_full, BuildConfig(docs_per_segment=150))
     a, b = IndexReader(spark, d_mix), IndexReader(spark, d_full)
@@ -123,8 +139,7 @@ def test_v2_empty_text_docs(spark, tmp_path_factory):
         "text": ["" if i % 3 == 0 else f"alpha beta doc {i}" for i in range(20)],
     })
     docs = spark.createDataFrame(pdf)
-    build_snapshot(spark, docs, d, BuildConfig(
-        docs_per_segment=10, pipeline="segment_local"))
+    build_snapshot(spark, docs, d, BuildConfig(docs_per_segment=10))
     r = IndexReader(spark, d)
     fwd = r._forward.toPandas().set_index("doc_id")["doclen"]
     assert len(fwd) == 20
@@ -137,9 +152,9 @@ def test_v2_empty_text_docs(spark, tmp_path_factory):
 
 def test_regex_sections_identical_both_pipelines(spark, tmp_path_factory):
     """Regex section geometry (the cogrouped boundary table) must come
-    out identical from the classic pairs pipeline and segment_local —
+    out identical from the pairs and the broadcast postings paths —
     both share _encode_partition, but the sections table is written by
-    a separate stage whose inputs differ per pipeline."""
+    a separate stage."""
     import numpy as np
 
     base = tmp_path_factory.mktemp("v2rx")
@@ -156,10 +171,10 @@ def test_regex_sections_identical_both_pipelines(spark, tmp_path_factory):
     docs = spark.createDataFrame(pdf).withColumn(
         "warc_ts", F.to_timestamp("warc_ts"))
     readers = []
-    for sub, pipe in (("a", "pairs"), ("b", "segment_local")):
+    for sub, thr in (("a", 0), ("b", BuildConfig.broadcast_terms_threshold)):
         d = str(base / sub)
         build_snapshot(spark, docs, d, BuildConfig(
-            docs_per_segment=80, block_size=16, pipeline=pipe,
+            docs_per_segment=80, block_size=16, broadcast_terms_threshold=thr,
             sections=("regex", r"\n\n+")))
         readers.append(IndexReader(spark, d))
     a, b = readers
@@ -191,3 +206,50 @@ def test_assign_sorted_ids_driver_equals_distributed(spark):
     assert a["term"].tolist() == b["term"].tolist()
     assert a["term_id"].tolist() == b["term_id"].tolist()
     assert a["term_id"].tolist() == list(range(5, 5 + len(rows)))
+
+
+def test_stats_spark_side_equals_driver(spark, tmp_path_factory, monkeypatch):
+    """The stats stage's Spark aggregate over the terms table (taken
+    when ``_small_table_pdf`` declines) gives the driver read's stats
+    and terms."""
+    from bobo_spark import build
+
+    base = tmp_path_factory.mktemp("v2stats")
+    docs = webpages(spark, 300, 3)
+    cfg = BuildConfig(docs_per_segment=100)
+    want = build_snapshot(spark, docs, str(base / "driver"), cfg)
+    monkeypatch.setattr(build, "_small_table_pdf", lambda *a, **kw: None)
+    got = build_snapshot(spark, docs, str(base / "spark"), cfg)
+    for k in ("n_docs", "tok_sum", "avgdl", "n_terms", "new_docs", "new_bytes"):
+        assert got.stats[k] == want.stats[k], k
+    ta = IndexReader(spark, str(base / "driver"))._terms.toPandas()
+    tb = IndexReader(spark, str(base / "spark"))._terms.toPandas()
+    pd.testing.assert_frame_equal(ta.sort_values("term", ignore_index=True),
+                                  tb.sort_values("term", ignore_index=True))
+
+
+def test_meta_stage_times_its_own_thread(spark, tmp_path_factory, monkeypatch):
+    """meta runs overlapped with forward; its stage_secs entry is the
+    meta job's own duration, in the build and the merge alike. A 0.3 s
+    sleep in the meta write alone must show up in ``meta``."""
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from bobo_spark.merge import merge_snapshot
+
+    orig = DataFrameWriter.parquet
+
+    def slow_meta(self, path, *args, **kwargs):
+        if "/meta/" in str(path):
+            time.sleep(0.3)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", slow_meta)
+    d = str(tmp_path_factory.mktemp("v2meta"))
+    docs = webpages(spark, 200, 2)
+    snap = build_snapshot(spark, docs, d, BuildConfig(docs_per_segment=100))
+    assert snap.stats["stage_secs"]["meta"] >= 0.3
+    delete_docs(spark, d, [3])
+    msnap = merge_snapshot(spark, d)
+    assert msnap.stats["stage_secs"]["meta"] >= 0.3

@@ -79,7 +79,7 @@ def test_binary_array_large_offsets_degrade_to_large_binary():
 
 
 def test_sorted_member_empty_array():
-    from bobo_spark.query import _sorted_member
+    from bobo_spark.codecs import _sorted_member
 
     vals = np.array([1, 5, 9], dtype=np.int64)
     out = _sorted_member(np.array([], dtype=np.int64), vals)

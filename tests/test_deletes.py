@@ -177,14 +177,11 @@ def test_search_many_excludes_deleted(env):
             assert not set(victims) & set(b.hits["doc_id"])
 
 
-def test_mixed_format_delete_tables(spark, tmp_path_factory):
-    """A cumulative delete set can mix a pre-r4 legacy file (doc_id
-    only) with per-segment files — the reader must merge schemas and
-    resolve legacy rows' segments via the forward table instead of
-    silently dropping them from the broadcast."""
+def _mixed_format_index(spark, d: str) -> None:
+    """300 docs; tombstones 5 (a ``(segment, doc_id)`` file written by
+    delete_docs) plus 11 and 205 (a legacy doc_id-only file)."""
     from bobo_spark.catalog import IndexCatalog
 
-    d = str(tmp_path_factory.mktemp("idx_del_mixed"))
     build_snapshot(spark, webpages(spark, 300, 3), d,
                    BuildConfig(docs_per_segment=100))
     delete_docs(spark, d, [5])  # new (segment, doc_id) format
@@ -196,9 +193,19 @@ def test_mixed_format_delete_tables(spark, tmp_path_factory):
     snap.tables["deletes"] = snap.tables["deletes"] + [legacy]
     snap.stats["n_deleted"] = 3
     cat.update_snapshot(snap)
+
+
+def test_mixed_format_delete_tables(spark, tmp_path_factory):
+    """A cumulative delete set can mix a pre-r4 legacy file (doc_id
+    only) with per-segment files — the reader loads every file's
+    doc_id column into one global array and its broadcast, dropping
+    no legacy row."""
+    d = str(tmp_path_factory.mktemp("idx_del_mixed"))
+    _mixed_format_index(spark, d)
     r = IndexReader(spark, d)
     assert set(r.deleted) == {5, 11, 205}
-    assert sum(a.size for a in r._deleted_bc.value.values()) == 3
+    assert r.deleted.size == r.snap.stats["n_deleted"] == 3
+    np.testing.assert_array_equal(r._deleted_bc.value, r.deleted)
     res = r.search(SearchRequest(query="ba", mode="or", k=10**6))
     assert not {5, 11, 205} & set(res.hits["doc_id"])
     ma = r.search(SearchRequest(query=None, k=10**6))
@@ -275,3 +282,32 @@ def test_delete_docs_generator_input_without_driver_gate(
     res = r.search(SearchRequest(query=None, k=10**6))
     assert res.num_hits == 300 - len(victims)
     assert not set(victims) & set(res.hits["doc_id"])
+
+
+def test_merge_mixed_format_delete_tables(spark, tmp_path_factory):
+    """A merge over a mixed legacy + per-segment delete set purges every
+    tombstone: the merged index equals a fresh build of the survivors
+    (stats, terms, forward rows and query results)."""
+    import pandas as pd
+
+    from bobo_spark.merge import merge_snapshot
+
+    base = tmp_path_factory.mktemp("idx_del_mixed_merge")
+    d, fresh = str(base / "merged"), str(base / "fresh")
+    _mixed_format_index(spark, d)
+    merge_snapshot(spark, d)
+    build_snapshot(spark, webpages(spark, 300, 3)
+                   .where(~F.col("doc_id").isin([5, 11, 205])), fresh,
+                   BuildConfig(docs_per_segment=100))
+    m, f = IndexReader(spark, d), IndexReader(spark, fresh)
+    assert m.deleted.size == 0 and m._deleted_bc is None
+    for k in ("n_docs", "tok_sum", "avgdl", "n_terms", "n_segments"):
+        assert m.snap.stats[k] == f.snap.stats[k], k
+    for tbl, key in (("_terms", "term_id"), ("_forward", "doc_id")):
+        a = getattr(m, tbl).toPandas().sort_values(key, ignore_index=True)
+        b = getattr(f, tbl).toPandas().sort_values(key, ignore_index=True)
+        pd.testing.assert_frame_equal(a, b[a.columns])
+    for req in (SearchRequest(query="ba", mode="or", k=20, facets=("lang",)),
+                SearchRequest(query="ba be", mode="and", k=10),
+                SearchRequest(query=None, k=10**6)):
+        assert_same_result(m.search(req), f.search(req), req)

@@ -1,10 +1,10 @@
-"""Scale audit of the per-segment tombstone design (r3 verdict item:
-the delete set must never ride inside query plans).
+"""Scale audit of the tombstone design (r3 verdict item: the delete
+set must never ride inside query plans).
 
 100k tombstones: query plans stay O(1) in the tombstone count (the
-applyInPandas paths carry only a broadcast HANDLE; each segment task
-consults just its own segment's sorted id array), and the DataFrame
-paths (matchall / search_df / facet_counts) exclude tombstones with a
+applyInPandas paths carry only a broadcast HANDLE of the reader's one
+sorted global doc_id array), and the DataFrame paths (matchall /
+search_df / facet_counts) exclude tombstones with a
 relational anti-join Catalyst can plan — never an ``isin`` literal
 list."""
 
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pickle
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,9 +44,10 @@ def test_tombstone_count_and_broadcast_shape(env):
     spark, d, pre_hits, after = env
     n_del = N_DOCS - (N_DOCS + _KEEP_MOD - 1) // _KEEP_MOD
     assert after.snap.stats["n_deleted"] == n_del
-    seg_map = after._deleted_bc.value
-    assert len(seg_map) == N_DOCS // 15_000  # every segment has its slice
-    assert sum(a.size for a in seg_map.values()) == n_del
+    # one global sorted array, broadcast as is
+    assert after.deleted.size == n_del
+    assert (np.diff(after.deleted) > 0).all()
+    np.testing.assert_array_equal(after._deleted_bc.value, after.deleted)
 
 
 def test_query_plan_payload_is_o1(env):

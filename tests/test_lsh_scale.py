@@ -241,3 +241,39 @@ def test_zero_vectors_pair_with_nothing(spark):
     got = set(zip(exact["id_a"], exact["id_b"]))
     assert planted <= got
     assert not any(a < 3 or b < 3 for a, b in got)
+
+
+def test_topk_skips_zero_vectors(spark):
+    """cosine_topk and lsh_topk never rank a zero vector: on 40 4-dim
+    vectors with 3 zero rows both equal brute force over the nonzero
+    rows (lsh_topk: those in the query's bucket), and a zero query
+    vector raises ValueError."""
+    rng = np.random.default_rng(5)
+    V = rng.normal(size=(40, 4))
+    V[:3] = 0.0
+    df = spark.createDataFrame([(i, V[i].tolist()) for i in range(40)],
+                               "vec_id long, embedding array<double>")
+    q = V[7].tolist()
+    planes = simsearch.hyperplanes(4, 2)
+
+    def bucket(v):
+        return sum(1 << i for i, p in enumerate(planes) if float(np.dot(p, v)) > 0)
+
+    def brute(ids):
+        cos = np.array([float(np.dot(V[i], q) / (np.linalg.norm(V[i]) * np.linalg.norm(q)))
+                        for i in ids])
+        cos = np.sign(cos) * np.floor(np.abs(cos) * 1e4 + 0.5) / 1e4  # HALF_UP
+        order = np.lexsort((np.asarray(ids), -cos))
+        return [int(ids[i]) for i in order], cos[order]
+
+    live = list(range(3, 40))
+    for got, (ids, cos) in (
+            (simsearch.cosine_topk(df, q, k=40), brute(live)),
+            (simsearch.lsh_topk(df, q, k=40, n_planes=2),
+             brute([i for i in live if bucket(V[i]) == bucket(q)]))):
+        pdf = got.toPandas()
+        assert pdf["vec_id"].tolist() == ids
+        np.testing.assert_allclose(pdf["cosine"].to_numpy(), cos, atol=1e-9)
+    for fn in (simsearch.cosine_topk, simsearch.lsh_topk):
+        with pytest.raises(ValueError, match="zero"):
+            fn(df, [0.0] * 4)

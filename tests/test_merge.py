@@ -370,3 +370,25 @@ def test_merge_mixed_docs_per_segment(spark, tmp_path):
     pd.testing.assert_frame_equal(
         m._forward.orderBy("doc_id").toPandas()[cols],
         f._forward.orderBy("doc_id").toPandas()[cols])
+
+
+def test_dicts_spark_side_equals_driver(spark, tmp_path, readers, monkeypatch):
+    """The dicts stage's Spark aggregate over the surviving forward
+    rows (taken when ``_small_table_pdf`` declines) gives the same
+    dictionaries, terms and stats as the driver read."""
+    from bobo_spark import merge
+
+    d = str(tmp_path / "spark_dicts")
+    build_snapshot(spark, webpages(spark, N, 6), d, CFG)
+    delete_docs(spark, d, DELETED)
+    monkeypatch.setattr(merge, "_small_table_pdf", lambda *a, **kw: None)
+    merge_snapshot(spark, d, block_size=CFG.block_size)
+    got, want = IndexReader(spark, d), readers["merged"]
+    for k in ("n_docs", "tok_sum", "avgdl", "n_terms", "doc_min", "doc_max"):
+        assert got.snap.stats[k] == want.snap.stats[k], k
+    for fld in ("lang", "ts_bucket"):
+        pd.testing.assert_frame_equal(
+            got.dicts[fld].sort_values("ordinal", ignore_index=True),
+            want.dicts[fld].sort_values("ordinal", ignore_index=True))
+    pd.testing.assert_frame_equal(got._terms.orderBy("term_id").toPandas(),
+                                  want._terms.orderBy("term_id").toPandas())

@@ -2,7 +2,9 @@
 reader reads through Spark has a declared schema
 (``build.TABLE_SCHEMAS``), so no read infers one. Each declared schema
 must equal what Spark infers from the table's files after a base
-build, an append, deletes and a merge, on both posting pipelines."""
+build, an append, deletes and a merge, on both postings paths: the
+pair table (pinned by ``broadcast_terms_threshold=0``) and the
+broadcast-dictionary text shuffle."""
 
 from __future__ import annotations
 
@@ -35,11 +37,12 @@ def _check(spark, index_dir: str, stage: str) -> None:
     assert _job_count(spark, lambda: IndexReader(spark, index_dir)) == 0, stage
 
 
-@pytest.mark.parametrize("pipeline", ["pairs", "segment_local"])
-def test_declared_schemas_match_inferred(spark, tmp_path, pipeline):
-    d = str(tmp_path / pipeline)
+@pytest.mark.parametrize("postings", ["pairs", "segment_local"])
+def test_declared_schemas_match_inferred(spark, tmp_path, postings):
+    d = str(tmp_path / postings)
     docs = webpages(spark, 300, 2)
-    cfg = BuildConfig(docs_per_segment=100, pipeline=pipeline,
+    threshold = 0 if postings == "pairs" else BuildConfig.broadcast_terms_threshold
+    cfg = BuildConfig(docs_per_segment=100, broadcast_terms_threshold=threshold,
                       sections=("regex", r"\s\s+"))
     build_snapshot(spark, docs.where("doc_id < 150"), d, cfg)
     _check(spark, d, "base")
