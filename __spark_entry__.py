@@ -999,10 +999,9 @@ def queries() -> dict[str, _T]:
     holds (a) every entry whose code changed this round or that never
     had a driver row, and (b) one row per SURVEY §2 operator family.
     The 17 entries past the window are zero-churn oracle twins /
-    JVM-expression operators, every one driver-green in r03 or r04
-    (see WINDOW.md for the per-entry verification ledger and the
-    round-robin rule). Do NOT append new entries without re-curating
-    the first 50."""
+    JVM-expression operators (see WINDOW.md for the per-entry
+    verification ledger and the round-robin rule). Do NOT append new
+    entries without re-curating the first 50."""
     return {
         # --- BM25 engine (incl. r4-changed delete/pruning/recency paths)
         "bm25_topk_and": _q_bm25_and,
@@ -1026,36 +1025,38 @@ def queries() -> dict[str, _T]:
         # --- browse engine
         "browse_facet_source": _q_browse_facet_source,
         "browse_multiselect_expand": _q_browse_multiselect,
-        "browse_not_values": _q_browse_not,
         "browse_empty_filter": _q_browse_empty_filter,
         "browse_combo_selection": _q_browse_combo,
         "browse_sort_page": _q_sort_page,
         "browse_group_multilevel": _q_group_multilevel,
         "group_dedupe_top_order": _q_group_dedupe,
-        "browse_num_groups": _q_browse_num_groups,
         "browse_collectall_lang": _q_browse_collectall,
         "browse_custom_facet_sort": _q_browse_custom_sort,
         "browse_recency_scorer": _q_browse_recency,
         "browse_multivalue_facet": _q_browse_multivalue,
-        "browse_compact_multival_sort": _q_browse_compact_sort,
-        "browse_weighted_multival": _q_browse_weighted_multival,
-        "browse_virtual_facet": _q_browse_virtual,
         "browse_boolean_facet_query": _q_browse_boolean_facet_q,
-        "browse_facet_boost_query": _q_browse_facet_boost_q,
         # --- facet handlers
         "facet_range_nchars": _q_facet_range_nchars,
         "facet_path_region": _q_facet_path_region,
         "facet_groupby_flag_status": _q_facet_groupby,
         "facet_buckets_priority": _q_facet_buckets,
-        "facet_multirange_toklen": _q_multirange,
         "facet_attributes": _q_facet_attributes,
-        "facet_dynamic_timerange": _q_facet_dyntime,
         # --- r5 round-robin rotations back IN (evidence was 1 round old)
         "facet_geo_box": _q_facet_geo_box,
         "map_reduce_hook": _q_map_reduce,
         # --- LLM-pipeline scale paths
         "dedup_minhash_lsh": _q_dedup_minhash,
         "dedup_simhash_pairs": _q_dedup_simhash_pairs,
+        # every textops entry whose operator spreads its input
+        # (textops._spread)
+        "token_counts": _q_token_counts,
+        "dedup_exact": _q_dedup_exact,
+        "dedup_ngram_jaccard": _q_dedup_jaccard,
+        "minhash_signatures": _q_minhash_sigs,
+        "fingerprint_minshingle": _q_fingerprint,
+        "simhash64": _q_simhash,
+        "quality_scores": _q_quality,
+        "langid": _q_langid,
         "simsearch_neardup_lsh": _q_sim_neardup_lsh,
         # exact twin of simsearch_neardup_lsh (same zero-vector rule)
         "simsearch_neardup_pairs": _q_sim_neardup,
@@ -1065,14 +1066,28 @@ def queries() -> dict[str, _T]:
         "simsearch_lsh_topk_indexed": _q_simsearch_lsh_indexed,
         "simsearch_ivf_topk": _q_simsearch_ivf,
         # ================= driver window ends here (entry 50) =========
-        # Zero-churn entries below are driver-green in r03 or r04 —
-        # the r03 tail is TWO rounds old (the round-robin ledger's
-        # standing debt; WINDOW.md mandates its next-build-round
-        # rotation) — and are semantically covered by a kept sibling
-        # (oracle twins) or are plan-asserted pure-JVM expressions.
-        # All 67 were re-verified against the DuckDB oracle locally
-        # in r6 (optimization round; window order deliberately frozen).
-        # Ledger: WINDOW.md.
+        # Zero-churn entries below are semantically covered by a kept
+        # sibling (oracle twins) or are plan-asserted pure-JVM
+        # expressions. Five are still overdue for rotation
+        # (facet_geo_distance, multimodal_features, sessionize_events,
+        # multimodal_frame_sample, multimodal_resize). All 67 keep
+        # exact local oracles (scripts/oracle_check.py). Ledger:
+        # WINDOW.md.
+        # zero churn, rotated out for the spreading textops entries;
+        # each keeps a sibling inside: facet_range_nchars
+        # (multirange, dynamic time ranges), browse_multivalue_facet
+        # (compact and weighted multi-value), browse_boolean_facet_query
+        # (boost query), browse_group_multilevel (num groups),
+        # browse_combo_selection (NOT values), browse_multiselect_expand
+        # (virtual facet expand)
+        "facet_multirange_toklen": _q_multirange,
+        "browse_compact_multival_sort": _q_browse_compact_sort,
+        "browse_weighted_multival": _q_browse_weighted_multival,
+        "browse_facet_boost_query": _q_browse_facet_boost_q,
+        "browse_num_groups": _q_browse_num_groups,
+        "browse_not_values": _q_browse_not,
+        "browse_virtual_facet": _q_browse_virtual,
+        "facet_dynamic_timerange": _q_facet_dyntime,
         # range-handler sibling facet_range_nchars stays inside
         # (rotated out for simsearch_topk_cosine, whose operator changed)
         "facet_filtered_range": _q_filtered_range,
@@ -1087,16 +1102,8 @@ def queries() -> dict[str, _T]:
         # dedup_simhash_pairs, whose pair kernel changed)
         "facet_histogram_nchars": _q_facet_histogram,
         "facet_geo_distance": _q_facet_geo_distance,
-        "token_counts": _q_token_counts,
-        "dedup_exact": _q_dedup_exact,
         "multimodal_features": _q_multimodal,
         "sessionize_events": _q_sessionize,
-        "dedup_ngram_jaccard": _q_dedup_jaccard,
-        "minhash_signatures": _q_minhash_sigs,
-        "fingerprint_minshingle": _q_fingerprint,
-        "simhash64": _q_simhash,
-        "quality_scores": _q_quality,
-        "langid": _q_langid,
         "multimodal_frame_sample": _q_multimodal_frames,
         "multimodal_resize": _q_multimodal_resize,
     }

@@ -10,9 +10,11 @@ the north rule's "resumable from Iceberg snapshot checkpoints"):
    snapshots append new values after the parent max ordinal so
    existing forward/posting data stays valid.
 2. ``terms``    — global term dictionary (df, cf) + dense ``term_id``
-   assigned by distributed two-pass sorted rank (lexicographic on
-   first build; new terms append after parent max id → old postings
-   never invalidated). Terms are counted straight off the tokenizer
+   by sorted rank (lexicographic on first build; an append keeps the
+   parent's ids and numbers its new terms in sorted order after them
+   → old postings never invalidated). Under the driver gate the sort
+   and the append's merge run in pandas; past it, a distributed
+   two-pass rank. Terms are counted straight off the tokenizer
    with map-side partials, facet sentinel terms "\\x00field:ord"
    included (the AdaptiveFacetFilter-style inverted access path for
    selections).
@@ -32,10 +34,7 @@ the north rule's "resumable from Iceberg snapshot checkpoints"):
    query-time joins.
 4. ``forward``  — per-segment doc table (doclen, url, facet ordinals),
    the Bobo FacetDataCache analogue (facets/data/FacetDataCache.java:33-37).
-5. ``meta``     — per-segment lineage: rows, bytes, term count,
-   xxhash64 checksum + build metrics. Runs CONCURRENTLY with forward
-   (both are small jobs over the postings output).
-6. ``published`` — atomic manifest commit.
+5. ``published`` — atomic manifest commit.
 
 Block-max metadata stores ``(max_tf, min_dl)`` per block rather than a
 float score bound: the query engine derives a *safe* upper bound from
@@ -71,6 +70,14 @@ POSTINGS_SCHEMA = (
     "ts_bytes binary, pos_bytes binary, max_tf int, min_dl int"
 )
 SECTIONS_SCHEMA = "doc_id long, n_secs int, sec_bytes binary, segment long"
+# the build's scratch tables (the doc table carries text only when it
+# was extracted from html)
+DOCS_SCHEMA = ("doc_id long, url string, n_bytes int, lang_ord long, "
+               "ts_ord long, segment long")
+PAIRS_SCHEMA = "doc_id long, term string, packed long, segment long, pos_bytes binary"
+# dictionaries of at most this many rows (exact count) are sorted,
+# merged and written on the driver; larger ones take the distributed rank
+DRIVER_DICT_ROWS = 1_000_000
 # Spark schema of each catalog table a reader opens: a spark.read
 # given one skips the schema-inference job a bare read runs
 TABLE_SCHEMAS = {
@@ -176,13 +183,13 @@ def unpack_meta(packed: np.ndarray):
 
 
 def _dict_aggs(docs: DataFrame, cols: list[str]) -> dict[str, pd.DataFrame]:
-    """Per-field (value, df, min_doc, max_doc) stats for ALL facet
-    fields in ONE job: a stack() generator unpivots the fields, one
-    tiny groupBy covers every dictionary."""
+    """Per-field (value, df, min_doc, max_doc) stats for ALL ``cols``
+    in ONE job: a stack() generator unpivots the fields (values as
+    strings), one tiny groupBy covers every dictionary."""
     stacked = docs.selectExpr(
         "doc_id",
         "stack({}, {}) AS (field, value)".format(
-            len(cols), ", ".join(f"'{c}', {c}" for c in cols)),
+            len(cols), ", ".join(f"'{c}', string({c})" for c in cols)),
     )
     agg = (
         stacked.groupBy("field", "value")
@@ -237,7 +244,7 @@ def _build_dict(agg: pd.DataFrame, parent_dict: pd.DataFrame | None) -> pd.DataF
 
 
 def assign_sorted_ids(terms: DataFrame, spark: SparkSession, id_base: int = 0, n_parts: int | None = None,
-                      driver_threshold: int = 1_000_000,
+                      driver_threshold: int = DRIVER_DICT_ROWS,
                       as_pandas: bool = False,
                       max_rows_hint: int | None = None):
     """Dense ids by global sort order — distributed two-pass rank.
@@ -336,6 +343,41 @@ def assign_sorted_ids(terms: DataFrame, spark: SparkSession, id_base: int = 0, n
 
     out = ranged.mapInPandas(assign, schema=schema)
     return out
+
+
+def _append_terms(spark: SparkSession, delta: DataFrame, parent_paths: list[str],
+                  n_parent: int, terms_path: str,
+                  driver_threshold: int = DRIVER_DICT_ROWS) -> None:
+    """Write an append's term dictionary: the parent's (ids dense,
+    0..n_parent-1, on every path) merged with the batch's (term, df, cf)
+    ``delta`` (tokenized once, persisted). Known terms keep their ids and
+    add counts; new terms are numbered from ``n_parent`` in term order.
+    In pandas when parent plus delta rows fit ``driver_threshold``, else
+    by a distributed full join."""
+    delta = delta.persist()
+    try:
+        if n_parent + delta.count() <= driver_threshold:
+            new = delta.toPandas()
+            old = read_table_pdf(parent_paths)
+            pos = pd.Index(old["term"]).get_indexer(new["term"])
+            hit = pos >= 0
+            old.loc[pos[hit], ["df", "cf"]] += new.loc[hit, ["df", "cf"]].to_numpy()
+            new = new[~hit].sort_values("term", ignore_index=True)
+            new["term_id"] = n_parent + np.arange(len(new), dtype=np.int64)
+            write_table_pdf(pd.concat([old, new], ignore_index=True)
+                            [["term", "df", "cf", "term_id"]], terms_path)
+            return
+        old = read_table(spark, "terms", parent_paths).withColumnsRenamed(
+            {"df": "df0", "cf": "cf0"})
+        merged = delta.join(old, "term", "full").select(
+            "term", *[(F.coalesce(c, F.lit(0)) + F.coalesce(c + "0", F.lit(0))).alias(c)
+                      for c in ("df", "cf")], "term_id")
+        known = merged.where(F.col("term_id").isNotNull())
+        novel = merged.where(F.col("term_id").isNull()).drop("term_id")
+        (known.unionByName(assign_sorted_ids(novel, spark, id_base=n_parent))
+         .write.mode("overwrite").parquet(terms_path))
+    finally:
+        delta.unpersist()
 
 
 # ------------------------------------------------------------- stage: postings
@@ -461,6 +503,23 @@ def _distinct_pair_codes(rows: np.ndarray, codes: np.ndarray,
     pair = np.empty(rows.size, dtype=[("r", np.int64), ("c", np.int64)])
     pair["r"], pair["c"] = rows, codes
     return np.unique(pair)["c"].astype(np.int64)
+
+
+def _with_ords(batches, ords_bc):
+    """Doc batches with ``lang_ord``/``ts_ord`` resolved from their
+    ``lang``/``ts_bucket`` columns (which are dropped) against the
+    broadcast (value → ordinal) dictionaries — the doc table's and the
+    text source's one ordinal rule. A doc with a null value is dropped.
+    ``ords_bc`` None: pass through."""
+    if ords_bc is None:
+        yield from batches
+        return
+    lang, ts = ords_bc.value
+    for pdf in batches:
+        pdf = pdf[pdf["lang"].notna() & pdf["ts_bucket"].notna()]
+        yield pdf.drop(columns=["lang", "ts_bucket"]).assign(
+            lang_ord=pdf["lang"].map(lang).astype(np.int64),
+            ts_ord=pdf["ts_bucket"].map(ts).astype(np.int64))
 
 
 def _term_stats_partial(batches):
@@ -615,26 +674,38 @@ def _decode_forward_runs(batches):
         yield pd.DataFrame({"doc_id": docs, "doclen": dl})
 
 
-def _identity_partition_keys(spark: SparkSession, n_parts: int) -> list[int]:
-    """For each target partition i, an int key k_i with
-    ``pmod(murmur3(k_i), n_parts) == i`` — so ``repartition(n, key)``
-    places a DRIVER-computed partition index exactly, turning hash
-    partitioning into explicit range partitioning with ZERO sampling
-    pass (repartitionByRange would evaluate the whole child once just
-    to sample boundaries). The probe asks Spark itself for its hash
-    values (one tiny local job), so the mapping can never drift from
-    the engine's Murmur3 seed/variant."""
-    found: dict[int, int] = {}
-    base = 0
-    while len(found) < n_parts:
-        cand = spark.range(base, base + n_parts * 20).select(
-            F.col("id").cast("int").alias("k"),
-            F.pmod(F.hash(F.col("id").cast("int")), F.lit(n_parts)).alias("p"),
-        ).collect()
-        for r in cand:
-            found.setdefault(r["p"], r["k"])
-        base += n_parts * 20
-    return [found[i] for i in range(n_parts)]
+def _murmur3_int(k: np.ndarray) -> np.ndarray:
+    """Spark's ``hash()`` of int values, vectorized: Murmur3_x86_32
+    ``hashInt`` with seed 42, as int32."""
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    k1 = rotl(k.astype(np.int32).view(np.uint32) * np.uint32(0xCC9E2D51), 15)
+    h = np.uint32(42) ^ (k1 * np.uint32(0x1B873593))
+    h = rotl(h, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(4)  # fmix(h, length = 4 bytes)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def _identity_partition_keys(n_parts: int) -> list[int]:
+    """For each target partition i, the smallest int key k_i ≥ 0 with
+    ``pmod(hash(k_i), n_parts) == i`` (``_murmur3_int``, no Spark job)
+    — so ``repartition(n, key)`` places a DRIVER-computed partition
+    index exactly: range partitioning with no sampling pass (which
+    repartitionByRange would run over the whole child)."""
+    n = 20 * n_parts
+    while True:
+        k = np.arange(n, dtype=np.int64)
+        parts, first = np.unique(np.mod(_murmur3_int(k), n_parts),
+                                 return_index=True)
+        if len(parts) == n_parts:
+            return k[first].tolist()
+        n *= 2
 
 
 def _doc_range_repartition(df: DataFrame, n_parts: int, stats: dict,
@@ -653,31 +724,11 @@ def _doc_range_repartition(df: DataFrame, n_parts: int, stats: dict,
     span = (dmax - dmin + 1) if dmin is not None else None
     if not (monotone and span and span <= 2 * max(1, live)):
         return df.repartitionByRange(n_parts, *fallback)
-    keys = _identity_partition_keys(df.sparkSession, n_parts)
+    keys = _identity_partition_keys(n_parts)
     part = F.floor((F.col("doc_id") - F.lit(dmin)) * F.lit(n_parts)
                    / F.lit(span)).cast("int")
     pk = F.element_at(F.array(*[F.lit(k) for k in keys]), part + 1)
     return df.withColumn("_pk", pk).repartition(n_parts, "_pk").drop("_pk")
-
-
-def _write_meta(spark: SparkSession, sid: int, postings_path: str,
-                meta_path: str) -> None:
-    """Per-segment lineage of a postings table: rows, bytes, term
-    count and an xxhash64 checksum. Pseudo forward runs (term_id = -1)
-    are storage detail, not postings, so the counts are the same on
-    both postings paths."""
-    (read_table(spark, "postings", [postings_path])
-     .where(F.col("term_id") >= 0)
-     .groupBy("segment")
-     .agg(F.sum("n_docs").alias("rows"),
-          F.sum(F.length("doc_bytes") + F.length("tf_bytes")
-                + F.length("dl_bytes") + F.length("lang_bytes")
-                + F.length("ts_bytes")).alias("bytes"),
-          F.countDistinct("term_id").alias("n_terms"),
-          F.expr("bit_xor(xxhash64(term_id, first_doc, last_doc, "
-                 "n_docs))").alias("checksum"))
-     .withColumn("snapshot_id", F.lit(sid))
-     .write.mode("overwrite").parquet(meta_path))
 
 
 # ------------------------------------------------------------------ the build
@@ -730,6 +781,14 @@ def build_snapshot(
         F.date_trunc(cfg.ts_bucket, "warc_ts"), "yyyy-MM-dd").alias("ts_bucket")
 
     docs_path = cat.table_path("_docs", sid)
+    docs_schema = DOCS_SCHEMA + ("" if have_text else ", text string")
+
+    def _ord_maps():
+        """Broadcast (value → ordinal) maps of this snapshot's lang and
+        ts_bucket dictionaries, for ``_with_ords``."""
+        return spark.sparkContext.broadcast(tuple(
+            read_table_pdf(cat.table_path(t, sid), columns=["ordinal", "value"])
+            .set_index("value")["ordinal"] for t in ("dict_lang", "dict_ts_bucket")))
 
     # ---- stage: docs + dictionaries -------------------------------------
     docs_pool = docs_fut = None
@@ -739,15 +798,19 @@ def build_snapshot(
             parent_lang = read_table_pdf(cat.table_paths(parent, "dict_lang"))
             parent_ts = read_table_pdf(cat.table_paths(parent, "dict_ts_bucket"))
         base = docs.select("doc_id", "url", "text", "lang", ts_col)
-        # both dictionaries from ONE stacked aggregation job
-        aggs = _dict_aggs(base.select("doc_id", "lang", "ts_bucket"),
-                          ["lang", "ts_bucket"])
+        # both dictionaries and the batch's segments from ONE stacked
+        # aggregation job
+        aggs = _dict_aggs(base.select("doc_id", "lang", "ts_bucket",
+                                      _segment_col(cfg)),
+                          ["lang", "ts_bucket", "segment"])
         # doc-id range of THIS batch (pre-merge aggs cover every doc):
         # lets the postings stage compute range-partition boundaries
         # driver-side instead of paying repartitionByRange's sampling
         # pass over the full text
         snap.stats["doc_min"] = int(aggs["lang"]["min_doc"].min())
         snap.stats["doc_max"] = int(aggs["lang"]["max_doc"].max())
+        snap.stats["n_segments"] = len(aggs["segment"]) + (
+            parent.stats.get("n_segments", 0) if parent else 0)
         lang_dict = _build_dict(aggs["lang"], parent_lang)
         ts_dict = _build_dict(aggs["ts_bucket"], parent_ts)
         for name, d in (("dict_lang", lang_dict), ("dict_ts_bucket", ts_dict)):
@@ -755,20 +818,15 @@ def build_snapshot(
                 d.astype({"ordinal": "int64", "df": "int64",
                           "min_doc": "int64", "max_doc": "int64"}),
                 cat.table_path(name, sid))
-        lang_map = spark.createDataFrame(lang_dict[["ordinal", "value"]]).withColumnsRenamed(
-            {"ordinal": "lang_ord", "value": "lang"}
-        )
-        ts_map = spark.createDataFrame(ts_dict[["ordinal", "value"]]).withColumnsRenamed(
-            {"ordinal": "ts_ord", "value": "ts_bucket"}
-        )
+        doc_ords = _ord_maps()
         keep_text = [] if have_text else ["text"]
 
         def _write_docs_table() -> None:
             (
-                base.join(F.broadcast(lang_map), "lang")
-                .join(F.broadcast(ts_map), "ts_bucket")
-                .select("doc_id", "url", F.length("text").alias("n_bytes"),
-                        "lang_ord", "ts_ord", _segment_col(cfg), *keep_text)
+                base.select(F.col("doc_id").cast("long").alias("doc_id"), "url",
+                            F.length("text").alias("n_bytes"), "lang", "ts_bucket",
+                            _segment_col(cfg), *keep_text)
+                .mapInPandas(lambda it: _with_ords(it, doc_ords), schema=docs_schema)
                 .write.mode("overwrite")
                 .parquet(docs_path)
             )
@@ -799,7 +857,7 @@ def build_snapshot(
             clock.join("docs", fut)  # re-raises a failed write loud
             docs_pool.shutdown()
             docs_pool = None
-        return spark.read.parquet(docs_path)
+        return spark.read.schema(docs_schema).parquet(docs_path)
 
     # Everything between the overlapped doc-table submit and the
     # serialization point below runs under a guard: a stage failure
@@ -836,21 +894,13 @@ def build_snapshot(
             clock.mark("sections")
 
         # ---- text source: (doc_id, text, ords, segment) --------------------
+        ords_bc = None
         if have_text:
-            # slim-docs path: ords/segment recomputed from the caller's
-            # frame + broadcast dict maps — text is never rewritten
-            lang_map2 = (
-                spark.read.parquet(cat.table_path("dict_lang", sid))
-                .select(F.col("ordinal").alias("lang_ord"), F.col("value").alias("lang")))
-            ts_map2 = (
-                spark.read.parquet(cat.table_path("dict_ts_bucket", sid))
-                .select(F.col("ordinal").alias("ts_ord"), F.col("value").alias("ts_bucket")))
-            pair_src = (
-                docs.select("doc_id", "text", "lang", ts_col)
-                .join(F.broadcast(lang_map2), "lang")
-                .join(F.broadcast(ts_map2), "ts_bucket")
-                .select("doc_id", "text", "lang_ord", "ts_ord", _segment_col(cfg))
-            )
+            # slim-docs path: segment recomputed from the caller's frame,
+            # ords resolved in each Python task (``_with_ords``, no
+            # broadcast-join job) — text is never rewritten
+            ords_bc = _ord_maps()
+            pair_src = docs.select("doc_id", "text", "lang", ts_col, _segment_col(cfg))
         else:
             pair_src = _docs_table().select("doc_id", "text", "lang_ord", "ts_ord", "segment")
 
@@ -905,8 +955,8 @@ def build_snapshot(
                     both["pos_bytes"] = compact_binary(both["pos_bytes"])
                     yield both
 
-            pairs_schema = "doc_id long, term string, packed long, segment long, pos_bytes binary"
-            pair_src.mapInPandas(to_pairs, schema=pairs_schema).write.mode("overwrite").parquet(pairs_path)
+            pair_src.mapInPandas(lambda it: to_pairs(_with_ords(it, ords_bc)),
+                                 schema=PAIRS_SCHEMA).write.mode("overwrite").parquet(pairs_path)
 
         def ensure_pairs() -> DataFrame:
             """The pair table, materialized on first need (a dictionary
@@ -914,7 +964,7 @@ def build_snapshot(
             if "pairs" not in snap.stages:
                 build_pairs_table()
                 clock.mark("pairs")
-            return spark.read.parquet(pairs_path)
+            return spark.read.schema(PAIRS_SCHEMA).parquet(pairs_path)
 
         TF = F.shiftright("packed", 40)
 
@@ -924,28 +974,14 @@ def build_snapshot(
             # tokenize-and-count partials, one tiny shuffle of ~vocab
             # rows per partition (no pair materialization)
             delta_terms = (
-                pair_src.mapInPandas(_term_stats_partial,
+                pair_src.mapInPandas(lambda it: _term_stats_partial(_with_ords(it, ords_bc)),
                                      schema="term string, df long, cf long")
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
             )
             if parent is not None:
-                old = read_table(spark, "terms", cat.table_paths(parent, "terms"))
-                merged = (
-                    delta_terms.join(old.withColumnsRenamed({"df": "df0", "cf": "cf0"}), "term", "full")
-                    .select(
-                        "term",
-                        (F.coalesce("df", F.lit(0)) + F.coalesce("df0", F.lit(0))).alias("df"),
-                        (F.coalesce("cf", F.lit(0)) + F.coalesce("cf0", F.lit(0))).alias("cf"),
-                        F.col("term_id"),
-                    )
-                )
-                known = merged.where(F.col("term_id").isNotNull())
-                novel = merged.where(F.col("term_id").isNull()).drop("term_id")
-                max_id = old.agg(F.max("term_id")).collect()[0][0] or -1
-                novel_ids = assign_sorted_ids(novel, spark, id_base=max_id + 1)
-                full = known.unionByName(novel_ids)
-                full.write.mode("overwrite").parquet(terms_path)
+                _append_terms(spark, delta_terms, cat.table_paths(parent, "terms"),
+                              parent.stats["n_terms"], terms_path)
             else:
                 full = assign_sorted_ids(delta_terms, spark, id_base=0,
                                          as_pandas=True)
@@ -976,10 +1012,13 @@ def build_snapshot(
 
     # ---- stage: stats ----------------------------------------------------
     if "stats" not in snap.stages:
-        agg = docs_t.select(
-            F.count("*").alias("n"),
-            F.sum("n_bytes").alias("bytes"),
-        ).collect()[0]
+        # batch docs and bytes: a driver read of the doc table under the
+        # small-table gate, else one Spark aggregate
+        dstats = _small_table_pdf(docs_path, columns=["n_bytes"])
+        if dstats is not None:
+            new_docs, new_bytes = len(dstats), int(dstats["n_bytes"].sum())
+        else:
+            new_docs, new_bytes = docs_t.select(F.count("*"), F.sum("n_bytes")).first()
         # corpus token count = Σ cf over the (merged) term dictionary —
         # a scan of the small terms table, not of the pairs; term count
         # rides the same job (reused by postings + publish, no re-count).
@@ -996,14 +1035,14 @@ def build_snapshot(
             ).collect()[0]
             tok_sum = trow["tok"] or 0
             n_terms_stat = int(trow["n_terms"])
-        n_docs = agg["n"] + (parent.stats["n_docs"] if parent else 0)
+        n_docs = new_docs + (parent.stats["n_docs"] if parent else 0)
         snap.stats.update(
             {
                 "n_docs": int(n_docs),
                 "tok_sum": int(tok_sum),
                 "avgdl": float(tok_sum) / max(1, n_docs),
-                "new_docs": int(agg["n"]),
-                "new_bytes": int(agg["bytes"] or 0),
+                "new_docs": int(new_docs),
+                "new_bytes": int(new_bytes or 0),
                 "n_terms": int(n_terms_stat),
                 # recorded so the query planner can reject phrase
                 # queries driver-side instead of failing in an executor
@@ -1048,7 +1087,8 @@ def build_snapshot(
                 _doc_range_repartition(pair_src, n_parts, snap.stats,
                                        snap.stats.get("new_docs", 0),
                                        ("doc_id",))
-                .mapInPandas(lambda it: _encode_segment_local(it, cfg, tmap_bc),
+                .mapInPandas(lambda it: _encode_segment_local(_with_ords(it, ords_bc),
+                                                              cfg, tmap_bc),
                              schema=POSTINGS_SCHEMA)
                 .write.mode("overwrite")
                 .parquet(postings_path)
@@ -1066,14 +1106,9 @@ def build_snapshot(
             )
         clock.mark("postings")
 
-    # ---- stages: forward + meta (run CONCURRENTLY) ------------------------
-    # both are small jobs over the postings output with mostly-fixed
-    # driver/scheduling latency — overlapping them removes a fixed cost
-    # that would otherwise deflate cluster-scaling efficiency
+    # ---- stage: forward --------------------------------------------------
     forward_path = cat.table_path("forward", sid)
-    meta_path = cat.table_path("meta", sid)
-
-    def _run_forward() -> None:
+    if "forward" not in snap.stages:
         if not use_pairs:
             # doclen decoded from the pseudo forward runs written by
             # the encoder — no pair re-aggregation
@@ -1106,27 +1141,14 @@ def build_snapshot(
             .write.mode("overwrite")
             .parquet(forward_path)
         )
-
-    stages = [(name, fn) for name, fn in (
-        ("forward", _run_forward),
-        ("meta", lambda: _write_meta(spark, sid, postings_path, meta_path)))
-        if name not in snap.stages]
-    if stages:
-        with ThreadPoolExecutor(max_workers=len(stages)) as ex:
-            futs = [(name, clock.submit(ex, fn)) for name, fn in stages]
-            for name, fut in futs:
-                clock.join(name, fut)
+        clock.mark("forward")
 
     # ---- publish ----------------------------------------------------------
     if "published" not in snap.stages:
         snap.stats.update(extra_stats or {})
-        snap.stats["n_segments"] = int(
-            len(read_table_pdf(meta_path))
-            + (parent.stats.get("n_segments", 0) if parent else 0)
-        )
         cumulative = {"terms": [terms_path], "dict_lang": [cat.table_path("dict_lang", sid)],
                       "dict_ts_bucket": [cat.table_path("dict_ts_bucket", sid)]}
-        for t, p in (("postings", postings_path), ("forward", forward_path), ("meta", meta_path)):
+        for t, p in (("postings", postings_path), ("forward", forward_path)):
             prev = cat.table_paths(parent, t) if parent else []
             cumulative[t] = prev + [p]
         if cfg.sections and cfg.sections[0] == "regex":

@@ -15,7 +15,6 @@ Layout::
       postings/snap=N/                   # segment, term_id, blocks...
       forward/snap=N/                    # segment, doc_id, doclen, url, ords
       dict_lang/snap=N/  dict_ts_bucket/snap=N/
-      meta/snap=N/                       # per-partition lineage + metrics
 
 Reference parity: the snapshot open path mirrors
 ``BoboMultiReader.getInstance`` decorating segments and loading facet
@@ -31,7 +30,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-TABLES = ("terms", "postings", "forward", "dict_lang", "dict_ts_bucket", "meta")
+TABLES = ("terms", "postings", "forward", "dict_lang", "dict_ts_bucket")
 
 
 def read_table_arrow(paths, columns=None):
@@ -69,7 +68,7 @@ def read_table_arrow(paths, columns=None):
 
 
 def read_table_pdf(paths, columns=None):
-    """Read a SMALL catalog table (dicts, terms, meta, idmap) straight
+    """Read a SMALL catalog table (dicts, terms, idmap) straight
     into pandas with pyarrow — zero Spark jobs (see
     ``read_table_arrow``). Large tables (postings, forward) keep going
     through Spark scans."""
@@ -100,7 +99,11 @@ def write_table_pdf(pdf, path: str) -> None:
 class Snapshot:
     snapshot_id: int
     parent: int | None
-    stats: dict = field(default_factory=dict)  # n_docs, avgdl, n_terms, n_segments
+    # n_docs, avgdl, n_terms, n_segments, ... — n_segments counts the
+    # distinct segments of each batch's docs (the build's docs-stage
+    # aggregation, summed over appends) or of a merge's survivors (its
+    # dicts-stage forward read)
+    stats: dict = field(default_factory=dict)
     tables: dict = field(default_factory=dict)  # table -> [paths] (cumulative file sets)
     stages: list = field(default_factory=list)  # completed build stages (resumability)
     created_at: float = 0.0

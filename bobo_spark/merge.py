@@ -45,8 +45,8 @@ from pyspark.sql import SparkSession, functions as F
 
 from concurrent.futures import ThreadPoolExecutor
 
-from .build import (POSTINGS_SCHEMA, _doc_range_repartition, _encode_partition,
-                    _small_table_pdf, _write_meta, assign_sorted_ids,
+from .build import (POSTINGS_SCHEMA, TABLE_SCHEMAS, _doc_range_repartition,
+                    _encode_partition, _small_table_pdf, assign_sorted_ids,
                     load_tombstones, pack_meta, read_table)
 from .catalog import IndexCatalog, Snapshot, StageClock, read_table_pdf, write_table_pdf
 # the docID rebase and tombstone membership are the query engine's own
@@ -178,13 +178,14 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
     clock = StageClock(cat, snap)
     dead = load_tombstones(cat, parent)
     dead_bc = spark.sparkContext.broadcast(dead)
-    del_df = (spark.createDataFrame(pd.DataFrame({"doc_id": dead}),
-                                    schema="doc_id long")
-              if dead.size else None)
+
+    def _live(batches):
+        """Rows of surviving docs, tombstones dropped in the task (no join)."""
+        for pdf in batches:
+            yield pdf[~_sorted_member(dead_bc.value, pdf["doc_id"].to_numpy(np.int64))]
 
     # ---- stage: dicts (facet dictionaries over survivors) ----------------
     fwd = read_table(spark, "forward", cat.table_paths(parent, "forward"))
-    surv_fwd = fwd if del_df is None else fwd.join(del_df, "doc_id", "left_anti")
     if "dicts" not in snap.stages:
         # r6: driver twin under the shared 64 MB file-size gate — the
         # forward table is a catalog table, so the same pyarrow read
@@ -194,7 +195,8 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
         if fpd is not None:
             fpd = fpd[~_sorted_member(dead, fpd["doc_id"].to_numpy(np.int64))]
             parts = []
-            for fld, col in (("lang", "lang_ord"), ("ts", "ts_ord")):
+            for fld, col in (("lang", "lang_ord"), ("ts", "ts_ord"),
+                             ("seg", "segment")):
                 g = (fpd.groupby(col)["doc_id"]
                      .agg(["count", "min", "max"]).reset_index())
                 parts.append(pd.DataFrame({
@@ -204,10 +206,12 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
                     "max_doc": g["max"].astype(np.int64)}))
             agg = pd.concat(parts, ignore_index=True)
         else:
-            # one job for both fields: unpivot (field, ord) then count
-            agg = (surv_fwd.selectExpr(
+            # one job for both fields and the segments: unpivot
+            # (field, ord) then count
+            agg = (fwd.mapInPandas(_live, schema=TABLE_SCHEMAS["forward"]).selectExpr(
                 "doc_id",
-                "stack(2, 'lang', lang_ord, 'ts', ts_ord) AS (field, ord)")
+                "stack(3, 'lang', lang_ord, 'ts', ts_ord, 'seg', segment) "
+                "AS (field, ord)")
                 .groupBy("field", "ord")
                 .agg(F.count("*").alias("df"),
                      F.min("doc_id").alias("min_doc"),
@@ -218,6 +222,8 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
         if snap.stats["n_docs"] == 0:
             raise ValueError("every document is tombstoned — nothing "
                              "to merge (drop the index instead)")
+        # segments holding a survivor — a fresh build's count
+        snap.stats["n_segments"] = int((agg["field"] == "seg").sum())
         if len(lang_rows):
             snap.stats["doc_min"] = int(lang_rows["min_doc"].min())
             snap.stats["doc_max"] = int(lang_rows["max_doc"].max())
@@ -348,9 +354,8 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
         tid_rm = None
         if use_bc:
             idm = read_table_pdf(idmap_path)
-            old_max = int(read_table_pdf(
-                cat.table_paths(parent, "terms"))["term_id"].max() or 0)
-            tid_rm = np.full(int(old_max) + 1, -2, dtype=np.int64)
+            # term ids are dense on every path: 0..n_terms-1
+            tid_rm = np.full(parent.stats["n_terms"], -2, dtype=np.int64)
             tid_rm[idm["old_id"].to_numpy(np.int64)] = \
                 idm["term_id"].to_numpy(np.int64)
         maps_bc = spark.sparkContext.broadcast((lang_rm, ts_rm, tid_rm))
@@ -364,7 +369,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             # term is missing from the id map is the same stats/rewrite
             # divergence the broadcast path raises on — fail the job in
             # the executor, never coerce real postings to pseudo runs
-            idmap = spark.read.parquet(idmap_path)
+            idmap = spark.read.schema("old_id long, term_id long").parquet(idmap_path)
             diverged = F.raise_error(F.concat(
                 F.lit("merge id-remap: surviving postings for a term "
                       "absent from the merged dictionary (old_id="),
@@ -387,28 +392,23 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
                 .sortWithinPartitions("segment", "term_id", "first_doc"))
         rewritten.write.mode("overwrite").parquet(postings_path)
 
-    # ---- stages: postings ∥ forward ∥ sections, then meta -----------------
+    # ---- stages: postings ∥ forward ∥ sections ----------------------------
     # the forward and sections rewrites read only the PARENT tables,
     # the tombstones and the ordinal remaps — all ready before the
     # postings rewrite — so they run concurrently WITH it (guide §2.6:
-    # back-fill executors from a driver thread pool); meta aggregates
-    # the new postings and starts as soon as the rewrite lands
+    # back-fill executors from a driver thread pool)
     forward_path = cat.table_path("forward", sid)
     sections_path = cat.table_path("sections", sid)
     has_sections = bool(cat.table_paths(parent, "sections"))
-    meta_path = cat.table_path("meta", sid)
+
+    def _survivors(batches):
+        """Surviving forward rows, facet ordinals remapped, in the task."""
+        for pdf in _live(batches):
+            yield pdf.assign(lang_ord=lang_rm[pdf["lang_ord"].to_numpy(np.int64)],
+                             ts_ord=ts_rm[pdf["ts_ord"].to_numpy(np.int64)])
 
     def _run_forward() -> None:
-        maps = []
-        for fld, rm in (("lang_ord", lang_rm), ("ts_ord", ts_rm)):
-            mdf = spark.createDataFrame(
-                pd.DataFrame({fld: np.arange(rm.size, dtype=np.int64),
-                              f"new_{fld}": rm}))
-            maps.append(F.broadcast(mdf))
-        rows = (surv_fwd.join(maps[0], "lang_ord").join(maps[1], "ts_ord")
-                .select("segment", "doc_id", "doclen", "url",
-                        F.col("new_lang_ord").alias("lang_ord"),
-                        F.col("new_ts_ord").alias("ts_ord")))
+        rows = fwd.mapInPandas(_survivors, schema=TABLE_SCHEMAS["forward"])
         # segment = doc_id // docs_per_segment is monotone in doc_id
         # while every batch used the same docs_per_segment (appends
         # only grow both); batches with different values record None,
@@ -422,9 +422,8 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
 
     def _run_sections() -> None:
         sec = read_table(spark, "sections", cat.table_paths(parent, "sections"))
-        surv_sec = sec if del_df is None else sec.join(del_df, "doc_id",
-                                                       "left_anti")
-        surv_sec.write.mode("overwrite").parquet(sections_path)
+        sec.mapInPandas(_live, schema=TABLE_SCHEMAS["sections"]) \
+            .write.mode("overwrite").parquet(sections_path)
 
     pre = []
     if "forward" not in snap.stages:
@@ -432,8 +431,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
     if has_sections and "sections" not in snap.stages:
         pre.append(("sections", _run_sections))
     need_postings = "postings" not in snap.stages
-    need_meta = "meta" not in snap.stages
-    if pre or need_postings or need_meta:
+    if pre or need_postings:
         # the executor context joins every thread even when the
         # postings rewrite raises, so a resume never races leftover
         # forward/sections writes
@@ -442,22 +440,17 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             if need_postings:
                 _run_postings()  # on the calling thread
                 clock.mark("postings")
-            if need_meta:
-                futs.append(("meta", clock.submit(
-                    ex, lambda: _write_meta(spark, sid, postings_path, meta_path))))
             for name, fut in futs:
                 clock.join(name, fut)
 
     # ---- publish ---------------------------------------------------------
     if "published" not in snap.stages:
-        snap.stats["n_segments"] = int(len(read_table_pdf(meta_path)))
         tables = {
             "terms": [terms_path],
             "postings": [postings_path],
             "forward": [forward_path],
             "dict_lang": [cat.table_path("dict_lang", sid)],
             "dict_ts_bucket": [cat.table_path("dict_ts_bucket", sid)],
-            "meta": [meta_path],
         }
         if has_sections:
             tables["sections"] = [sections_path]

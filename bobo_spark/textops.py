@@ -42,10 +42,12 @@ def _spread(df: DataFrame) -> DataFrame:
     the session's core count when the source scan produced fewer
     splits (a single small parquet file otherwise runs the whole
     per-row stage on ONE task); never reduces existing parallelism,
-    so large inputs (many splits) pass through shuffle-free."""
-    sess = df.sparkSession
-    target = sess.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    so large inputs (many splits) pass through shuffle-free. The
+    splits are counted on the JVM's RDD of the planned query (no
+    Python RDD)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = df._jdf.queryExecution().toRdd().getNumPartitions()
+    if n < target:
         return df.repartition(target)
     return df
 

@@ -9,6 +9,7 @@ reader's block concatenation tolerates by design)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -208,6 +209,67 @@ def test_assign_sorted_ids_driver_equals_distributed(spark):
     assert a["term_id"].tolist() == list(range(5, 5 + len(rows)))
 
 
+def test_murmur3_partition_keys_match_spark_hash(spark):
+    """The numpy Murmur3 behind the identity partition keys equals
+    Spark's ``hash`` on ints, its pmod equals ``F.pmod(F.hash(k), n)``
+    for every tested partition count (1 and non-powers of two
+    included), and each key lands on its own partition."""
+    from bobo_spark.build import _identity_partition_keys, _murmur3_int
+
+    ns = (1, 3, 7, 8, 13, 64)
+    ks = list(range(-2000, 2000)) + [2**31 - 1, -(2**31)]
+    got = spark.createDataFrame([(k,) for k in ks], "k int").select(
+        "k", F.hash("k").alias("h"),
+        *[F.pmod(F.hash("k"), F.lit(n)).alias(f"p{n}") for n in ns]).toPandas()
+    h = _murmur3_int(got["k"].to_numpy())
+    assert (h == got["h"].to_numpy()).all()
+    for n in ns:
+        part = got[f"p{n}"].to_numpy()
+        assert (np.mod(h, n) == part).all(), n
+        to_part = dict(zip(got["k"], part))
+        assert [to_part[k] for k in _identity_partition_keys(n)] == list(range(n)), n
+
+
+def test_append_terms_driver_equals_distributed(spark, tmp_path, monkeypatch):
+    """An append writes the same terms table under the driver gate and
+    under ``driver_threshold=0`` (the distributed join): the parent's
+    terms keep their ids, new terms follow in sorted order from the
+    parent's n_terms, and df/cf equal a one-shot build's."""
+    import functools
+
+    from bobo_spark import build
+    from bobo_spark.catalog import IndexCatalog, read_table_pdf
+
+    docs = webpages(spark, 600, 4)
+    cfg = BuildConfig(docs_per_segment=200)
+
+    def terms(d, snap):
+        return read_table_pdf(IndexCatalog(d).table_path("terms", snap.snapshot_id)) \
+            .sort_values("term_id", ignore_index=True)
+
+    def base_and_append(d):
+        base = build_snapshot(spark, docs.where(F.col("doc_id") < 400), d, cfg)
+        app = build_snapshot(spark, docs.where(F.col("doc_id") >= 400), d, cfg)
+        return terms(d, base), terms(d, app)
+
+    parent, drv = base_and_append(str(tmp_path / "drv"))
+    monkeypatch.setattr(build, "_append_terms", functools.partial(
+        build._append_terms, driver_threshold=0))
+    _, dist = base_and_append(str(tmp_path / "dist"))
+    pd.testing.assert_frame_equal(drv, dist)
+    n0 = len(parent)
+    assert drv["term_id"].tolist() == list(range(len(drv)))
+    assert drv["term"][:n0].tolist() == parent["term"].tolist()
+    new = drv["term"][n0:].tolist()
+    assert new and new == sorted(new)
+    one = terms(str(tmp_path / "one"),
+                build_snapshot(spark, docs, str(tmp_path / "one"), cfg))
+    both = drv.merge(one, on="term", suffixes=("", "_one"))
+    assert len(both) == len(drv) == len(one)
+    assert (both["df"] == both["df_one"]).all()
+    assert (both["cf"] == both["cf_one"]).all()
+
+
 def test_stats_spark_side_equals_driver(spark, tmp_path_factory, monkeypatch):
     """The stats stage's Spark aggregate over the terms table (taken
     when ``_small_table_pdf`` declines) gives the driver read's stats
@@ -228,10 +290,13 @@ def test_stats_spark_side_equals_driver(spark, tmp_path_factory, monkeypatch):
                                   tb.sort_values("term", ignore_index=True))
 
 
-def test_meta_stage_times_its_own_thread(spark, tmp_path_factory, monkeypatch):
-    """meta runs overlapped with forward; its stage_secs entry is the
-    meta job's own duration, in the build and the merge alike. A 0.3 s
-    sleep in the meta write alone must show up in ``meta``."""
+def test_forward_stage_times_its_own_thread(spark, tmp_path_factory, monkeypatch):
+    """The merge runs forward overlapped with the postings rewrite: its
+    stage_secs entry is the forward thread's own duration, and the
+    wait for it is not charged to the next serial stage. The build's
+    forward is serial and records its lap. A 0.3 s sleep in the
+    forward write alone must show up in ``forward``, build and merge
+    alike."""
     import time
 
     from pyspark.sql.readwriter import DataFrameWriter
@@ -240,16 +305,17 @@ def test_meta_stage_times_its_own_thread(spark, tmp_path_factory, monkeypatch):
 
     orig = DataFrameWriter.parquet
 
-    def slow_meta(self, path, *args, **kwargs):
-        if "/meta/" in str(path):
+    def slow_forward(self, path, *args, **kwargs):
+        if "/forward/" in str(path):
             time.sleep(0.3)
         return orig(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", slow_meta)
-    d = str(tmp_path_factory.mktemp("v2meta"))
+    monkeypatch.setattr(DataFrameWriter, "parquet", slow_forward)
+    d = str(tmp_path_factory.mktemp("v2fwd"))
     docs = webpages(spark, 200, 2)
     snap = build_snapshot(spark, docs, d, BuildConfig(docs_per_segment=100))
-    assert snap.stats["stage_secs"]["meta"] >= 0.3
+    assert snap.stats["stage_secs"]["forward"] >= 0.3
     delete_docs(spark, d, [3])
     msnap = merge_snapshot(spark, d)
-    assert msnap.stats["stage_secs"]["meta"] >= 0.3
+    assert msnap.stats["stage_secs"]["forward"] >= 0.3
+    assert msnap.stats["stage_secs"]["published"] < 0.3

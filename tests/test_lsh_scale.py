@@ -277,3 +277,21 @@ def test_topk_skips_zero_vectors(spark):
     for fn in (simsearch.cosine_topk, simsearch.lsh_topk):
         with pytest.raises(ValueError, match="zero"):
             fn(df, [0.0] * 4)
+
+
+def test_spread_split_count_matches_spark(spark, tmp_path):
+    """``_spread`` repartitions to the core count exactly when Spark's
+    own split count (``df.rdd``) is below it, on file scans (whole or
+    filtered) and on other plans."""
+    target = spark.sparkContext.defaultParallelism
+    src = spark.range(0, 1000).selectExpr("id AS doc_id", "cast(id AS string) AS text")
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    src.coalesce(1).write.parquet(one)
+    src.repartition(target + 3).write.parquet(many)
+    for df in (spark.read.parquet(one),
+               spark.read.parquet(one).where("doc_id > 5").select("text"),
+               spark.read.parquet(many),
+               spark.range(0, 100, 1, 1),
+               spark.range(0, 100, 1, target + 1)):
+        n = df.rdd.getNumPartitions()
+        assert textops._spread(df).rdd.getNumPartitions() == max(n, target)

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
+from bobo_spark.catalog import TABLES
 from bobo_spark.merge import merge_snapshot
 from bobo_spark.query import IndexReader, SearchRequest
 from bobo_spark.webgen import webpages
@@ -172,7 +173,8 @@ def test_merge_without_deletes_is_compaction(spark, tmp_path):
                 SearchRequest(query="spark join", mode="and", k=10)):
         _assert_same_result(m.search(req), f.search(req))
     # single compacted file set per table
-    for t in ("terms", "postings", "forward", "meta"):
+    assert set(m.snap.tables) == set(TABLES)
+    for t in TABLES:
         assert len(m.snap.tables[t]) == 1
 
 
