@@ -1029,7 +1029,10 @@ def queries() -> dict[str, _T]:
         "browse_combo_selection": _q_browse_combo,
         "browse_sort_page": _q_sort_page,
         "browse_group_multilevel": _q_group_multilevel,
-        "group_dedupe_top_order": _q_group_dedupe,
+        # overdue entries rotated in (code unchanged; WINDOW.md):
+        # multimodal_resize here, facet_geo_distance, sessionize_events,
+        # multimodal_frame_sample and multimodal_features below
+        "multimodal_resize": _q_multimodal_resize,
         "browse_collectall_lang": _q_browse_collectall,
         "browse_custom_facet_sort": _q_browse_custom_sort,
         "browse_recency_scorer": _q_browse_recency,
@@ -1042,7 +1045,7 @@ def queries() -> dict[str, _T]:
         "facet_buckets_priority": _q_facet_buckets,
         "facet_attributes": _q_facet_attributes,
         # --- r5 round-robin rotations back IN (evidence was 1 round old)
-        "facet_geo_box": _q_facet_geo_box,
+        "facet_geo_distance": _q_facet_geo_distance,
         "map_reduce_hook": _q_map_reduce,
         # --- LLM-pipeline scale paths
         "dedup_minhash_lsh": _q_dedup_minhash,
@@ -1055,24 +1058,31 @@ def queries() -> dict[str, _T]:
         "minhash_signatures": _q_minhash_sigs,
         "fingerprint_minshingle": _q_fingerprint,
         "simhash64": _q_simhash,
-        "quality_scores": _q_quality,
+        "sessionize_events": _q_sessionize,
         "langid": _q_langid,
         "simsearch_neardup_lsh": _q_sim_neardup_lsh,
         # exact twin of simsearch_neardup_lsh (same zero-vector rule)
         "simsearch_neardup_pairs": _q_sim_neardup,
-        # exact and LSH top-k (zero vectors are never ranked)
-        "simsearch_topk_cosine": _q_simsearch,
+        # LSH top-k (zero vectors are never ranked)
+        "multimodal_frame_sample": _q_multimodal_frames,
         "simsearch_lsh_topk": _q_simsearch_lsh,
-        "simsearch_lsh_topk_indexed": _q_simsearch_lsh_indexed,
+        "multimodal_features": _q_multimodal,
         "simsearch_ivf_topk": _q_simsearch_ivf,
         # ================= driver window ends here (entry 50) =========
         # Zero-churn entries below are semantically covered by a kept
         # sibling (oracle twins) or are plan-asserted pure-JVM
-        # expressions. Five are still overdue for rotation
-        # (facet_geo_distance, multimodal_features, sessionize_events,
-        # multimodal_frame_sample, multimodal_resize). All 67 keep
-        # exact local oracles (scripts/oracle_check.py). Ledger:
-        # WINDOW.md.
+        # expressions. All 67 keep exact local oracles
+        # (scripts/oracle_check.py). Ledger: WINDOW.md.
+        # rotated out for the five overdue entries, each keeping a
+        # sibling inside: facet_geo_distance (same GeoFacetHandler),
+        # browse_group_multilevel (grouping), simsearch_lsh_topk (ranks
+        # each bucket with cosine_topk; the indexed variant), langid
+        # (pure-JVM expression over textops.tokens())
+        "facet_geo_box": _q_facet_geo_box,
+        "group_dedupe_top_order": _q_group_dedupe,
+        "simsearch_topk_cosine": _q_simsearch,
+        "simsearch_lsh_topk_indexed": _q_simsearch_lsh_indexed,
+        "quality_scores": _q_quality,
         # zero churn, rotated out for the spreading textops entries;
         # each keeps a sibling inside: facet_range_nchars
         # (multirange, dynamic time ranges), browse_multivalue_facet
@@ -1101,11 +1111,6 @@ def queries() -> dict[str, _T]:
         # facet_range_nchars stays inside (rotated out for
         # dedup_simhash_pairs, whose pair kernel changed)
         "facet_histogram_nchars": _q_facet_histogram,
-        "facet_geo_distance": _q_facet_geo_distance,
-        "multimodal_features": _q_multimodal,
-        "sessionize_events": _q_sessionize,
-        "multimodal_frame_sample": _q_multimodal_frames,
-        "multimodal_resize": _q_multimodal_resize,
     }
 
 

@@ -4,11 +4,18 @@ Pipeline (one snapshot; every stage is checkpointed in the catalog
 manifest so a killed build resumes from the last completed stage —
 the north rule's "resumable from Iceberg snapshot checkpoints"):
 
-1. ``docs``     — extract text (if only html present), facet
-   dictionaries (lang, warc_ts day bucket), doc table with facet
-   ordinals. Dictionaries are value-sorted on first build; later
-   snapshots append new values after the parent max ordinal so
-   existing forward/posting data stays valid.
+1. ``docs``     — extract text (if only html present, into a scratch
+   doc table every later pass reads), facet dictionaries (lang,
+   warc_ts day bucket) and the batch's doc/byte counts from one
+   aggregation, then the forward table — per-segment doc rows
+   (doclen, url, facet ordinals), the Bobo FacetDataCache analogue
+   (facets/data/FacetDataCache.java:33-37) — written from the text in
+   one task pass on an overlapped thread: doclen is the tokenizer's
+   count, taken where the text already is (as Lucene takes a field's
+   length while it inverts the document). Dictionaries are
+   value-sorted on first build; later snapshots append new values
+   after the parent max ordinal so existing forward/posting data stays
+   valid.
 2. ``terms``    — global term dictionary (df, cf) + dense ``term_id``
    by sorted rank (lexicographic on first build; an append keeps the
    parent's ids and numbers its new terms in sorted order after them
@@ -23,7 +30,8 @@ the north rule's "resumable from Iceberg snapshot checkpoints"):
    doc range (driver-computed identity partition keys — no
    boundary-sampling pass when doc ids are dense), then tokenize +
    broadcast term-id map + packed-key sort + block encode inside each
-   partition; per-doc forward data rides as pseudo runs (term_id=-1).
+   partition; per-doc (doclen, lang, ts) also rides as pseudo runs
+   (term_id=-1).
    Past it (web-scale dictionaries): a materialized ``pairs`` table
    (tokenize → (doc_id, term, packed, segment) rows incl. sentinel
    pairs) ⋈ terms → ``repartitionByRange(segment, term_id, doc_id)``
@@ -32,9 +40,7 @@ the north rule's "resumable from Iceberg snapshot checkpoints"):
    self-contained blocks (docID-delta varbyte + tf/doclen/facet
    streams + block-max metadata): scoring and facet counting need no
    query-time joins.
-4. ``forward``  — per-segment doc table (doclen, url, facet ordinals),
-   the Bobo FacetDataCache analogue (facets/data/FacetDataCache.java:33-37).
-5. ``published`` — atomic manifest commit.
+4. ``published`` — atomic manifest commit.
 
 Block-max metadata stores ``(max_tf, min_dl)`` per block rather than a
 float score bound: the query engine derives a *safe* upper bound from
@@ -59,10 +65,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .catalog import (IndexCatalog, Snapshot, StageClock, read_table_arrow,
                       read_table_pdf, write_table_pdf)
-from .codecs import (_rebase_docs, binary_array, binary_parts, compact_binary,
-                     empty_binary_array, vb_decode, vb_encode_segmented)
+from .codecs import (binary_array, binary_parts, compact_binary,
+                     empty_binary_array, vb_encode_segmented)
 from .extract import extract_text
-from .tokenizer import term_freq_frame
+from .tokenizer import flat_token_codes, term_freq_frame
 
 POSTINGS_SCHEMA = (
     "segment long, term_id long, first_doc long, last_doc long, n_docs int, "
@@ -70,10 +76,9 @@ POSTINGS_SCHEMA = (
     "ts_bytes binary, pos_bytes binary, max_tf int, min_dl int"
 )
 SECTIONS_SCHEMA = "doc_id long, n_secs int, sec_bytes binary, segment long"
-# the build's scratch tables (the doc table carries text only when it
-# was extracted from html)
-DOCS_SCHEMA = ("doc_id long, url string, n_bytes int, lang_ord long, "
-               "ts_ord long, segment long")
+# the build's scratch tables (the doc table holds the text extracted
+# from html-only inputs)
+DOCS_SCHEMA = "doc_id long, url string, text string, lang string, ts_bucket string"
 PAIRS_SCHEMA = "doc_id long, term string, packed long, segment long, pos_bytes binary"
 # dictionaries of at most this many rows (exact count) are sorted,
 # merged and written on the driver; larger ones take the distributed rank
@@ -123,9 +128,10 @@ class BuildConfig:
     # postings: a dictionary of at most this many terms is broadcast
     # and the text takes ONE doc-range shuffle, tokenized + encoded
     # inside each partition (~5× fewer shuffle bytes than exploded
-    # pairs; forward doclen saturates at 65535, the clamp BM25 scoring
-    # uses). A larger dictionary materializes the (doc, term) pair
-    # table and range-shuffles it on (segment, term_id, doc_id).
+    # pairs). A larger dictionary materializes the (doc, term) pair
+    # table and range-shuffles it on (segment, term_id, doc_id). Both
+    # paths clamp the postings' doclen at 65535 (``pack_meta``); the
+    # forward table's doclen is the tokenizer's count, unclamped.
     broadcast_terms_threshold: int = 2_000_000
     ts_bucket: str = "day"
     # store per-posting token positions (delta varbyte; the positions
@@ -182,27 +188,33 @@ def unpack_meta(packed: np.ndarray):
 # ---------------------------------------------------------------- stage: docs
 
 
-def _dict_aggs(docs: DataFrame, cols: list[str]) -> dict[str, pd.DataFrame]:
+def _dict_aggs(docs: DataFrame, cols: list[str]):
     """Per-field (value, df, min_doc, max_doc) stats for ALL ``cols``
     in ONE job: a stack() generator unpivots the fields (values as
-    strings), one tiny groupBy covers every dictionary."""
+    strings), one tiny groupBy covers every dictionary. The same job
+    counts the docs with every field set (the docs ``_with_ords``
+    keeps) and sums their ``n_bytes``: returns (stats per field,
+    docs, bytes)."""
+    live = " AND ".join(f"{c} IS NOT NULL" for c in cols)
     stacked = docs.selectExpr(
-        "doc_id",
+        "doc_id", f"IF({live}, 1, 0) AS live", f"IF({live}, n_bytes, NULL) AS nb",
         "stack({}, {}) AS (field, value)".format(
             len(cols), ", ".join(f"'{c}', string({c})" for c in cols)),
     )
     agg = (
         stacked.groupBy("field", "value")
         .agg(F.count("*").alias("df"), F.min("doc_id").alias("min_doc"),
-             F.max("doc_id").alias("max_doc"))
+             F.max("doc_id").alias("max_doc"), F.sum("live").alias("live"),
+             F.sum("nb").alias("nb"))
         .toPandas()
     )
-    return {
+    batch = agg[agg["field"] == cols[0]]  # every doc once
+    return ({
         c: agg[agg["field"] == c]
-        .drop(columns="field")
+        .drop(columns=["field", "live", "nb"])
         .sort_values("value", ignore_index=True)
         for c in cols
-    }
+    }, int(batch["live"].sum()), int(batch["nb"].fillna(0).astype(np.int64).sum()))
 
 
 def _build_dict(agg: pd.DataFrame, parent_dict: pd.DataFrame | None) -> pd.DataFrame:
@@ -508,12 +520,9 @@ def _distinct_pair_codes(rows: np.ndarray, codes: np.ndarray,
 def _with_ords(batches, ords_bc):
     """Doc batches with ``lang_ord``/``ts_ord`` resolved from their
     ``lang``/``ts_bucket`` columns (which are dropped) against the
-    broadcast (value → ordinal) dictionaries — the doc table's and the
-    text source's one ordinal rule. A doc with a null value is dropped.
-    ``ords_bc`` None: pass through."""
-    if ords_bc is None:
-        yield from batches
-        return
+    broadcast (value → ordinal) dictionaries — the forward table's and
+    the text source's one ordinal rule. A doc with a null value is
+    dropped."""
     lang, ts = ords_bc.value
     for pdf in batches:
         pdf = pdf[pdf["lang"].notna() & pdf["ts_bucket"].notna()]
@@ -522,14 +531,27 @@ def _with_ords(batches, ords_bc):
             ts_ord=pdf["ts_bucket"].map(ts).astype(np.int64))
 
 
+def _forward_rows(batches):
+    """Forward-table rows of doc batches (``_with_ords`` output with
+    ``url`` and ``text``): doclen is the tokenizer's token count, the
+    length the postings encoder sees before it clamps to 16 bits."""
+    for pdf in batches:
+        yield pd.DataFrame({
+            "segment": pdf["segment"].to_numpy(np.int64),
+            "doc_id": pdf["doc_id"].to_numpy(np.int64),
+            "doclen": flat_token_codes(pdf["text"])[2],
+            "url": pdf["url"].to_numpy(),
+            "lang_ord": pdf["lang_ord"].to_numpy(np.int64),
+            "ts_ord": pdf["ts_ord"].to_numpy(np.int64),
+        })
+
+
 def _term_stats_partial(batches):
     """The terms stage's per-batch (term, df, cf) partials (text
     terms + facet sentinels). Map-side pre-aggregation:
     the global dictionary then costs one tiny groupBy over ~vocab rows
     per partition instead of a full pair shuffle. Positions are NOT
     computed here — the dictionary only needs counts."""
-    from .tokenizer import flat_token_codes
-
     for pdf in batches:
         if not len(pdf):
             continue
@@ -559,9 +581,8 @@ def _encode_segment_local(batches, cfg: BuildConfig, tmap_bc):
     repartition that delivered these docs.
 
     Also emits one pseudo-posting run per segment with ``term_id=-1``
-    whose (doc, dl, lang, ts) streams carry the per-doc forward data
-    (doclen saturates at the 16-bit clamp) — the forward stage decodes
-    these instead of re-aggregating pairs."""
+    whose (doc, dl, lang, ts) streams carry every doc of the segment
+    (doclen saturates at the 16-bit clamp)."""
     tmap = tmap_bc.value  # pandas (term, term_id)
     parts = []
     for pdf in batches:
@@ -660,20 +681,6 @@ def _encode_segment_local(batches, cfg: BuildConfig, tmap_bc):
     yield from _encode_partition([allp], cfg.block_size)
 
 
-def _decode_forward_runs(batches):
-    """Decode the pseudo forward runs (term_id = -1) back into per-doc
-    (doc_id, doclen) rows — one vectorized pass per partition."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        pdf = pdf.sort_values(["segment", "first_doc"])
-        deltas = vb_decode(b"".join(pdf["doc_bytes"])).astype(np.int64)
-        docs = _rebase_docs(deltas, pdf["n_docs"].to_numpy(np.int64),
-                            pdf["first_doc"].to_numpy(np.int64))
-        dl = vb_decode(b"".join(pdf["dl_bytes"])).astype(np.int64)
-        yield pd.DataFrame({"doc_id": docs, "doclen": dl})
-
-
 def _murmur3_int(k: np.ndarray) -> np.ndarray:
     """Spark's ``hash()`` of int values, vectorized: Murmur3_x86_32
     ``hashInt`` with seed 42, as int32."""
@@ -753,14 +760,15 @@ def build_snapshot(
     markers and the publish commit are atomic.
 
     DETERMINISM REQUIREMENT (text-bearing inputs): when ``docs``
-    already carries a ``text`` column, the doc table stays slim and
-    the pairs stage re-evaluates the CALLER'S frame — the input plan
-    must therefore be deterministic (no ``monotonically_increasing_id``
-    doc_ids, no un-seeded ``rand``/``sample``/``limit`` upstream), or
-    the doc table and the postings can disagree on the doc_id→text
-    mapping. Reading from storage (parquet/Iceberg) is deterministic;
-    for anything synthetic, ``persist()`` or checkpoint the frame
-    first. html-only inputs are immune (text is materialized once).
+    already carries a ``text`` column, the docs aggregation, the
+    forward write and the terms and postings passes each re-evaluate
+    the CALLER'S frame — the input plan must therefore be deterministic
+    (no ``monotonically_increasing_id`` doc_ids, no un-seeded
+    ``rand``/``sample``/``limit`` upstream), or the forward table and
+    the postings can disagree on the doc_id→text mapping. Reading from
+    storage (parquet/Iceberg) is deterministic; for anything
+    synthetic, ``persist()`` or checkpoint the frame first. html-only
+    inputs are immune (text is materialized once).
     """
     cfg = cfg or BuildConfig()
     cat = IndexCatalog(index_dir)
@@ -771,46 +779,43 @@ def build_snapshot(
     sid = snap.snapshot_id
     clock = StageClock(cat, snap)
 
-    # text already a column => the doc table stays SLIM (ords + n_bytes,
-    # no text rewrite — the pairs stage re-reads text from the caller's
-    # frame). Only html-extracted text is materialized (extract once).
-    have_text = "text" in docs.columns
-    if not have_text:
-        docs = docs.withColumn("text", extract_text("html"))
     ts_col = F.date_format(
         F.date_trunc(cfg.ts_bucket, "warc_ts"), "yyyy-MM-dd").alias("ts_bucket")
+    src = docs.select(F.col("doc_id").cast("long").alias("doc_id"), "url",
+                      "text" if "text" in docs.columns
+                      else extract_text("html").alias("text"),
+                      "lang", ts_col)
+    if "text" not in docs.columns:
+        # html-only input: the text is extracted ONCE, into a scratch
+        # doc table that every later pass reads
+        docs_path = cat.table_path("_docs", sid)
+        if "docs" not in snap.stages:
+            src.write.mode("overwrite").parquet(docs_path)
+        src = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
+    forward_path = cat.table_path("forward", sid)
 
-    docs_path = cat.table_path("_docs", sid)
-    docs_schema = DOCS_SCHEMA + ("" if have_text else ", text string")
-
-    def _ord_maps():
-        """Broadcast (value → ordinal) maps of this snapshot's lang and
-        ts_bucket dictionaries, for ``_with_ords``."""
-        return spark.sparkContext.broadcast(tuple(
-            read_table_pdf(cat.table_path(t, sid), columns=["ordinal", "value"])
-            .set_index("value")["ordinal"] for t in ("dict_lang", "dict_ts_bucket")))
-
-    # ---- stage: docs + dictionaries -------------------------------------
-    docs_pool = docs_fut = None
+    # ---- stage: docs + dictionaries + forward ---------------------------
+    fwd_pool = fwd_fut = None
     if "docs" not in snap.stages:
         parent_lang = parent_ts = None
         if parent is not None:
             parent_lang = read_table_pdf(cat.table_paths(parent, "dict_lang"))
             parent_ts = read_table_pdf(cat.table_paths(parent, "dict_ts_bucket"))
-        base = docs.select("doc_id", "url", "text", "lang", ts_col)
-        # both dictionaries and the batch's segments from ONE stacked
-        # aggregation job
-        aggs = _dict_aggs(base.select("doc_id", "lang", "ts_bucket",
-                                      _segment_col(cfg)),
-                          ["lang", "ts_bucket", "segment"])
+        # both dictionaries, the batch's segments and its doc and byte
+        # counts from ONE stacked aggregation job
+        aggs, new_docs, new_bytes = _dict_aggs(
+            src.select("doc_id", "lang", "ts_bucket", _segment_col(cfg),
+                       F.length("text").alias("n_bytes")),
+            ["lang", "ts_bucket", "segment"])
         # doc-id range of THIS batch (pre-merge aggs cover every doc):
-        # lets the postings stage compute range-partition boundaries
-        # driver-side instead of paying repartitionByRange's sampling
-        # pass over the full text
+        # lets the forward and postings writes compute range-partition
+        # boundaries driver-side instead of paying repartitionByRange's
+        # sampling pass
         snap.stats["doc_min"] = int(aggs["lang"]["min_doc"].min())
         snap.stats["doc_max"] = int(aggs["lang"]["max_doc"].max())
         snap.stats["n_segments"] = len(aggs["segment"]) + (
             parent.stats.get("n_segments", 0) if parent else 0)
+        snap.stats["new_docs"], snap.stats["new_bytes"] = new_docs, new_bytes
         lang_dict = _build_dict(aggs["lang"], parent_lang)
         ts_dict = _build_dict(aggs["ts_bucket"], parent_ts)
         for name, d in (("dict_lang", lang_dict), ("dict_ts_bucket", ts_dict)):
@@ -818,52 +823,42 @@ def build_snapshot(
                 d.astype({"ordinal": "int64", "df": "int64",
                           "min_doc": "int64", "max_doc": "int64"}),
                 cat.table_path(name, sid))
-        doc_ords = _ord_maps()
-        keep_text = [] if have_text else ["text"]
+    # broadcast (value → ordinal) maps of this snapshot's dictionaries,
+    # for ``_with_ords``
+    ords_bc = spark.sparkContext.broadcast(tuple(
+        read_table_pdf(cat.table_path(t, sid), columns=["ordinal", "value"])
+        .set_index("value")["ordinal"] for t in ("dict_lang", "dict_ts_bucket")))
+    pair_src = src.select("doc_id", "text", "lang", "ts_bucket", _segment_col(cfg))
 
-        def _write_docs_table() -> None:
+    if "docs" not in snap.stages:
+        def _write_forward() -> None:
+            rows = src.select("doc_id", "url", "text", "lang", "ts_bucket",
+                              _segment_col(cfg)).mapInPandas(
+                lambda it: _forward_rows(_with_ords(it, ords_bc)),
+                schema=TABLE_SCHEMAS["forward"])
             (
-                base.select(F.col("doc_id").cast("long").alias("doc_id"), "url",
-                            F.length("text").alias("n_bytes"), "lang", "ts_bucket",
-                            _segment_col(cfg), *keep_text)
-                .mapInPandas(lambda it: _with_ords(it, doc_ords), schema=docs_schema)
+                _doc_range_repartition(rows,
+                                       max(8, spark.sparkContext.defaultParallelism),
+                                       snap.stats, snap.stats["new_docs"],
+                                       ("segment", "doc_id"))
+                .sortWithinPartitions("segment", "doc_id")
                 .write.mode("overwrite")
-                .parquet(docs_path)
+                .parquet(forward_path)
             )
 
-        if have_text:
-            # guide §2.6 (overlap independent jobs): with a text-bearing
-            # input the slim doc-table write feeds only the stats and
-            # forward stages — the sections/terms jobs read the CALLER'S
-            # frame plus the dictionaries written driver-direct above,
-            # never docs_t, so the write runs concurrently with the
-            # terms tokenize pass and its wall time disappears behind
-            # it. html inputs keep the serial write (later stages read
-            # the extracted text FROM docs_t). The dict aggregation
-            # above is the docs stage's serial lead.
-            docs_pool = ThreadPoolExecutor(max_workers=1)
-            docs_fut = clock.submit(docs_pool, _write_docs_table,
-                                    lead=clock.lap())
-        else:
-            _write_docs_table()
-            clock.mark("docs")
+        # guide §2.6 (overlap independent jobs): no later stage reads
+        # the forward table, so its write runs concurrently with the
+        # terms, stats and postings stages and is joined before the
+        # publish. The dictionary aggregation (and an html input's
+        # extraction) is the docs stage's serial lead.
+        fwd_pool = ThreadPoolExecutor(max_workers=1)
+        fwd_fut = clock.submit(fwd_pool, _write_forward, lead=clock.lap())
 
-    def _docs_table() -> DataFrame:
-        """Join the overlapped doc-table write (if any) and read the
-        table — called at the first point a stage needs docs_t."""
-        nonlocal docs_pool, docs_fut
-        if docs_fut is not None:
-            fut, docs_fut = docs_fut, None
-            clock.join("docs", fut)  # re-raises a failed write loud
-            docs_pool.shutdown()
-            docs_pool = None
-        return spark.read.schema(docs_schema).parquet(docs_path)
-
-    # Everything between the overlapped doc-table submit and the
-    # serialization point below runs under a guard: a stage failure
-    # must JOIN the in-flight write before propagating, or an
-    # immediate same-process retry (resume) would race a second
-    # write of docs_path against the leftover thread.
+    # Everything between the overlapped forward submit and its join
+    # below runs under a guard: a stage failure must JOIN the in-flight
+    # write before propagating, or an immediate same-process retry
+    # (resume) would race a second write of forward_path against the
+    # leftover thread.
     try:
         # ---- stage: sections (regex mode only) --------------------------------
         # Per-doc section boundary arrays — written once per doc (tiny next
@@ -887,22 +882,9 @@ def build_snapshot(
                                       // cfg.docs_per_segment)
                     yield out
 
-            sec_src = (docs.select("doc_id", "text") if have_text
-                       else _docs_table().select("doc_id", "text"))
-            sec_src.mapInPandas(to_sections, schema=SECTIONS_SCHEMA) \
+            src.select("doc_id", "text").mapInPandas(to_sections, schema=SECTIONS_SCHEMA) \
                 .write.mode("overwrite").parquet(sections_path)
             clock.mark("sections")
-
-        # ---- text source: (doc_id, text, ords, segment) --------------------
-        ords_bc = None
-        if have_text:
-            # slim-docs path: segment recomputed from the caller's frame,
-            # ords resolved in each Python task (``_with_ords``, no
-            # broadcast-join job) — text is never rewritten
-            ords_bc = _ord_maps()
-            pair_src = docs.select("doc_id", "text", "lang", ts_col, _segment_col(cfg))
-        else:
-            pair_src = _docs_table().select("doc_id", "text", "lang_ord", "ts_ord", "segment")
 
         # ---- stage: pairs (built lazily; postings past the broadcast gate) --
         # (tf, doclen, lang_ord, ts_ord) are bit-packed into ONE long
@@ -958,16 +940,6 @@ def build_snapshot(
             pair_src.mapInPandas(lambda it: to_pairs(_with_ords(it, ords_bc)),
                                  schema=PAIRS_SCHEMA).write.mode("overwrite").parquet(pairs_path)
 
-        def ensure_pairs() -> DataFrame:
-            """The pair table, materialized on first need (a dictionary
-            past ``broadcast_terms_threshold``)."""
-            if "pairs" not in snap.stages:
-                build_pairs_table()
-                clock.mark("pairs")
-            return spark.read.schema(PAIRS_SCHEMA).parquet(pairs_path)
-
-        TF = F.shiftright("packed", 40)
-
         # ---- stage: terms ----------------------------------------------------
         terms_path = cat.table_path("terms", sid)
         if "terms" not in snap.stages:
@@ -993,155 +965,110 @@ def build_snapshot(
                     full.write.mode("overwrite").parquet(terms_path)
             clock.mark("terms")
 
+        # ---- stage: stats ----------------------------------------------------
+        if "stats" not in snap.stages:
+            # corpus token count = Σ cf over the (merged) term dictionary —
+            # a scan of the small terms table, not of the pairs; term count
+            # rides the same job (reused by postings + publish, no re-count).
+            # Facet sentinel terms ('\x00...') are NOT text tokens: exclude.
+            tstats = _small_table_pdf(terms_path)
+            if tstats is not None:  # small dictionary: zero-job aggregate
+                tok_sum = int(tstats.loc[~tstats["term"].str.startswith("\x00"),
+                                         "cf"].sum())
+                n_terms_stat = len(tstats)
+            else:
+                trow = read_table(spark, "terms", [terms_path]).agg(
+                    F.sum(F.when(~F.col("term").startswith("\x00"), F.col("cf"))).alias("tok"),
+                    F.count("*").alias("n_terms"),
+                ).collect()[0]
+                tok_sum = trow["tok"] or 0
+                n_terms_stat = int(trow["n_terms"])
+            n_docs = snap.stats["new_docs"] + (parent.stats["n_docs"] if parent else 0)
+            snap.stats.update(
+                {
+                    "n_docs": int(n_docs),
+                    "tok_sum": int(tok_sum),
+                    "avgdl": float(tok_sum) / max(1, n_docs),
+                    "n_terms": int(n_terms_stat),
+                    # recorded so the query planner can reject phrase
+                    # queries driver-side instead of failing in an executor
+                    "store_positions": bool(cfg.store_positions),
+                    # section geometry (JSON-serializable); the section
+                    # search planner reads this to pick window arithmetic
+                    # vs the per-doc boundary table
+                    "sections": list(cfg.sections) if cfg.sections else None,
+                    # segment = doc_id // docs_per_segment; None once an
+                    # append used a different value (see merge's forward
+                    # stage, which relies on one uniform value)
+                    "docs_per_segment": (
+                        cfg.docs_per_segment
+                        if parent is None or parent.stats.get(
+                            "docs_per_segment") == cfg.docs_per_segment
+                        else None),
+                }
+            )
+            clock.mark("stats")
+
+        # ---- stage: postings -------------------------------------------------
+        postings_path = cat.table_path("postings", sid)
+        if "postings" not in snap.stages:
+            # pair count ≈ distinct (doc,term) ≤ token count — stats are
+            # already on the manifest, no extra count job
+            n_pairs = snap.stats.get("tok_sum", 0) or 1
+            n_parts = max(
+                spark.sparkContext.defaultParallelism,
+                math.ceil(n_pairs / cfg.rows_per_posting_partition),
+            )
+            if snap.stats["n_terms"] <= cfg.broadcast_terms_threshold:
+                # ONE wide shuffle of the raw text by doc range; tokenize +
+                # id-map + sort + encode all inside the partition. The
+                # dictionary travels as a Spark broadcast.
+                tmap = read_table_pdf(terms_path, columns=["term", "term_id"])
+                tmap_bc = spark.sparkContext.broadcast(
+                    tmap.set_index("term")["term_id"])
+                (
+                    _doc_range_repartition(pair_src, n_parts, snap.stats,
+                                           snap.stats["new_docs"], ("doc_id",))
+                    .mapInPandas(lambda it: _encode_segment_local(_with_ords(it, ords_bc),
+                                                                  cfg, tmap_bc),
+                                 schema=POSTINGS_SCHEMA)
+                    .write.mode("overwrite")
+                    .parquet(postings_path)
+                )
+            else:
+                if "pairs" not in snap.stages:
+                    build_pairs_table()
+                    clock.mark("pairs")
+                enriched = (
+                    spark.read.schema(PAIRS_SCHEMA).parquet(pairs_path)
+                    .join(read_table(spark, "terms", [terms_path]).select("term", "term_id"),
+                          "term")
+                    .select("segment", "term_id", "doc_id", "packed", "pos_bytes")
+                )
+                (
+                    enriched.repartitionByRange(n_parts, "segment", "term_id", "doc_id")
+                    .sortWithinPartitions("segment", "term_id", "doc_id")
+                    .mapInPandas(lambda it: _encode_partition(it, cfg.block_size), schema=POSTINGS_SCHEMA)
+                    .write.mode("overwrite")
+                    .parquet(postings_path)
+                )
+            clock.mark("postings")
+
     except BaseException as exc:
-        if docs_fut is not None:
+        if fwd_fut is not None:
             try:
-                docs_fut.result()
-            except Exception as docs_exc:
+                fwd_fut.result()
+            except Exception as fwd_exc:
                 # the stage failure is what propagates; the overlapped
-                # doc-table write's own error rides along on it
-                exc.add_note(f"the overlapped doc-table write also failed: "
-                             f"{docs_exc!r}")
-            docs_pool.shutdown()
+                # forward write's own error rides along on it
+                exc.add_note(f"the overlapped forward write also failed: "
+                             f"{fwd_exc!r}")
+            fwd_pool.shutdown()
         raise
 
-    terms = read_table(spark, "terms", [terms_path])
-    # serialization point for the overlapped doc-table write: stats and
-    # forward both consume docs_t
-    docs_t = _docs_table()
-
-    # ---- stage: stats ----------------------------------------------------
-    if "stats" not in snap.stages:
-        # batch docs and bytes: a driver read of the doc table under the
-        # small-table gate, else one Spark aggregate
-        dstats = _small_table_pdf(docs_path, columns=["n_bytes"])
-        if dstats is not None:
-            new_docs, new_bytes = len(dstats), int(dstats["n_bytes"].sum())
-        else:
-            new_docs, new_bytes = docs_t.select(F.count("*"), F.sum("n_bytes")).first()
-        # corpus token count = Σ cf over the (merged) term dictionary —
-        # a scan of the small terms table, not of the pairs; term count
-        # rides the same job (reused by postings + publish, no re-count).
-        # Facet sentinel terms ('\x00...') are NOT text tokens: exclude.
-        tstats = _small_table_pdf(terms_path)
-        if tstats is not None:  # small dictionary: zero-job aggregate
-            tok_sum = int(tstats.loc[~tstats["term"].str.startswith("\x00"),
-                                     "cf"].sum())
-            n_terms_stat = len(tstats)
-        else:
-            trow = terms.agg(
-                F.sum(F.when(~F.col("term").startswith("\x00"), F.col("cf"))).alias("tok"),
-                F.count("*").alias("n_terms"),
-            ).collect()[0]
-            tok_sum = trow["tok"] or 0
-            n_terms_stat = int(trow["n_terms"])
-        n_docs = new_docs + (parent.stats["n_docs"] if parent else 0)
-        snap.stats.update(
-            {
-                "n_docs": int(n_docs),
-                "tok_sum": int(tok_sum),
-                "avgdl": float(tok_sum) / max(1, n_docs),
-                "new_docs": int(new_docs),
-                "new_bytes": int(new_bytes or 0),
-                "n_terms": int(n_terms_stat),
-                # recorded so the query planner can reject phrase
-                # queries driver-side instead of failing in an executor
-                "store_positions": bool(cfg.store_positions),
-                # section geometry (JSON-serializable); the section
-                # search planner reads this to pick window arithmetic
-                # vs the per-doc boundary table
-                "sections": list(cfg.sections) if cfg.sections else None,
-                # segment = doc_id // docs_per_segment; None once an
-                # append used a different value (see merge's forward
-                # stage, which relies on one uniform value)
-                "docs_per_segment": (
-                    cfg.docs_per_segment
-                    if parent is None or parent.stats.get(
-                        "docs_per_segment") == cfg.docs_per_segment
-                    else None),
-            }
-        )
-        clock.mark("stats")
-
-    # ---- stage: postings -------------------------------------------------
-    postings_path = cat.table_path("postings", sid)
-    # the broadcast gate picks the postings path; the forward stage
-    # reads the matching doclen source, also on a resume
-    use_pairs = snap.stats["n_terms"] > cfg.broadcast_terms_threshold
-    if "postings" not in snap.stages:
-        # pair count ≈ distinct (doc,term) ≤ token count — stats are
-        # already on the manifest, no extra count job
-        n_pairs = snap.stats.get("tok_sum", 0) or 1
-        n_parts = max(
-            spark.sparkContext.defaultParallelism,
-            math.ceil(n_pairs / cfg.rows_per_posting_partition),
-        )
-        if not use_pairs:
-            # ONE wide shuffle of the raw text by doc range; tokenize +
-            # id-map + sort + encode all inside the partition. The
-            # dictionary travels as a Spark broadcast.
-            tmap = read_table_pdf(terms_path, columns=["term", "term_id"])
-            tmap_bc = spark.sparkContext.broadcast(
-                tmap.set_index("term")["term_id"])
-            (
-                _doc_range_repartition(pair_src, n_parts, snap.stats,
-                                       snap.stats.get("new_docs", 0),
-                                       ("doc_id",))
-                .mapInPandas(lambda it: _encode_segment_local(_with_ords(it, ords_bc),
-                                                              cfg, tmap_bc),
-                             schema=POSTINGS_SCHEMA)
-                .write.mode("overwrite")
-                .parquet(postings_path)
-            )
-        else:
-            enriched = ensure_pairs().join(terms.select("term", "term_id"), "term").select(
-                "segment", "term_id", "doc_id", "packed", "pos_bytes"
-            )
-            (
-                enriched.repartitionByRange(n_parts, "segment", "term_id", "doc_id")
-                .sortWithinPartitions("segment", "term_id", "doc_id")
-                .mapInPandas(lambda it: _encode_partition(it, cfg.block_size), schema=POSTINGS_SCHEMA)
-                .write.mode("overwrite")
-                .parquet(postings_path)
-            )
-        clock.mark("postings")
-
-    # ---- stage: forward --------------------------------------------------
-    forward_path = cat.table_path("forward", sid)
-    if "forward" not in snap.stages:
-        if not use_pairs:
-            # doclen decoded from the pseudo forward runs written by
-            # the encoder — no pair re-aggregation
-            dl_df = (
-                read_table(spark, "postings", [postings_path])
-                .where(F.col("term_id") == -1)
-                .select("segment", "first_doc", "n_docs", "doc_bytes", "dl_bytes")
-                .mapInPandas(_decode_forward_runs,
-                             schema="doc_id long, doclen long")
-            )
-        else:
-            dl_df = (
-                ensure_pairs().where(~F.col("term").startswith("\x00"))
-                .groupBy("doc_id").agg(F.sum(TF).alias("doclen"))
-            )
-        fwd_rows = docs_t.join(dl_df, "doc_id", "left").select(
-            "segment",
-            "doc_id",
-            F.coalesce("doclen", F.lit(0)).alias("doclen"),
-            "url",
-            "lang_ord",
-            "ts_ord",
-        )
-        (
-            _doc_range_repartition(fwd_rows,
-                                   max(8, spark.sparkContext.defaultParallelism),
-                                   snap.stats, snap.stats.get("new_docs", 0),
-                                   ("segment", "doc_id"))
-            .sortWithinPartitions("segment", "doc_id")
-            .write.mode("overwrite")
-            .parquet(forward_path)
-        )
-        clock.mark("forward")
+    if fwd_fut is not None:
+        clock.join("docs", fwd_fut)  # re-raises a failed write loud
+        fwd_pool.shutdown()
 
     # ---- publish ----------------------------------------------------------
     if "published" not in snap.stages:

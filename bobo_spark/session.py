@@ -54,6 +54,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # no DataFrame call-site capture: it imports IPython on the
+        # first DataFrame call and walks the Python stack on every
+        # later one; analysis errors keep their messages
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in worker_env.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)

@@ -1,19 +1,23 @@
 """Large-scale text-pipeline operators (dedup, language id, quality,
 token counts, fingerprints).
 
-Filters, counts and joins are built-in Spark SQL expressions; the
-hash-kernel inner loops (shingle minhash, simhash bit fold) run as
-Arrow batch kernels in numpy — Catalyst evaluates higher-order
-lambdas interpreted, which made them the dominant cost (guide §4.2).
-Hash-dependent operators derive ALL hashes from md5 (hashlib ≡ Spark
-``md5`` ≡ DuckDB ``md5`` bit-for-bit), so every operator here keeps an
-exact cross-engine oracle.
+Filters, counts and joins are built-in Spark SQL expressions over the
+JVM ``tokens()`` stream. The MinHash and SimHash signatures are Arrow
+batch kernels fed the raw text: they tokenize with the index
+encoder's tokenizer (``tokenizer.flat_token_codes``, the same tokens
+as ``tokens()``, Arrow C++ on ASCII batches) and hash in numpy —
+Catalyst evaluates higher-order lambdas interpreted, which made them
+the dominant cost (guide §4.2). Hash-dependent operators derive ALL
+hashes from md5 (hashlib ≡ Spark ``md5`` ≡ DuckDB ``md5``
+bit-for-bit), so every operator here keeps an exact cross-engine
+oracle.
 
 Scale notes (10^12-doc corpus):
 * exact dedup — one hash shuffle on md5(text); skew-free (hashes
   uniform).
-* MinHash-LSH — signatures via a per-partition Arrow kernel (no
-  explode, no shuffle; the output moves k longs per doc); one
+* MinHash-LSH — signatures via a per-partition Arrow kernel that
+  tokenizes its own text (no explode, no shuffle; the output moves k
+  longs per doc); one
   (band, bucket) exchange feeds the shared bucket-pair kernel
   (``_banded_pairs``), which scores and threshold-filters pairs
   BEFORE the distinct so the dedup exchange carries survivors, not
@@ -21,8 +25,9 @@ Scale notes (10^12-doc corpus):
   representative pairing.
 * n-gram Jaccard — the exact variant (self-join on shingles) is the
   small-scale oracle; LSH is the scale path.
-* SimHash — JVM md5 hashes + numpy bit fold; 15-bit bands through the
-  same bucket-pair kernel, exact 64-bit hamming (XOR popcount) score.
+* SimHash — a per-partition Arrow kernel: one md5 per distinct token
+  of the batch, numpy bit fold; 15-bit bands through the same
+  bucket-pair kernel, exact 64-bit hamming (XOR popcount) score.
 """
 
 from __future__ import annotations
@@ -156,10 +161,16 @@ def fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def _shingle_hash(s: Column) -> Column:
-    """60-bit integer hash of a shingle via md5 — identical in DuckDB:
-    ('0x' || substr(md5(s),1,15))::BIGINT."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+def _md5_60(strings) -> np.ndarray:
+    """First 60 bits (15 hex digits) of the md5 of each string of an
+    Arrow string array, as int64: hashlib ≡ Spark ``md5`` ≡ DuckDB
+    ``('0x' || substr(md5(s),1,15))::BIGINT`` bit-for-bit."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    md5 = hashlib.md5
+    dig = b"".join([md5(s).digest() for s in pc.cast(strings, pa.binary()).to_pylist()])
+    return (np.frombuffer(dig, dtype=">u8")[0::2] >> 4).astype(np.int64)
 
 
 def _minhash_params(k: int) -> tuple[list[int], list[int]]:
@@ -284,46 +295,56 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
                        n: int = 3, k: int = 16) -> DataFrame:
     """MinHash signature per doc: sig_i = min over shingles of
     (a_i * (h(s) mod p) + b_i) mod p, p = 2^31-1, h(s) = first 15 hex
-    chars of md5(s) as an integer.
+    chars of md5(s) as an integer (``_md5_60``). A shingle is n
+    consecutive tokens joined by a space; a doc of fewer than n tokens
+    has one shingle, all its tokens joined (empty for an empty or null
+    text).
 
-    r6: one Arrow batch kernel per partition (guide §4.2) — tokens are
-    extracted by the same JVM regex, then shingle strings, md5
-    (hashlib ≡ Spark md5 bit-for-bit) and the k permutation mins run
-    vectorized in numpy int64 (exact integer arithmetic, so the DuckDB
-    oracle equality is unchanged). Replaces the explode + k-min-agg
-    formulation whose interpreted `transform(sequence, slice,
-    concat_ws)` shingle builder dominated the operator (29.6 s of
-    34.6 s at sf1.0, measured single-task); no explode, no shuffle —
-    the output moves k longs per doc."""
+    One Arrow batch kernel per partition, fed the raw text: it
+    tokenizes with the index encoder's tokenizer
+    (``tokenizer.flat_token_codes``, Arrow C++ on ASCII batches),
+    builds every shingle string in one Arrow join over the code
+    windows, and takes the k permutation mins per doc with one
+    ``reduceat`` per hash — exact int64 arithmetic, so the DuckDB
+    oracle equality holds. No explode, no shuffle: the output moves k
+    longs per doc."""
     a, b = _minhash_params(k)
-    a_arr = np.asarray(a, dtype=np.int64).reshape(1, k)
-    b_arr = np.asarray(b, dtype=np.int64).reshape(1, k)
     id_type = dict(df.dtypes)[id_col]
-    src = _spread(df).select(F.col(id_col), tokens(text_col).alias("_toks"))
+    src = _spread(df).select(F.col(id_col), F.col(text_col))
 
     def kernel(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        md5 = hashlib.md5
+        from .tokenizer import flat_token_codes
+
         for batch in batches:
-            ids = batch.column(0)
-            toks_lists = batch.column(1).to_pylist()
-            nrows = len(toks_lists)
+            codes, uniq, doclens = flat_token_codes(batch.column(1))
+            nrows = len(doclens)
+            # shingles per doc, each as n token codes padded with -1
+            nsh = np.where(doclens >= n, doclens - n + 1, 1)
+            sh_starts = np.cumsum(nsh) - nsh
+            sh_doc = np.repeat(np.arange(nrows), nsh)
+            first = (np.cumsum(doclens) - doclens)[sh_doc] \
+                + np.arange(len(sh_doc)) - sh_starts[sh_doc]
+            width = np.minimum(doclens, n)[sh_doc]
+            pad = np.arange(n) >= width[:, None]
+            win = np.where(pad, len(codes), first[:, None] + np.arange(n))
+            win = np.append(codes, -1)[win]
+            vocab = pa.array(uniq, type=pa.string())
+            cols = [pc.take(vocab, pa.array(win[:, j], mask=win[:, j] < 0))
+                    for j in range(n)]
+            # padding is trailing: joined as "" and its separators trimmed
+            shingle = pc.utf8_rtrim(pc.binary_join_element_wise(
+                *cols, " ", null_handling="replace"), characters=" ")
+            hs = _md5_60(shingle) % MERSENNE31
             sigs = np.empty((nrows, k), dtype=np.int64)
-            for r, tl in enumerate(toks_lists):
-                if not tl:
-                    tl = []
-                if len(tl) >= n:
-                    sh = [" ".join(tl[i:i + n]) for i in range(len(tl) - n + 1)]
-                else:
-                    sh = [" ".join(tl)]
-                hs = np.fromiter(
-                    (int(md5(s.encode("utf-8")).hexdigest()[:15], 16) % MERSENNE31
-                     for s in sh), dtype=np.int64, count=len(sh))
-                sigs[r] = ((hs[:, None] * a_arr + b_arr) % MERSENNE31).min(axis=0)
+            for i in range(k):
+                sigs[:, i] = np.minimum.reduceat((hs * a[i] + b[i]) % MERSENNE31,
+                                                 sh_starts)
             offs = pa.array((np.arange(nrows + 1) * k).astype(np.int32))
             lst = pa.ListArray.from_arrays(offs, pa.array(sigs.ravel()))
-            yield pa.RecordBatch.from_arrays([ids, lst], [id_col, "minhash"])
+            yield pa.RecordBatch.from_arrays([batch.column(0), lst], [id_col, "minhash"])
 
     return src.mapInArrow(kernel, schema=f"{id_col} {id_type}, minhash array<bigint>")
 
@@ -422,40 +443,44 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """60-bit SimHash from md5-derived token bits.
 
-    bit_i(doc) = 1 iff Σ over distinct tokens of (2*((h(t)>>i)&1)-1) > 0.
+    bit_i(doc) = 1 iff Σ over distinct tokens of (2*((h(t)>>i)&1)-1) > 0,
+    h(t) = ``_md5_60(t)``.
 
-    r6: the md5-derived token hashes stay a JVM expression (cheap,
-    codegen'd), but the 60-bit-counter fold — previously an interpreted
-    `aggregate` HOF allocating a fresh 60-array per token, 13.3 s
-    single-task at sf1.0 — is now one vectorized numpy pass per Arrow
-    batch (guide §4.2). Pure integer arithmetic, bit-identical output;
-    a null token array still yields a null simhash."""
+    One Arrow batch kernel per partition, fed the raw text: it
+    tokenizes with the index encoder's tokenizer
+    (``tokenizer.flat_token_codes``), hashes each distinct token of
+    the batch once (one md5 per vocabulary entry, gathered by code)
+    and folds the 60 bit counters per doc in one vectorized numpy pass
+    per bit. Pure integer arithmetic; a null text yields a null
+    simhash, an empty one 0."""
     id_type = dict(df.dtypes)[id_col]
-    src = _spread(df).select(
-        F.col(id_col),
-        F.transform(F.array_distinct(tokens(text_col)), _shingle_hash).alias("_hs"))
+    src = _spread(df).select(F.col(id_col), F.col(text_col))
 
     def kernel(batches):
         import pyarrow as pa
 
+        from .tokenizer import flat_token_codes
+
         for batch in batches:
-            ids = batch.column(0)
-            hs = batch.column(1)
-            nrows = len(hs)
-            lens = hs.value_lengths().to_numpy(zero_copy_only=False)
-            null_mask = np.asarray(hs.is_null().to_numpy(
-                zero_copy_only=False), dtype=bool)
-            lens = np.where(null_mask, 0, lens).astype(np.int64)
-            offs = np.concatenate([[0], np.cumsum(lens)])
-            flat = hs.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+            text = batch.column(1)
+            codes, uniq, doclens = flat_token_codes(text)
+            nrows = len(doclens)
+            # each doc's distinct tokens, doc-major
+            rows = np.repeat(np.arange(nrows, dtype=np.int64), doclens)
+            nv = max(len(uniq), 1)
+            rows, codes = np.divmod(np.unique(rows * nv + codes), nv)
+            flat = _md5_60(pa.array(uniq, type=pa.string()))[codes]
+            offs = np.searchsorted(rows, np.arange(nrows + 1))
             sim = np.zeros(nrows, dtype=np.int64)
             for i in range(60):
                 contrib = (((flat >> i) & 1) * 2 - 1)
                 cs = np.concatenate([[0], np.cumsum(contrib)])
                 row = cs[offs[1:]] - cs[offs[:-1]]
                 sim |= (row > 0).astype(np.int64) << i
+            null_mask = np.asarray(text.is_null().to_numpy(zero_copy_only=False),
+                                   dtype=bool)
             out = pa.array(sim, mask=null_mask) if null_mask.any() else pa.array(sim)
-            yield pa.RecordBatch.from_arrays([ids, out], [id_col, "simhash"])
+            yield pa.RecordBatch.from_arrays([batch.column(0), out], [id_col, "simhash"])
 
     return src.mapInArrow(kernel, schema=f"{id_col} {id_type}, simhash bigint")
 

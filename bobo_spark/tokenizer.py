@@ -36,11 +36,12 @@ def tokenize_batch(texts: pd.Series) -> pd.Series:
     return texts.str.lower().str.findall(TOKEN_RE)
 
 
-def flat_token_codes(texts: pd.Series):
+def flat_token_codes(texts):
     """Batch tokenize straight to integer codes: returns
     ``(codes int64[n_tokens], uniq object[n_vocab], doclens int64)``
     with tokens in document-major order and codes assigned by first
-    appearance.
+    appearance. ``texts`` is a pandas Series or an Arrow string array
+    (an Arrow batch column is tokenized without a pandas round trip).
 
     Fast path: when the whole batch is ASCII, tokenization runs
     entirely in Arrow C++ (utf8_lower → split_pattern_regex on the
@@ -57,7 +58,8 @@ def flat_token_codes(texts: pd.Series):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    arr = pa.array(texts, type=pa.string(), from_pandas=True)
+    arr = texts if isinstance(texts, pa.Array) else pa.array(
+        texts, type=pa.string(), from_pandas=True)
     arr = pc.fill_null(arr, "")
     if pc.all(pc.string_is_ascii(arr), min_count=0).as_py():
         parts = pc.split_pattern_regex(pc.utf8_lower(arr),
@@ -66,7 +68,7 @@ def flat_token_codes(texts: pd.Series):
         nonempty = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
         par = pc.list_parent_indices(parts).to_numpy()
         doclens = np.bincount(par[nonempty],
-                              minlength=len(texts)).astype(np.int64)
+                              minlength=len(arr)).astype(np.int64)
         dictarr = pc.dictionary_encode(
             pc.filter(flat, pa.array(nonempty)))
         if isinstance(dictarr, pa.ChunkedArray):
@@ -74,9 +76,9 @@ def flat_token_codes(texts: pd.Series):
         codes = dictarr.indices.to_numpy().astype(np.int64)
         uniq = dictarr.dictionary.to_numpy(zero_copy_only=False)
         return codes, uniq, doclens
-    # nulls tokenize as empty on BOTH paths (the Arrow path fill_nulls
-    # above; .str.findall would return NaN for None rows)
-    toks = tokenize_batch(texts.fillna(""))
+    # nulls tokenize as empty on BOTH paths (filled above;
+    # .str.findall would return NaN for None rows)
+    toks = tokenize_batch(arr.to_pandas())
     doclens = toks.map(len).to_numpy(dtype=np.int64)
     if int(doclens.sum()) == 0:
         return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=object),

@@ -293,10 +293,11 @@ def test_stats_spark_side_equals_driver(spark, tmp_path_factory, monkeypatch):
 def test_forward_stage_times_its_own_thread(spark, tmp_path_factory, monkeypatch):
     """The merge runs forward overlapped with the postings rewrite: its
     stage_secs entry is the forward thread's own duration, and the
-    wait for it is not charged to the next serial stage. The build's
-    forward is serial and records its lap. A 0.3 s sleep in the
-    forward write alone must show up in ``forward``, build and merge
-    alike."""
+    wait for it is not charged to the next serial stage. The build has
+    no forward stage: its docs stage writes forward on an overlapped
+    thread, so the ``docs`` entry carries the write. A 0.3 s sleep in
+    the forward write alone must show up in the build's ``docs`` and
+    the merge's ``forward``."""
     import time
 
     from pyspark.sql.readwriter import DataFrameWriter
@@ -314,8 +315,36 @@ def test_forward_stage_times_its_own_thread(spark, tmp_path_factory, monkeypatch
     d = str(tmp_path_factory.mktemp("v2fwd"))
     docs = webpages(spark, 200, 2)
     snap = build_snapshot(spark, docs, d, BuildConfig(docs_per_segment=100))
-    assert snap.stats["stage_secs"]["forward"] >= 0.3
+    assert "forward" not in snap.stats["stage_secs"]
+    assert snap.stats["stage_secs"]["docs"] >= 0.3
+    assert snap.stats["stage_secs"]["published"] < 0.3
     delete_docs(spark, d, [3])
     msnap = merge_snapshot(spark, d)
     assert msnap.stats["stage_secs"]["forward"] >= 0.3
     assert msnap.stats["stage_secs"]["published"] < 0.3
+
+
+def test_forward_doclen_is_the_token_count(spark, tmp_path_factory):
+    """Forward doclen is the tokenizer's token count on both postings
+    paths (the default broadcast gate and the pair table under
+    ``broadcast_terms_threshold=0``), also for a doc of more than
+    65,535 tokens, where the postings' doclen clamps: it equals the
+    oracle's ``len(tokens)``."""
+    from bobo_spark.catalog import IndexCatalog, read_table_pdf
+    from bobo_spark.oracle import OracleIndex
+
+    docs = webpages(spark, 60, 2).withColumn(
+        "text", F.when(F.col("doc_id") == 7, F.repeat(F.lit("ab Cd "), 35_000))
+        .otherwise(F.col("text")))
+    want = OracleIndex(docs.select("doc_id", "text").toPandas()
+                       .to_dict("records")).doclen
+    assert want[7] == 70_000
+    got = {}
+    for name, cfg in (("broadcast", BuildConfig(docs_per_segment=25)),
+                      ("pairs", BuildConfig(docs_per_segment=25,
+                                            broadcast_terms_threshold=0))):
+        d = str(tmp_path_factory.mktemp(f"v2dl_{name}"))
+        snap = build_snapshot(spark, docs, d, cfg)
+        fwd = read_table_pdf(IndexCatalog(d).table_paths(snap, "forward"))
+        got[name] = dict(zip(fwd["doc_id"].tolist(), fwd["doclen"].tolist()))
+    assert got["broadcast"] == got["pairs"] == want

@@ -2,8 +2,8 @@
 merge each run a fixed number of jobs, and an append runs no more
 than the base build (under the same driver gate, its dictionary merge
 runs in pandas like the base build's sort). The build's worker
-threads (the overlapped doc-table write, the merge's forward and
-sections rewrites) carry no job group, so each count is the ungrouped
+threads (the build's overlapped forward write, the merge's forward
+and sections rewrites) carry no job group, so each count is the ungrouped
 job ids Spark's status tracker gained across the call."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
 from bobo_spark.merge import merge_snapshot
 from bobo_spark.webgen import webpages
 
-EXPECTED = {"build": 13, "append": 13, "merge": 6}
+EXPECTED = {"build": 11, "append": 11, "merge": 6}
 
 
 def _jobs(spark, fn) -> int:

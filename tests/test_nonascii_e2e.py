@@ -127,3 +127,35 @@ def test_phrase_positions_survive_fallback(env):
                     zip(tokenize(r.text), tokenize(r.text)[1:]))]
     assert got2.num_hits == len(want2)
     assert set(got2.hits["doc_id"]) <= set(want2)
+
+
+def test_engine_tokenizer_matches_jvm_tokens(spark):
+    """The MinHash and SimHash kernels tokenize with the index
+    encoder's ``tokenizer.flat_token_codes``; token_counts, langid,
+    quality_scores and shingles use the JVM ``textops.tokens()``. Both
+    give every doc the same tokens — dotted capital I, the Kelvin sign,
+    sharp s, a final sigma, fullwidth digits, punctuation-only, empty
+    and null texts included (a null text has no tokens on either side)
+    — on the pandas fallback (the whole non-ASCII batch) and the Arrow
+    path (each ASCII text alone). A null text keeps a null simhash."""
+    import pyarrow as pa
+
+    from bobo_spark import textops
+    from bobo_spark.tokenizer import flat_token_codes
+
+    texts = ["İstanbul İİ x", "Kelvin K KELVIN",
+             "straße STRASSE", "ΟΔΟΣ οδος Σ",
+             "１２３ 456 ａｂｃ", "!!! ... ???", "", None,
+             "plain Ascii 42", "mixed-Case_words 7up"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    jvm = [r["t"] or [] for r in
+           df.orderBy("doc_id").select(textops.tokens().alias("t")).collect()]
+    codes, uniq, doclens = flat_token_codes(pd.Series(texts))
+    assert [list(t) for t in np.split(uniq[codes], np.cumsum(doclens)[:-1])] == jvm
+    for text, want in zip(texts, jvm):
+        codes, uniq, _ = flat_token_codes(pa.array([text], type=pa.string()))
+        assert list(uniq[codes]) == want, text
+    sim = dict(textops.simhash64(df).select("doc_id", "simhash").collect())
+    assert sim[texts.index(None)] is None
+    assert sim[texts.index("")] == 0
+    assert sum(v is None for v in sim.values()) == 1
