@@ -4,18 +4,18 @@ Pipeline (one snapshot; every stage is checkpointed in the catalog
 manifest so a killed build resumes from the last completed stage —
 the north rule's "resumable from Iceberg snapshot checkpoints"):
 
-1. ``docs``     — extract text (if only html present, into a scratch
-   doc table every later pass reads), facet dictionaries (lang,
-   warc_ts day bucket) and the batch's doc/byte counts from one
-   aggregation, then the forward table — per-segment doc rows
-   (doclen, url, facet ordinals), the Bobo FacetDataCache analogue
-   (facets/data/FacetDataCache.java:33-37) — written from the text in
-   one task pass on an overlapped thread: doclen is the tokenizer's
-   count, taken where the text already is (as Lucene takes a field's
-   length while it inverts the document). Dictionaries are
-   value-sorted on first build; later snapshots append new values
-   after the parent max ordinal so existing forward/posting data stays
-   valid.
+0. ``extract``  — html-only inputs: extract the text once, into a
+   scratch doc table every later pass reads.
+1. ``docs``     — facet dictionaries (lang, warc_ts day bucket) and
+   the batch's doc/byte counts from one aggregation, then the forward
+   table — per-segment doc rows (doclen, url, facet ordinals), the
+   Bobo FacetDataCache analogue (facets/data/FacetDataCache.java:33-37)
+   — written from the text in one task pass on an overlapped thread:
+   doclen is the tokenizer's count, taken where the text already is
+   (as Lucene takes a field's length while it inverts the document).
+   Dictionaries are value-sorted on first build; later snapshots
+   append new values after the parent max ordinal so existing
+   forward/posting data stays valid.
 2. ``terms``    — global term dictionary (df, cf) + dense ``term_id``
    by sorted rank (lexicographic on first build; an append keeps the
    parent's ids and numbers its new terms in sorted order after them
@@ -30,8 +30,7 @@ the north rule's "resumable from Iceberg snapshot checkpoints"):
    doc range (driver-computed identity partition keys — no
    boundary-sampling pass when doc ids are dense), then tokenize +
    broadcast term-id map + packed-key sort + block encode inside each
-   partition; per-doc (doclen, lang, ts) also rides as pseudo runs
-   (term_id=-1).
+   partition.
    Past it (web-scale dictionaries): a materialized ``pairs`` table
    (tokenize → (doc_id, term, packed, segment) rows incl. sentinel
    pairs) ⋈ terms → ``repartitionByRange(segment, term_id, doc_id)``
@@ -578,11 +577,7 @@ def _encode_segment_local(batches, cfg: BuildConfig, tmap_bc):
     against the broadcast dictionary, in-memory lexsort by (segment,
     term_id, doc_id), and emit posting blocks via the shared block
     encoder — the only cluster-wide data movement was the text
-    repartition that delivered these docs.
-
-    Also emits one pseudo-posting run per segment with ``term_id=-1``
-    whose (doc, dl, lang, ts) streams carry every doc of the segment
-    (doclen saturates at the 16-bit clamp)."""
+    repartition that delivered these docs."""
     tmap = tmap_bc.value  # pandas (term, term_id)
     parts = []
     for pdf in batches:
@@ -641,22 +636,7 @@ def _encode_segment_local(batches, cfg: BuildConfig, tmap_bc):
                 "segment": pdf["segment"].to_numpy(np.int64),
                 "pos_bytes": pd.Series(empty_binary_array(n)),
             }))
-        # pseudo forward run: term_id -1, one posting per doc, packed
-        # carries (tf=1, doclen, lang, ts)
-        dl_map = tf.drop_duplicates("doc_id").set_index("doc_id")["doclen"]
-        dl = dl_map.reindex(pdf["doc_id"]).fillna(0).to_numpy(np.int64)
-        fwd_packed = pack_meta(
-            np.ones(n, dtype=np.int64), dl,
-            pdf["lang_ord"].to_numpy(np.int64), pdf["ts_ord"].to_numpy(np.int64))
-        fwd = pd.DataFrame({
-            "doc_id": pdf["doc_id"].to_numpy(np.int64),
-            "term_id": np.full(n, -1, dtype=np.int64),
-            "packed": fwd_packed,
-            "segment": pdf["segment"].to_numpy(np.int64),
-            "pos_bytes": pd.Series(empty_binary_array(n)),
-        })
-        parts.append(pd.concat([text_rows] + sent_frames + [fwd],
-                               ignore_index=True))
+        parts.append(pd.concat([text_rows] + sent_frames, ignore_index=True))
     if not parts:
         return
     allp = pd.concat(parts, ignore_index=True)
@@ -787,10 +767,12 @@ def build_snapshot(
                       "lang", ts_col)
     if "text" not in docs.columns:
         # html-only input: the text is extracted ONCE, into a scratch
-        # doc table that every later pass reads
+        # doc table that every later pass reads, checkpointed on its
+        # own so a resumed build never extracts again
         docs_path = cat.table_path("_docs", sid)
-        if "docs" not in snap.stages:
+        if "extract" not in snap.stages:
             src.write.mode("overwrite").parquet(docs_path)
+            clock.mark("extract")
         src = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
     forward_path = cat.table_path("forward", sid)
 
@@ -849,8 +831,8 @@ def build_snapshot(
         # guide §2.6 (overlap independent jobs): no later stage reads
         # the forward table, so its write runs concurrently with the
         # terms, stats and postings stages and is joined before the
-        # publish. The dictionary aggregation (and an html input's
-        # extraction) is the docs stage's serial lead.
+        # publish. The dictionary aggregation is the docs stage's
+        # serial lead.
         fwd_pool = ThreadPoolExecutor(max_workers=1)
         fwd_fut = clock.submit(fwd_pool, _write_forward, lead=clock.lap())
 

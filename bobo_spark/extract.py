@@ -12,7 +12,7 @@ handles arbitrary simple markup deterministically.)
 Hot path is Arrow C++ end-to-end (strict UTF-8 cast →
 ``replace_substring_regex`` ×2 → ``utf8_trim``): zero per-row Python
 calls and zero per-value ``bytes`` objects — the same shape as the
-tokenizer's ``flat_token_codes`` fast path, and for the same reason
+tokenizer's ``flat_token_codes``, and for the same reason
 (per-value Python object churn measurably serializes workers on the
 shared allocator at build scale). Both regexes are pure-ASCII byte
 classes, and multi-byte UTF-8 sequences never contain ``>`` or ASCII

@@ -71,7 +71,8 @@ def _decode_block_docs(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
 def _stats_partials(batches, dead_bc):
     """Column-pruned pass over the old postings: per-batch
     (term_id, df, cf) partials with tombstoned docs excluded.
-    Pseudo forward runs (term_id = -1) are not terms."""
+    Per-doc forward runs (term_id = -1, written by builds before the
+    forward table took doclen from the tokenizer) are not terms."""
     for pdf in batches:
         pdf = pdf[pdf["term_id"] >= 0]
         if not len(pdf):
@@ -122,7 +123,7 @@ def _rewrite_blocks(batches, dead_bc, maps_bc, block_size: int):
         # positions: a block's pos stream is the concatenation of its
         # postings' (first-absolute, then gaps) buffers — exactly tf
         # values per posting when the block carries positions, zero
-        # bytes otherwise (sentinel / pseudo runs). Dropping a doc
+        # bytes otherwise (sentinel / forward runs). Dropping a doc
         # never changes another doc's buffer, so decode + re-encode
         # of the survivors is exact.
         pos_all, pos_offs = binary_parts(pdf["pos_bytes"]) \
@@ -368,7 +369,7 @@ def merge_snapshot(spark: SparkSession, index_dir: str,
             # instead of a driver-sized array. A surviving block whose
             # term is missing from the id map is the same stats/rewrite
             # divergence the broadcast path raises on — fail the job in
-            # the executor, never coerce real postings to pseudo runs
+            # the executor, never coerce real postings to term_id -1
             idmap = spark.read.schema("old_id long, term_id long").parquet(idmap_path)
             diverged = F.raise_error(F.concat(
                 F.lit("merge id-remap: surviving postings for a term "

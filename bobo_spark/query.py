@@ -1268,7 +1268,7 @@ class IndexReader:
             idx = np.searchsorted(ids_arr, store.first)
             keep = (idx < ids_arr.size) & \
                    (ids_arr[np.minimum(idx, ids_arr.size - 1)] <= store.last)
-            blk = np.flatnonzero(keep & (store.tid >= 0))  # -1: forward runs
+            blk = np.flatnonzero(keep & (store.tid >= 0))  # -1: older builds' forward runs
             brk = np.flatnonzero(np.diff(store.tid[blk])) + 1
             for g in np.split(blk, brk) if blk.size else []:
                 docs, tf = store.get("doc", g), store.get("tf", g)

@@ -5,7 +5,7 @@ Filters, counts and joins are built-in Spark SQL expressions over the
 JVM ``tokens()`` stream. The MinHash and SimHash signatures are Arrow
 batch kernels fed the raw text: they tokenize with the index
 encoder's tokenizer (``tokenizer.flat_token_codes``, the same tokens
-as ``tokens()``, Arrow C++ on ASCII batches) and hash in numpy —
+as ``tokens()``, in Arrow C++) and hash in numpy —
 Catalyst evaluates higher-order lambdas interpreted, which made them
 the dominant cost (guide §4.2). Hash-dependent operators derive ALL
 hashes from md5 (hashlib ≡ Spark ``md5`` ≡ DuckDB ``md5``
@@ -302,7 +302,7 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
     One Arrow batch kernel per partition, fed the raw text: it
     tokenizes with the index encoder's tokenizer
-    (``tokenizer.flat_token_codes``, Arrow C++ on ASCII batches),
+    (``tokenizer.flat_token_codes``, Arrow C++),
     builds every shingle string in one Arrow join over the code
     windows, and takes the k permutation mins per doc with one
     ``reduceat`` per hash — exact int64 arithmetic, so the DuckDB

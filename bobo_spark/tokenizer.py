@@ -6,9 +6,10 @@ fixed, locale-independent rule: NFC-free ASCII-safe lowercasing via
 ``str.lower()`` (Unicode default casing, never locale-dependent) and
 token extraction with the fixed pattern ``[a-z0-9]+``.
 
-The same pure-Python function drives both the Spark build (wrapped in
-an Arrow-vectorized pandas UDF) and the rank-identity oracle, so token
-streams are identical by construction.
+``tokenize`` is the rule the rank-identity oracle runs; the Spark
+build and the dedup kernels run its Arrow C++ form,
+``flat_token_codes``, which yields the same tokens on every input
+(checked over every code point by tests/test_webgen_extract.py).
 """
 
 from __future__ import annotations
@@ -43,50 +44,36 @@ def flat_token_codes(texts):
     appearance. ``texts`` is a pandas Series or an Arrow string array
     (an Arrow batch column is tokenized without a pandas round trip).
 
-    Fast path: when the whole batch is ASCII, tokenization runs
-    entirely in Arrow C++ (utf8_lower → split_pattern_regex on the
-    token-class complement → dictionary_encode) — no Python object
-    array is ever materialized for the token stream, which removes
-    the allocator churn that throttled multi-worker scaling. The
-    Arrow path is BIT-IDENTICAL to the pandas path for ASCII input
-    (same tokens, same first-appearance code order); non-ASCII
-    batches fall back to the canonical ``str.lower``/``findall``
-    pipeline because Unicode case-folding differs between Python and
-    Arrow on titled dots (e.g. 'İ'), and the tokenizer is the score
-    identity with the DuckDB oracle.
+    Tokenization runs entirely in Arrow C++ (utf8_lower →
+    split_pattern_regex on the token-class complement →
+    dictionary_encode): no Python object array is ever materialized
+    for the token stream, which removes the allocator churn that
+    throttled multi-worker scaling. It is BIT-IDENTICAL to
+    :func:`tokenize` (same tokens, first-appearance code order) on any
+    text: a lowered character only matters through the [a-z0-9] it
+    yields, and the one code point whose lowercase yields different
+    ones in Arrow and in Python's ``str.lower`` is 'İ' (U+0130; Arrow
+    'i', Python 'i' + U+0307, which ends the token), so it is spelled
+    out first. tests/test_webgen_extract.py checks every code point.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
     arr = texts if isinstance(texts, pa.Array) else pa.array(
         texts, type=pa.string(), from_pandas=True)
-    arr = pc.fill_null(arr, "")
-    if pc.all(pc.string_is_ascii(arr), min_count=0).as_py():
-        parts = pc.split_pattern_regex(pc.utf8_lower(arr),
-                                       "[^a-z0-9]+")
-        flat = pc.list_flatten(parts)
-        nonempty = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
-        par = pc.list_parent_indices(parts).to_numpy()
-        doclens = np.bincount(par[nonempty],
-                              minlength=len(arr)).astype(np.int64)
-        dictarr = pc.dictionary_encode(
-            pc.filter(flat, pa.array(nonempty)))
-        if isinstance(dictarr, pa.ChunkedArray):
-            dictarr = dictarr.combine_chunks()
-        codes = dictarr.indices.to_numpy().astype(np.int64)
-        uniq = dictarr.dictionary.to_numpy(zero_copy_only=False)
-        return codes, uniq, doclens
-    # nulls tokenize as empty on BOTH paths (filled above;
-    # .str.findall would return NaN for None rows)
-    toks = tokenize_batch(arr.to_pandas())
-    doclens = toks.map(len).to_numpy(dtype=np.int64)
-    if int(doclens.sum()) == 0:
-        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=object),
-                doclens)
-    flat_np = np.concatenate(
-        [np.asarray(t, dtype=object) for t in toks.to_numpy()])
-    codes, uniq = pd.factorize(flat_np, sort=False)
-    return codes.astype(np.int64), np.asarray(uniq, dtype=object), doclens
+    # nulls tokenize as empty
+    arr = pc.replace_substring(pc.fill_null(arr, ""), "\u0130", "i\u0307")
+    parts = pc.split_pattern_regex(pc.utf8_lower(arr), "[^a-z0-9]+")
+    flat = pc.list_flatten(parts)
+    nonempty = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
+    par = pc.list_parent_indices(parts).to_numpy()
+    doclens = np.bincount(par[nonempty], minlength=len(arr)).astype(np.int64)
+    dictarr = pc.dictionary_encode(pc.filter(flat, pa.array(nonempty)))
+    if isinstance(dictarr, pa.ChunkedArray):
+        dictarr = dictarr.combine_chunks()
+    codes = dictarr.indices.to_numpy().astype(np.int64)
+    uniq = dictarr.dictionary.to_numpy(zero_copy_only=False)
+    return codes, uniq, doclens
 
 
 def term_freq_frame(doc_ids: np.ndarray, texts: pd.Series,
@@ -96,7 +83,7 @@ def term_freq_frame(doc_ids: np.ndarray, texts: pd.Series,
     Returns columns (doc_id, term, tf, doclen[, pos_bytes]). Token
     counting happens through one integer lexsort + run-length pass
     over the code stream from :func:`flat_token_codes` — no per-row
-    Python and (on the ASCII fast path) no token object array at all.
+    Python and no token object array at all.
 
     With ``positions=True`` each row also carries ``pos_bytes``: the
     term's in-document token positions (0-based), delta-varbyte

@@ -329,7 +329,8 @@ def test_forward_doclen_is_the_token_count(spark, tmp_path_factory):
     paths (the default broadcast gate and the pair table under
     ``broadcast_terms_threshold=0``), also for a doc of more than
     65,535 tokens, where the postings' doclen clamps: it equals the
-    oracle's ``len(tokens)``."""
+    oracle's ``len(tokens)``. Neither path writes per-doc forward runs
+    (term_id -1) into postings."""
     from bobo_spark.catalog import IndexCatalog, read_table_pdf
     from bobo_spark.oracle import OracleIndex
 
@@ -347,4 +348,7 @@ def test_forward_doclen_is_the_token_count(spark, tmp_path_factory):
         snap = build_snapshot(spark, docs, d, cfg)
         fwd = read_table_pdf(IndexCatalog(d).table_paths(snap, "forward"))
         got[name] = dict(zip(fwd["doc_id"].tolist(), fwd["doclen"].tolist()))
+        tids = read_table_pdf(IndexCatalog(d).table_paths(snap, "postings"),
+                              columns=["term_id"])["term_id"]
+        assert tids.min() >= 0, name
     assert got["broadcast"] == got["pairs"] == want

@@ -78,10 +78,10 @@ def test_section_fastpath_equals_distributed(spark, tmp_path_factory):
 
 
 def test_cached_fastpath_unknown_term_with_selection(env):
-    """r6 regression: the in-driver block cache holds the pseudo
-    forward runs (term_id = -1); an UNKNOWN query term (also -1) must
-    not resolve to them (it would turn the candidate set into every
-    doc). OR-mode query with one unknown term + a postings-mode
+    """r6 regression: an UNKNOWN query term carries term_id -1, the id
+    older builds gave their per-doc forward runs; it must resolve to
+    no posting block (a forward run would turn the candidate set into
+    every doc). OR-mode query with one unknown term + a postings-mode
     selection must match the distributed path exactly."""
     req = SearchRequest(query=["ba", "zzznothing"], mode="or", k=10,
                         facets=("lang",), selections={"lang": ["fr"]})

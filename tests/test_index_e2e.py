@@ -163,3 +163,49 @@ def test_resume_after_failure(spark, tmp_path_factory, monkeypatch, oracle):
     assert reader.n_docs == 600
     r = reader.search(SearchRequest(query=["ba"], mode="or", k=5))
     assert r.num_hits > 0
+
+
+def test_html_resume_skips_extraction(spark, tmp_path_factory, monkeypatch):
+    """An html-only build checkpoints its text extraction: a build that
+    dies in a later stage resumes without extracting again (the scratch
+    doc table's files are untouched) and publishes the index a text
+    input builds."""
+    import os
+
+    import bobo_spark.catalog as catalog_mod
+    from bobo_spark.catalog import IndexCatalog
+
+    d = str(tmp_path_factory.mktemp("idx_html_resume"))
+    docs = webpages(spark, 300, n_partitions=4)
+    real_mark = catalog_mod.IndexCatalog.mark_stage
+
+    def dying_mark(self, snap, stage):
+        real_mark(self, snap, stage)
+        if stage == "terms":
+            raise RuntimeError("simulated crash after terms stage")
+
+    monkeypatch.setattr(catalog_mod.IndexCatalog, "mark_stage", dying_mark)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_snapshot(spark, docs.drop("text"), d, CFG)
+    monkeypatch.setattr(catalog_mod.IndexCatalog, "mark_stage", real_mark)
+    cat = IndexCatalog(d)
+    pending = cat.pending()
+    assert "extract" in pending.stages and "docs" not in pending.stages
+    docs_path = cat.table_path("_docs", pending.snapshot_id)
+
+    def files():
+        return {f: os.stat(os.path.join(docs_path, f)).st_mtime_ns
+                for f in os.listdir(docs_path)}
+
+    before = files()
+    snap = build_snapshot(spark, docs.drop("text"), d, CFG, resume=True)
+    assert "published" in snap.stages and files() == before
+    ref = str(tmp_path_factory.mktemp("idx_html_resume_ref"))
+    build_snapshot(spark, docs.drop("html"), ref, CFG)
+    got, want = IndexReader(spark, d), IndexReader(spark, ref)
+    assert got.n_docs == want.n_docs == 300
+    req = SearchRequest(query=["ba", "keri"], mode="or", k=10, facets=("lang",))
+    a, b = got.search(req), want.search(req)
+    assert a.num_hits == b.num_hits > 0
+    assert a.hits["doc_id"].tolist() == b.hits["doc_id"].tolist()
+    assert a.hits["score"].tolist() == b.hits["score"].tolist()

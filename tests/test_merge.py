@@ -202,8 +202,7 @@ def test_incremental_append_after_merge(spark, tmp_path):
 def test_merge_join_fallback_idmap(spark, tmp_path):
     """Web-scale path: broadcast_idmap_threshold=0 forces the
     distributed-join term-id remap; answers must still equal a fresh
-    build of the survivors (and pseudo forward runs must survive the
-    left join with term_id -1)."""
+    build of the survivors."""
     d = str(tmp_path / "jf")
     fresh_dir = str(tmp_path / "jf_fresh")
     docs = webpages(spark, 400, 4)
@@ -219,7 +218,7 @@ def test_merge_join_fallback_idmap(spark, tmp_path):
         f._terms.orderBy("term_id").toPandas()[["term", "term_id", "df", "cf"]])
     req = SearchRequest(query="data row", mode="or", k=10, facets=("lang",))
     _assert_same_result(m.search(req), f.search(req))
-    # forward data decodable post-merge (pseudo runs kept term_id=-1)
+    # forward data readable post-merge
     assert m._forward.count() == 397
 
 

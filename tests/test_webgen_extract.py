@@ -96,10 +96,9 @@ def test_term_freq_frame_positions():
 
 
 def test_flat_token_codes_paths_agree():
-    """The Arrow fast path (all-ASCII batches) must produce the same
-    token stream, doclens, and code semantics as the pandas fallback;
-    non-ASCII batches must take the fallback (Unicode casing parity
-    with the oracle)."""
+    """The Arrow tokenizer must produce the same token stream, doclens
+    and code semantics as the canonical ``tokenize`` on ASCII and on
+    non-ASCII batches (Unicode casing parity with the oracle)."""
     from bobo_spark.tokenizer import flat_token_codes
 
     ascii_texts = pd.Series(["Hello, World! foo-bar 42x", "", "a  b\tc\nd",
@@ -113,12 +112,27 @@ def test_flat_token_codes_paths_agree():
     # codes are first-appearance dense ints
     assert sorted(set(c1.tolist())) == list(range(len(u1)))
 
-    # non-ASCII: falls back, still matches tokenize()
+    # non-ASCII: still matches tokenize()
     uni = pd.Series(["İstanbul CAFÉ merge", "naïve spark"])
     c2, u2, d2 = flat_token_codes(uni)
     want2 = [tokenize(t) for t in uni]
     assert [u2[c] for c in c2] == [t for w in want2 for t in w]
     assert d2.tolist() == [len(w) for w in want2]
+
+
+def test_flat_token_codes_every_code_point():
+    """Every code point, between token characters and alone, tokenizes
+    as ``tokenize`` does — the Arrow lowercase differs from Python's
+    on 'İ' (U+0130) alone, which ``flat_token_codes`` spells out."""
+    from bobo_spark.tokenizer import flat_token_codes
+
+    cps = [c for c in range(0x80, 0x110000) if not 0xD800 <= c <= 0xDFFF]
+    texts = [f"a{chr(c)}b {chr(c)}" for c in cps]
+    codes, uniq, doclens = flat_token_codes(pd.Series(texts))
+    got = np.split(uniq[codes], np.cumsum(doclens)[:-1])
+    bad = [(hex(c), list(g)) for c, t, g in zip(cps, texts, got)
+           if list(g) != tokenize(t)]
+    assert not bad, bad[:5]
 
 
 def test_extract_arrow_path_byte_identical_to_py():
