@@ -662,8 +662,9 @@ _SECTION_W = 16
 
 def _q_bm25_matchall_sel(spark, sf_dir):
     """Selection-only search on the INDEX engine (query=None ≙
-    MatchAllDocs AND-wrapped with filters): lang selection via forward
-    scan, ts_bucket facet counts honoring the filter."""
+    MatchAllDocs AND-wrapped with filters): a scorer plan over the lang
+    facet sentinel postings, ts_bucket facet counts honoring the
+    filter."""
     r = _documents_index(spark, sf_dir)
     res = r.search(SearchRequest(query=None, k=10,
                                  selections={"lang": ["de"]},

@@ -26,30 +26,33 @@ Execution model (the Spark rendition of SURVEY.md §3.1):
   arrays. Doc ids are global, so a store is scored in ONE pass
   whatever segments it holds — the reference loops over segments
   (api/MultiBoboBrowser.java:100-127) only because each Lucene
-  segment is a separate reader. It runs on one of three paths, chosen
-  from published stats and dictionary df:
+  segment is a separate reader. It runs on one of two paths, fixed
+  per reader:
   - ``cache``: an index under ``DRIVER_CACHE_TOKSUM`` is read into an
-    in-driver ``_BlockStore`` once per reader; page-scale queries
-    score there, one pass per plan, with zero Spark jobs, decoded
-    blocks shared across queries;
-  - ``scan``: page-scale queries (Σdf ≤ ``DRIVER_POSTINGS_THRESHOLD``)
-    on an uncached reader fetch their term-filtered blocks once (Arrow)
-    into one store and score it in one pass;
+    in-driver ``_BlockStore`` once per reader; every request scores
+    there, one pass per plan, with zero Spark jobs, decoded blocks
+    shared across requests;
   - ``distributed``: ``groupBy(segment).applyInPandas`` scores each
     segment's store on the executors; the tasks encode ``_SegOut``s
     as ``OUT_SCHEMA`` rows only at that boundary and the driver
     decodes them back (``_parts_from_rows``).
   Every path filters tombstones with the reader's one sorted global
   ``deleted`` array; the tasks get it as one broadcast.
-* One merge (``IndexReader._merge``) serves ``search``,
-  ``search_many`` and ``search_df``: one (score desc, doc_id asc)
+* MatchAll (``query=None``) is a plan like any other (≙ the
+  reference's MatchAllDocsQuery AND-wrapped with the filters,
+  api/MultiBoboBrowser.java:81-92): its terms are the ``\\x00lang:o``
+  facet sentinels, one per doc, so their union is every doc, and
+  every candidate scores 1.0. Selections, tombstones, the
+  leave-one-out facet counts and the page come from the same scorer.
+* One merge (``IndexReader._merge``) serves ``search_many`` (and so
+  ``search``, a batch of one) and ``search_df``: one (score desc, doc_id asc)
   lexsort for the page (≙ sort/SortCollectorImpl.java:354-368 +
   util/ListMerger.java:104-137), one (doc_id, part) lexsort for the
   explanation rows, and ``_facet_frame``'s (count desc, value rank)
   order (≙ facets/CombinedFacetAccessible.java:101-192), which MatchAll
   and collectAll facets share. No pandas sort or merge.
 
-Pruning (every path, once per store — so the driver paths get one
+Pruning (every path, once per store — so the cache path gets one
 global θ):
 * conjunctive — blocks of non-rarest terms are skipped before decode
   when their [first_doc, last_doc] interval overlaps no block of the
@@ -80,10 +83,6 @@ from .catalog import IndexCatalog, Snapshot, read_table_arrow, read_table_pdf
 from .codecs import _rebase_docs, _sorted_member, vb_decode
 from .tokenizer import tokenize
 
-# serializes search_many's session-conf AQE flip (see its comment)
-import threading as _threading
-_AQE_LOCK = _threading.RLock()
-
 OUT_SCHEMA = "kind int, doc_id long, score double, field string, ordinal long, count long"
 _OUT_COLS = ["kind", "doc_id", "score", "field", "ordinal", "count"]
 _K_HIT, _K_FACET, _K_STATS, _K_EXPL = 1, 2, 3, 4
@@ -97,8 +96,8 @@ _READ_ERRORS = (OSError, pa.ArrowInvalid)
 class SearchRequest:
     # None = MatchAllDocs / selection-only search (the reference
     # AND-wraps MatchAllDocsQuery with the filter set,
-    # api/MultiBoboBrowser.java:81-92): hits come from a forward-table
-    # scan, scores are the constant 1.0
+    # api/MultiBoboBrowser.java:81-92): hits come from the lang facet
+    # sentinel postings, scores are the constant 1.0
     query: str | list[str] | None
     mode: str = "and"  # "and" | "or" | "phrase" (exact consecutive positions)
     k: int = 10
@@ -436,7 +435,8 @@ def _score_plan(plan: dict, st: _BlockStore,
     serves a store of many segments; None when there are none). Only
     blocks that survive pruning are decoded, each at most once per
     store. Nothing here assumes a term's doc stream is sorted across
-    blocks (see ``_BlockStore``)."""
+    blocks (see ``_BlockStore``). A ``matchall`` plan's terms are the
+    lang sentinels, a disjunction over every doc, each scoring 1.0."""
     terms = plan["terms"]
     mode = plan["mode"]
     k = plan["k"] + plan["offset"]
@@ -478,7 +478,7 @@ def _score_plan(plan: dict, st: _BlockStore,
     # ---- disjunctive block-max pruning (top-k only: no facets or
     # selections; recency uses the boost-aware bound variant)
     n_hits_exact = None
-    if (mode == "or" and plan.get("prune") and not plan["facets"]
+    if (mode == "or" and k and plan.get("prune") and not plan["facets"]
             and sel_lang is None and sel_ts is None and len(present) > 1):
         # exact hit count BEFORE pruning: union of doc streams only
         # (tf/meta streams of dropped blocks stay undecoded, so the
@@ -565,6 +565,8 @@ def _score_plan(plan: dict, st: _BlockStore,
         dl = np.zeros(cand.size, dtype=np.int64)
         dl[p] = st.get("dl", groups[t0])[ok]
         scores = bm25.contrib(ptf, dl, plan["phrase_idf_sum"], avgdl)
+    elif mode == "matchall":
+        scores = np.ones(cand.size, dtype=np.float64)
     else:
         scores = np.zeros(cand.size, dtype=np.float64)
         for t in present:  # already lex-ordered
@@ -595,9 +597,9 @@ def _score_plan(plan: dict, st: _BlockStore,
     n_local = int(hit_docs.size)
     out = _SegOut(n_hits_exact if n_hits_exact is not None else n_local,
                   facets=facets)
-    if not n_local:
-        return out
     kk = min(k, n_local)
+    if not kk:
+        return out
     # top-k by (-score, doc_id). Select everything >= the kk-th largest
     # score (including ALL ties) before the exact lexsort, so score
     # ties at the boundary break by doc_id exactly.
@@ -655,13 +657,12 @@ def _out_rows(o: _SegOut) -> list:
 
 
 def _parts_from_rows(out: pd.DataFrame) -> dict:
-    """Inverse of ``_out_rows`` on the driver: qid (0 without a qid
-    column) → one ``_SegOut`` holding all that query's segment rows
-    (hit counts and facet vectors summed)."""
+    """Inverse of ``_out_rows`` on the driver: qid → one ``_SegOut``
+    holding all that query's segment rows (hit counts and facet
+    vectors summed)."""
     if not len(out):
         return {}
-    qid = (out["qid"].to_numpy(np.int64) if "qid" in out
-           else np.zeros(len(out), dtype=np.int64))
+    qid = out["qid"].to_numpy(np.int64)
     order = np.argsort(qid, kind="stable")
     kind = out["kind"].to_numpy(np.int64)[order]
     doc = out["doc_id"].to_numpy(np.int64)[order]
@@ -694,15 +695,6 @@ def _empty_out() -> pd.DataFrame:
          "ordinal": pd.Series([], dtype="int64"), "count": pd.Series([], dtype="int64")})
 
 
-def _out_frame(rows: list, qids: list | None = None) -> pd.DataFrame:
-    """Output tuples as one OUT_SCHEMA frame (plus the batch ``qid``
-    column when ``qids`` is given)."""
-    out = pd.DataFrame(rows, columns=_OUT_COLS) if rows else _empty_out()
-    if qids is not None:
-        out["qid"] = np.asarray(qids, dtype=np.int32)
-    return out
-
-
 def _plan_tids(plan: dict) -> list[int]:
     """Term ids a plan reads: its known query terms (unknown terms
     carry term_id -1) plus its postings-mode selection sentinels."""
@@ -731,10 +723,9 @@ def _score_store(store: _BlockStore, plans: list,
     return parts
 
 
-def _task_rows(pdf: pd.DataFrame, plans: list, deleted_bc,
-               with_qid: bool) -> pd.DataFrame:
+def _task_rows(pdf: pd.DataFrame, plans: list, deleted_bc) -> pd.DataFrame:
     """One distributed segment task: score ``plans`` against the task's
-    block rows and encode the answers as OUT_SCHEMA rows."""
+    block rows and encode the answers as OUT_SCHEMA rows plus ``qid``."""
     store, deleted = _task_segment(pdf, deleted_bc)
     rows: list = []
     qids: list = []
@@ -742,7 +733,9 @@ def _task_rows(pdf: pd.DataFrame, plans: list, deleted_bc,
         r = _out_rows(o)
         rows += r
         qids += [qid] * len(r)
-    return _out_frame(rows, qids if with_qid else None)
+    out = pd.DataFrame(rows, columns=_OUT_COLS) if rows else _empty_out()
+    out["qid"] = np.asarray(qids, dtype=np.int32)
+    return out
 
 
 def _section_page(out: pd.DataFrame, offset: int, k: int) -> pd.DataFrame:
@@ -841,17 +834,13 @@ class IndexReader:
         # facet counts and num_hits exclude them; df/cf/avgdl stats
         # intentionally do NOT change until a merge — Lucene semantics.
         # Loaded ONCE per reader open as one sorted doc_id array: the
-        # driver paths filter with it directly, a Spark DataFrame of it
-        # serves the DataFrame paths' anti-joins, and one broadcast of
-        # it serves the distributed tasks — query plans carry only the
+        # cache path filters with it directly, and one broadcast of it
+        # serves the distributed tasks — query plans carry only the
         # broadcast HANDLE, never the id list, so plan size is O(1) in
         # the tombstone count (the r3 scale-killer).
         self.deleted = load_tombstones(self.catalog, self.snap)
-        self._deletes_df = None
         self._deleted_bc = None
         if self.deleted.size:
-            self._deletes_df = self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": self.deleted}), schema="doc_id long")
             self._deleted_bc = self.spark.sparkContext.broadcast(self.deleted)
 
     def _read(self, table: str) -> DataFrame:
@@ -881,19 +870,8 @@ class IndexReader:
                 for t, i, d in zip(pdf["term"], pdf["term_id"], pdf["df"])}
 
     def _tombstones(self) -> np.ndarray | None:
-        """The driver paths' tombstones: ``deleted``, or None when empty."""
+        """The cache path's tombstones: ``deleted``, or None when empty."""
         return self.deleted if self.deleted.size else None
-
-    def _not_deleted(self, df: DataFrame) -> DataFrame:
-        """Anti-join tombstones out of a doc_id-keyed DataFrame — a
-        relational join Catalyst can plan (broadcast-hash for ordinary
-        delete volumes), never an ``isin`` literal list."""
-        if self._deletes_df is None:
-            return df
-        d = self._deletes_df.select("doc_id")
-        if self.snap.stats.get("n_deleted", 0) <= 5_000_000:
-            d = F.broadcast(d)
-        return df.join(d, "doc_id", "left_anti")
 
     def facet_counts(self, field: str) -> pd.DataFrame:
         """collectAll shortcut: no-query/no-filter facet counts served
@@ -902,16 +880,13 @@ class IndexReader:
         facets/impl/SimpleFacetHandler.java:222-225 +
         api/BoboSubBrowser.java:59-64). Every dictionary value is
         listed, count 0 included."""
-        if self._deletes_df is not None:
-            # tombstones present: the dictionary df stats still count
-            # deleted docs — fall back to a real (anti-joined) count;
-            # values whose every doc is deleted keep count 0
-            col = self._ORD_COL[field]
-            cnt = (self._not_deleted(self._forward)
-                   .groupBy(col).count().toPandas())
-            counts = np.bincount(cnt[col].to_numpy(np.int64), weights=cnt["count"])
-        else:
-            counts = np.bincount(self._facet[field][1], weights=self.dicts[field]["df"])
+        if self.deleted.size:
+            # the dictionary df stats still count deleted docs: count
+            # the live docs with a k=0 MatchAll search instead (values
+            # whose every doc is deleted keep count 0)
+            return self.search(SearchRequest(
+                query=None, k=0, facets=(field,))).facets[field]
+        counts = np.bincount(self._facet[field][1], weights=self.dicts[field]["df"])
         return self._facet_frame(field, counts, keep_zero=True)
 
     # ---------------------------------------------------------------- planning
@@ -943,24 +918,31 @@ class IndexReader:
         posting lists when Σdf(values)·2 < n_docs and ≤5 values, else
         scan the per-posting ordinal stream."""
         if ords is None:
-            return None, [], 0
+            return None, []
         if 0 < len(ords) <= self.OR_THRESHOLD:
             found = self._lookup_terms(f"\x00{field}:{o}" for o in ords)
             df = sum(d for _, d in found.values())
             if len(found) == len(ords) and 2 * df < self.n_docs:
-                return "postings", [t for t, _ in found.values()], df
-        return "ords", [], 0
+                return "postings", [t for t, _ in found.values()]
+        return "ords", []
 
     def plan(self, req: SearchRequest) -> dict:
-        qtokens = tokenize(req.query) if isinstance(req.query, str) else [
-            t for q in req.query for t in tokenize(q)
-        ]
+        matchall = req.query is None
+        if matchall:
+            # every doc holds exactly one lang sentinel, so the union
+            # of their posting lists is every doc
+            qtokens = [f"\x00lang:{o}" for o in self._facet["lang"][1].tolist()]
+        elif isinstance(req.query, str):
+            qtokens = tokenize(req.query)
+        else:
+            qtokens = [t for q in req.query for t in tokenize(q)]
+        mode = "matchall" if matchall else req.mode
         plan_terms = _plan_terms(self._lookup_terms(qtokens), qtokens, self.n_docs)
         sel_lang, sel_ts = self._resolve_selections(req)
-        lang_mode, lang_tids, lang_df = self._access_path("lang", sel_lang)
-        ts_mode, ts_tids, ts_df = self._access_path("ts", sel_ts)
+        lang_mode, lang_tids = self._access_path("lang", sel_lang)
+        ts_mode, ts_tids = self._access_path("ts", sel_ts)
         recency = None
-        if req.recency:
+        if req.recency and not matchall:
             recency = {
                 "now_ms": float(req.recency["now_ms"]),
                 "cutoff_ms": float(req.recency["cutoff_ms"]),
@@ -969,14 +951,14 @@ class IndexReader:
             }
         phrase_ids: list[int] = []
         phrase_idf_sum = 0.0
-        if req.mode == "phrase":
+        if mode == "phrase":
             by_term = {t["term"]: t for t in plan_terms}
             phrase_ids = [by_term[t]["term_id"] for t in qtokens]
             for t in qtokens:  # token-instance order — pinned sum order
                 phrase_idf_sum += by_term[t]["idf"]
         return {
             "terms": plan_terms,
-            "mode": req.mode,
+            "mode": mode,
             "k": req.k,
             "offset": req.offset,
             "avgdl": self.avgdl,
@@ -987,50 +969,32 @@ class IndexReader:
             "sel_ts_mode": ts_mode,
             "sel_lang_tids": lang_tids,
             "sel_ts_tids": ts_tids,
-            "sel_df": lang_df + ts_df,
             "expand_selection": req.expand_selection,
-            "prune": req.prune,
+            "prune": req.prune and not matchall,
             "phrase_ids": phrase_ids,
             "phrase_idf_sum": phrase_idf_sum,
             "recency": recency,
-            "explain": req.explain,
+            "explain": req.explain and not matchall,
         }
 
     # --------------------------------------------------------------- execution
 
-    # Σdf below which scoring runs ON THE DRIVER (one pass per plan):
-    # fetching the term-filtered blocks once (pushed term_id IN scan)
-    # is cheaper than the groupBy exchange + Python-worker round trip
-    # when the query touches only page-scale posting counts. The
-    # dictionary df makes the cost KNOWN before execution — an exact
-    # cost-based path choice, not a heuristic (≙ the reference being
-    # an embedded single-searcher library; head terms at web scale
-    # exceed the bound and take the distributed path).
-    DRIVER_POSTINGS_THRESHOLD = 200_000
-
     # tok_sum (known exactly from the published stats) below which the
     # whole postings table is pulled driver-side ONCE per reader open —
     # the embedded analogue of serving a small Lucene index from RAM:
-    # every fast-path query then costs ZERO Spark jobs instead of one
-    # scheduled scan+collect (~0.25 s of fixed per-job latency each on
+    # every request then costs ZERO Spark jobs instead of scheduled
+    # scans and collects (~0.25 s of fixed per-job latency each on
     # local[32]). Encoded blocks are ~4-8 B/token, so the default pins
     # well under 200 MB of driver memory; web-scale indexes exceed the
-    # gate and keep the distributed path unchanged.
+    # gate and take the distributed path.
     DRIVER_CACHE_TOKSUM = 20_000_000
-
-    def _driver_fastpath(self, plan: dict) -> bool:
-        # sentinel posting lists' df is resolved at plan time
-        # (sel_df), so selection queries on the inverted access path
-        # are cost-gated exactly like query terms
-        total_df = sum(t["df"] for t in plan["terms"]) + plan.get("sel_df", 0)
-        return total_df <= self.DRIVER_POSTINGS_THRESHOLD
 
     def _postings_driver(self) -> _BlockStore | None:
         """The in-driver block cache — a ``_BlockStore`` of the whole
         postings table (pos_bytes included, so phrase queries are
         served too) — or None past the gate. Built lazily on first
-        fast-path use from one driver-direct Arrow read (a Spark read
-        where the files are not driver-readable)."""
+        use from one driver-direct Arrow read (a Spark read where the
+        files are not driver-readable)."""
         if not getattr(self, "_driver_cache_ok", False):
             return None
         if self._store is None:
@@ -1048,27 +1012,6 @@ class IndexReader:
         src = self._postings_full if phrase else self._postings
         return src.where(F.col("term_id").isin(tids))
 
-    def _driver_store(self, tids: list[int], phrase: bool) -> _BlockStore:
-        """Blocks of ``tids`` on the driver: the block cache when the
-        index is under the gate (``cache``: zero Spark jobs, decoded
-        blocks shared across queries), else one pushed term_id IN scan
-        (``scan``)."""
-        if phrase:
-            self._require_positions()
-        store = self._postings_driver()
-        if store is None:
-            store = _BlockStore(self._blocks(tids, phrase).toArrow())
-        return store
-
-    def _score_driver(self, plan: dict) -> _SegOut | None:
-        """Score a page-scale query on the driver: one ``_score_plan``
-        pass over the whole store, on the ``cache`` and ``scan`` paths
-        alike."""
-        if not _runnable(plan):
-            return None
-        store = self._driver_store(_plan_tids(plan), plan["mode"] == "phrase")
-        return _score_plan(plan, store, self._tombstones())
-
     def _require_positions(self) -> None:
         """Plan-time guard: a phrase/section query against an index
         built with store_positions=False must fail on the DRIVER with
@@ -1078,30 +1021,68 @@ class IndexReader:
                 "index built with store_positions=False cannot serve "
                 "phrase queries (no positions stream)")
 
-    def _segment_outputs(self, plan: dict) -> DataFrame:
-        if not _runnable(plan):
-            return self.spark.createDataFrame([], OUT_SCHEMA)
-        blocks = self._blocks(_plan_tids(plan), plan["mode"] == "phrase")
+    def _segment_frame(self, runnable: list) -> DataFrame:
+        """The distributed body of every request, lazy: each segment
+        task scores every runnable ``(qid, plan)`` against its blocks,
+        decoding each block (and each stream) at most once however
+        many plans read it, and emits OUT_SCHEMA rows plus ``qid``."""
+        tids = sorted({t for _, p in runnable for t in _plan_tids(p)})
+        blocks = self._blocks(tids, any(p["mode"] == "phrase" for _, p in runnable))
         deleted_bc = self._deleted_bc
-        return blocks.groupBy("segment").applyInPandas(
-            lambda pdf: _task_rows(pdf, [(0, plan)], deleted_bc, False),
-            schema=OUT_SCHEMA,
-        )
+        # pin the exchange width: left to AQE, the small term-
+        # filtered shuffle coalesces to a handful of fat partitions
+        # (measured 15 partitions for 64 segments at 16 cores —
+        # idle cores + ragged last wave in the Python stage). A
+        # user repartition on the grouping key is reused by the
+        # groupBy (no second exchange) and is never coalesced.
+        n_seg = self.snap.stats.get("n_segments") or 0
+        npart = max(2 * self.spark.sparkContext.defaultParallelism,
+                    int(self.spark.conf.get(
+                        "spark.sql.shuffle.partitions", "32")))
+        if n_seg:
+            npart = min(npart, n_seg)
+        return blocks.repartition(npart, "segment").groupBy(
+            "segment").applyInPandas(
+                lambda pdf: _task_rows(pdf, runnable, deleted_bc),
+                schema=OUT_SCHEMA + ", qid int")
 
-    def _merge(self, req: SearchRequest, out: _SegOut | None) -> SearchResult:
-        """The final merge of every keyword path (≙ ListMerger +
+    def _score(self, runnable: list) -> dict:
+        """qid → ``_SegOut`` for every runnable ``(qid, plan)``: one
+        pass per plan over the in-driver block cache (``cache``, zero
+        Spark jobs), else one collect of ``_segment_frame``
+        (``distributed``). Plans that match nothing are absent."""
+        if not runnable:
+            return {}
+        if any(p["mode"] == "phrase" for _, p in runnable):
+            self._require_positions()
+        store = self._postings_driver()
+        if store is None:
+            return _parts_from_rows(self._segment_frame(runnable).toPandas())
+        return _score_store(store, runnable, self._tombstones())
+
+    def _merge(self, req: SearchRequest, plan: dict,
+               out: _SegOut | None) -> SearchResult:
+        """The final merge of every request (≙ ListMerger +
         CombinedFacetAccessible, util/ListMerger.java:104-137,
         facets/CombinedFacetAccessible.java:101-192): one (score desc,
         doc_id asc) lexsort for the page — the union of per-segment
         top-ks on the distributed path — facet count vectors ordered
         by (count desc, value rank) and one (doc_id, part) lexsort for
-        the page's explanation rows."""
+        the page's explanation rows. A MatchAll facet that no
+        selection filters lists every dictionary value, as
+        ``facet_counts`` does."""
         o = out if out is not None else _SegOut(0)
         page = np.lexsort((o.docs, -o.scores))[req.offset:req.offset + req.k]
         hits = pd.DataFrame({"doc_id": o.docs[page], "score": o.scores[page]}, copy=False)
-        facets = {f: self._facet_frame(f, o.facets.get(f)) for f in req.facets}
+        sels = {"lang": plan["sel_lang"], "ts_bucket": plan["sel_ts"]}
+        facets = {}
+        for f in req.facets:
+            unfiltered = all(v is None for g, v in sels.items()
+                             if g != f or not req.expand_selection)
+            facets[f] = self._facet_frame(
+                f, o.facets.get(f), keep_zero=plan["mode"] == "matchall" and unfiltered)
         explanations = None
-        if req.explain:
+        if plan["explain"]:
             d, part, v = (o.expl if o.expl is not None
                           else (_NO_DOCS, np.zeros(0, object), _NO_SCORES))
             keep = np.flatnonzero(np.isin(d, o.docs[page]))
@@ -1127,115 +1108,9 @@ class IndexReader:
         o = o[np.lexsort((rank[o], -tot[o]))]
         return pd.DataFrame({"value": vals[row[o]], "count": tot[o]}, copy=False)
 
-    # ----------------------------------------------- MatchAll / selection-only
-
-    _ORD_COL = {"lang": "lang_ord", "ts_bucket": "ts_ord"}
-
-    def _matchall_search(self, req: SearchRequest) -> SearchResult:
-        """Selection-only search (query=None ≙ MatchAllDocsQuery
-        AND-wrapped with the filters, api/MultiBoboBrowser.java:81-92).
-
-        Hits = forward-table scan + selection predicates (Catalyst
-        pushes them into the parquet scan), constant score 1.0, docID
-        order; facet counts are ordinal groupBys with the multi-select
-        leave-one-out; with no selections at all the facet path serves
-        the zero-scan collectAll counts and num_hits = n_docs from
-        snapshot stats (zero Spark jobs)."""
-        sel_lang, sel_ts = self._resolve_selections(req)
-        preds = {}
-        if sel_lang is not None:
-            preds["lang"] = F.col("lang_ord").isin([int(x) for x in sel_lang])
-        if sel_ts is not None:
-            preds["ts_bucket"] = F.col("ts_ord").isin([int(x) for x in sel_ts])
-
-        def hitset(pred_fields):
-            ps = [preds[f] for f in pred_fields]
-            out = self._not_deleted(self._forward)
-            for p in ps:
-                out = out.where(p)
-            return out
-
-        base = hitset(list(preds))
-        # num_hits piggybacks on whatever aggregation already counts
-        # the full hit set — a dedicated count job only runs when no
-        # other job covers it, and then it is FUSED with the page scan
-        num_hits = (self.n_docs
-                    if not preds and self._deletes_df is None else None)
-        facets = {}
-        for f in req.facets:
-            others = [x for x in preds if x != f] if req.expand_selection \
-                else list(preds)
-            if not others:
-                # no cross-field selections: exactly facet_counts's
-                # contract (collectAll zero-scan, or the deletes-aware
-                # anti-joined count with the SAME full value universe —
-                # fully-deleted values appear with count 0 either way)
-                facets[f] = self.facet_counts(f)
-                if num_hits is None and not preds:
-                    # every doc carries every facet field (build
-                    # assigns ordinals unconditionally), so the
-                    # anti-joined counts sum to the live-doc total
-                    num_hits = int(facets[f]["count"].sum())
-                continue
-            col = self._ORD_COL[f]
-            cnt = hitset(others).groupBy(col).count().toPandas()
-            if num_hits is None and set(others) == set(preds):
-                # this facet's filter set IS the full selection set —
-                # its raw ordinal counts (before the dictionary lookup,
-                # so nothing is dropped) sum to num_hits
-                num_hits = int(cnt["count"].sum())
-            facets[f] = self._facet_frame(
-                f, np.bincount(cnt[col].to_numpy(np.int64), weights=cnt["count"]))
-        need = req.offset + req.k
-        if num_hits is None:
-            # ONE scan for page + count: per-partition partials keep a
-            # bounded (≤ need ids) running minimum plus a row count —
-            # distributed top-k with a count riding along, never a
-            # second evaluation of the hit set
-            def page_count_partial(batches):
-                cnt = 0
-                best = np.empty(0, dtype=np.int64)
-                for pdf in batches:
-                    cnt += len(pdf)
-                    if not len(pdf) or need == 0:
-                        continue  # count-only: never accumulate ids
-                    best = np.concatenate(
-                        [best, pdf["doc_id"].to_numpy(np.int64)])
-                    if best.size > need:
-                        best = np.partition(best, need - 1)[:need]
-                yield pd.DataFrame({"cnt": [cnt],
-                                    "ids": [np.sort(best)[:need].tolist()]})
-
-            parts = base.select("doc_id").mapInPandas(
-                page_count_partial,
-                schema="cnt long, ids array<long>").toPandas()
-            num_hits = int(parts["cnt"].sum()) if len(parts) else 0
-            allids = (np.sort(np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in parts["ids"]]))
-                if len(parts) else np.empty(0, dtype=np.int64))
-            page_ids = allids[req.offset:need]
-        else:
-            page = (
-                base.orderBy(F.asc("doc_id")).limit(need)
-                .select("doc_id").toPandas().iloc[req.offset:]
-            )
-            page_ids = page["doc_id"].to_numpy(np.int64)
-        hits = pd.DataFrame({"doc_id": page_ids, "score": 1.0})
-        return SearchResult(hits=hits.reset_index(drop=True),
-                            num_hits=int(num_hits), facets=facets)
-
     def search(self, req: SearchRequest) -> SearchResult:
-        """At most one Spark job (none on the ``cache`` path): on the
-        distributed path per-segment answers are tiny (≤ k hits + one
-        count vector per facet each), so their merge runs driver-side."""
-        if req.query is None:
-            return self._matchall_search(req)
-        plan = self.plan(req)
-        if self._driver_fastpath(plan):
-            out = self._score_driver(plan)
-        else:
-            out = _parts_from_rows(self._segment_outputs(plan).toPandas()).get(0)
-        return self._merge(req, out)
+        """One request: ``search_many`` of one."""
+        return self.search_many([req])[0]
 
     # ---------------------------------------------------------- term vectors
 
@@ -1328,8 +1203,7 @@ class IndexReader:
         found = self._lookup_terms(words)
         word_tid = {w: found[w][0] if w in found else -1 for w in words}
         return {"tree": tree, "word_tid": word_tid, "sections": tuple(sec_cfg),
-                "k": k, "offset": offset, "boost": float(boost),
-                "total_df": sum(df for _, df in found.values())}
+                "k": k, "offset": offset, "boost": float(boost)}
 
     def _sections_table(self) -> DataFrame:
         if getattr(self, "_sections_df", None) is None:
@@ -1360,19 +1234,18 @@ class IndexReader:
             lambda pdf: task(pdf, None), schema=OUT_SCHEMA)
 
     def _section_outputs_pd(self, plan: dict) -> pd.DataFrame:
-        """Section outputs as pandas — driver fast path for page-scale
-        WINDOW-mode queries (geometry is metadata-only, so only the
-        term-filtered blocks move; regex mode needs the per-segment
-        boundary cogroup and stays distributed)."""
+        """Section outputs as pandas: a WINDOW-mode query on a cached
+        reader runs over the in-driver block cache (geometry is
+        metadata-only; zero Spark jobs). Regex mode needs the
+        per-segment boundary cogroup, and an uncached reader has no
+        store, so both run distributed."""
         from .sections import segment_section_search
 
-        if (plan["sections"][0] == "window"
-                and plan["total_df"] <= self.DRIVER_POSTINGS_THRESHOLD):
-            tids = [t for t in plan["word_tid"].values() if t >= 0]
-            if not tids:
+        store = self._postings_driver()
+        if plan["sections"][0] == "window" and store is not None:
+            if all(t < 0 for t in plan["word_tid"].values()):
                 return _empty_out()
-            return segment_section_search(self._driver_store(tids, True),
-                                          self._tombstones(), plan, None)
+            return segment_section_search(store, self._tombstones(), plan, None)
         return self._section_outputs(plan).toPandas()
 
     def section_search(self, tree, k: int = 10, offset: int = 0,
@@ -1395,9 +1268,7 @@ class IndexReader:
         from pyspark.sql.window import Window
 
         plan = self._section_plan(tree, k, offset, boost)
-        if (plan["sections"][0] == "window"
-                and plan["total_df"] <= self.DRIVER_POSTINGS_THRESHOLD
-                and self._postings_driver() is not None):
+        if plan["sections"][0] == "window" and self._postings_driver() is not None:
             # zero-Spark-job page (same rows: doc_id is a unique total
             # order, so sort+slice ≡ the distributed orderBy+limit+rank)
             hp = _section_page(self._section_outputs_pd(plan), offset, k)
@@ -1418,135 +1289,46 @@ class IndexReader:
         return top.select("doc_id", F.col("count").alias("n_sections"))
 
     def search_many(self, reqs: list[SearchRequest]) -> list[SearchResult]:
-        """Batch execution: the whole query set runs as ONE Spark job
-        (none when the in-driver block cache serves it).
-
-        The cached batch scores each plan once over the whole store;
-        the distributed batch's segment tasks score every plan against
-        their segment (results identical to search() — same scorer and
-        merge per query); per-query driver/scheduling overhead amortizes to
-        zero, so batch retrieval throughput scales with executors.
-        This is the bulk-evaluation pattern (training-data mining,
-        offline query sets); use search() for single-query latency.
-
-        MatchAll requests (query=None) run on the forward-scan path
-        individually — they never touch the postings job."""
-        matchall = {i for i, r in enumerate(reqs) if r.query is None}
-        if matchall:
-            rest = [r for i, r in enumerate(reqs) if i not in matchall]
-            rest_results = iter(self.search_many(rest) if rest else [])
-            return [self._matchall_search(r) if i in matchall
-                    else next(rest_results) for i, r in enumerate(reqs)]
+        """Batch execution, keyword and MatchAll requests alike: the
+        cached batch scores each plan once over the whole store (zero
+        Spark jobs); the distributed batch is one ``_segment_frame``
+        whose segment tasks score every plan against their segment.
+        Results are identical on both paths (same scorer and merge per
+        request); per-request driver/scheduling overhead amortizes to
+        zero, so batch retrieval throughput scales with executors."""
         plans = [self.plan(r) for r in reqs]
-        runnable = [(i, p) for i, p in enumerate(plans) if _runnable(p)]
-        tids = sorted({t for _, p in runnable for t in _plan_tids(p)})
-        phrase = any(p["mode"] == "phrase" for _, p in runnable)
-        if phrase:
-            self._require_positions()
-        if not runnable:
-            parts = {}
-        elif self._postings_driver() is None:
-            parts = _parts_from_rows(
-                self._search_many_distributed(runnable, tids, phrase))
-        else:
-            # whole batch from the in-driver block cache: zero Spark
-            # jobs, same scorer the distributed tasks run. Web-scale
-            # indexes exceed the cache gate and keep the distributed
-            # batch.
-            parts = _score_store(self._postings_driver(), runnable,
-                                 self._tombstones())
-        return [self._merge(r, parts.get(i)) for i, r in enumerate(reqs)]
-
-    def _search_many_distributed(self, runnable: list, tids: list[int],
-                                 phrase: bool) -> pd.DataFrame:
-        """The batch as ONE Spark job: each segment task scores every
-        runnable plan, decoding each block (and each stream) at most
-        once however many plans read it; output rows accumulate
-        across plans into ONE frame per task."""
-        deleted_bc = self._deleted_bc
-        blocks = self._blocks(tids, phrase)
-        # pin the exchange width: left to AQE, the small term-
-        # filtered shuffle coalesces to a handful of fat partitions
-        # (measured 15 partitions for 64 segments at 16 cores —
-        # idle cores + ragged last wave in the Python stage). A
-        # user repartition on the grouping key is reused by the
-        # groupBy (no second exchange) and is never coalesced.
-        n_seg = self.snap.stats.get("n_segments") or 0
-        npart = max(2 * self.spark.sparkContext.defaultParallelism,
-                    int(self.spark.conf.get(
-                        "spark.sql.shuffle.partitions", "32")))
-        if n_seg:
-            npart = min(npart, n_seg)
-        grouped = blocks.repartition(npart, "segment").groupBy(
-            "segment").applyInPandas(
-                lambda pdf: _task_rows(pdf, runnable, deleted_bc, True),
-                schema=OUT_SCHEMA + ", qid int")
-        # AQE's shuffle materialization splits this into two jobs
-        # with a barrier between scan and Python stage — a fixed
-        # ~0.6 s that caps batch scaling (it is a larger fraction
-        # of the fast leg). The exchange width is already pinned
-        # by the explicit repartition, so adaptivity buys nothing
-        # here: run the batch action non-adaptive, restore after.
-        # The flip is session-level conf, so it is serialized
-        # under a module lock: without it, two concurrent
-        # search_many calls could each capture the other's
-        # in-flight "false" and leave AQE permanently disabled.
-        # (Unrelated queries planned by OTHER threads during the
-        # window still see AQE off — inherent to session conf;
-        # batch retrieval is a single-driver bulk pattern.)
-        conf = self.spark.conf
-        with _AQE_LOCK:
-            prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-            try:
-                conf.set("spark.sql.adaptive.enabled", "false")
-                return grouped.toPandas()
-            finally:
-                conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        parts = self._score([(i, p) for i, p in enumerate(plans) if _runnable(p)])
+        return [self._merge(r, p, parts.get(i))
+                for i, (r, p) in enumerate(zip(reqs, plans))]
 
     def search_df(self, req: SearchRequest, with_url: bool = False) -> DataFrame:
-        """Spark-DataFrame result (doc_id, score[, url]) for pipelines."""
+        """Spark-DataFrame result (doc_id, score[, url]) for pipelines:
+        the ``search`` page, created from the driver's merge on a cached
+        reader, and a limit over ``_segment_frame`` otherwise."""
         from pyspark.sql.window import Window
 
-        if req.query is None:  # MatchAll: forward scan, constant score
-            sel_lang, sel_ts = self._resolve_selections(req)
-            hits = self._not_deleted(self._forward)
-            if sel_lang is not None:
-                hits = hits.where(F.col("lang_ord").isin([int(x) for x in sel_lang]))
-            if sel_ts is not None:
-                hits = hits.where(F.col("ts_ord").isin([int(x) for x in sel_ts]))
-            hits = (
-                hits.orderBy(F.asc("doc_id")).limit(req.offset + req.k)
-                .select("doc_id", F.lit(1.0).alias("score"))
-            )
-            page_order = Window.orderBy(F.asc("doc_id"))
+        plan = self.plan(req)
+        runnable = [(0, plan)] if _runnable(plan) else []
+        if self._postings_driver() is not None or not runnable:
+            # zero-Spark-job page: same scorer and merge, same (score
+            # desc, doc_id asc) total order as the distributed limit
+            page = self._merge(req, plan, self._score(runnable).get(0)).hits
+            hits = self.spark.createDataFrame(
+                page, schema="doc_id long, score double")
         else:
-            plan = self.plan(req)
-            if (self._driver_fastpath(plan)
-                    and self._postings_driver() is not None):
-                # zero-Spark-job page from the in-driver block cache —
-                # identical rows: same scorer and merge, same (score
-                # desc, doc_id asc) total order as the distributed limit
-                page = self._merge(req, self._score_driver(plan)).hits
-                hits = self.spark.createDataFrame(
-                    page, schema="doc_id long, score double")
-                if with_url:
-                    hits = F.broadcast(hits).join(
-                        self._forward.select("doc_id", "url"), "doc_id")
-                return hits
-            out = self._segment_outputs(plan)
             hits = (
-                out.where(F.col("kind") == _K_HIT)
+                self._segment_frame(runnable).where(F.col("kind") == _K_HIT)
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(req.offset + req.k)
                 .select("doc_id", "score")
             )
-            page_order = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        if req.offset:
-            # rank window ABOVE the limit (≤ offset+k rows reach it), as
-            # in section_search_df — returns rows offset+1..offset+k,
-            # matching search()'s page contract
-            hits = (hits.withColumn("_rank", F.row_number().over(page_order))
-                    .where(F.col("_rank") > req.offset).drop("_rank"))
+            if req.offset:
+                # rank window ABOVE the limit (≤ offset+k rows reach it),
+                # as in section_search_df — returns rows
+                # offset+1..offset+k, matching search()'s page contract
+                page_order = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+                hits = (hits.withColumn("_rank", F.row_number().over(page_order))
+                        .where(F.col("_rank") > req.offset).drop("_rank"))
         if with_url:
             # hits is ≤ offset+k rows — broadcast it so the stored-field
             # fetch never shuffles the forward table (SURVEY §2.1).

@@ -15,7 +15,6 @@ build and the dedup kernels run its Arrow C++ form,
 from __future__ import annotations
 
 import re
-from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -26,15 +25,6 @@ TOKEN_RE = re.compile(r"[a-z0-9]+")
 def tokenize(text: str) -> list[str]:
     """Canonical token stream for one document (oracle + engine)."""
     return TOKEN_RE.findall(text.lower())
-
-
-def term_freqs(text: str) -> dict[str, int]:
-    return dict(Counter(tokenize(text)))
-
-
-def tokenize_batch(texts: pd.Series) -> pd.Series:
-    """Vectorized batch tokenization: Series[str] -> Series[list[str]]."""
-    return texts.str.lower().str.findall(TOKEN_RE)
 
 
 def flat_token_codes(texts):

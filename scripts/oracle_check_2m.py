@@ -204,7 +204,7 @@ FROM t ORDER BY df DESC, term LIMIT 20
 """).df()
     check("term_stats_2m", got, want)
 
-    # MatchAll selection num_hits (fused single-scan path)
+    # MatchAll selection num_hits (the scorer's MatchAll plan)
     res = reader.search(SearchRequest(query=None, k=5,
                                       selections={"lang": ["fr"]}))
     want_n = con.sql(

@@ -5,24 +5,18 @@ import os
 import pandas as pd
 import pytest
 
-# The three keyword-search paths of IndexReader (see bobo_spark.query):
-# "cache" scores from the in-driver block cache, "scan" fetches the
-# term-filtered blocks once and scores them on the driver, and
-# "distributed" scores each segment in a Spark task.
-QUERY_PATHS = ("cache", "scan", "distributed")
-# search_many has no scan path, so batch checks run on these two only
-BATCH_PATHS = ("cache", "distributed")
+# The two request paths of IndexReader (see bobo_spark.query): "cache"
+# scores from the in-driver block cache, and "distributed" scores each
+# segment in a Spark task.
+QUERY_PATHS = ("cache", "distributed")
 
 
 def pin_path(reader, path: str):
-    """Pin ``reader`` to one keyword-search path by instance attributes
-    alone. ``search_many`` has no scan path: with the cache off it runs
-    distributed on both "scan" and "distributed" (see BATCH_PATHS)."""
+    """Pin ``reader`` to one request path by instance attributes
+    alone."""
     assert path in QUERY_PATHS, path
-    if path != "cache":
-        reader._driver_cache_ok = False
     if path == "distributed":
-        reader.DRIVER_POSTINGS_THRESHOLD = -1
+        reader._driver_cache_ok = False
     return reader
 
 

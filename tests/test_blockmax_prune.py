@@ -2,8 +2,8 @@
 the exhaustive top-k (docIDs and float64 scores). Pruning runs on
 every path — on "cache" a pruned query decodes only the blocks it
 keeps and shares them with every other query through the block-keyed
-decode cache — so the tests run on all three, and a spy shows the
-driver-side paths ("cache", "scan") pruned."""
+decode cache — so the tests run on both, and a spy shows the
+driver-side path ("cache") pruned."""
 
 from __future__ import annotations
 
@@ -51,7 +51,7 @@ def test_pruned_recency_equals_exhaustive(readers, prune_spy):
     import pandas as pd
 
     # "now" just past the corpus so the decay window bites real docs
-    d = readers["scan"].dicts["ts_bucket"]
+    d = readers["cache"].dicts["ts_bucket"]
     now_ms = int(pd.to_datetime(d["value"], utc=True).astype("int64").max()
                  // 1_000_000) + 86400000
     vocab = make_vocab()

@@ -97,7 +97,7 @@ def _plan(query: str, mode: str, k: int = 10, facets=(), sel_lang=None,
             "avgdl": AVGDL, "facets": list(facets), "sel_lang": sel_lang,
             "sel_ts": None, "sel_lang_mode": None if sel_lang is None else "ords",
             "sel_ts_mode": None, "sel_lang_tids": [], "sel_ts_tids": [],
-            "sel_df": 0, "expand_selection": True, "prune": prune,
+            "expand_selection": True, "prune": prune,
             "phrase_ids": [], "phrase_idf_sum": 0.0, "recency": None,
             "explain": explain}
     if mode == "phrase":

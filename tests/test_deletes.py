@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from bobo_spark.build import BuildConfig, build_snapshot, delete_docs
 from bobo_spark.query import IndexReader, SearchRequest
 from bobo_spark.webgen import webpages
-from conftest import BATCH_PATHS, assert_same_result, path_readers
+from conftest import assert_same_result, path_readers
 
 
 @pytest.fixture(scope="module")
@@ -95,8 +95,7 @@ def test_pruned_or_exact_with_deletes(spark, tmp_path_factory, prune_spy):
     contributions only. Victims = the top hits of the pruned query
     itself, so a θ computed over deleted docs would be inflated and
     would wrongly prune blocks holding live top-k docs. Runs on every
-    path; the spy shows the driver-side paths ("cache", "scan")
-    pruned."""
+    path; the spy shows the driver-side path ("cache") pruned."""
     d = str(tmp_path_factory.mktemp("idx_del_prune"))
     docs = webpages(spark, 800, 4)
     build_snapshot(spark, docs, d, BuildConfig(docs_per_segment=200,
@@ -169,8 +168,6 @@ def test_search_many_excludes_deleted(env):
     for path, reader in path_readers(spark, d).items():
         for r, s in zip(reqs, want):
             assert_same_result(reader.search(r), s, (path, r))
-        if path not in BATCH_PATHS:
-            continue
         batch = reader.search_many(reqs)
         for b, r, s in zip(batch, reqs, want):
             assert_same_result(b, s, (path, "batch", r))
@@ -214,9 +211,9 @@ def test_mixed_format_delete_tables(spark, tmp_path_factory):
 
 
 def test_matchall_facets_list_fully_deleted_values(env):
-    """MatchAll with a facet and tombstones routes through
-    facet_counts — the value universe (incl. 0-count fully-deleted
-    values) must match the no-selection collectAll contract."""
+    """MatchAll with a facet and tombstones lists the same value
+    universe as facet_counts (incl. 0-count fully-deleted values):
+    the no-selection collectAll contract."""
     spark, d, docs, before, after, victims = env
     ma = after.search(SearchRequest(query=None, k=5, facets=("lang",)))
     fc = after.facet_counts("lang")

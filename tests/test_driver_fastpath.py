@@ -1,9 +1,8 @@
-"""Driver fast path: queries whose total posting count (known exactly
-from the dictionary df) is page-scale score on the driver — from the
-in-driver block cache ("cache") or one term-filtered scan ("scan") —
-with no groupBy exchange and no Python-worker round trip, one scoring
-pass per plan over the whole store. Results must be IDENTICAL to the
-distributed path (same scorer, per segment there)."""
+"""Driver fast path: a reader whose index fits the in-driver block
+cache ("cache") scores every request on the driver — no groupBy
+exchange, no Python-worker round trip, one scoring pass per plan over
+the whole store. Results must be IDENTICAL to the distributed path
+(same scorer, per segment there)."""
 
 from __future__ import annotations
 
@@ -37,27 +36,11 @@ REQS = [
 
 
 def test_fastpath_equals_distributed(env):
-    assert env["scan"]._postings_driver() is None
-    assert not env["distributed"]._driver_fastpath(
-        env["distributed"].plan(REQS[0]))
+    assert env["cache"]._postings_driver() is not None
+    assert env["distributed"]._postings_driver() is None
     for req in REQS:
-        assert env["cache"]._driver_fastpath(env["cache"].plan(req)), req
-        want = env["cache"].search(req)
-        for path in ("scan", "distributed"):
-            assert_same_result(env[path].search(req), want, (path, req))
-
-
-def test_fastpath_costs_postings_selections(env):
-    reader = env["cache"]
-    # r6: postings-mode selections resolve their sentinel Σdf at plan
-    # time (plan["sel_df"]), so the fast path is cost-gated on the
-    # COMBINED posting volume — in-gate selections are served on the
-    # driver, and a selection heavy enough to breach the gate declines
-    plan = reader.plan(SearchRequest(query="ba", mode="or", k=5))
-    assert reader._driver_fastpath(plan)
-    plan["sel_lang_tids"] = [123]
-    plan["sel_df"] = reader.DRIVER_POSTINGS_THRESHOLD + 1
-    assert not reader._driver_fastpath(plan)
+        assert_same_result(env["distributed"].search(req),
+                           env["cache"].search(req), req)
 
 
 def test_section_fastpath_equals_distributed(spark, tmp_path_factory):
@@ -71,10 +54,9 @@ def test_section_fastpath_equals_distributed(spark, tmp_path_factory):
                                      ("not", ("term", "vu"))))]
     for tree in trees:
         want = readers["cache"].section_search(tree, k=30)
-        for path in ("scan", "distributed"):
-            got = readers[path].section_search(tree, k=30)
-            assert got.num_hits == want.num_hits, (path, tree)
-            pd.testing.assert_frame_equal(got.hits, want.hits)
+        got = readers["distributed"].section_search(tree, k=30)
+        assert got.num_hits == want.num_hits, tree
+        pd.testing.assert_frame_equal(got.hits, want.hits)
 
 
 def test_cached_fastpath_unknown_term_with_selection(env):
@@ -86,16 +68,13 @@ def test_cached_fastpath_unknown_term_with_selection(env):
     req = SearchRequest(query=["ba", "zzznothing"], mode="or", k=10,
                         facets=("lang",), selections={"lang": ["fr"]})
     assert env["cache"]._postings_driver() is not None
-    want = env["cache"].search(req)
-    for path in ("scan", "distributed"):
-        assert_same_result(env[path].search(req), want, path)
+    assert_same_result(env["distributed"].search(req), env["cache"].search(req))
 
 
 def test_one_score_pass_per_plan(env, monkeypatch):
-    """The driver paths score each plan ONCE over the whole store, not
-    once per segment: cached search calls _score_plan once, cached
-    search_many once per runnable plan, and the scan path once per
-    plan."""
+    """The cache path scores each plan ONCE over the whole store, not
+    once per segment: a cached search calls _score_plan once, a cached
+    search_many once per runnable plan."""
     calls = []
     orig = query._score_plan
 
@@ -108,11 +87,10 @@ def test_one_score_pass_per_plan(env, monkeypatch):
     reqs = REQS + [SearchRequest(query="ba zzznothing", mode="and")]
     runnable = sum(query._runnable(env["cache"].plan(r)) for r in reqs)
     assert runnable == len(REQS)
-    for path in ("cache", "scan"):
-        for req in REQS:
-            calls.clear()
-            env[path].search(req)
-            assert len(calls) == 1, (path, req)
+    for req in REQS:
+        calls.clear()
+        env["cache"].search(req)
+        assert len(calls) == 1, req
     calls.clear()
     env["cache"].search_many(reqs)
     assert len(calls) == runnable

@@ -111,7 +111,7 @@ def _explain_requests(spark, reader):
 
 
 def test_explanations_same_on_every_path(spark, index_dir, reader):
-    """Explanation frames are identical on the cache, scan and
+    """Explanation frames are identical on the cache and
     distributed paths, ordered by (doc_id, part) with part in
     code-point order."""
     readers = path_readers(spark, index_dir)

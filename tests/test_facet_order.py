@@ -1,4 +1,4 @@
-"""One facet order on every path. Keyword facets (cache, scan and
+"""One facet order on every path. Keyword facets (cache and
 distributed), MatchAll facets and ``facet_counts`` give the same
 (value, count) frames: int64 counts, count desc, then value asc. The
 index gets an append whose new values sort before the old ones, so

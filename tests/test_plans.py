@@ -115,15 +115,16 @@ def test_section_search_term_filter_pushed(spark, tmp_path_factory):
 
 
 def test_matchall_selection_pushed(reader):
-    """MatchAll hits come from a forward scan with the selection
-    predicate pushed into parquet (never a postings read)."""
+    """A distributed MatchAll reads the postings of its facet
+    sentinels only, with term_id IN (...) pushed into the parquet
+    scan, like any keyword plan."""
     from bobo_spark.query import SearchRequest
 
     df = reader.search_df(SearchRequest(query=None, k=5,
                                         selections={"lang": ["en"]}))
     plan = df._jdf.queryExecution().sparkPlan().toString()
-    assert "PushedFilters" in plan and "lang_ord" in plan, plan[:900]
-    assert "TakeOrderedAndProject" in plan  # docID top-k, not full sort
+    assert "PushedFilters" in plan and "term_id" in plan, plan[:900]
+    assert "TakeOrderedAndProject" in plan  # top-k page, not full sort
 
 
 def test_term_vectors_segment_pushed(reader):

@@ -1,6 +1,6 @@
 """search_many (batch query execution) must return results identical
 to per-query search() across the reference query set, on every
-keyword-search path (the cache-path search() is the reference)."""
+request path (the cache-path search() is the reference)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from bobo_spark.build import BuildConfig, build_snapshot
 from bobo_spark.oracle import reference_queryset
 from bobo_spark.query import SearchRequest
 from bobo_spark.webgen import make_vocab, webpages
-from conftest import BATCH_PATHS, QUERY_PATHS, assert_same_result, path_readers
+from conftest import QUERY_PATHS, assert_same_result, path_readers
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +29,7 @@ def _check_batch(readers, reqs):
         for req, ref in zip(reqs, want):
             assert_same_result(readers[path].search(req), ref,
                                (path, "single", req))
-    for path in BATCH_PATHS:
+    for path in QUERY_PATHS:
         batch = readers[path].search_many(reqs)
         assert len(batch) == len(reqs)
         for req, got, ref in zip(reqs, batch, want):
@@ -60,15 +60,14 @@ def test_batch_prunes_like_single(readers):
     reqs = [SearchRequest(query=q["query"], mode="or", k=10) for q in qs]
     want = _check_batch(readers, reqs)
     for req, ref in zip(reqs, want):
-        exhaustive = readers["scan"].search(SearchRequest(
+        exhaustive = readers["distributed"].search(SearchRequest(
             query=req.query, mode="or", k=10, prune=False))
         assert_same_result(exhaustive, ref, req)
 
 
 def test_batch_phrase_and_matchall(readers):
-    """Phrase queries share the batch task's full-frame decode (no
-    conjunctive block skip in batch mode) and MatchAll requests route
-    to the forward-scan path — both must equal their solo twins."""
+    """Phrase queries and MatchAll requests join the batch like any
+    other plan — both must equal their solo twins."""
     _check_batch(readers, [
         SearchRequest(query="ba be", mode="phrase", k=10),
         SearchRequest(query=None, k=10, selections={"lang": ["en"]}),
@@ -84,8 +83,53 @@ def test_batch_explain_empty_result_matches_single(readers):
     for path in QUERY_PATHS:
         single = readers[path].search(req)
         assert single.explanations is not None and len(single.explanations) == 0
-        if path not in BATCH_PATHS:
-            continue
         batch = readers[path].search_many([req])[0]
         assert batch.explanations is not None and len(batch.explanations) == 0
         assert list(batch.explanations.columns) == list(single.explanations.columns)
+
+
+def test_k0_returns_counts_only(readers):
+    """k=0 answers num_hits and facet counts with an empty page, on
+    every path, single and batch — keyword (AND, pruned OR, phrase)
+    and MatchAll alike."""
+    kw = [SearchRequest(query="ba be", mode="and", facets=("lang",)),
+          SearchRequest(query="ba be", mode="or"),
+          SearchRequest(query="ba ka", mode="or", facets=("lang", "ts_bucket"),
+                        selections={"lang": ["en"]}),
+          SearchRequest(query="ba be", mode="phrase", facets=("lang",)),
+          SearchRequest(query=None, facets=("lang",), selections={"lang": ["de"]})]
+    zero = [SearchRequest(query=r.query, mode=r.mode, k=0, facets=r.facets,
+                          selections=r.selections) for r in kw]
+    want = [readers["cache"].search(r) for r in kw]
+    for path in QUERY_PATHS:
+        for res in ([readers[path].search(r) for r in zero],
+                    readers[path].search_many(zero)):
+            for req, got, ref in zip(zero, res, want):
+                assert ref.num_hits > 0, req
+                assert len(got.hits) == 0, (path, req)
+                assert got.num_hits == ref.num_hits, (path, req)
+                for f in req.facets:
+                    assert got.facets[f].equals(ref.facets[f]), (path, req, f)
+
+
+def test_distributed_leaves_session_conf_alone(readers, spark, monkeypatch):
+    """No request flips session-global Spark conf: a distributed
+    search_many and search never call spark.conf.set, and AQE stays as
+    the session set it."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    orig = RuntimeConfig.set
+
+    def spy(self, key, value):
+        calls.append((key, value))
+        return orig(self, key, value)
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    reqs = [SearchRequest(query="ba be", mode="or", k=5),
+            SearchRequest(query=None, k=5, selections={"lang": ["en"]})]
+    readers["distributed"].search_many(reqs)
+    readers["distributed"].search(reqs[0])
+    assert not calls, calls
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe

@@ -118,9 +118,8 @@ def test_window_sections_paging(window_env):
 
 def test_window_section_search_df_all_paths(window_env, spark):
     """section_search_df gives section_search's page on every
-    keyword-search path ("cache" and "scan" serve window sections on
-    the driver, "distributed" in Spark tasks), with and without an
-    offset."""
+    request path ("cache" serves window sections on the driver,
+    "distributed" in Spark tasks), with and without an offset."""
     reader, _corpus = window_env
     readers = path_readers(spark, reader.catalog.index_dir)
     for path, r in readers.items():

@@ -5,7 +5,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from bobo_spark.extract import extract_text, extract_text_bytes
-from bobo_spark.tokenizer import term_freq_frame, tokenize, tokenize_batch
+from bobo_spark.tokenizer import flat_token_codes, term_freq_frame, tokenize
 from bobo_spark.webgen import gen_batch, make_vocab, webpages, zipf_cdf
 
 
@@ -43,9 +43,10 @@ def test_extraction_byte_identical(spark):
 
 def test_tokenizer_matches_oracle():
     texts = pd.Series(["Hello, World! foo-bar 42x", "", "a  b\tc\nd", "ÀÉü ok"])
-    batch = tokenize_batch(texts)
-    for t, got in zip(texts, batch):
-        assert got == tokenize(t)
+    codes, uniq, doclens = flat_token_codes(texts)
+    got = np.split(uniq[codes], np.cumsum(doclens)[:-1])
+    for t, g in zip(texts, got):
+        assert list(g) == tokenize(t)
     assert tokenize("Hello, World! foo-bar 42x") == ["hello", "world", "foo", "bar", "42x"]
 
 
@@ -99,8 +100,6 @@ def test_flat_token_codes_paths_agree():
     """The Arrow tokenizer must produce the same token stream, doclens
     and code semantics as the canonical ``tokenize`` on ASCII and on
     non-ASCII batches (Unicode casing parity with the oracle)."""
-    from bobo_spark.tokenizer import flat_token_codes
-
     ascii_texts = pd.Series(["Hello, World! foo-bar 42x", "", "a  b\tc\nd",
                              "x" * 5, "A1 b2 A1"])
     c1, u1, d1 = flat_token_codes(ascii_texts)
@@ -124,8 +123,6 @@ def test_flat_token_codes_every_code_point():
     """Every code point, between token characters and alone, tokenizes
     as ``tokenize`` does — the Arrow lowercase differs from Python's
     on 'İ' (U+0130) alone, which ``flat_token_codes`` spells out."""
-    from bobo_spark.tokenizer import flat_token_codes
-
     cps = [c for c in range(0x80, 0x110000) if not 0xD800 <= c <= 0xDFFF]
     texts = [f"a{chr(c)}b {chr(c)}" for c in cps]
     codes, uniq, doclens = flat_token_codes(pd.Series(texts))
